@@ -130,11 +130,12 @@ def _warmup_python_workers(spark, cpus: int) -> None:
 
 
 def image_maintenance_bench(spark, n_rows: int, n_files: int, cpus: int) -> dict:
-    """Headline: the FUSED single-pass rewrite (bin-pack + Z-order cluster in
-    one pass over the bytes — the production protocol, maintenance CLI
-    --op rewrite, and the BENCH/BASELINE.md north metric). The two-pass
-    compact-then-cluster time is also measured on a fresh identical table
-    and reported for comparability with BENCH_r01."""
+    """Headline: the TWO-PASS compact-then-cluster rewrite (the BENCH_r01
+    protocol), measured on a fresh fragmented table. The FUSED single-pass
+    rewrite (bin-pack + Z-order cluster in one pass over the bytes — the
+    maintenance CLI --op rewrite) and the incremental follow-up are
+    reported alongside; fused becomes the headline once it beats two-pass
+    at this row count (ROADMAP direction 1)."""
     _warmup_python_workers(spark, cpus)
 
     # fused: one pass, one table

@@ -138,7 +138,7 @@ def read_tables_overlapped(
     prefetches and decodes the next file while the compute thread drains
     the current one — measured 3.7x lower read task-time and ~19% faster
     reduce-task wall than a sequential per-file read_table loop at the
-    SAME one-core budget (tools/reduce_probe_scanner.py; adopted round 4).
+    SAME one-core budget (BENCH/TASK_CONTENTION.md; adopted round 4).
     Scaling efficiency is unchanged (both forms hit the same bandwidth
     ceiling) — this is an absolute-cost win, not a parallelism one.
 

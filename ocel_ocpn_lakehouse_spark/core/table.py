@@ -221,6 +221,21 @@ class Table:
             self._manifest_counts[manifest] = n
         return n
 
+    def _manifest_totals(self, manifests: list[str], side: str) -> dict:
+        """Commit-summary totals of every file listed in ``manifests``,
+        summed from their size/record columns (entries never materialize)."""
+        import pyarrow.compute as pc
+
+        files = nbytes = records = 0
+        for m in manifests:
+            t = pq.read_table(
+                os.path.join(self.metadata_dir, m), columns=["size_bytes", "record_count"]
+            )
+            files += t.num_rows
+            nbytes += int(pc.sum(t["size_bytes"]).as_py() or 0)
+            records += int(pc.sum(t["record_count"]).as_py() or 0)
+        return {f"{side}-files": files, f"{side}-bytes": nbytes, f"{side}-records": records}
+
     # ---- basics -----------------------------------------------------------
     @property
     def schema(self) -> T.StructType:
@@ -1064,11 +1079,7 @@ class Table:
             name = mf.write_manifest(self.metadata_dir, entries, seq)
             parent = md.current_snapshot()
             manifest_list = (parent.manifests if parent else []) + [name]
-            summary = {
-                "added-files": len(entries),
-                "added-records": sum(e.record_count for e in entries),
-                "added-bytes": sum(e.size_bytes for e in entries),
-            }
+            summary = {**file_totals("added", entries), **file_totals("removed", [])}
             if extra_summary:
                 summary.update(extra_summary)
             return md.new_snapshot("append", manifest_list, summary)
@@ -1110,9 +1121,10 @@ class Table:
             for e in entries:
                 e.added_snapshot_id = seq
             name = mf.write_manifest(self.metadata_dir, entries, seq)
+            parent = md.current_snapshot()
             summary = {
-                "added-files": len(entries),
-                "added-records": sum(e.record_count for e in entries),
+                **file_totals("added", entries),
+                **self._manifest_totals(parent.manifests if parent else [], "removed"),
             }
             if extra_summary:
                 summary.update(extra_summary)
@@ -1171,13 +1183,9 @@ class Table:
                         f"but table is now at {snap.snapshot_id}"
                     )
                 survivors: list[mf.ManifestEntry] = []
-                # numeric removed count from manifest footers only (no entry
+                # removed totals from manifest columns only (no entry
                 # materialization — replace_all exists to avoid exactly that)
-                n_removed = (
-                    sum(self._manifest_num_rows(m) for m in snap.manifests)
-                    if snap
-                    else 0
-                )
+                removed = self._manifest_totals(snap.manifests if snap else [], "removed")
             else:
                 current = mf.read_manifests(self.metadata_dir, snap.manifests) if snap else []
                 live_paths = {e.path for e in current}
@@ -1207,14 +1215,13 @@ class Table:
                             f"{sorted(drifted)[:3]}..."
                         )
                 survivors = [e for e in current if e.path not in removed_paths]
-                n_removed = len(removed_paths)
+                removed = file_totals(
+                    "removed", [e for e in current if e.path in removed_paths]
+                )
             for e in added_entries:
                 e.added_snapshot_id = seq
             manifest_names = rewrite_manifests(self.metadata_dir, survivors + added_entries, seq)
-            s: dict = {
-                "removed-files": n_removed,
-                "added-files": len(added_entries),
-            }
+            s: dict = {**file_totals("added", added_entries), **removed}
             if replace_all:
                 # keep 'removed-files' numeric for summary aggregators; the
                 # whole-table semantics travel on a dedicated boolean flag
@@ -1285,11 +1292,15 @@ class Table:
             for e in added:
                 e.added_snapshot_id = seq
             manifest_names = rewrite_manifests(self.metadata_dir, current + added, seq)
+            deleted = int(sum(counts_by_path.values()))
             s = {
-                "deleted-rows": int(sum(counts_by_path.values())),
+                "deleted-rows": deleted,
                 "tombstoned-files": len(counts_by_path),
                 "dv-file": dv_rel_path,
-                "added-files": len(added),
+                **file_totals("added", added),
+                # no data file leaves the table; its tombstoned rows do
+                **file_totals("removed", []),
+                "removed-records": deleted,
             }
             if summary:
                 s.update(summary)
@@ -1462,7 +1473,8 @@ class Table:
                 base + added,
                 {
                     "cherry-picked-from": snapshot_id,
-                    "added-files": sum(self._manifest_num_rows(m) for m in added),
+                    **self._manifest_totals(added, "added"),
+                    **file_totals("removed", []),
                 },
             )
 
@@ -1499,6 +1511,16 @@ class Table:
         md.schema_fields = md.schema_fields + [{"id": next_id, "name": name}]
         meta.commit_metadata(self.root, md, md.version)
         self.md = md
+
+
+def file_totals(side: str, entries: Sequence[mf.ManifestEntry]) -> dict:
+    """Commit-summary totals (``<side>-files/-bytes/-records``) of the data
+    files a commit adds or removes; records are physical row counts."""
+    return {
+        f"{side}-files": len(entries),
+        f"{side}-bytes": sum(e.size_bytes for e in entries),
+        f"{side}-records": sum(e.record_count for e in entries),
+    }
 
 
 def rewrite_manifests(

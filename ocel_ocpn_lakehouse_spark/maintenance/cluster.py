@@ -15,25 +15,22 @@ never enter the JVM row pipeline):
      low-order salt suffix (north rule: "salting for phash hot-spots" —
      boundaries can fall inside a hot phash cell and spread it over
      several files).
-  2. MAP (mapInPandas over FILE SPECS — metadata rows): each task reads
-     its input files with pyarrow, recomputes the curve key in numpy
-     (bit-identical to the Spark expressions — functions/zorder.py numpy
-     mirrors, asserted by test_curve_key_numpy_parity), bins rows into
-     range buckets with searchsorted, and writes parquet FRAGMENTS into
-     a staging shuffle dir — one per (task × bucket), accumulated across
-     the task's files with a size-bounded flush, so fragment fan-out
-     stays #tasks × buckets even for 10^5 input files. This is a
-     file-level shuffle write in Arrow C++ — no JVM row serialization,
-     no row-based shuffle.
-  3. REDUCE (mapInPandas over COMBO SPECS): each task concatenates its
-     bucket's fragments, sorts by `_zkey` (kept as a real column so footer
-     stats give per-file zkey min/max — the north rule's "per-file
-     min/max stats rewrite"), writes ONE ≈target-size file, and returns
-     footer stats with the job.
+  2. MAP (over FILE SPECS — metadata rows): each task reads its input
+     files, recomputes the curve key in numpy (bit-identical to the Spark
+     expressions — functions/zorder.py numpy mirrors, asserted by
+     test_curve_key_numpy_parity), bins rows into range buckets with
+     searchsorted, and routes them through the kernel's FragmentRouter —
+     a file-level shuffle write in Arrow C++, no JVM row serialization.
+  3. REDUCE (over COMBO SPECS): each task reads its bucket's fragments,
+     sorts by `_zkey` (kept as a real column so footer stats give per-file
+     zkey min/max — the north rule's "per-file min/max stats rewrite") and
+     writes ONE ≈target-size file.
   4. replace-snapshot commit + manifest rewrite (T7) + lineage rows.
 
-Scale notes: both jobs iterate metadata rows; parallelism = #input files
-(map) and #output files (reduce) with zero hash collisions and no idle
+Reads, staged writes, stats, fragments and publish run on the
+staged-rewrite kernel (maintenance/rewrite.py). Scale notes: both jobs
+iterate metadata rows; the map fans out by the kernel's map_slices rule
+and the reduce runs one task per output file — no hash collisions, no idle
 reducers. Fragment fan-out per map task is bounded by the combos of its
 own table partition (a partition of B bytes has B/target buckets); very
 large single partitions should be clustered in partition-range waves, the
@@ -48,13 +45,23 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import manifests as mf
 from ..core.table import Table
 from . import compact
 from .checkpoint import SystemTables
+from .rewrite import (
+    FILE_SPEC_SCHEMA,
+    STATS_SCHEMA,
+    FragmentRouter,
+    StagedRewrite,
+    file_spec,
+    lineage_row,
+    map_slices,
+    read_fragments,
+    tasks_df,
+)
 
 ZKEY_COL = "_zkey"
 _IMAGE_KEY_COLS = ("phash", "w", "h", "image_id")
@@ -201,33 +208,11 @@ def execute_cluster(
     n_sub = {k: max(1, -(-b // table.target_file_size)) for k, b in part_bytes.items()}
     max_sub = max(n_sub.values())
 
-    staging = table._stage_dir()
-    shuffle_dir = os.path.join(staging, "_shuffle")
-    os.makedirs(shuffle_dir, exist_ok=True)
-    codec = str(spark.conf.get("spark.sql.parquet.compression.codec", "snappy")).lower()
-    codec = {"uncompressed": "none", "lz4raw": "lz4"}.get(codec, codec)
-    arrow_schema = mf.spark_to_arrow_schema(table.schema)
-
-    # cap slices so a 10^5-tiny-file map still batches files per task
-    n_map = max(1, min(n_files, max(4 * int(spark.sparkContext.defaultParallelism), 64)))
+    rw = StagedRewrite.begin(spark, table, extra_stats={ZKEY_COL})
+    shuffle_dir = os.path.join(rw.staging, "_shuffle")
+    n_map = map_slices(spark, n_files)
     if planning == "driver":
-        # parallelize = exact task assignment, no sampling/shuffle sub-job
-        file_rows = [
-            (
-                os.path.join(root, e.path),
-                json.dumps(e.partition, sort_keys=True),
-                json.dumps(
-                    {"rel": e.path, "dvs": [os.path.join(root, d["path"]) for d in e.deletes]}
-                )
-                if e.deletes
-                else "",
-            )
-            for e in entries
-        ]
-        files_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(file_rows, n_map),
-            "path string, pkey string, dv string",
-        )
+        files: list | DataFrame = [file_spec(root, e) for e in entries]
     else:
         # one metadata-row shuffle; payload bytes are untouched. The dv
         # column carries {"rel", "dvs": [abs DV paths]} for tombstoned files
@@ -244,12 +229,17 @@ def execute_cluster(
                 )
             )
         )
-        files_df = (
+        files = (
             edf.select(
                 F.concat(F.lit(root + os.sep), F.col("path")).alias("path"),
                 F.col("partition").alias("pkey"),
                 dv_col.alias("dv"),
             ).repartition(n_map)
+        )
+
+    def _map_df(fn, out_schema: str) -> DataFrame:
+        return tasks_df(
+            spark, files, fn, out_schema, spec_schema=FILE_SPEC_SCHEMA, n_slices=n_map
         )
 
     # --- 1. quantile boundaries from Arrow key sampling --------------------
@@ -275,29 +265,20 @@ def execute_cluster(
         # of paying the full-table key computation
         target = max(50_000, 1_000 * sum(n_sub.values()))
 
-        def _sample_keys(batches):
+        def _sample_keys(recs):
             import numpy as np
-            import pandas as pd
             import pyarrow as pa
 
-            pa.set_cpu_count(1)
-
-            for pdf in batches:
-                out_pk, out_k = [], []
-                for path, pkey, dvj in zip(pdf["path"], pdf["pkey"], pdf["dv"]):
-                    tbl = mf.read_table_nullfill(path, arrow_schema, columns=key_cols_read)
-                    if dvj:  # sample live rows only (positions index full file)
-                        dv = json.loads(dvj)
-                        tbl = mf.apply_delete_vectors(tbl, dv["rel"], dv["dvs"])
-                    n = tbl.num_rows
-                    if n == 0:
-                        continue
-                    k = max(16, min(n, -(-n * target // max(total_records, 1))))
-                    idx = np.linspace(0, n - 1, num=int(k)).astype(np.int64)
-                    zkey = _curve_np(cspec, tbl.take(pa.array(idx)))
-                    out_pk.extend([pkey] * len(zkey))
-                    out_k.extend(int(v) for v in zkey)
-                yield pd.DataFrame({"pkey": out_pk, "k": out_k})
+            for rec in recs:
+                # sample live rows only (positions index the full file)
+                tbl = rw.read_live(rec["path"], rec["dv"], columns=key_cols_read)
+                n = tbl.num_rows
+                if n == 0:
+                    continue
+                k = max(16, min(n, -(-n * target // max(total_records, 1))))
+                idx = np.linspace(0, n - 1, num=int(k)).astype(np.int64)
+                for v in _curve_np(cspec, tbl.take(pa.array(idx))):
+                    yield {"pkey": rec["pkey"], "k": int(v)}
 
         # pool + order-statistics EXECUTOR-side (applyInPandas per table
         # partition): the driver receives only the nb−1 bounds per
@@ -324,7 +305,7 @@ def execute_cluster(
                  "bound": ks[idxs].astype("int64")}
             )
 
-        sample_df = files_df.mapInPandas(_sample_keys, "pkey string, k long")
+        sample_df = _map_df(_sample_keys, "pkey string, k long")
         # actual per-partition pool size, not the nominal rate: _sample_keys
         # floors at 16 keys PER FILE, so a heavily fragmented partition
         # pools 16×#files even when 1000×nb is small — both terms must
@@ -382,91 +363,35 @@ def execute_cluster(
     # --- 2. MAP: Arrow file-level shuffle write ---------------------------
     t_map = time.time()
 
-    # flush a bucket's accumulated slices once they exceed this (bounds
-    # task memory on huge partitions; deterministic across task retries
-    # because the file order within a Spark partition is deterministic)
-    flush_bytes = 256 * 1024 * 1024
-
-    def _map_shuffle(batches):
+    def _map_shuffle(recs):
         import numpy as np
-        import pandas as pd
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
 
-        pa.set_cpu_count(1)  # one Arrow thread per one-core task
-        task_part = TaskContext.get().partitionId()
-        # accumulate per combo across ALL of this task's files, so fragment
-        # count is #tasks × buckets, not #files × buckets (a 10^5-file map
-        # would otherwise write 10^5 × buckets tiny fragments)
-        acc: dict[int, list] = {}
-        acc_bytes: dict[int, int] = {}
-        flush_idx: dict[int, int] = {}
-        counts: dict[int, int] = {}
-        timing = {"t_read": 0.0, "t_write": 0.0}
+        router = FragmentRouter(shuffle_dir)
+        t_read = 0.0
+        for rec in recs:
+            tr = time.time()
+            # absorb positional deletes: the rewritten layout is clean
+            tbl = rw.read_live(rec["path"], rec["dv"])
+            t_read += time.time() - tr
+            pkey = rec["pkey"]
+            zkey = _curve_np(cspec, tbl)
+            tbl = tbl.append_column(ZKEY_COL, pa.array(zkey, type=pa.int64()))
+            bounds = np.asarray(bounds_by_pkey.get(pkey, []), dtype=np.int64)
+            zb = (
+                np.searchsorted(bounds, zkey, side="right")
+                if len(bounds)
+                else np.zeros(len(zkey), dtype=np.int64)
+            )
+            router.route(tbl, zb, lambda zb_i: combo_index[(pkey, zb_i)])
+        router.close()
+        acks = [{"cidx": c, "rows": n, "t_read": 0.0, "t_write": 0.0}
+                for c, n in router.rows.items()]
+        if acks:  # task-level timings ride on one row per task
+            acks[0].update(t_read=t_read, t_write=router.t_write)
+        return acks
 
-        def _flush(cidx: int):
-            import time as _time
-
-            parts = acc.pop(cidx, [])
-            if not parts:
-                return
-            tw = _time.time()
-            frag_tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-            cdir = os.path.join(shuffle_dir, f"c{cidx}")
-            os.makedirs(cdir, exist_ok=True)
-            fi = flush_idx.get(cidx, 0)
-            flush_idx[cidx] = fi + 1
-            frag = os.path.join(cdir, f"t{task_part}_{fi}.parquet")
-            # attempt-unique tmp + atomic rename: a dead/speculative task
-            # attempt can never leave a partial file under the final name
-            # or race another attempt's tmp
-            tmp = f"{frag}.{os.getpid()}.inprogress"
-            # fragments are intermediate: cheapest codec wins
-            pq.write_table(frag_tbl, tmp, compression="lz4")
-            os.rename(tmp, frag)
-            acc_bytes[cidx] = 0
-            timing["t_write"] += _time.time() - tw
-
-        import time as _time
-
-        for pdf in batches:
-            for path, pkey, dvj in zip(pdf["path"], pdf["pkey"], pdf["dv"]):
-                tr = _time.time()
-                tbl = mf.read_table_nullfill(path, arrow_schema)
-                if dvj:  # absorb positional deletes: rewritten layout is clean
-                    dv = json.loads(dvj)
-                    tbl = mf.apply_delete_vectors(tbl, dv["rel"], dv["dvs"])
-                timing["t_read"] += _time.time() - tr
-                zkey = _curve_np(cspec, tbl)
-                tbl = tbl.append_column(ZKEY_COL, pa.array(zkey, type=pa.int64()))
-                bounds = np.asarray(bounds_by_pkey.get(pkey, []), dtype=np.int64)
-                zb = (
-                    np.searchsorted(bounds, zkey, side="right")
-                    if len(bounds)
-                    else np.zeros(len(zkey), dtype=np.int64)
-                )
-                for zb_i in np.unique(zb):
-                    cidx = combo_index[(pkey, int(zb_i))]
-                    part = tbl.filter(pa.array(zb == zb_i))
-                    acc.setdefault(cidx, []).append(part)
-                    counts[cidx] = counts.get(cidx, 0) + len(part)
-                    acc_bytes[cidx] = acc_bytes.get(cidx, 0) + part.nbytes
-                    if acc_bytes[cidx] >= flush_bytes:
-                        _flush(cidx)
-        for cidx in list(acc):
-            _flush(cidx)
-        rows_out = [
-            {"cidx": c, "rows": n, "t_read": 0.0, "t_write": 0.0}
-            for c, n in counts.items()
-        ]
-        # task-level timings ride on one row per task (summed driver-side)
-        if rows_out:
-            rows_out[0]["t_read"] = timing["t_read"]
-            rows_out[0]["t_write"] = timing["t_write"]
-        yield pd.DataFrame(rows_out, columns=["cidx", "rows", "t_read", "t_write"])
-
-    map_acks = files_df.mapInPandas(
+    map_acks = _map_df(
         _map_shuffle, "cidx int, rows long, t_read double, t_write double"
     ).collect()
     mapped_rows = sum(r["rows"] for r in map_acks)
@@ -480,70 +405,24 @@ def execute_cluster(
 
     # --- 3. REDUCE: concat + sort + one file per combo --------------------
     t_reduce = time.time()
-    stats_cols = (table.stats_columns() or set()) | {ZKEY_COL}
-    bloom_cols = table.bloom_columns
     live_combos = sorted({r["cidx"] for r in map_acks})
-    combo_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(c,) for c in live_combos], max(len(live_combos), 1)),
-        "cidx int",
-    )
 
-    def _reduce_write(batches):
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def _reduce_write(recs):
+        for rec in recs:
+            cidx = rec["cidx"]
+            tr = time.time()
+            tbl = read_fragments(shuffle_dir, cidx)
+            ts_ = time.time()
+            tbl = tbl.sort_by([(ZKEY_COL, "ascending")])
+            tw = time.time()
+            row = rw.write(tbl, f"c{cidx}.parquet")
+            yield {**row, "cidx": cidx, "t_read": ts_ - tr, "t_sort": tw - ts_,
+                   "t_write": time.time() - tw}
 
-        pa.set_cpu_count(1)  # one Arrow thread per one-core task
-        pa.set_io_thread_count(1)  # one prefetch thread feeds the scanner
-
-        import time as _time
-
-        for pdf in batches:
-            out = []
-            for cidx in pdf["cidx"]:
-                tr = _time.time()
-                cdir = os.path.join(shuffle_dir, f"c{cidx}")
-                # only committed fragments — a crashed attempt's .inprogress
-                # must never be ingested. Overlapped scanner read: the I/O
-                # thread prefetches fragment k+1 while this thread decodes
-                # k (3.7x lower read task-time than a read_table loop;
-                # tools/reduce_probe_scanner.py)
-                frags = sorted(f for f in os.listdir(cdir) if f.endswith(".parquet"))
-                tbl = mf.read_tables_overlapped([os.path.join(cdir, f) for f in frags])
-                ts_ = _time.time()
-                tbl = tbl.sort_by([(ZKEY_COL, "ascending")])
-                tw = _time.time()
-                dest = os.path.join(staging, f"c{cidx}.parquet")
-                tmp = f"{dest}.{os.getpid()}.inprogress"  # attempt-unique
-                pq.write_table(tbl, tmp, compression=codec)
-                os.rename(tmp, dest)
-                st = mf.footer_stats(dest, stats_cols)
-                out.append(
-                    {
-                        "cidx": int(cidx),
-                        "size_bytes": os.path.getsize(dest),
-                        "record_count": st["record_count"],
-                        "lower_bounds": json.dumps(st["lower_bounds"], default=str),
-                        "upper_bounds": json.dumps(st["upper_bounds"], default=str),
-                        "null_counts": json.dumps(st["null_counts"]),
-                        "blooms": json.dumps(mf.build_blooms(tbl, bloom_cols)),
-                        "t_read": ts_ - tr,
-                        "t_sort": tw - ts_,
-                        "t_write": _time.time() - tw,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["cidx", "size_bytes", "record_count", "lower_bounds",
-                         "upper_bounds", "null_counts", "blooms",
-                         "t_read", "t_sort", "t_write"],
-            )
-
-    stat_rows = combo_df.mapInPandas(
-        _reduce_write,
-        "cidx int, size_bytes long, record_count long, "
-        "lower_bounds string, upper_bounds string, null_counts string, blooms string, "
-        "t_read double, t_sort double, t_write double",
+    stat_rows = tasks_df(
+        spark, [(c,) for c in live_combos], _reduce_write,
+        "cidx int, " + STATS_SCHEMA + ", t_read double, t_sort double, t_write double",
+        spec_schema="cidx int", io_threads=1,
     ).collect()
     phases["reduce"] = time.time() - t_reduce
     phases["reduce_task_totals"] = {  # type: ignore[assignment]
@@ -552,32 +431,7 @@ def execute_cluster(
 
     # --- 4. publish + commit ----------------------------------------------
     t_publish = time.time()
-    import shutil as _shutil
-    import uuid as _uuid
-
-    os.makedirs(table.data_dir, exist_ok=True)
-    new_entries: list[mf.ManifestEntry] = []
-    for r in stat_rows:
-        pk, _zb_i = combos[r["cidx"]]
-        partition = json.loads(pk)
-        pdir = "/".join(f"{k}={v}" for k, v in sorted(partition.items()))
-        destdir = os.path.join(table.data_dir, pdir) if pdir else table.data_dir
-        os.makedirs(destdir, exist_ok=True)
-        dest = os.path.join(destdir, f"{_uuid.uuid4().hex[:8]}-c{r['cidx']}.parquet")
-        os.rename(os.path.join(staging, f"c{r['cidx']}.parquet"), dest)
-        new_entries.append(
-            mf.ManifestEntry(
-                path=os.path.relpath(dest, table.root),
-                partition=partition,
-                size_bytes=r["size_bytes"],
-                record_count=r["record_count"],
-                lower_bounds=json.loads(r["lower_bounds"]),
-                upper_bounds=json.loads(r["upper_bounds"]),
-                null_counts=json.loads(r["null_counts"]),
-                blooms=json.loads(r["blooms"]),
-            )
-        )
-    _shutil.rmtree(staging, ignore_errors=True)
+    new_entries = rw.publish(stat_rows, lambda r: json.loads(combos[r["cidx"]][0]))
     phases["publish"] = time.time() - t_publish
 
     sys_tables.record_group(
@@ -616,20 +470,16 @@ def execute_cluster(
         input_ref, output_files=[e.path for e in new_entries],
     )
     sys_tables.record_lineage(
-        {
-            "job_id": job_id,
-            "op": "cluster",
-            "table_name": table_name,
-            "partition_id": "*",
-            "files_before": n_files,
-            "files_after": len(new_entries),
-            "bytes_before": total_bytes,
-            "bytes_after": sum(e.size_bytes for e in new_entries),
-            "rows": total_records,
-            "duration_ms": dur_ms,
-            "throughput_rows_s": total_records / (dur_ms / 1000) if dur_ms else 0.0,
-            "throughput_bytes_s": total_bytes / (dur_ms / 1000) if dur_ms else 0.0,
-        }
+        lineage_row(
+            job_id, "cluster", table_name, dur_ms,
+            files_before=n_files,
+            files_after=len(new_entries),
+            bytes_before=total_bytes,
+            bytes_after=sum(e.size_bytes for e in new_entries),
+            rows=total_records,
+            rate_rows=total_records,
+            rate_bytes=total_bytes,
+        )
     )
     return {
         "status": "committed",

@@ -36,8 +36,7 @@ driver-built group spans exactly like the cluster map's bucket routing):
    untouched file's range, and the non-overlap invariant that makes the
    NEXT incremental pass cheap survives every pass by induction.
 3. ROUTE: delta files re-read full-width; rows land in per-group staged
-   fragments (attempt-unique tmp + atomic rename, the cluster map's
-   discipline).
+   fragments through the kernel's FragmentRouter.
 4. MERGE: one Arrow task per group reads its base file(s) (DVs
    absorbed) + its fragments, sorts by the key, splits at target file
    size, and stamps ``_zkey`` bounds + blooms — each output is itself a
@@ -45,6 +44,9 @@ driver-built group spans exactly like the cluster map's bucket routing):
 5. COMMIT: commit_replace removes the touched base files + ALL delta
    files, guarded by expected DV counts and row-count equality
    (delta live + touched-base live == rows written).
+
+Reads, fragments, staged writes, stats and publish run on the
+staged-rewrite kernel (maintenance/rewrite.py).
 
 Planning is driver-side over ``live_entries`` — O(#files) interval
 metadata, the same envelope as the driver planning path in
@@ -68,16 +70,24 @@ import time
 
 from pyspark.sql import SparkSession
 
-from ..core import manifests as mf
 from ..core.table import Table
 from .checkpoint import SystemTables
 from .cluster import ZKEY_COL, _curve_np, _curve_spec, execute_cluster
+from .rewrite import (
+    FILE_SPEC_SCHEMA,
+    STATS_SCHEMA,
+    FragmentRouter,
+    StagedRewrite,
+    file_spec,
+    lineage_row,
+    map_slices,
+    read_fragments,
+    tasks_df,
+)
 
 # above this fraction of table bytes sitting in delta, a full rewrite is
 # cheaper (and restores perfect balance); below it, incremental wins
 DEFAULT_MAX_DELTA_FRAC = 0.25
-
-_FLUSH_BYTES = 256 * 1024 * 1024
 
 
 def _last_cluster_curve(table: Table) -> str | None:
@@ -134,7 +144,6 @@ def execute_cluster_incremental(
 
     cspec = _curve_spec(table, curve, key_cols)
     root = table.root
-    arrow_schema = mf.spark_to_arrow_schema(table.schema)
     target = table.target_file_size
 
     # ---- interval table: per partition, base files sorted by _zkey lo ----
@@ -175,27 +184,17 @@ def execute_cluster_incremental(
         rows=delta_live_total, nbytes=delta_bytes,
     )
 
+    rw = StagedRewrite.begin(spark, table, extra_stats={ZKEY_COL})
+    shuffle_dir = os.path.join(rw.staging, "_incr_shuffle")
     span_meta = {pk: (v["los"], v["his"]) for pk, v in intervals.items()}
     key_cols_read = [c for c in cspec["inputs"] if c in table.schema.fieldNames()]
 
-    def _delta_rows_df():
-        rows = [
-            (
-                os.path.join(root, e.path),
-                pk,
-                json.dumps(
-                    {"rel": e.path, "dvs": [os.path.join(root, d["path"]) for d in e.deletes]}
-                )
-                if e.deletes
-                else "",
-            )
-            for pk, es in delta_by_part.items()
-            for e in es
-        ]
-        n_slices = max(1, min(len(rows), 4 * int(spark.sparkContext.defaultParallelism)))
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, n_slices),
-            "path string, pkey string, dv string",
+    delta_specs = [file_spec(root, e) for es in delta_by_part.values() for e in es]
+
+    def _delta_df(fn, out_schema: str):
+        return tasks_df(
+            spark, delta_specs, fn, out_schema, spec_schema=FILE_SPEC_SCHEMA,
+            n_slices=map_slices(spark, len(delta_specs)),
         )
 
     def _classify(np, keys, los, his):
@@ -213,35 +212,22 @@ def execute_cluster_incremental(
     # ---- 1. PROBE: key-only delta scan → touched entities ----------------
     t_probe = time.time()
 
-    def _probe(batches):
+    def _probe(recs):
         import numpy as np
-        import pandas as pd
-        import pyarrow as pa
 
-        pa.set_cpu_count(1)
-        for pdf in batches:
-            agg: dict[tuple[str, int], int] = {}
-            for path, pkey, dvj in zip(pdf["path"], pdf["pkey"], pdf["dv"]):
-                tbl = mf.read_table_nullfill(path, arrow_schema, columns=key_cols_read)
-                if dvj:
-                    dv = json.loads(dvj)
-                    tbl = mf.apply_delete_vectors(tbl, dv["rel"], dv["dvs"])
-                if tbl.num_rows == 0:
-                    continue
-                keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
-                los, his = span_meta[pkey]
-                ent = _classify(np, keys, los, his)
-                for e_i, n in zip(*np.unique(ent, return_counts=True)):
-                    k = (pkey, int(e_i))
-                    agg[k] = agg.get(k, 0) + int(n)
-            yield pd.DataFrame(
-                [{"pkey": pk, "entity": e_i, "rows": n} for (pk, e_i), n in agg.items()],
-                columns=["pkey", "entity", "rows"],
-            )
+        agg: dict[tuple[str, int], int] = {}
+        for rec in recs:
+            tbl = rw.read_live(rec["path"], rec["dv"], columns=key_cols_read)
+            if tbl.num_rows == 0:
+                continue
+            keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
+            ent = _classify(np, keys, *span_meta[rec["pkey"]])
+            for e_i, n in zip(*np.unique(ent, return_counts=True)):
+                k = (rec["pkey"], int(e_i))
+                agg[k] = agg.get(k, 0) + int(n)
+        return [{"pkey": pk, "entity": e_i, "rows": n} for (pk, e_i), n in agg.items()]
 
-    probe_rows = _delta_rows_df().mapInPandas(
-        _probe, "pkey string, entity long, rows long"
-    ).collect()
+    probe_rows = _delta_df(_probe, "pkey string, entity long, rows long").collect()
     probed_total = sum(r["rows"] for r in probe_rows)
     if probed_total != delta_live_total:
         raise RuntimeError(
@@ -295,69 +281,28 @@ def execute_cluster_incremental(
     touched_base = [e for g in groups for e in g["base"]]
     touched_base_live = sum(e.live_count for e in touched_base)
 
-    staging = table._stage_dir()
-    shuffle_dir = os.path.join(staging, "_incr_shuffle")
-    os.makedirs(shuffle_dir, exist_ok=True)
-    codec = str(spark.conf.get("spark.sql.parquet.compression.codec", "snappy")).lower()
-    codec = {"uncompressed": "none", "lz4raw": "lz4"}.get(codec, codec)
-
     # ---- 3. ROUTE: delta rows → per-group staged fragments ---------------
     t_route = time.time()
 
-    def _route(batches):
+    def _route(recs):
         import numpy as np
-        import pandas as pd
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
 
-        pa.set_cpu_count(1)
-        task_part = TaskContext.get().partitionId()
-        acc: dict[int, list] = {}
-        acc_bytes: dict[int, int] = {}
-        flush_idx: dict[int, int] = {}
-        routed = 0
+        router = FragmentRouter(shuffle_dir)
+        for rec in recs:
+            tbl = rw.read_live(rec["path"], rec["dv"])
+            if tbl.num_rows == 0:
+                continue
+            pkey = rec["pkey"]
+            keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
+            tbl = tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64()))
+            ent = _classify(np, keys, *span_meta[pkey])
+            # KeyError = probe/route drift
+            router.route(tbl, ent, lambda e_i: entity2group[(pkey, e_i)])
+        router.close()
+        return [{"rows": sum(router.rows.values())}]
 
-        def _flush(g: int):
-            parts = acc.pop(g, [])
-            if not parts:
-                return
-            frag_tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-            gdir = os.path.join(shuffle_dir, f"g{g}")
-            os.makedirs(gdir, exist_ok=True)
-            fi = flush_idx.get(g, 0)
-            flush_idx[g] = fi + 1
-            frag = os.path.join(gdir, f"t{task_part}_{fi}.parquet")
-            tmp = f"{frag}.{os.getpid()}.inprogress"
-            pq.write_table(frag_tbl, tmp, compression="lz4")
-            os.rename(tmp, frag)
-            acc_bytes[g] = 0
-
-        for pdf in batches:
-            for path, pkey, dvj in zip(pdf["path"], pdf["pkey"], pdf["dv"]):
-                tbl = mf.read_table_nullfill(path, arrow_schema)
-                if dvj:
-                    dv = json.loads(dvj)
-                    tbl = mf.apply_delete_vectors(tbl, dv["rel"], dv["dvs"])
-                if tbl.num_rows == 0:
-                    continue
-                keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
-                tbl = tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64()))
-                los, his = span_meta[pkey]
-                ent = _classify(np, keys, los, his)
-                for e_i in np.unique(ent):
-                    g = entity2group[(pkey, int(e_i))]  # KeyError = probe/route drift
-                    part = tbl.filter(pa.array(ent == e_i))
-                    acc.setdefault(g, []).append(part)
-                    acc_bytes[g] = acc_bytes.get(g, 0) + part.nbytes
-                    routed += len(part)
-                    if acc_bytes[g] >= _FLUSH_BYTES:
-                        _flush(g)
-        for g in list(acc):
-            _flush(g)
-        yield pd.DataFrame([{"rows": routed}], columns=["rows"])
-
-    route_acks = _delta_rows_df().mapInPandas(_route, "rows long").collect()
+    route_acks = _delta_df(_route, "rows long").collect()
     routed_total = sum(r["rows"] for r in route_acks)
     if routed_total != delta_live_total:
         raise RuntimeError(
@@ -367,143 +312,64 @@ def execute_cluster_incremental(
 
     # ---- 4. MERGE: per group read base + fragments, sort, split, stamp ---
     t_merge = time.time()
-    stats_cols = (table.stats_columns() or set()) | {ZKEY_COL}
-    bloom_cols = table.bloom_columns
     group_rows = [
         (
             gi,
             g["pkey"],
-            json.dumps(
-                [
-                    {
-                        "path": os.path.join(root, e.path),
-                        "rel": e.path,
-                        "dvs": [os.path.join(root, d["path"]) for d in e.deletes],
-                    }
-                    for e in g["base"]
-                ]
-            ),
+            [os.path.join(root, e.path) for e in g["base"]],
+            [file_spec(root, e)[2] for e in g["base"]],
             int(g["est_bytes"]),
         )
         for gi, g in enumerate(groups)
     ]
-    group_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(group_rows, max(len(group_rows), 1)),
-        "gidx int, pkey string, base string, est_bytes long",
-    )
 
-    def _merge(batches):
+    def _merge(recs):
         import numpy as np
-        import pandas as pd
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-        for pdf in batches:
-            out = []
-            for gidx, pkey, base_j, est_bytes in zip(
-                pdf["gidx"], pdf["pkey"], pdf["base"], pdf["est_bytes"]
-            ):
-                parts = []
-                for b in json.loads(base_j):
-                    tbl = mf.read_table_nullfill(b["path"], arrow_schema)
-                    if b["dvs"]:
-                        tbl = mf.apply_delete_vectors(tbl, b["rel"], b["dvs"])
-                    keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
-                    parts.append(
-                        tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64()))
-                    )
-                gdir = os.path.join(shuffle_dir, f"g{gidx}")
-                if os.path.isdir(gdir):
-                    frags = sorted(f for f in os.listdir(gdir) if f.endswith(".parquet"))
-                    if frags:
-                        parts.append(
-                            mf.read_tables_overlapped(
-                                [os.path.join(gdir, f) for f in frags]
-                            )
-                        )
-                tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-                tbl = tbl.sort_by([(ZKEY_COL, "ascending")])
-                n_out = max(1, -(-int(est_bytes) // target))
-                cuts = np.linspace(0, tbl.num_rows, n_out + 1).astype(np.int64)
-                # snap interior cuts to the start of the equal-key run they
-                # land in: a _zkey value straddling two output files would
-                # give them touching bounds, and the NEXT pass's strict
-                # non-overlap check would misread that as a foreign writer
-                # and full-rewrite forever (duplicate keys are normal —
-                # low-cardinality key columns hash to equal curve keys)
-                if n_out > 1:
-                    zk = tbl.column(ZKEY_COL).to_numpy()
-                    for j in range(1, n_out):
-                        c = int(cuts[j])
-                        if 0 < c < len(zk):
-                            cuts[j] = np.searchsorted(zk, zk[c], side="left")
-                    cuts = np.maximum.accumulate(cuts)
-                for j in range(n_out):
-                    sl = tbl.slice(int(cuts[j]), int(cuts[j + 1] - cuts[j]))
-                    if sl.num_rows == 0:
-                        continue
-                    dest = os.path.join(staging, f"incr_g{gidx}_{j}.parquet")
-                    tmp = f"{dest}.{os.getpid()}.inprogress"
-                    pq.write_table(sl, tmp, compression=codec)
-                    os.rename(tmp, dest)
-                    st = mf.footer_stats(dest, stats_cols)
-                    out.append(
-                        {
-                            "gidx": int(gidx),
-                            "slice": int(j),
-                            "pkey": pkey,
-                            "size_bytes": os.path.getsize(dest),
-                            "record_count": st["record_count"],
-                            "lower_bounds": json.dumps(st["lower_bounds"], default=str),
-                            "upper_bounds": json.dumps(st["upper_bounds"], default=str),
-                            "null_counts": json.dumps(st["null_counts"]),
-                            "blooms": json.dumps(mf.build_blooms(sl, bloom_cols)),
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["gidx", "slice", "pkey", "size_bytes", "record_count",
-                         "lower_bounds", "upper_bounds", "null_counts", "blooms"],
-            )
+        for rec in recs:
+            gidx = rec["gidx"]
+            parts = []
+            for path, dv in zip(rec["base"], rec["dvs"]):
+                tbl = rw.read_live(path, dv)
+                keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
+                parts.append(tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64())))
+            frags = read_fragments(shuffle_dir, gidx)
+            if frags is not None:
+                parts.append(frags)
+            tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+            tbl = tbl.sort_by([(ZKEY_COL, "ascending")])
+            n_out = max(1, -(-int(rec["est_bytes"]) // target))
+            cuts = np.linspace(0, tbl.num_rows, n_out + 1).astype(np.int64)
+            # snap interior cuts to the start of the equal-key run they
+            # land in: a _zkey value straddling two output files would
+            # give them touching bounds, and the NEXT pass's strict
+            # non-overlap check would misread that as a foreign writer
+            # and full-rewrite forever (duplicate keys are normal —
+            # low-cardinality key columns hash to equal curve keys)
+            if n_out > 1:
+                zk = tbl.column(ZKEY_COL).to_numpy()
+                for j in range(1, n_out):
+                    c = int(cuts[j])
+                    if 0 < c < len(zk):
+                        cuts[j] = np.searchsorted(zk, zk[c], side="left")
+                cuts = np.maximum.accumulate(cuts)
+            for j in range(n_out):
+                sl = tbl.slice(int(cuts[j]), int(cuts[j + 1] - cuts[j]))
+                if sl.num_rows:
+                    yield {**rw.write(sl, f"i{gidx}_{j}.parquet"), "pkey": rec["pkey"]}
 
-    stat_rows = group_df.mapInPandas(
-        _merge,
-        "gidx int, slice int, pkey string, size_bytes long, record_count long, "
-        "lower_bounds string, upper_bounds string, null_counts string, blooms string",
+    stat_rows = tasks_df(
+        spark, group_rows, _merge, "pkey string, " + STATS_SCHEMA,
+        spec_schema="gidx int, pkey string, base array<string>, dvs array<string>, "
+        "est_bytes long",
+        io_threads=1,
     ).collect()
     phases["merge"] = time.time() - t_merge
 
     # ---- 5. publish + commit ---------------------------------------------
     t_publish = time.time()
-    import shutil as _shutil
-    import uuid as _uuid
-
-    os.makedirs(table.data_dir, exist_ok=True)
-    new_entries: list[mf.ManifestEntry] = []
-    for r in stat_rows:
-        partition = json.loads(r["pkey"])
-        pdir = "/".join(f"{k}={v}" for k, v in sorted(partition.items()))
-        destdir = os.path.join(table.data_dir, pdir) if pdir else table.data_dir
-        os.makedirs(destdir, exist_ok=True)
-        dest = os.path.join(
-            destdir, f"{_uuid.uuid4().hex[:8]}-i{r['gidx']}_{r['slice']}.parquet"
-        )
-        os.rename(os.path.join(staging, f"incr_g{r['gidx']}_{r['slice']}.parquet"), dest)
-        new_entries.append(
-            mf.ManifestEntry(
-                path=os.path.relpath(dest, root),
-                partition=partition,
-                size_bytes=r["size_bytes"],
-                record_count=r["record_count"],
-                lower_bounds=json.loads(r["lower_bounds"]),
-                upper_bounds=json.loads(r["upper_bounds"]),
-                null_counts=json.loads(r["null_counts"]),
-                blooms=json.loads(r["blooms"]),
-            )
-        )
-    _shutil.rmtree(staging, ignore_errors=True)
+    new_entries = rw.publish(stat_rows, lambda r: json.loads(r["pkey"]))
     phases["publish"] = time.time() - t_publish
 
     rewritten = sum(e.record_count for e in new_entries)
@@ -537,20 +403,16 @@ def execute_cluster_incremental(
     )
     bytes_rewritten = sum(e.size_bytes for e in removed_entries)
     sys_tables.record_lineage(
-        {
-            "job_id": job_id,
-            "op": "cluster-incr",
-            "table_name": table_name,
-            "partition_id": "*",
-            "files_before": len(entries),
-            "files_after": len(entries) - len(removed_entries) + len(new_entries),
-            "bytes_before": bytes_rewritten,
-            "bytes_after": sum(e.size_bytes for e in new_entries),
-            "rows": rewritten,
-            "duration_ms": dur_ms,
-            "throughput_rows_s": rewritten / (dur_ms / 1000) if dur_ms else 0.0,
-            "throughput_bytes_s": bytes_rewritten / (dur_ms / 1000) if dur_ms else 0.0,
-        }
+        lineage_row(
+            job_id, "cluster-incr", table_name, dur_ms,
+            files_before=len(entries),
+            files_after=len(entries) - len(removed_entries) + len(new_entries),
+            bytes_before=bytes_rewritten,
+            bytes_after=sum(e.size_bytes for e in new_entries),
+            rows=rewritten,
+            rate_rows=rewritten,
+            rate_bytes=bytes_rewritten,
+        )
     )
     return {
         "status": "committed",

@@ -7,16 +7,15 @@ total_size // 256 MB, "would require rewrite" (ops/maintenance_system.py:
   plan   : per-partition first-fit-decreasing of small files into bins of
            ≤ target file size (driver, manifest-only — same split as the
            reference's metadata-only planner, §3.3).
-  execute: ONE distributed job, ZERO shuffles, O(1) driver plan. The job
-           iterates over the group SPECS (tiny metadata rows); each task
-           rewrites whole groups via Arrow: read the group's files with
-           pyarrow, sort in memory by the table sort order, write ONE
-           ≈target-size output file, return its footer stats. The same
-           shape as Iceberg's binpack rewrite — N independent group-tasks
-           with perfect locality — expressed as an Arrow-vectorized
-           mapInPandas over metadata. The driver then publishes group-by-
-           group with checkpoint rows (planned → written) and commits ONE
-           replace-snapshot at the end (written → committed).
+  execute: ONE distributed job, ZERO shuffles, O(1) driver plan, run on
+           the staged-rewrite kernel (maintenance/rewrite.py owns the read,
+           the staged write, the stats and the publish). One task per group
+           spec reads the group's files, sorts by the table sort order and
+           writes ONE ≈target-size file — Iceberg's binpack shape, N
+           independent group-tasks with perfect locality. The driver
+           publishes group-by-group with checkpoint rows (planned →
+           written) and commits ONE replace-snapshot at the end (written →
+           committed).
   resume : deterministic job_id = f(table uuid, snapshot); groups already
            'written' are excluded from the rewrite job, their outputs are
            reused from the checkpoint row; a fully-committed job is a
@@ -46,6 +45,7 @@ from pyspark.sql import functions as F
 from ..core import manifests as mf
 from ..core.table import Table
 from .checkpoint import SystemTables
+from .rewrite import STATS_SCHEMA, StagedRewrite, dv_spec, lineage_row, tasks_df
 
 
 class InjectedFailure(RuntimeError):
@@ -342,132 +342,54 @@ def execute_compaction(
         written_entries[gid] = [mf.ManifestEntry.from_row(r) for r in extra.get("entries", [])]
 
     if pending:
-        staging = table._stage_dir()
+        rw = StagedRewrite.begin(spark, table)
         sort_cols = sort_columns or [
             f.column for f in table.sort_order.fields if f.column in table.schema.fieldNames()
         ]
-        # ONE Spark job, ZERO shuffles, O(1) driver plan. The job's input is
-        # the group SPECS (tiny metadata rows), not the data: each task
-        # rewrites whole groups with pyarrow — read that group's files,
-        # sort by the table sort order, write ONE output file, return its
-        # footer stats. Payload bytes never enter the JVM row pipeline and
-        # never shuffle (disk → Arrow C++ → disk exactly once), per-file
-        # open overhead is Arrow-native (matters when compacting 10^5 tiny
-        # files), stats come back with the job (no second stats job), and
-        # parallelism = #groups regardless of plan size. This is the
-        # Arrow-vectorized-UDF form the north rule prescribes; the old
-        # union-of-coalesce(1) plan was O(branches) driver work and paid
-        # JVM reader setup per tiny file inside single-threaded tasks.
+        # ONE Spark job, ZERO shuffles: one task per group spec (tiny
+        # metadata rows, never the data) reads the group's files, sorts by
+        # the table sort order and writes ONE output file. LPT order:
+        # largest groups first, so the last scheduling wave holds the
+        # smallest tasks.
         t_write = time.time()
-        stats_cols = table.stats_columns()
-        bloom_cols = table.bloom_columns
-        codec = str(spark.conf.get("spark.sql.parquet.compression.codec", "snappy")).lower()
-        codec = {"uncompressed": "none", "lz4raw": "lz4"}.get(codec, codec)
-        arrow_schema = mf.spark_to_arrow_schema(table.schema)
-        root = table.root
-
-        # LPT order: largest groups first so the last scheduling wave holds
-        # the smallest tasks (shrinks the straggler tail when #groups is a
-        # small multiple of the core count)
         by_size = sorted(pending, key=lambda g: (-g.input_bytes, g.group_id))
         spec_rows = [
             (
-                i,
                 g.group_id,
-                [os.path.join(root, p) for p in g.input_paths],
-                # abs data path → {"rel": manifest path, "dvs": [abs DV paths]}
-                json.dumps(
-                    {
-                        os.path.join(root, p): {
-                            "rel": p,
-                            "dvs": [os.path.join(root, d) for d in dvl],
-                        }
-                        for p, dvl in g.input_dvs.items()
-                    }
-                ),
+                [os.path.join(rw.root, p) for p in g.input_paths],
+                [dv_spec(rw.root, p, g.input_dvs.get(p, [])) for p in g.input_paths],
             )
-            for i, g in enumerate(by_size)
+            for g in by_size
         ]
-        # parallelize(n slices) = exactly one group per task with NO extra
-        # job (repartitionByRange would run a sampling sub-job + shuffle
-        # inside the timed rewrite; hash would collide groups into shared
-        # tasks)
-        spec_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(spec_rows, max(len(spec_rows), 1)),
-            "gidx int, group_id string, paths array<string>, dv_json string",
-        )
 
-        def _rewrite(batches):
-            import time as _time
-
-            import pandas as pd
+        def _rewrite(recs):
             import pyarrow as _pa
-            import pyarrow.parquet as _pq
 
-            # one Arrow thread per worker: each task already owns one core;
-            # the default per-process pool (=machine cpu count) makes 16
-            # workers spawn 16x32 threads and thrash the cpuset
-            _pa.set_cpu_count(1)
-            _pa.set_io_thread_count(2)
-
-            for pdf in batches:
-                out = []
-                for gid, paths, dvj in zip(pdf["group_id"], pdf["paths"], pdf["dv_json"]):
-                    tr = _time.time()
-                    dvmap = json.loads(dvj or "{}")
-                    # DV-free files stream through ONE overlapped dataset
-                    # scan (I/O thread prefetches file k+1 while this
-                    # thread decodes k — tools/reduce_probe_scanner.py);
-                    # DV-laden files keep the per-file read because
-                    # positional tombstones index rows within ONE file
-                    dv_free = [p for p in paths if not dvmap.get(p)]
-                    parts = []
-                    if dv_free:
-                        parts.append(mf.read_tables_overlapped(dv_free, arrow_schema))
-                    for p in paths:
-                        dv = dvmap.get(p)
-                        if not dv:
-                            continue
-                        t_ = mf.read_table_nullfill(p, arrow_schema)
-                        # absorb positional deletes: output is clean
-                        t_ = mf.apply_delete_vectors(t_, dv["rel"], dv["dvs"])
-                        parts.append(t_)
-                    tbl = parts[0] if len(parts) == 1 else _pa.concat_tables(parts)
-                    ts_ = _time.time()
-                    if sort_cols:
-                        tbl = tbl.sort_by([(c, "ascending") for c in sort_cols])
-                    tw = _time.time()
-                    dest = os.path.join(staging, f"{gid}.parquet")
-                    tmp = f"{dest}.{os.getpid()}.inprogress"  # attempt-unique
-                    _pq.write_table(tbl, tmp, compression=codec)
-                    os.rename(tmp, dest)
-                    tst = _time.time()
-                    st = mf.footer_stats(dest, stats_cols)
-                    out.append(
-                        {
-                            "group_id": gid,
-                            "size_bytes": os.path.getsize(dest),
-                            "record_count": st["record_count"],
-                            "lower_bounds": json.dumps(st["lower_bounds"], default=str),
-                            "upper_bounds": json.dumps(st["upper_bounds"], default=str),
-                            "null_counts": json.dumps(st["null_counts"]),
-                            "blooms": json.dumps(mf.build_blooms(tbl, bloom_cols)),
-                            "t_read": ts_ - tr,
-                            "t_sort": tw - ts_,
-                            "t_write": tst - tw,
-                            "t_stats": _time.time() - tst,
-                        }
-                    )
-                yield pd.DataFrame(out)
+            for rec in recs:
+                tr = time.time()
+                paths, dvs = list(rec["paths"]), list(rec["dvs"])
+                # DV-free files stream through ONE overlapped dataset scan;
+                # DV-laden files keep the per-file read because positional
+                # tombstones index rows within ONE file
+                dv_free = [p for p, dv in zip(paths, dvs) if not dv]
+                parts = [mf.read_tables_overlapped(dv_free, rw.arrow_schema)] if dv_free else []
+                parts += [rw.read_live(p, dv) for p, dv in zip(paths, dvs) if dv]
+                tbl = parts[0] if len(parts) == 1 else _pa.concat_tables(parts)
+                ts_ = time.time()
+                if sort_cols:
+                    tbl = tbl.sort_by([(c, "ascending") for c in sort_cols])
+                tw = time.time()
+                row = rw.write(tbl, f"{rec['group_id']}.parquet")
+                yield {**row, "group_id": rec["group_id"], "t_read": ts_ - tr, "t_sort": tw - ts_}
 
         job_stats = {
             r["group_id"]: r
-            for r in spec_df.mapInPandas(
-                _rewrite,
-                "group_id string, size_bytes long, record_count long, "
-                "lower_bounds string, upper_bounds string, null_counts string, "
-                "blooms string, "
-                "t_read double, t_sort double, t_write double, t_stats double",
+            for r in tasks_df(
+                spark, spec_rows, _rewrite,
+                "group_id string, " + STATS_SCHEMA
+                + ", t_read double, t_sort double, t_write double, t_stats double",
+                spec_schema="group_id string, paths array<string>, dvs array<string>",
+                io_threads=2,
             ).collect()
         }
         # summed task-side phase seconds (cross-task concurrency means these
@@ -483,34 +405,8 @@ def execute_compaction(
             # silently drop its input files from the replace commit
             raise RuntimeError(f"compaction job returned no output for groups {sorted(missing)[:5]}")
         tp = time.time()
-
-        import uuid as _uuid
-
-        n_written = 0
-        for g in pending:
-            st = job_stats.get(g.group_id)
-            entries: list[mf.ManifestEntry] = []
-            pdir = "/".join(f"{k}={v}" for k, v in sorted(g.partition.items()))
-            destdir = os.path.join(table.data_dir, pdir) if pdir else table.data_dir
-            os.makedirs(destdir, exist_ok=True)
-            if st is not None:
-                f_abs = os.path.join(staging, f"{g.group_id}.parquet")
-                newname = f"{_uuid.uuid4().hex[:8]}-{g.group_id}.parquet"
-                dest = os.path.join(destdir, newname)
-                os.rename(f_abs, dest)
-                rel = os.path.relpath(dest, table.root)
-                entries.append(
-                    mf.ManifestEntry(
-                        path=rel,
-                        partition=g.partition,
-                        size_bytes=st["size_bytes"],
-                        record_count=st["record_count"],
-                        lower_bounds=json.loads(st["lower_bounds"]),
-                        upper_bounds=json.loads(st["upper_bounds"]),
-                        null_counts=json.loads(st["null_counts"]),
-                        blooms=json.loads(st["blooms"]),
-                    )
-                )
+        for n_written, g in enumerate(pending, 1):
+            entries = [rw.publish_file(job_stats[g.group_id], g.partition)]
             written_entries[g.group_id] = entries
             sys_tables.record_group(
                 job_id, op, table_name, json.dumps(g.partition, sort_keys=True), g.group_id,
@@ -520,13 +416,9 @@ def execute_compaction(
                 nbytes=sum(e.size_bytes for e in entries),
                 extra={"entries": [e.to_row() for e in entries]},
             )
-            n_written += 1
             if test_fail_after_written is not None and n_written >= test_fail_after_written:
                 raise InjectedFailure(f"injected failure after {n_written} written groups")
-
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
+        rw.discard()
         phases["publish"] = time.time() - tp
 
     # single replace-snapshot commit covering every group
@@ -563,20 +455,17 @@ def execute_compaction(
     )
     sys_tables.record_lineages(
         [
-            {
-                "job_id": job_id,
-                "op": op,
-                "table_name": table_name,
-                "partition_id": json.dumps(g.partition, sort_keys=True),
-                "files_before": len(g.input_paths),
-                "files_after": len(written_entries.get(g.group_id, [])),
-                "bytes_before": g.input_bytes,
-                "bytes_after": sum(e.size_bytes for e in written_entries.get(g.group_id, [])),
-                "rows": g.input_records,
-                "duration_ms": dur_ms,
-                "throughput_rows_s": (total_rows / (dur_ms / 1000)) if dur_ms else 0.0,
-                "throughput_bytes_s": (total_bytes / (dur_ms / 1000)) if dur_ms else 0.0,
-            }
+            lineage_row(
+                job_id, op, table_name, dur_ms,
+                partition_id=json.dumps(g.partition, sort_keys=True),
+                files_before=len(g.input_paths),
+                files_after=len(written_entries.get(g.group_id, [])),
+                bytes_before=g.input_bytes,
+                bytes_after=sum(e.size_bytes for e in written_entries.get(g.group_id, [])),
+                rows=g.input_records,
+                rate_rows=total_rows,
+                rate_bytes=total_bytes,
+            )
             for g in groups
         ]
     )

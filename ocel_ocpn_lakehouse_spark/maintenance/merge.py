@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from ..core.table import Table
 from .checkpoint import SystemTables
 from .compact import _norm_path_py, _norm_path_sql
+from .rewrite import FILE_SPEC_SCHEMA, STATS_SCHEMA, StagedRewrite, file_spec, lineage_row, tasks_df
 
 BROADCAST_THRESHOLD_ROWS = 2_000_000  # source keys; ~16 MB of longs
 
@@ -62,114 +63,35 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
     semantics: a NULL target key never matches any source key (NULL is
     dropped from the set and null rows are always survivors — same as the
     left_anti fallback)."""
-    import json
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from ..core import manifests as mf
-
     keys_b = spark.sparkContext.broadcast({k for k in key_set if k is not None})
-    staging = table._stage_dir()
-    arrow_schema = mf.spark_to_arrow_schema(table.schema)
-    stats_cols = table.stats_columns()
-    bloom_cols = table.bloom_columns
-    codec = str(spark.conf.get("spark.sql.parquet.compression.codec", "snappy")).lower()
-    codec = {"uncompressed": "none", "lz4raw": "lz4"}.get(codec, codec)
-    specs = [
-        (
-            i,
-            os.path.join(table.root, e.path),
-            json.dumps(
-                {"rel": e.path, "dvs": [os.path.join(table.root, d["path"]) for d in e.deletes]}
-            )
-            if e.deletes
-            else "",
-        )
-        for i, e in enumerate(touched_entries)
-    ]
+    rw = StagedRewrite.begin(spark, table)
 
-    def _task(batches):
+    def _survivors(recs):
         import numpy as np
-        import pandas as pd
         import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pa.set_cpu_count(1)  # one Arrow thread per one-core task
 
         kset = keys_b.value
-        for pdf in batches:
-            out = []
-            for fidx, path, dvj in zip(pdf["fidx"], pdf["path"], pdf["dv"]):
-                tbl = mf.read_table_nullfill(path, arrow_schema)
-                if dvj:  # absorb positional deletes before CoW filtering —
-                    # a tombstoned row must not resurrect into the survivor
-                    dv = json.loads(dvj)
-                    tbl = mf.apply_delete_vectors(tbl, dv["rel"], dv["dvs"])
-                kvals = tbl[key].to_pylist()
-                mask = np.fromiter(
-                    ((k is None) or (k not in kset) for k in kvals), bool, count=len(kvals)
-                )
-                surv = tbl.filter(pa.array(mask))
-                if surv.num_rows == 0:
-                    continue  # whole file consumed by the merge
-                dest = os.path.join(staging, f"m{fidx}.parquet")
-                tmp = f"{dest}.{os.getpid()}.inprogress"  # attempt-unique
-                pq.write_table(surv, tmp, compression=codec)
-                os.rename(tmp, dest)
-                st = mf.footer_stats(dest, stats_cols)
-                out.append(
-                    {
-                        "fidx": int(fidx),
-                        "size_bytes": os.path.getsize(dest),
-                        "record_count": st["record_count"],
-                        "lower_bounds": json.dumps(st["lower_bounds"], default=str),
-                        "upper_bounds": json.dumps(st["upper_bounds"], default=str),
-                        "null_counts": json.dumps(st["null_counts"]),
-                        "blooms": json.dumps(mf.build_blooms(surv, bloom_cols)),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["fidx", "size_bytes", "record_count", "lower_bounds",
-                         "upper_bounds", "null_counts", "blooms"],
+        for rec in recs:
+            # absorb positional deletes before CoW filtering — a tombstoned
+            # row must not resurrect into the survivor
+            tbl = rw.read_live(rec["path"], rec["dv"])
+            kvals = tbl[key].to_pylist()
+            mask = np.fromiter(
+                ((k is None) or (k not in kset) for k in kvals), bool, count=len(kvals)
             )
+            surv = tbl.filter(pa.array(mask))
+            if surv.num_rows:  # else the whole file was consumed by the merge
+                yield {**rw.write(surv, f"m{rec['fidx']}.parquet"), "fidx": rec["fidx"]}
 
-    spec_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(specs, max(len(specs), 1)),
-        "fidx int, path string, dv string",
-    )
-    rows = spec_df.mapInPandas(
-        _task,
-        "fidx int, size_bytes long, record_count long, "
-        "lower_bounds string, upper_bounds string, null_counts string, blooms string",
+    rows = tasks_df(
+        spark,
+        [(i, *file_spec(rw.root, e)) for i, e in enumerate(touched_entries)],
+        _survivors,
+        "fidx int, " + STATS_SCHEMA,
+        spec_schema="fidx int, " + FILE_SPEC_SCHEMA,
     ).collect()
-
-    os.makedirs(table.data_dir, exist_ok=True)
-    entries = []
-    n_rows = 0
-    for r in rows:
-        e_in = touched_entries[r["fidx"]]
-        pdir = "/".join(f"{k}={v}" for k, v in sorted(e_in.partition.items()))
-        destdir = os.path.join(table.data_dir, pdir) if pdir else table.data_dir
-        os.makedirs(destdir, exist_ok=True)
-        dest = os.path.join(destdir, f"{_uuid.uuid4().hex[:8]}-m{r['fidx']}.parquet")
-        os.rename(os.path.join(staging, f"m{r['fidx']}.parquet"), dest)
-        entries.append(
-            mf.ManifestEntry(
-                path=os.path.relpath(dest, table.root),
-                partition=e_in.partition,
-                size_bytes=r["size_bytes"],
-                record_count=r["record_count"],
-                lower_bounds=json.loads(r["lower_bounds"]),
-                upper_bounds=json.loads(r["upper_bounds"]),
-                null_counts=json.loads(r["null_counts"]),
-                blooms=json.loads(r["blooms"]),
-            )
-        )
-        n_rows += r["record_count"]
-    shutil.rmtree(staging, ignore_errors=True)
-    return entries, n_rows
+    entries = rw.publish(rows, lambda r: touched_entries[r["fidx"]].partition)
+    return entries, sum(e.record_count for e in entries)
 
 
 def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
@@ -574,20 +496,17 @@ def merge_into(
         dur_ms = int((time.time() - t0) * 1000)
         if sys_tables:
             sys_tables.record_lineage(
-                {
-                    "job_id": f"merge-{table.md.table_uuid[:8]}-snap{snap.snapshot_id}",
-                    "op": "merge",
-                    "table_name": table_name,
-                    "partition_id": "*",
-                    "files_before": len(touched_entries),
-                    "files_after": len(new_entries),
-                    "bytes_before": sum(e.size_bytes for e in touched_entries),
-                    "bytes_after": sum(e.size_bytes for e in new_entries),
-                    "rows": n_new_rows,
-                    "duration_ms": dur_ms,
-                    "throughput_rows_s": n_new_rows / (dur_ms / 1000) if dur_ms else 0.0,
-                    "throughput_bytes_s": 0.0,
-                }
+                lineage_row(
+                    f"merge-{table.md.table_uuid[:8]}-snap{snap.snapshot_id}",
+                    "merge", table_name, dur_ms,
+                    files_before=len(touched_entries),
+                    files_after=len(new_entries),
+                    bytes_before=sum(e.size_bytes for e in touched_entries),
+                    bytes_after=sum(e.size_bytes for e in new_entries),
+                    rows=n_new_rows,
+                    rate_rows=n_new_rows,
+                    rate_bytes=0.0,
+                )
             )
         return {
             "status": "committed",

@@ -19,9 +19,10 @@ Shape (the 100x question):
            compaction), the SET expressions evaluate inside whole-stage
            codegen gated on the predicate (non-matching rows in a touched
            file pass through unchanged), and one applyInArrow task per
-           file writes the replacement in original row order with fresh
-           footer stats + Blooms (Arrow-native: no pandas int64→float64
-           round-trip anywhere near the payload).
+           file writes the replacement in original row order through the
+           staged-rewrite kernel (maintenance/rewrite.py), which also
+           publishes it (Arrow-native: no pandas int64→float64 round-trip
+           anywhere near the payload).
   commit   ``commit_replace`` with ``operation='update'`` (NOT the
            row-preserving 'replace': the changelog must emit the old rows
            as deletes and the new as inserts so CDC consumers see the
@@ -35,19 +36,16 @@ tombstoned by delete vectors do not resurrect.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
-import uuid as _uuid
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-from ..core import manifests as mf
 from ..core.table import PrunePredicate, Table
 from .checkpoint import SystemTables
 from .deletes import exclude_existing_tombstones
+from .rewrite import STATS_SCHEMA, StagedRewrite
 
 
 def transform_where(
@@ -154,12 +152,7 @@ def transform_where(
     ]
     upd = rows.select("_fp", "_pos", cond.alias("_hit"), *proj)
 
-    staging = table._stage_dir()
-    arrow_schema = mf.spark_to_arrow_schema(schema)
-    stats_cols = table.stats_columns()
-    bloom_cols = table.bloom_columns
-    codec = str(spark.conf.get("spark.sql.parquet.compression.codec", "snappy")).lower()
-    codec = {"uncompressed": "none", "lz4raw": "lz4"}.get(codec, codec)
+    rw = StagedRewrite.begin(spark, table)
     fp_to_idx = {}
     for i, e in enumerate(touched):
         fp_to_idx[f"{prefix}{e.path}"] = i
@@ -173,7 +166,6 @@ def transform_where(
         # Arrow-native keeps every value bit-exact end to end
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         pa.set_cpu_count(1)
         tbl = tbl.sort_by([("_pos", "ascending")])
@@ -181,75 +173,15 @@ def transform_where(
         n_hit = int(
             pc.sum(pc.fill_null(tbl["_hit"], False).cast(pa.int64())).as_py() or 0
         )
-        data = tbl.select(list(cols)).cast(arrow_schema)
-        dest = os.path.join(staging, f"u{fidx}.parquet")
-        tmp = f"{dest}.{os.getpid()}.inprogress"
-        pq.write_table(data, tmp, compression=codec)
-        os.rename(tmp, dest)
-        st = mf.footer_stats(dest, stats_cols)
-        out_schema = pa.schema(
-            [
-                ("fidx", pa.int32()),
-                ("updated", pa.int64()),
-                ("size_bytes", pa.int64()),
-                ("record_count", pa.int64()),
-                ("lower_bounds", pa.string()),
-                ("upper_bounds", pa.string()),
-                ("null_counts", pa.string()),
-                ("blooms", pa.string()),
-            ]
-        )
-        return pa.Table.from_pylist(
-            [
-                {
-                    "fidx": fidx,
-                    "updated": n_hit,
-                    "size_bytes": os.path.getsize(dest),
-                    "record_count": st["record_count"],
-                    "lower_bounds": json.dumps(st["lower_bounds"], default=str),
-                    "upper_bounds": json.dumps(st["upper_bounds"], default=str),
-                    "null_counts": json.dumps(st["null_counts"]),
-                    "blooms": json.dumps(mf.build_blooms(data, bloom_cols)),
-                }
-            ],
-            schema=out_schema,
-        )
+        data = tbl.select(list(cols)).cast(rw.arrow_schema)
+        row = {**rw.write(data, f"u{fidx}.parquet"), "fidx": fidx, "updated": n_hit}
+        return pa.Table.from_pylist([row]).select(out_cols)
 
-    out_rows = (
-        upd.groupBy("_fp")
-        .applyInArrow(
-            _write_file,
-            "fidx int, updated long, size_bytes long, record_count long, "
-            "lower_bounds string, upper_bounds string, null_counts string, "
-            "blooms string",
-        )
-        .collect()
-    )
-
-    os.makedirs(table.data_dir, exist_ok=True)
-    new_entries = []
-    updated_rows = 0
-    for r in out_rows:
-        e_in = touched[r["fidx"]]
-        pdir = "/".join(f"{k}={v}" for k, v in sorted(e_in.partition.items()))
-        destdir = os.path.join(table.data_dir, pdir) if pdir else table.data_dir
-        os.makedirs(destdir, exist_ok=True)
-        dest = os.path.join(destdir, f"{_uuid.uuid4().hex[:8]}-u{r['fidx']}.parquet")
-        os.rename(os.path.join(staging, f"u{r['fidx']}.parquet"), dest)
-        new_entries.append(
-            mf.ManifestEntry(
-                path=os.path.relpath(dest, root),
-                partition=e_in.partition,
-                size_bytes=r["size_bytes"],
-                record_count=r["record_count"],
-                lower_bounds=json.loads(r["lower_bounds"]),
-                upper_bounds=json.loads(r["upper_bounds"]),
-                null_counts=json.loads(r["null_counts"]),
-                blooms=json.loads(r["blooms"]),
-            )
-        )
-        updated_rows += int(r["updated"])
-    shutil.rmtree(staging, ignore_errors=True)
+    out_schema = "fidx long, updated long, " + STATS_SCHEMA
+    out_cols = [c.split()[0] for c in out_schema.split(",")]
+    out_rows = upd.groupBy("_fp").applyInArrow(_write_file, out_schema).collect()
+    new_entries = rw.publish(out_rows, lambda r: touched[r["fidx"]].partition)
+    updated_rows = sum(int(r["updated"]) for r in out_rows)
 
     snap2 = table.commit_replace(
         {e.path for e in touched},

@@ -415,7 +415,7 @@ def q43_incremental_mv(spark, sf_dir):
 
 
 Q43_SQL = """
-SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars,
+SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
        min(doc_id) AS min_doc, max(doc_id) AS max_doc
 FROM documents GROUP BY lang
 """

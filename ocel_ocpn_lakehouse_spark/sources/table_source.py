@@ -509,8 +509,8 @@ class _TableStreamReader(DataSourceStreamReader):
         """Largest snapshot id in (start, head] whose cumulative commit
         summary stays within the per-trigger caps — always admitting at
         least one snapshot so the stream can't stall. Counts come from the
-        snapshot log (added-files/added-bytes; commits that track neither
-        admit freely), so admission is pure metadata: no manifest reads.
+        snapshot log (added-files/added-bytes, which every commit type
+        records), so admission is pure metadata: no manifest reads.
         If the range can't be walked (expired ancestor, diverged history,
         or a capped offset-0 bootstrap over non-append history outside
         changelog mode — the incremental batches it would schedule raise

@@ -1,0 +1,114 @@
+"""Staged-rewrite kernel (maintenance/rewrite.py): the committed-fragment
+reader, and the publish postconditions every op built on the kernel must
+leave behind — compaction, clustering, incremental clustering, MERGE and
+UPDATE."""
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from ocel_ocpn_lakehouse_spark.core import Catalog, PartitionSpec, SortOrder, TableSpec
+from ocel_ocpn_lakehouse_spark.core.table import STAGING_DIR
+from ocel_ocpn_lakehouse_spark.images.synth import (
+    IMAGE_SCHEMA,
+    synth_images_df,
+    synth_merge_source_df,
+)
+from ocel_ocpn_lakehouse_spark.maintenance.checkpoint import SystemTables
+from ocel_ocpn_lakehouse_spark.maintenance.cluster import execute_cluster
+from ocel_ocpn_lakehouse_spark.maintenance.cluster_incremental import (
+    execute_cluster_incremental,
+)
+from ocel_ocpn_lakehouse_spark.maintenance.compact import execute_compaction
+from ocel_ocpn_lakehouse_spark.maintenance.deletes import delete_where
+from ocel_ocpn_lakehouse_spark.maintenance.merge import merge_into
+from ocel_ocpn_lakehouse_spark.maintenance.rewrite import read_fragments
+from ocel_ocpn_lakehouse_spark.maintenance.transform import transform_where
+
+from test_maintenance import BUCKETS, TEST_PROPS
+
+
+def test_read_fragments_ignores_dead_attempt_tmp(tmp_path):
+    """Only committed fragment names are ingested: a dead task attempt's
+    ``.inprogress`` tmp (here: truncated garbage) is never read."""
+    bdir = tmp_path / "b3"
+    bdir.mkdir()
+    good = pa.table({"k": pa.array([3, 1, 2], pa.int64())})
+    pq.write_table(good, bdir / "t0_0.parquet", compression="lz4")
+    (bdir / "t1_0.parquet.4242.inprogress").write_bytes(b"PAR1 torn write")
+    got = read_fragments(str(tmp_path), 3)
+    assert got.num_rows == 3 and got.column("k").to_pylist() == [3, 1, 2]
+    assert read_fragments(str(tmp_path), 4) is None  # no fragments at all
+
+
+def _table(spark, warehouse):
+    props = dict(TEST_PROPS)
+    props["write.bloom-columns"] = "image_id"
+    cat = Catalog(warehouse)
+    t = cat.create_table(
+        "ocel.images",
+        IMAGE_SCHEMA,
+        TableSpec(
+            partition_spec=PartitionSpec.bucket("image_id", BUCKETS),
+            sort_order=SortOrder.by("phash"),
+            properties=props,
+        ),
+    )
+    t.append(synth_images_df(spark, n_rows=300, seed=42), num_files=16, distribution="fragment")
+    # tombstones on the inputs: every rewrite must absorb them on read
+    delete_where(spark, t.refresh(), "w = 32")
+    return SystemTables(cat.warehouse), t.refresh()
+
+
+def _compact(spark, t, st):
+    assert execute_compaction(spark, t, st, "ocel.images")["status"] == "committed"
+
+
+def _cluster(spark, t, st):
+    assert execute_cluster(spark, t, st, "ocel.images")["status"] == "committed"
+
+
+def _cluster_incremental(spark, t, st):
+    _cluster(spark, t, st)
+    t.refresh()
+    e0 = max(t.live_entries(), key=lambda e: e.record_count)
+    delta = spark.read.parquet(os.path.join(t.root, e0.path)).select(*IMAGE_SCHEMA.fieldNames())
+    t.append(delta, num_files=2)
+    res = execute_cluster_incremental(spark, t.refresh(), st, "ocel.images")
+    assert res["status"] == "committed" and res["mode"] == "incremental"
+
+
+def _merge(spark, t, st):
+    src = synth_merge_source_df(spark, n_target_rows=300, seed=7)
+    assert merge_into(spark, t, src, sys_tables=st, strategy="cow")["status"] == "committed"
+
+
+def _update(spark, t, st):
+    res = transform_where(spark, t, "fmt = 'png'", {"caption": "concat(caption, '!')"})
+    assert res["status"] == "ok" and res["rewritten_files"] > 0
+
+
+@pytest.mark.parametrize(
+    "op", [_compact, _cluster, _cluster_incremental, _merge, _update],
+    ids=["compact", "cluster", "cluster_incremental", "merge", "update"],
+)
+def test_rewrite_publish_postconditions(spark, warehouse, op):
+    st, t = _table(spark, warehouse)
+    before = {e.path for e in t.live_entries()}
+    op(spark, t, st)
+    t.refresh()
+    added = [e for e in t.live_entries() if e.path not in before]
+    assert added
+
+    staging = os.path.join(t.root, STAGING_DIR)
+    assert not os.path.isdir(staging) or not os.listdir(staging)
+    data_rel = os.path.relpath(t.data_dir, t.root)
+    for e in added:
+        pdir = "/".join(f"{k}={v}" for k, v in sorted(e.partition.items()))
+        assert os.path.dirname(e.path) == os.path.join(data_rel, pdir)
+        path = os.path.join(t.root, e.path)
+        assert pq.ParquetFile(path).metadata.num_rows == e.record_count
+        assert os.path.getsize(path) == e.size_bytes
+        assert "image_id" in e.blooms

@@ -739,3 +739,64 @@ def test_stream_read_caps_with_available_now(registered, tmp_path):
             break
     assert counts[-1] == 150 and len(counts) >= 3  # paced, multi-invocation
     assert spark.read.parquet(out).select("id").distinct().count() == 150
+
+
+def test_every_commit_kind_summarizes_bytes_and_bytes_cap_paces_overwrite(
+    registered, tmp_path
+):
+    """Every commit type records files, bytes and records added and
+    removed, so the bytes cap paces non-append snapshots too: an over-cap
+    overwrite is admitted in a micro-batch of its own."""
+    from ocel_ocpn_lakehouse_spark.maintenance.checkpoint import SystemTables
+    from ocel_ocpn_lakehouse_spark.maintenance.compact import execute_compaction
+    from ocel_ocpn_lakehouse_spark.maintenance.deletes import delete_where
+    from ocel_ocpn_lakehouse_spark.sources.table_source import _TableStreamReader
+
+    spark = registered
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id"), F.lit("s").alias("v"), F.timestamp_seconds(F.lit(0)).alias("ts")
+        )
+
+    t = _make_table(spark, tmp_path, name="ns.summaries", rows=40, files=2)
+    t.refresh().append(rows(1000, 1005), num_files=1)
+    replaced = t.refresh().live_entries()
+    t.refresh().overwrite(rows(0, 400), num_files=4)
+    t.refresh().append(rows(2000, 2005), num_files=1)
+    delete_where(spark, t.refresh(), "id = 5")
+    execute_compaction(spark, t.refresh(), SystemTables(str(tmp_path / "wh")), "ns.summaries")
+    t.refresh().create_branch("wap")
+    t.branch("wap").append(rows(3000, 3005), num_files=1)
+    staged = t.branch("wap").refresh().current_snapshot().snapshot_id
+    t.refresh().append(rows(4000, 4005), num_files=1)
+    t.refresh().cherry_pick(staged)
+
+    snaps = t.refresh().md.snapshots
+    assert {s.operation for s in snaps} >= {"append", "overwrite", "delete", "replace"}
+    assert "cherry-picked-from" in snaps[-1].summary
+    keys = {f"{side}-{what}" for side in ("added", "removed")
+            for what in ("files", "bytes", "records")}
+    for s in snaps:
+        assert keys <= set(s.summary), (s.operation, s.summary)
+    ow = next(s for s in snaps if s.operation == "overwrite")
+    assert ow.summary["removed-files"] == len(replaced)
+    assert ow.summary["removed-bytes"] == sum(e.size_bytes for e in replaced)
+    assert ow.summary["removed-records"] == 45
+    assert ow.summary["added-records"] == 400
+    dv = next(s for s in snaps if s.operation == "delete")
+    assert dv.summary["removed-records"] == dv.summary["deleted-rows"] == 1
+    assert snaps[-1].summary["added-records"] == 5
+
+    # bytes cap just below the overwrite's size: the small append before it
+    # fills one batch, the overwrite gets its own, and the drain moves on
+    first = snaps[0].snapshot_id
+    reader = _TableStreamReader(
+        t.root, SCHEMA, {"read.max-bytes-per-trigger": str(ow.summary["added-bytes"] - 1)}
+    )
+    batches, start = [], first
+    while start < ow.snapshot_id + 1:
+        end = reader._admit(t, start, t.current_snapshot().snapshot_id)
+        batches.append((start, end))
+        start = end
+    assert (ow.snapshot_id - 1, ow.snapshot_id) in batches

@@ -1,6 +1,9 @@
 """Self-check mimicking the driver's correctness gate: run every
 queries() entry at sf0.01 and diff against oracle_sql() via DuckDB
-(row count + column names + order-insensitive stringified values)."""
+(row count + column names + integer-vs-decimal column types +
+order-insensitive stringified values).
+
+Usage: python tools/oracle_check.py [SF_DIR] [QUERY,QUERY,...]"""
 
 from __future__ import annotations
 
@@ -24,6 +27,32 @@ def normalize(rows, columns):
             vals.append(str(v))
         out.append("|".join(vals))
     return sorted(out)
+
+
+def _num_kind(is_int: bool, is_decimal: bool) -> str | None:
+    return "integer" if is_int else "decimal" if is_decimal else None
+
+
+def type_mismatches(spark_schema, arrow_schema) -> list[str]:
+    """Columns one engine returns as an integer and the other as a decimal
+    (DuckDB's HUGEINT sum arrives as decimal128(38, 0)). Stringified values
+    agree across that boundary, so only a type check catches it — and the
+    driver's gate fails it."""
+    import pyarrow.types as pat
+    from pyspark.sql import types as T
+
+    otypes = {f.name.lower(): f.type for f in arrow_schema}
+    out = []
+    for f in spark_schema.fields:
+        ot = otypes.get(f.name.lower())
+        if ot is None:
+            continue
+        st = f.dataType
+        sk = _num_kind(isinstance(st, T.IntegralType), isinstance(st, T.DecimalType))
+        ok = _num_kind(pat.is_integer(ot), pat.is_decimal(ot))
+        if sk and ok and sk != ok:
+            out.append(f"{f.name}: spark {st.simpleString()} vs duckdb {ot}")
+    return out
 
 
 def main():
@@ -61,15 +90,20 @@ def main():
                 print(f"     WARNING: empty result for rows-only query")
             continue
         try:
-            orel = con.sql(oracles[name])
-            ocols = [c for c in orel.columns]
-            orows = [dict(zip(ocols, row)) for row in orel.fetchall()]
+            otbl = con.sql(oracles[name]).arrow()
+            ocols = otbl.column_names
+            orows = otbl.to_pylist()
         except Exception as e:
             print(f"FAIL {name}: duckdb error {e}")
             failures.append(name)
             continue
         if sorted(c.lower() for c in scols) != sorted(c.lower() for c in ocols):
             print(f"FAIL {name}: columns {sorted(scols)} vs {sorted(ocols)}")
+            failures.append(name)
+            continue
+        bad_types = type_mismatches(sdf.schema, otbl.schema)
+        if bad_types:
+            print(f"FAIL {name}: column types {bad_types}")
             failures.append(name)
             continue
         sn = normalize(srows, scols)

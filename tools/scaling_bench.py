@@ -458,9 +458,9 @@ throttle — which no job structure can remove on this box; on a real
 4N-executor cluster each executor owns its memory bus, and the
 structural parallelism here (one Arrow task per file group / range
 bucket, zero shuffles, zero driver loops) is the part that transfers.
-BENCH/TASK_CONTENTION.md isolates the inflation with no-Spark probes
-(tools/reduce_probe.py): the standalone reduce-task replica scales to
-the bandwidth ceiling, so the limiter is the host, not the plan.
+BENCH/TASK_CONTENTION.md isolates the inflation with no-Spark probes:
+the standalone reduce-task replica scales to the bandwidth ceiling, so
+the limiter is the host, not the plan.
 """
 
     md = f"""# BENCH — two-cluster-size scaling evidence
