@@ -221,6 +221,18 @@ class Table:
             self._manifest_counts[manifest] = n
         return n
 
+    def plans_distributed(self, manifests: list[str] | None = None) -> bool:
+        """The one planner-routing rule: plan over ``entries_df`` (Spark)
+        instead of materialized entries (driver) when ``manifests`` (default:
+        the current snapshot's) hold more than ``scan.plan-distributed-
+        threshold`` entries, counted from memoized manifest footers — no
+        entry is read and no Spark job runs to decide."""
+        if manifests is None:
+            snap = self.current_snapshot()
+            manifests = snap.manifests if snap else []
+        n = sum(self._manifest_num_rows(m) for m in manifests)
+        return n > self.prop_int("scan.plan-distributed-threshold", 10_000)
+
     def _manifest_totals(self, manifests: list[str], side: str) -> dict:
         """Commit-summary totals of every file listed in ``manifests``,
         summed from their size/record columns (entries never materialize)."""
@@ -613,10 +625,7 @@ class Table:
         two manifest sets, unchanged files (same path, same DV set) are
         dropped executor-side, and the driver collects only the CHANGED
         files: O(changed), mirroring ``_plan_scan_distributed``."""
-        n = sum(
-            self._manifest_num_rows(m) for m in removed_manifests + added_manifests
-        )
-        if n <= self.prop_int("scan.plan-distributed-threshold", 10_000):
+        if not self.plans_distributed(removed_manifests + added_manifests):
             return diff_commit_entries(
                 self.metadata_dir, removed_manifests, added_manifests
             )
@@ -716,8 +725,7 @@ class Table:
             # computed once here; both planners — and, distributed, every
             # executor task via the pickled predicate — reuse it per file
             prune = prepare_predicates(prune)
-        n_entries = sum(self._manifest_num_rows(m) for m in snap.manifests)
-        if n_entries > self.prop_int("scan.plan-distributed-threshold", 10_000):
+        if self.plans_distributed(snap.manifests):
             pairs = self._plan_scan_distributed(spark, snap, prune)
         else:
             entries = mf.read_manifests(self.metadata_dir, snap.manifests)

@@ -25,7 +25,8 @@ never enter the JVM row pipeline):
      sorts by `_zkey` (kept as a real column so footer stats give per-file
      zkey min/max — the north rule's "per-file min/max stats rewrite") and
      writes ONE ≈target-size file.
-  4. replace-snapshot commit + manifest rewrite (T7) + lineage rows.
+  4. replace-snapshot commit + manifest rewrite (T7); the job ledger
+     (maintenance/checkpoint.py) records its states, phases and lineage.
 
 Reads, staged writes, stats, fragments and publish run on the
 staged-rewrite kernel (maintenance/rewrite.py). Scale notes: both jobs
@@ -49,15 +50,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.table import Table
-from . import compact
-from .checkpoint import SystemTables
+from .checkpoint import Job, SystemTables
 from .rewrite import (
     FILE_SPEC_SCHEMA,
     STATS_SCHEMA,
     FragmentRouter,
     StagedRewrite,
     file_spec,
-    lineage_row,
     map_slices,
     read_fragments,
     tasks_df,
@@ -115,16 +114,12 @@ def execute_cluster(
     job_id: str | None = None,
     planning: str = "auto",  # auto | driver | distributed
 ) -> dict:
-    t0 = time.time()
-    phases: dict[str, float] = {}
     snap = table.current_snapshot()
     if snap is None:
         return {"status": "empty-table"}
-    job_id = job_id or f"cluster-{table.md.table_uuid[:8]}-snap{snap.snapshot_id}"
-
-    states = sys_tables.group_states(job_id)
-    if states.get("cluster-all", {}).get("state") == "committed":
-        return {"status": "already-committed", "job_id": job_id}
+    job = Job(sys_tables, "cluster", table, table_name, job_id, snap.snapshot_id)
+    if job.committed():
+        return {"status": "already-committed", "job_id": job.job_id}
 
     spec = table.partition_spec
     pcols = spec.partition_columns()
@@ -152,11 +147,7 @@ def execute_cluster(
         "0L, (a, x) -> a + x.count), 0L)"
     )
     if planning == "auto":
-        # routing count from memoized manifest FOOTERS (same zero-job path
-        # compact.plan_auto uses) — an edf.count() here scheduled one
-        # redundant Spark job per cluster pass
-        n_entries = sum(table._manifest_num_rows(m) for m in snap.manifests)
-        planning = "distributed" if n_entries > compact.PLAN_DISTRIBUTED_THRESHOLD else "driver"
+        planning = "distributed" if table.plans_distributed(snap.manifests) else "driver"
     removed: set[str] | None
     if planning == "driver":
         entries = table.live_entries()
@@ -199,10 +190,7 @@ def execute_cluster(
     total_bytes = sum(b for b, _ in part_agg.values())
     total_records = sum(r for _, r in part_agg.values())
 
-    sys_tables.record_group(
-        job_id, "cluster", table_name, "*", "cluster-all", "planned",
-        input_ref, rows=total_records, nbytes=total_bytes,
-    )
+    job.mark("planned", input_files=input_ref, rows=total_records, bytes=total_bytes)
 
     part_bytes = {k: b for k, (b, _) in part_agg.items()}
     n_sub = {k: max(1, -(-b // table.target_file_size)) for k, b in part_bytes.items()}
@@ -254,105 +242,104 @@ def execute_cluster(
     # placement uses searchsorted against whatever bounds all tasks share,
     # and the row-count guard gates the commit — so sampling error cannot
     # cost correctness, only balance.
-    t_bounds = time.time()
     bounds_by_pkey: dict[str, list[int]] = {k: [] for k in n_sub}
-    if max_sub > 1:
-        key_cols_read = [c for c in cspec["inputs"] if c in table.schema.fieldNames()]
-        # pooled sample target: ~1k keys per output bucket bounds the
-        # relative file-size error at ~3% regardless of table size; rows
-        # are subsampled (evenly spaced, deterministic) BEFORE the curve
-        # key is computed, so sampling cost shrinks with the rate instead
-        # of paying the full-table key computation
-        target = max(50_000, 1_000 * sum(n_sub.values()))
+    with job.phase("bounds"):
+        if max_sub > 1:
+            key_cols_read = [c for c in cspec["inputs"] if c in table.schema.fieldNames()]
+            # pooled sample target: ~1k keys per output bucket bounds the
+            # relative file-size error at ~3% regardless of table size; rows
+            # are subsampled (evenly spaced, deterministic) BEFORE the curve
+            # key is computed, so sampling cost shrinks with the rate instead
+            # of paying the full-table key computation
+            target = max(50_000, 1_000 * sum(n_sub.values()))
 
-        def _sample_keys(recs):
-            import numpy as np
-            import pyarrow as pa
+            def _sample_keys(recs):
+                import numpy as np
+                import pyarrow as pa
 
-            for rec in recs:
-                # sample live rows only (positions index the full file)
-                tbl = rw.read_live(rec["path"], rec["dv"], columns=key_cols_read)
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                k = max(16, min(n, -(-n * target // max(total_records, 1))))
-                idx = np.linspace(0, n - 1, num=int(k)).astype(np.int64)
-                for v in _curve_np(cspec, tbl.take(pa.array(idx))):
-                    yield {"pkey": rec["pkey"], "k": int(v)}
+                for rec in recs:
+                    # sample live rows only (positions index the full file)
+                    tbl = rw.read_live(rec["path"], rec["dv"], columns=key_cols_read)
+                    n = tbl.num_rows
+                    if n == 0:
+                        continue
+                    k = max(16, min(n, -(-n * target // max(total_records, 1))))
+                    idx = np.linspace(0, n - 1, num=int(k)).astype(np.int64)
+                    for v in _curve_np(cspec, tbl.take(pa.array(idx))):
+                        yield {"pkey": rec["pkey"], "k": int(v)}
 
-        # pool + order-statistics EXECUTOR-side (applyInPandas per table
-        # partition): the driver receives only the nb−1 bounds per
-        # partition — O(#output files) rows — never the raw sampled keys
-        # (at the 10^12-row design point those are 10^9+ longs). The
-        # statistic is the same ks[i·len/nb] as ever, so bounds are
-        # bit-identical to the driver-pooled implementation.
-        nb_map = {k: int(v) for k, v in n_sub.items() if int(v) > 1}
+            # pool + order-statistics EXECUTOR-side (applyInPandas per table
+            # partition): the driver receives only the nb−1 bounds per
+            # partition — O(#output files) rows — never the raw sampled keys
+            # (at the 10^12-row design point those are 10^9+ longs). The
+            # statistic is the same ks[i·len/nb] as ever, so bounds are
+            # bit-identical to the driver-pooled implementation.
+            nb_map = {k: int(v) for k, v in n_sub.items() if int(v) > 1}
 
-        def _bounds_of_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            import numpy as np
-            import pandas as pd
+            def _bounds_of_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
+                import numpy as np
+                import pandas as pd
 
-            pk = pdf["pkey"].iloc[0]
-            nb = nb_map.get(pk, 1)
-            if nb <= 1 or not len(pdf):
-                return pd.DataFrame({"pkey": pd.Series(dtype=object),
-                                     "i": pd.Series(dtype="int64"),
-                                     "bound": pd.Series(dtype="int64")})
-            ks = np.sort(pdf["k"].to_numpy())
-            idxs = [min(len(ks) - 1, (i * len(ks)) // nb) for i in range(1, nb)]
-            return pd.DataFrame(
-                {"pkey": pk, "i": np.arange(1, nb, dtype="int64"),
-                 "bound": ks[idxs].astype("int64")}
+                pk = pdf["pkey"].iloc[0]
+                nb = nb_map.get(pk, 1)
+                if nb <= 1 or not len(pdf):
+                    return pd.DataFrame({"pkey": pd.Series(dtype=object),
+                                         "i": pd.Series(dtype="int64"),
+                                         "bound": pd.Series(dtype="int64")})
+                ks = np.sort(pdf["k"].to_numpy())
+                idxs = [min(len(ks) - 1, (i * len(ks)) // nb) for i in range(1, nb)]
+                return pd.DataFrame(
+                    {"pkey": pk, "i": np.arange(1, nb, dtype="int64"),
+                     "bound": ks[idxs].astype("int64")}
+                )
+
+            sample_df = _map_df(_sample_keys, "pkey string, k long")
+            # actual per-partition pool size, not the nominal rate: _sample_keys
+            # floors at 16 keys PER FILE, so a heavily fragmented partition
+            # pools 16×#files even when 1000×nb is small — both terms must
+            # clear the cap or the exact path would concentrate the blowup in
+            # one applyInPandas task
+            est_pool = max(
+                (
+                    max(1_000 * nb, 16 * part_files.get(pk, 0))
+                    for pk, nb in nb_map.items()
+                ),
+                default=0,
             )
-
-        sample_df = _map_df(_sample_keys, "pkey string, k long")
-        # actual per-partition pool size, not the nominal rate: _sample_keys
-        # floors at 16 keys PER FILE, so a heavily fragmented partition
-        # pools 16×#files even when 1000×nb is small — both terms must
-        # clear the cap or the exact path would concentrate the blowup in
-        # one applyInPandas task
-        est_pool = max(
-            (
-                max(1_000 * nb, 16 * part_files.get(pk, 0))
-                for pk, nb in nb_map.items()
-            ),
-            default=0,
-        )
-        if est_pool > BOUNDS_EXACT_MAX_SAMPLES:
-            # a single table partition's sample would concentrate in ONE
-            # applyInPandas task (pandas sort of 10^8+ longs) — switch to
-            # the JVM t-digest sketch: fixed quantile grid per partition,
-            # bounded memory at every stage, driver slices the grid to the
-            # nb−1 bounds. Sketch error shifts file-size balance only —
-            # row placement searchsorts against whatever bounds all tasks
-            # share, and the row-count guard still gates the commit.
-            grid_n = min(10_000, 2 * max(nb_map.values()))
-            grid = [i / grid_n for i in range(1, grid_n)]
-            rows = (
-                sample_df.groupBy("pkey")
-                .agg(F.percentile_approx("k", grid, 10_000).alias("qs"))
-                .collect()
-            )
-            for r in rows:
-                nb = nb_map.get(r["pkey"], 1)
-                qs = r["qs"]
-                if nb > 1 and qs:
-                    bounds_by_pkey[r["pkey"]] = [
-                        int(qs[min(len(qs) - 1, max(0, (i * grid_n) // nb - 1))])
-                        for i in range(1, nb)
-                    ]
-        else:
-            bound_rows = (
-                sample_df.groupBy("pkey")
-                .applyInPandas(_bounds_of_group, "pkey string, i long, bound long")
-                .collect()
-            )
-            by_pk: dict[str, list[tuple[int, int]]] = {}
-            for r in bound_rows:
-                by_pk.setdefault(r["pkey"], []).append((int(r["i"]), int(r["bound"])))
-            for pk, pairs in by_pk.items():
-                bounds_by_pkey[pk] = [b for _, b in sorted(pairs)]
-    phases["bounds"] = time.time() - t_bounds
+            if est_pool > BOUNDS_EXACT_MAX_SAMPLES:
+                # a single table partition's sample would concentrate in ONE
+                # applyInPandas task (pandas sort of 10^8+ longs) — switch to
+                # the JVM t-digest sketch: fixed quantile grid per partition,
+                # bounded memory at every stage, driver slices the grid to the
+                # nb−1 bounds. Sketch error shifts file-size balance only —
+                # row placement searchsorts against whatever bounds all tasks
+                # share, and the row-count guard still gates the commit.
+                grid_n = min(10_000, 2 * max(nb_map.values()))
+                grid = [i / grid_n for i in range(1, grid_n)]
+                rows = (
+                    sample_df.groupBy("pkey")
+                    .agg(F.percentile_approx("k", grid, 10_000).alias("qs"))
+                    .collect()
+                )
+                for r in rows:
+                    nb = nb_map.get(r["pkey"], 1)
+                    qs = r["qs"]
+                    if nb > 1 and qs:
+                        bounds_by_pkey[r["pkey"]] = [
+                            int(qs[min(len(qs) - 1, max(0, (i * grid_n) // nb - 1))])
+                            for i in range(1, nb)
+                        ]
+            else:
+                bound_rows = (
+                    sample_df.groupBy("pkey")
+                    .applyInPandas(_bounds_of_group, "pkey string, i long, bound long")
+                    .collect()
+                )
+                by_pk: dict[str, list[tuple[int, int]]] = {}
+                for r in bound_rows:
+                    by_pk.setdefault(r["pkey"], []).append((int(r["i"]), int(r["bound"])))
+                for pk, pairs in by_pk.items():
+                    bounds_by_pkey[pk] = [b for _, b in sorted(pairs)]
 
     # combo = (partition, range bucket) → dense index; combos are metadata
     combos: list[tuple[str, int]] = [
@@ -361,8 +348,6 @@ def execute_cluster(
     combo_index: dict[tuple[str, int], int] = {c: i for i, c in enumerate(combos)}
 
     # --- 2. MAP: Arrow file-level shuffle write ---------------------------
-    t_map = time.time()
-
     def _map_shuffle(recs):
         import numpy as np
         import pyarrow as pa
@@ -391,20 +376,16 @@ def execute_cluster(
             acks[0].update(t_read=t_read, t_write=router.t_write)
         return acks
 
-    map_acks = _map_df(
-        _map_shuffle, "cidx int, rows long, t_read double, t_write double"
-    ).collect()
-    mapped_rows = sum(r["rows"] for r in map_acks)
-    if mapped_rows != total_records:
-        raise RuntimeError(f"cluster map row mismatch: {mapped_rows} != {total_records}")
-    phases["map"] = time.time() - t_map
-    phases["map_task_totals"] = {  # type: ignore[assignment]
-        "t_read": round(sum(r["t_read"] for r in map_acks), 2),
-        "t_write": round(sum(r["t_write"] for r in map_acks), 2),
-    }
+    with job.phase("map"):
+        map_acks = _map_df(
+            _map_shuffle, "cidx int, rows long, t_read double, t_write double"
+        ).collect()
+        mapped_rows = sum(r["rows"] for r in map_acks)
+        if mapped_rows != total_records:
+            raise RuntimeError(f"cluster map row mismatch: {mapped_rows} != {total_records}")
+    job.task_totals("map_task_totals", map_acks, ("t_read", "t_write"))
 
     # --- 3. REDUCE: concat + sort + one file per combo --------------------
-    t_reduce = time.time()
     live_combos = sorted({r["cidx"] for r in map_acks})
 
     def _reduce_write(recs):
@@ -419,29 +400,23 @@ def execute_cluster(
             yield {**row, "cidx": cidx, "t_read": ts_ - tr, "t_sort": tw - ts_,
                    "t_write": time.time() - tw}
 
-    stat_rows = tasks_df(
-        spark, [(c,) for c in live_combos], _reduce_write,
-        "cidx int, " + STATS_SCHEMA + ", t_read double, t_sort double, t_write double",
-        spec_schema="cidx int", io_threads=1,
-    ).collect()
-    phases["reduce"] = time.time() - t_reduce
-    phases["reduce_task_totals"] = {  # type: ignore[assignment]
-        k: round(sum(r[k] for r in stat_rows), 2) for k in ("t_read", "t_sort", "t_write")
-    }
+    with job.phase("reduce"):
+        stat_rows = tasks_df(
+            spark, [(c,) for c in live_combos], _reduce_write,
+            "cidx int, " + STATS_SCHEMA + ", t_read double, t_sort double, t_write double",
+            spec_schema="cidx int", io_threads=1,
+        ).collect()
+    job.task_totals("reduce_task_totals", stat_rows, ("t_read", "t_sort", "t_write"))
 
     # --- 4. publish + commit ----------------------------------------------
-    t_publish = time.time()
-    new_entries = rw.publish(stat_rows, lambda r: json.loads(combos[r["cidx"]][0]))
-    phases["publish"] = time.time() - t_publish
-
-    sys_tables.record_group(
-        job_id, "cluster", table_name, "*", "cluster-all", "written",
-        input_ref, output_files=[e.path for e in new_entries],
-        rows=sum(e.record_count for e in new_entries),
-        nbytes=sum(e.size_bytes for e in new_entries),
-    )
-
+    with job.phase("publish"):
+        new_entries = rw.publish(stat_rows, lambda r: json.loads(combos[r["cidx"]][0]))
+    out_paths = [e.path for e in new_entries]
+    out_bytes = sum(e.size_bytes for e in new_entries)
     rewritten_rows = sum(e.record_count for e in new_entries)
+    job.mark("written", input_files=input_ref, output_files=out_paths,
+             rows=rewritten_rows, bytes=out_bytes)
+
     if rewritten_rows != total_records:
         # a lost reducer output must fail the job before the replace commit
         # removes its input files (empty range buckets are fine; missing
@@ -449,47 +424,33 @@ def execute_cluster(
         raise RuntimeError(
             f"cluster rewrite row-count mismatch: {rewritten_rows} != {total_records}"
         )
-    t_commit = time.time()
-    summary = {"job": job_id, "op": "cluster", "curve": curve}
-    if removed is not None:
-        table.commit_replace(
-            removed, new_entries, operation="replace", summary=summary,
-            expected_dv_counts=expected_dvs,
-        )
-    else:
-        # whole-table rewrite without a driver-side removed set; fails if
-        # the table moved past the planned snapshot (see commit_replace)
-        table.commit_replace(
-            set(), new_entries, operation="replace", summary=summary,
-            replace_all=True, expected_snapshot_id=snap.snapshot_id,
-        )
-    phases["commit"] = time.time() - t_commit
-    dur_ms = int((time.time() - t0) * 1000)
-    sys_tables.record_group(
-        job_id, "cluster", table_name, "*", "cluster-all", "committed",
-        input_ref, output_files=[e.path for e in new_entries],
-    )
-    sys_tables.record_lineage(
-        lineage_row(
-            job_id, "cluster", table_name, dur_ms,
-            files_before=n_files,
-            files_after=len(new_entries),
-            bytes_before=total_bytes,
-            bytes_after=sum(e.size_bytes for e in new_entries),
-            rows=total_records,
-            rate_rows=total_records,
-            rate_bytes=total_bytes,
-        )
+    summary = {"job": job.job_id, "op": "cluster", "curve": curve}
+    with job.phase("commit"):
+        if removed is not None:
+            table.commit_replace(
+                removed, new_entries, operation="replace", summary=summary,
+                expected_dv_counts=expected_dvs,
+            )
+        else:
+            # whole-table rewrite without a driver-side removed set; fails if
+            # the table moved past the planned snapshot (see commit_replace)
+            table.commit_replace(
+                set(), new_entries, operation="replace", summary=summary,
+                replace_all=True, expected_snapshot_id=snap.snapshot_id,
+            )
+    done = job.finish(
+        files_before=n_files, files_after=len(new_entries), bytes_before=total_bytes,
+        bytes_after=out_bytes, rows=total_records, input_files=input_ref,
+        output_files=out_paths,
     )
     return {
         "status": "committed",
-        "job_id": job_id,
+        "job_id": done["job_id"],
         "curve": curve,
         "planning": planning,
         "files_before": n_files,
         "files_after": len(new_entries),
         "rows": total_records,
         "bytes": total_bytes,
-        "duration_ms": dur_ms,
-        "phases": {k: (round(v, 3) if isinstance(v, float) else v) for k, v in phases.items()},
+        **done,
     }

@@ -50,7 +50,7 @@ staged-rewrite kernel (maintenance/rewrite.py).
 
 Planning is driver-side over ``live_entries`` — O(#files) interval
 metadata, the same envelope as the driver planning path in
-compact/cluster; beyond PLAN_DISTRIBUTED_THRESHOLD entries the interval
+compact/cluster; beyond ``Table.plans_distributed`` entries the interval
 table and the searchsorted classification are expressible over
 ``entries_df`` exactly like ``plan_compaction_distributed`` (the probe
 and route passes are already distributed Arrow tasks either way).
@@ -66,12 +66,11 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import SparkSession
 
 from ..core.table import Table
-from .checkpoint import SystemTables
+from .checkpoint import Job, SystemTables
 from .cluster import ZKEY_COL, _curve_np, _curve_spec, execute_cluster
 from .rewrite import (
     FILE_SPEC_SCHEMA,
@@ -79,7 +78,6 @@ from .rewrite import (
     FragmentRouter,
     StagedRewrite,
     file_spec,
-    lineage_row,
     map_slices,
     read_fragments,
     tasks_df,
@@ -107,16 +105,12 @@ def execute_cluster_incremental(
     job_id: str | None = None,
     max_delta_frac: float = DEFAULT_MAX_DELTA_FRAC,
 ) -> dict:
-    t0 = time.time()
-    phases: dict[str, float] = {}
     snap = table.current_snapshot()
     if snap is None:
         return {"status": "empty-table"}
-    job_id = job_id or f"cluster-incr-{table.md.table_uuid[:8]}-snap{snap.snapshot_id}"
-
-    states = sys_tables.group_states(job_id)
-    if states.get("cluster-incr-all", {}).get("state") == "committed":
-        return {"status": "already-committed", "job_id": job_id}
+    job = Job(sys_tables, "cluster-incr", table, table_name, job_id, snap.snapshot_id)
+    if job.committed():
+        return {"status": "already-committed", "job_id": job.job_id}
 
     def _full(reason: str) -> dict:
         out = execute_cluster(
@@ -136,7 +130,7 @@ def execute_cluster_incremental(
     if last_curve is not None and last_curve != curve:
         return _full(f"curve-changed:{last_curve}->{curve}")
     if not delta:
-        return {"status": "no-op", "reason": "no-delta-files", "job_id": job_id}
+        return {"status": "no-op", "reason": "no-delta-files", "job_id": job.job_id}
     total_bytes = sum(e.size_bytes for e in entries)
     delta_bytes = sum(e.size_bytes for e in delta)
     if delta_bytes > max_delta_frac * total_bytes:
@@ -176,13 +170,10 @@ def execute_cluster_incremental(
     if delta_live_total == 0:
         # all delta rows are tombstoned; nothing to merge (compaction owns
         # reclaiming fully-dead files)
-        return {"status": "no-op", "reason": "delta-fully-deleted", "job_id": job_id}
+        return {"status": "no-op", "reason": "delta-fully-deleted", "job_id": job.job_id}
 
-    sys_tables.record_group(
-        job_id, "cluster-incr", table_name, "*", "cluster-incr-all", "planned",
-        [f"snapshot:{snap.snapshot_id}"],
-        rows=delta_live_total, nbytes=delta_bytes,
-    )
+    input_ref = [f"snapshot:{snap.snapshot_id}"]
+    job.mark("planned", input_files=input_ref, rows=delta_live_total, bytes=delta_bytes)
 
     rw = StagedRewrite.begin(spark, table, extra_stats={ZKEY_COL})
     shuffle_dir = os.path.join(rw.staging, "_incr_shuffle")
@@ -210,8 +201,6 @@ def execute_cluster_incremental(
         return np.where(infile, 2 * safe + 1, 2 * (pos + 1))
 
     # ---- 1. PROBE: key-only delta scan → touched entities ----------------
-    t_probe = time.time()
-
     def _probe(recs):
         import numpy as np
 
@@ -227,18 +216,18 @@ def execute_cluster_incremental(
                 agg[k] = agg.get(k, 0) + int(n)
         return [{"pkey": pk, "entity": e_i, "rows": n} for (pk, e_i), n in agg.items()]
 
-    probe_rows = _delta_df(_probe, "pkey string, entity long, rows long").collect()
-    probed_total = sum(r["rows"] for r in probe_rows)
-    if probed_total != delta_live_total:
-        raise RuntimeError(
-            f"cluster-incr probe row mismatch: {probed_total} != {delta_live_total}"
-        )
-    touched: dict[str, dict[int, int]] = {}
-    for r in probe_rows:
-        touched.setdefault(r["pkey"], {})[int(r["entity"])] = (
-            touched.get(r["pkey"], {}).get(int(r["entity"]), 0) + int(r["rows"])
-        )
-    phases["probe"] = time.time() - t_probe
+    with job.phase("probe"):
+        probe_rows = _delta_df(_probe, "pkey string, entity long, rows long").collect()
+        probed_total = sum(r["rows"] for r in probe_rows)
+        if probed_total != delta_live_total:
+            raise RuntimeError(
+                f"cluster-incr probe row mismatch: {probed_total} != {delta_live_total}"
+            )
+        touched: dict[str, dict[int, int]] = {}
+        for r in probe_rows:
+            touched.setdefault(r["pkey"], {})[int(r["entity"])] = (
+                touched.get(r["pkey"], {}).get(int(r["entity"]), 0) + int(r["rows"])
+            )
 
     # ---- 2. GROUPS: coalesce touched entities within segments ------------
     # entities sort by code; an UNtouched base file (odd code absent from
@@ -282,8 +271,6 @@ def execute_cluster_incremental(
     touched_base_live = sum(e.live_count for e in touched_base)
 
     # ---- 3. ROUTE: delta rows → per-group staged fragments ---------------
-    t_route = time.time()
-
     def _route(recs):
         import numpy as np
         import pyarrow as pa
@@ -302,16 +289,15 @@ def execute_cluster_incremental(
         router.close()
         return [{"rows": sum(router.rows.values())}]
 
-    route_acks = _delta_df(_route, "rows long").collect()
-    routed_total = sum(r["rows"] for r in route_acks)
-    if routed_total != delta_live_total:
-        raise RuntimeError(
-            f"cluster-incr route row mismatch: {routed_total} != {delta_live_total}"
-        )
-    phases["route"] = time.time() - t_route
+    with job.phase("route"):
+        route_acks = _delta_df(_route, "rows long").collect()
+        routed_total = sum(r["rows"] for r in route_acks)
+        if routed_total != delta_live_total:
+            raise RuntimeError(
+                f"cluster-incr route row mismatch: {routed_total} != {delta_live_total}"
+            )
 
     # ---- 4. MERGE: per group read base + fragments, sort, split, stamp ---
-    t_merge = time.time()
     group_rows = [
         (
             gi,
@@ -359,18 +345,17 @@ def execute_cluster_incremental(
                 if sl.num_rows:
                     yield {**rw.write(sl, f"i{gidx}_{j}.parquet"), "pkey": rec["pkey"]}
 
-    stat_rows = tasks_df(
-        spark, group_rows, _merge, "pkey string, " + STATS_SCHEMA,
-        spec_schema="gidx int, pkey string, base array<string>, dvs array<string>, "
-        "est_bytes long",
-        io_threads=1,
-    ).collect()
-    phases["merge"] = time.time() - t_merge
+    with job.phase("merge"):
+        stat_rows = tasks_df(
+            spark, group_rows, _merge, "pkey string, " + STATS_SCHEMA,
+            spec_schema="gidx int, pkey string, base array<string>, dvs array<string>, "
+            "est_bytes long",
+            io_threads=1,
+        ).collect()
 
     # ---- 5. publish + commit ---------------------------------------------
-    t_publish = time.time()
-    new_entries = rw.publish(stat_rows, lambda r: json.loads(r["pkey"]))
-    phases["publish"] = time.time() - t_publish
+    with job.phase("publish"):
+        new_entries = rw.publish(stat_rows, lambda r: json.loads(r["pkey"]))
 
     rewritten = sum(e.record_count for e in new_entries)
     expected = delta_live_total + touched_base_live
@@ -380,44 +365,29 @@ def execute_cluster_incremental(
         )
 
     removed_entries = touched_base + delta
-    removed = {e.path for e in removed_entries}
-    sys_tables.record_group(
-        job_id, "cluster-incr", table_name, "*", "cluster-incr-all", "written",
-        [f"snapshot:{snap.snapshot_id}"],
-        output_files=[e.path for e in new_entries],
-        rows=rewritten, nbytes=sum(e.size_bytes for e in new_entries),
-    )
-    t_commit = time.time()
-    table.commit_replace(
-        removed,
-        new_entries,
-        operation="replace",
-        summary={"job": job_id, "op": "cluster", "mode": "incremental", "curve": curve},
-        expected_dv_counts={e.path: len(e.deletes) for e in removed_entries},
-    )
-    phases["commit"] = time.time() - t_commit
-    dur_ms = int((time.time() - t0) * 1000)
-    sys_tables.record_group(
-        job_id, "cluster-incr", table_name, "*", "cluster-incr-all", "committed",
-        [f"snapshot:{snap.snapshot_id}"], output_files=[e.path for e in new_entries],
-    )
-    bytes_rewritten = sum(e.size_bytes for e in removed_entries)
-    sys_tables.record_lineage(
-        lineage_row(
-            job_id, "cluster-incr", table_name, dur_ms,
-            files_before=len(entries),
-            files_after=len(entries) - len(removed_entries) + len(new_entries),
-            bytes_before=bytes_rewritten,
-            bytes_after=sum(e.size_bytes for e in new_entries),
-            rows=rewritten,
-            rate_rows=rewritten,
-            rate_bytes=bytes_rewritten,
+    out_paths = [e.path for e in new_entries]
+    out_bytes = sum(e.size_bytes for e in new_entries)
+    job.mark("written", input_files=input_ref, output_files=out_paths,
+             rows=rewritten, bytes=out_bytes)
+    with job.phase("commit"):
+        table.commit_replace(
+            {e.path for e in removed_entries},
+            new_entries,
+            operation="replace",
+            summary={"job": job.job_id, "op": "cluster", "mode": "incremental", "curve": curve},
+            expected_dv_counts={e.path: len(e.deletes) for e in removed_entries},
         )
+    bytes_rewritten = sum(e.size_bytes for e in removed_entries)
+    done = job.finish(
+        files_before=len(entries),
+        files_after=len(entries) - len(removed_entries) + len(new_entries),
+        bytes_before=bytes_rewritten, bytes_after=out_bytes, rows=rewritten,
+        input_files=input_ref, output_files=out_paths,
     )
     return {
         "status": "committed",
         "mode": "incremental",
-        "job_id": job_id,
+        "job_id": done["job_id"],
         "curve": curve,
         "groups": len(groups),
         "files_delta": len(delta),
@@ -426,5 +396,6 @@ def execute_cluster_incremental(
         "files_out": len(new_entries),
         "rows": rewritten,
         "bytes_rewritten": bytes_rewritten,
-        "phases": {k: round(v, 3) for k, v in phases.items()},
+        "duration_ms": done["duration_ms"],
+        "phases": done["phases"],
     }

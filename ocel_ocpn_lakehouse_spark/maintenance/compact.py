@@ -44,8 +44,8 @@ from pyspark.sql import functions as F
 
 from ..core import manifests as mf
 from ..core.table import Table
-from .checkpoint import SystemTables
-from .rewrite import STATS_SCHEMA, StagedRewrite, dv_spec, lineage_row, tasks_df
+from .checkpoint import Job, SystemTables
+from .rewrite import STATS_SCHEMA, StagedRewrite, dv_spec, tasks_df
 
 
 class InjectedFailure(RuntimeError):
@@ -243,45 +243,17 @@ def plan_compaction_distributed(
     return groups
 
 
-# manifests beyond this many entries plan distributed (entries never
-# materialize driver-side); shared by execute_compaction and --op auto
-PLAN_DISTRIBUTED_THRESHOLD = 10_000
-
-
 def plan_auto(
     spark: SparkSession,
     table: Table,
     include_all: bool = False,
     min_group_files: int = 2,
 ) -> list[FileGroup]:
-    """Planner routing in ONE place: driver FFD for small manifests,
-    distributed over entries_df beyond PLAN_DISTRIBUTED_THRESHOLD. The
-    routing count comes from manifest FOOTERS (memoized on the Table —
-    the same mechanism Table.scan routes with), not a Spark count job."""
-    snap = table.current_snapshot()
-    n_entries = (
-        sum(table._manifest_num_rows(m) for m in snap.manifests) if snap else 0
-    )
-    if n_entries > PLAN_DISTRIBUTED_THRESHOLD:
+    """Driver FFD for small manifests, distributed over entries_df beyond
+    the table's planning threshold (:meth:`Table.plans_distributed`)."""
+    if table.plans_distributed():
         return plan_compaction_distributed(spark, table, include_all, min_group_files)
     return plan_compaction(table, include_all, min_group_files)
-
-
-def estimate_files_after(table: Table) -> int:
-    """The reference's simulation formula (ops/maintenance_system.py:139-141)."""
-    total = sum(e.size_bytes for e in table.live_entries())
-    return max(1, total // table.target_file_size + (1 if total % table.target_file_size else 0))
-
-
-def _norm_path_sql(col):
-    # 'file:///root/x' | '/root/x' | 's3://b/k' → scheme/leading-slash-free
-    return F.regexp_replace(col, r"^([a-zA-Z0-9]+:)?/+", "")
-
-
-def _norm_path_py(p: str) -> str:
-    import re
-
-    return re.sub(r"^([a-zA-Z0-9]+:)?/+", "", p)
 
 
 def execute_compaction(
@@ -296,50 +268,35 @@ def execute_compaction(
 ) -> dict:
     """Execute a compaction plan with checkpointed, resumable commits.
 
-    The returned dict carries a ``phases`` timing breakdown (plan/build/
-    write/stats/publish/commit seconds) so scaling regressions are
-    attributable to a phase, not guessed at.
+    The returned dict carries a ``phases`` timing breakdown (plan/write/
+    publish/commit seconds plus summed task timers) so scaling regressions
+    are attributable to a phase, not guessed at.
     """
-    t0 = time.time()
-    phases: dict[str, float] = {}
     snap = table.current_snapshot()
     if snap is None:
         return {"status": "empty-table", "groups": 0}
-    if groups is None:
-        groups = plan_auto(spark, table)
-    phases["plan"] = time.time() - t0
+    job = Job(sys_tables, "compact", table, table_name, job_id, snap.snapshot_id)
+    with job.phase("plan"):
+        if groups is None:
+            groups = plan_auto(spark, table)
     if not groups:
         return {"status": "healthy", "groups": 0}
-    job_id = job_id or f"compact-{table.md.table_uuid[:8]}-snap{snap.snapshot_id}"
-    op = "compact"
+    if job.committed([g.group_id for g in groups]):
+        return {"status": "already-committed", "job_id": job.job_id, "groups": len(groups)}
 
-    states = sys_tables.group_states(job_id)
-    if states and all(s["state"] == "committed" for s in states.values()) and set(states) >= {
-        g.group_id for g in groups
-    }:
-        return {"status": "already-committed", "job_id": job_id, "groups": len(groups)}
+    # outputs of previously-written groups come back from their checkpoint rows
+    written_entries = job.written_outputs()
+    pending = [g for g in groups if g.group_id not in written_entries]
 
-    done = {gid for gid, s in states.items() if s["state"] in ("written", "committed")}
-    pending = [g for g in groups if g.group_id not in done]
-    sys_tables.record_groups(
-        job_id, op, table_name, "planned",
-        [
-            {
-                "partition_id": json.dumps(g.partition, sort_keys=True),
-                "file_group_id": g.group_id,
-                "input_files": g.input_paths,
-                "rows": g.input_records,
-                "bytes": g.input_bytes,
-            }
-            for g in pending
-        ],
-    )
+    def _group(g: FileGroup, **extra) -> dict:
+        return {
+            "partition_id": json.dumps(g.partition, sort_keys=True),
+            "file_group_id": g.group_id,
+            "input_files": g.input_paths,
+            **extra,
+        }
 
-    written_entries: dict[str, list[mf.ManifestEntry]] = {}
-    # recover outputs of previously-written groups from their checkpoint rows
-    for gid in done:
-        extra = json.loads(states[gid].get("extra") or "{}")
-        written_entries[gid] = [mf.ManifestEntry.from_row(r) for r in extra.get("entries", [])]
+    job.mark("planned", [_group(g, rows=g.input_records, bytes=g.input_bytes) for g in pending])
 
     if pending:
         rw = StagedRewrite.begin(spark, table)
@@ -351,7 +308,6 @@ def execute_compaction(
         # the table sort order and writes ONE output file. LPT order:
         # largest groups first, so the last scheduling wave holds the
         # smallest tasks.
-        t_write = time.time()
         by_size = sorted(pending, key=lambda g: (-g.input_bytes, g.group_id))
         spec_rows = [
             (
@@ -382,104 +338,77 @@ def execute_compaction(
                 row = rw.write(tbl, f"{rec['group_id']}.parquet")
                 yield {**row, "group_id": rec["group_id"], "t_read": ts_ - tr, "t_sort": tw - ts_}
 
-        job_stats = {
-            r["group_id"]: r
-            for r in tasks_df(
-                spark, spec_rows, _rewrite,
-                "group_id string, " + STATS_SCHEMA
-                + ", t_read double, t_sort double, t_write double, t_stats double",
-                spec_schema="group_id string, paths array<string>, dvs array<string>",
-                io_threads=2,
-            ).collect()
-        }
-        # summed task-side phase seconds (cross-task concurrency means these
-        # exceed wall time; ratios localize where per-task time goes)
-        phases["task_totals"] = {  # type: ignore[assignment]
-            k: round(sum(r[k] for r in job_stats.values()), 2)
-            for k in ("t_read", "t_sort", "t_write", "t_stats")
-        }
-        phases["write"] = time.time() - t_write
+        with job.phase("write"):
+            job_stats = {
+                r["group_id"]: r
+                for r in tasks_df(
+                    spark, spec_rows, _rewrite,
+                    "group_id string, " + STATS_SCHEMA
+                    + ", t_read double, t_sort double, t_write double, t_stats double",
+                    spec_schema="group_id string, paths array<string>, dvs array<string>",
+                    io_threads=2,
+                ).collect()
+            }
+            job.task_totals(
+                "task_totals", job_stats.values(), ("t_read", "t_sort", "t_write", "t_stats")
+            )
         missing = {g.group_id for g in pending} - set(job_stats)
         if missing:
             # a group without a rewrite result must fail the job, not
             # silently drop its input files from the replace commit
             raise RuntimeError(f"compaction job returned no output for groups {sorted(missing)[:5]}")
-        tp = time.time()
-        for n_written, g in enumerate(pending, 1):
-            entries = [rw.publish_file(job_stats[g.group_id], g.partition)]
-            written_entries[g.group_id] = entries
-            sys_tables.record_group(
-                job_id, op, table_name, json.dumps(g.partition, sort_keys=True), g.group_id,
-                "written", g.input_paths,
-                output_files=[e.path for e in entries],
-                rows=sum(e.record_count for e in entries),
-                nbytes=sum(e.size_bytes for e in entries),
-                extra={"entries": [e.to_row() for e in entries]},
-            )
-            if test_fail_after_written is not None and n_written >= test_fail_after_written:
-                raise InjectedFailure(f"injected failure after {n_written} written groups")
-        rw.discard()
-        phases["publish"] = time.time() - tp
+        with job.phase("publish"):
+            # per-group 'written' rows: the resume granularity
+            for n_written, g in enumerate(pending, 1):
+                entries = [rw.publish_file(job_stats[g.group_id], g.partition)]
+                written_entries[g.group_id] = entries
+                job.mark("written", [_group(
+                    g,
+                    output_files=[e.path for e in entries],
+                    rows=sum(e.record_count for e in entries),
+                    bytes=sum(e.size_bytes for e in entries),
+                    extra={"entries": [e.to_row() for e in entries]},
+                )])
+                if test_fail_after_written is not None and n_written >= test_fail_after_written:
+                    raise InjectedFailure(f"injected failure after {n_written} written groups")
+            rw.discard()
 
     # single replace-snapshot commit covering every group
-    tc = time.time()
     removed = {p for g in groups for p in g.input_paths}
     added = [e for g in groups for e in written_entries.get(g.group_id, [])]
-    # plan-time DV counts per input: the rewrite tasks absorbed exactly these
-    # tombstone sets, so a concurrent delete landing after planning must
-    # conflict (commit_replace raises) rather than be silently dropped
-    expected_dvs = {
-        p: len(g.input_dvs.get(p, [])) for g in groups for p in g.input_paths
-    }
-    table.commit_replace(
-        removed,
-        added,
-        operation="replace",
-        summary={"job": job_id, "op": op},
-        expected_dv_counts=expected_dvs,
-    )
-    dur_ms = int((time.time() - t0) * 1000)
+    with job.phase("commit"):
+        # plan-time DV counts per input: the rewrite tasks absorbed exactly
+        # these tombstone sets, so a concurrent delete landing after planning
+        # must conflict (commit_replace raises) rather than be silently dropped
+        table.commit_replace(
+            removed,
+            added,
+            operation="replace",
+            summary={"job": job.job_id, "op": "compact"},
+            expected_dv_counts={
+                p: len(g.input_dvs.get(p, [])) for g in groups for p in g.input_paths
+            },
+        )
     total_rows = sum(e.record_count for e in added)
     total_bytes = sum(e.size_bytes for e in added)
-    sys_tables.record_groups(
-        job_id, op, table_name, "committed",
-        [
-            {
-                "partition_id": json.dumps(g.partition, sort_keys=True),
-                "file_group_id": g.group_id,
-                "input_files": g.input_paths,
-                "output_files": [e.path for e in written_entries.get(g.group_id, [])],
-            }
+    done = job.finish(
+        files_before=len(removed),
+        files_after=len(added),
+        bytes_before=sum(g.input_bytes for g in groups),
+        bytes_after=total_bytes,
+        rows=total_rows,
+        groups=[
+            _group(g, output_files=[e.path for e in written_entries.get(g.group_id, [])])
             for g in groups
         ],
     )
-    sys_tables.record_lineages(
-        [
-            lineage_row(
-                job_id, op, table_name, dur_ms,
-                partition_id=json.dumps(g.partition, sort_keys=True),
-                files_before=len(g.input_paths),
-                files_after=len(written_entries.get(g.group_id, [])),
-                bytes_before=g.input_bytes,
-                bytes_after=sum(e.size_bytes for e in written_entries.get(g.group_id, [])),
-                rows=g.input_records,
-                rate_rows=total_rows,
-                rate_bytes=total_bytes,
-            )
-            for g in groups
-        ]
-    )
-    phases["commit"] = time.time() - tc
     return {
         "status": "committed",
-        "job_id": job_id,
+        "job_id": done["job_id"],
         "groups": len(groups),
         "files_removed": len(removed),
         "files_added": len(added),
         "rows": total_rows,
         "bytes": total_bytes,
-        "duration_ms": dur_ms,
-        "phases": {
-            k: (round(v, 3) if isinstance(v, float) else v) for k, v in phases.items()
-        },
+        **done,
     }

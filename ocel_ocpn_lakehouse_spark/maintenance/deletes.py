@@ -45,7 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.table import PrunePredicate, Table
-from .checkpoint import SystemTables
+from .checkpoint import Job, SystemTables
 
 DELETES_SUBDIR = os.path.join("data", "_deletes")
 
@@ -112,7 +112,7 @@ def delete_where(
 ) -> dict:
     """Merge-on-read row delete. Returns a result dict with the DV path,
     per-commit deleted-row count and touched-file count."""
-    t0 = time.time()
+    job = Job(sys_tables, "delete", table, table_name)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     snap = table.current_snapshot()
     if snap is None:
@@ -143,7 +143,7 @@ def delete_where(
         )
     )
     hits = df.filter(cond).select("_fp", "_pos")
-    return _finalize_delete(spark, table, entries, hits, prefix, t0, sys_tables, table_name)
+    return _finalize_delete(spark, table, entries, hits, prefix, job)
 
 
 def delete_keys(
@@ -170,13 +170,13 @@ def delete_keys(
     DV-count conflict guards) is shared with delete_where, so re-running
     the same key set is a no-op and concurrent file rewrites conflict
     instead of corrupting positions."""
-    t0 = time.time()
+    job = Job(sys_tables, "delete", table, table_name)
     if table.current_snapshot() is None:
         return {"status": "empty-table"}
     keys = keys.select(key_col).distinct()
     n_keys = keys.count()  # caller caches `keys` when it is an expensive plan
     if n_keys == 0:
-        return {"status": "no-matches", "deleted_rows": 0, "sec": round(time.time() - t0, 3)}
+        return {"status": "no-matches", "deleted_rows": 0, "sec": round(time.time() - job.t0, 3)}
     entries = table.live_entries()
     bf = next(
         (
@@ -218,45 +218,39 @@ def delete_keys(
     )
     rhs = F.broadcast(keys) if n_keys <= broadcast_max_rows else keys
     hits = df.join(rhs, key_col, "semi").select("_fp", "_pos")
-    return _finalize_delete(spark, table, entries, hits, prefix, t0, sys_tables, table_name)
+    return _finalize_delete(spark, table, entries, hits, prefix, job)
 
 
-def _finalize_delete(
-    spark, table: Table, entries, hits, prefix: str, t0: float, sys_tables, table_name: str
-) -> dict:
+def _finalize_delete(spark, table: Table, entries, hits, prefix: str, job: Job) -> dict:
     """Shared delete tail: tombstone exclusion → DV write → metadata-only
     commit guarded by the candidate entries' observed DV counts."""
-    hits = exclude_existing_tombstones(spark, table, entries, hits, prefix)
-    rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
+    with job.phase("write"):
+        hits = exclude_existing_tombstones(spark, table, entries, hits, prefix)
+        rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
     if rel_dv is None:
-        return {"status": "no-matches", "deleted_rows": 0, "sec": round(time.time() - t0, 3)}
+        return {"status": "no-matches", "deleted_rows": 0, "sec": round(time.time() - job.t0, 3)}
 
-    commit = table.commit_delete_vectors(
-        rel_dv,
-        counts,
-        # the already-tombstoned exclusion ran against THESE DV sets; a file
-        # that gained a DV since must conflict, not double-count
-        expected_dv_counts={e.path: len(e.deletes) for e in entries},
+    with job.phase("commit"):
+        commit = table.commit_delete_vectors(
+            rel_dv,
+            counts,
+            # the already-tombstoned exclusion ran against THESE DV sets; a
+            # file that gained a DV since must conflict, not double-count
+            expected_dv_counts={e.path: len(e.deletes) for e in entries},
+        )
+    deleted = int(sum(counts.values()))
+    done = job.finish(
+        files_before=len(counts), files_after=len(counts),
+        bytes_after=os.path.getsize(os.path.join(table.root, rel_dv)), rows=deleted,
+        snapshot_id=commit.snapshot_id, input_files=sorted(counts), output_files=[rel_dv],
     )
-    result = {
+    return {
         "status": "deleted",
-        "deleted_rows": int(sum(counts.values())),
+        "deleted_rows": deleted,
         "tombstoned_files": len(counts),
         "candidate_files": len(entries),
         "dv_path": rel_dv,
         "snapshot_id": commit.snapshot_id,
-        "sec": round(time.time() - t0, 3),
+        "sec": round(done["duration_ms"] / 1000, 3),
+        **done,
     }
-    if sys_tables is not None:
-        sys_tables.record_group(
-            f"delete-{table.md.table_uuid[:8]}-snap{commit.snapshot_id}",
-            "delete",
-            table_name,
-            "*",
-            "delete-all",
-            "committed",
-            [rel_dv],
-            rows=result["deleted_rows"],
-            nbytes=os.path.getsize(os.path.join(table.root, rel_dv)),
-        )
-    return result

@@ -11,14 +11,12 @@ replace snapshot (time travel to the old layout still works).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import SparkSession
 
 from ..core import metadata as meta
 from ..core.spec import PartitionSpec
 from ..core.table import Table
-from .checkpoint import SystemTables
+from .checkpoint import Job, SystemTables
 
 
 def suggest_bucket_count(total_files: int, lo: int = 32, hi: int = 128) -> int:
@@ -34,7 +32,7 @@ def evolve_partition_spec(
     table_name: str = "",
     rewrite: bool = True,
 ) -> dict:
-    t0 = time.time()
+    job = Job(sys_tables, "evolve", table, table_name)
     # whole-table rewrite: only path strings + byte totals reach the driver
     # (entries_df, not live_entries — full manifest entries never materialize)
     from pyspark.sql import functions as F
@@ -71,33 +69,27 @@ def evolve_partition_spec(
     # scan() below applies exactly these DV sets; a concurrent delete after
     # this point must conflict at commit, not vanish with the replaced entry
     expected_dvs = {r["path"]: int(r["n_dvs"]) for r in old_rows}
-    df = table.scan(spark)
-    n_files = max(1, -(-total_bytes // table.target_file_size))
-    new_entries = table.write_data_files(df, num_files=int(n_files))
-    table.commit_replace(
-        old_paths,
-        new_entries,
-        operation="replace",
-        summary={"op": "evolve-partition-spec"},
-        expected_dv_counts=expected_dvs,
-    )
-    dur_ms = int((time.time() - t0) * 1000)
-    if sys_tables:
-        sys_tables.record_lineage(
-            {
-                "job_id": f"evolve-{table.md.table_uuid[:8]}-{int(t0)}",
-                "op": "evolve",
-                "table_name": table_name,
-                "partition_id": "*",
-                "files_before": files_before,
-                "files_after": len(new_entries),
-                "bytes_before": total_bytes,
-                "bytes_after": sum(e.size_bytes for e in new_entries),
-                "rows": sum(e.record_count for e in new_entries),
-                "duration_ms": dur_ms,
-                "throughput_rows_s": 0.0,
-                "throughput_bytes_s": total_bytes / (dur_ms / 1000) if dur_ms else 0.0,
-            }
+    with job.phase("write"):
+        df = table.scan(spark)
+        n_files = max(1, -(-total_bytes // table.target_file_size))
+        new_entries = table.write_data_files(df, num_files=int(n_files))
+    with job.phase("commit"):
+        snap = table.commit_replace(
+            old_paths,
+            new_entries,
+            operation="replace",
+            summary={"op": "evolve-partition-spec"},
+            expected_dv_counts=expected_dvs,
         )
-    result.update({"status": "rewritten", "files_after": len(new_entries), "duration_ms": dur_ms})
+    done = job.finish(
+        files_before=files_before,
+        files_after=len(new_entries),
+        bytes_before=total_bytes,
+        bytes_after=sum(e.size_bytes for e in new_entries),
+        rows=sum(e.record_count for e in new_entries),
+        snapshot_id=snap.snapshot_id,
+        input_files=sorted(old_paths),
+        output_files=[e.path for e in new_entries],
+    )
+    result.update({"status": "rewritten", "files_after": len(new_entries), **done})
     return result

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..core import metadata as meta
 from ..core.table import Table
-from .checkpoint import SystemTables
+from .checkpoint import Job, SystemTables
 
 
 def expire_snapshots(
@@ -42,7 +42,7 @@ def expire_snapshots(
     keep_last: int | None = None,
     dry_run: bool = False,
 ) -> dict:
-    t0 = time.time()
+    job = Job(sys_tables, "expire", table, table_name)
     md = meta.load_metadata(table.root)
     if retention_days is None:
         retention_days = float(md.properties.get("snapshot.retention-days", 30))
@@ -69,37 +69,40 @@ def expire_snapshots(
     live_manifests = {m for s in remaining for m in s.manifests}
     dead_manifests = {m for s in expired for m in s.manifests} - live_manifests
 
-    # file refcount via DataFrame anti-join over manifest entries
-    mdir = table.metadata_dir
-    expired_manifest_paths = [os.path.join(mdir, m) for m in ({m for s in expired for m in s.manifests})]
-    live_manifest_paths = [os.path.join(mdir, m) for m in live_manifests]
-    dead_files: list[str] = []
-    if expired_manifest_paths:
-        from ..core.table import _entries_spark_schema
+    with job.phase("plan"):
+        # file refcount via DataFrame anti-join over manifest entries
+        mdir = table.metadata_dir
+        expired_manifest_paths = [
+            os.path.join(mdir, m) for m in {m for s in expired for m in s.manifests}
+        ]
+        live_manifest_paths = [os.path.join(mdir, m) for m in live_manifests]
+        dead_files: list[str] = []
+        if expired_manifest_paths:
+            from ..core.table import _entries_spark_schema
 
-        mschema = _entries_spark_schema()
-        dv_type = "array<struct<path:string,count:bigint>>"
+            mschema = _entries_spark_schema()
+            dv_type = "array<struct<path:string,count:bigint>>"
 
-        def _referenced(paths):  # data files ∪ delete-vector files
-            df = spark.read.schema(mschema).parquet(*paths)
-            data = df.select("path")
-            dvs = (
-                df.select(
-                    F.explode_outer(
-                        F.from_json(F.coalesce(F.col("deletes"), F.lit("[]")), dv_type)
-                    ).alias("d")
+            def _referenced(paths):  # data files ∪ delete-vector files
+                df = spark.read.schema(mschema).parquet(*paths)
+                data = df.select("path")
+                dvs = (
+                    df.select(
+                        F.explode_outer(
+                            F.from_json(F.coalesce(F.col("deletes"), F.lit("[]")), dv_type)
+                        ).alias("d")
+                    )
+                    .select(F.col("d.path").alias("path"))
+                    .where(F.col("path").isNotNull())
                 )
-                .select(F.col("d.path").alias("path"))
-                .where(F.col("path").isNotNull())
-            )
-            return data.unionByName(dvs).distinct()
+                return data.unionByName(dvs).distinct()
 
-        expired_df = _referenced(expired_manifest_paths)
-        if live_manifest_paths:
-            dead_df = expired_df.join(_referenced(live_manifest_paths), "path", "left_anti")
-        else:
-            dead_df = expired_df
-        dead_files = [r["path"] for r in dead_df.collect()]
+            expired_df = _referenced(expired_manifest_paths)
+            if live_manifest_paths:
+                dead_df = expired_df.join(_referenced(live_manifest_paths), "path", "left_anti")
+            else:
+                dead_df = expired_df
+            dead_files = [r["path"] for r in dead_df.collect()]
 
     result = {
         "status": "dry-run" if dry_run else "expired",
@@ -114,9 +117,10 @@ def expire_snapshots(
 
     # metadata commit first (readers of old metadata still see intact files
     # until the physical delete below; new readers never see expired snaps)
-    md.snapshots = remaining
-    meta.commit_metadata(table.root, md, md.version)
-    table.md = md
+    with job.phase("commit"):
+        md.snapshots = remaining
+        meta.commit_metadata(table.root, md, md.version)
+        table.md = md
 
     # parallel unlink: a big expiry can drop 10^5 orphans; on object stores
     # each delete is a round-trip, so fan out (serial loop was the round-1
@@ -129,27 +133,15 @@ def expire_snapshots(
 
     targets = [os.path.join(table.root, rel) for rel in dead_files]
     targets += [os.path.join(mdir, m) for m in dead_manifests]
-    if targets:
-        with ThreadPoolExecutor(max_workers=min(16, max(1, len(targets)))) as ex:
-            list(ex.map(_rm, targets))
+    with job.phase("sweep"):
+        if targets:
+            with ThreadPoolExecutor(max_workers=min(16, max(1, len(targets)))) as ex:
+                list(ex.map(_rm, targets))
 
-    if sys_tables:
-        sys_tables.record_lineage(
-            {
-                "job_id": f"expire-{md.table_uuid[:8]}-{int(t0)}",
-                "op": "expire",
-                "table_name": table_name,
-                "partition_id": "*",
-                "files_before": 0,
-                "files_after": 0,
-                "bytes_before": 0,
-                "bytes_after": 0,
-                "rows": 0,
-                "duration_ms": int((time.time() - t0) * 1000),
-                "throughput_rows_s": 0.0,
-                "throughput_bytes_s": 0.0,
-            }
-        )
+    result.update(job.finish(
+        files_before=len(dead_files),
+        input_files=[f"snapshot:{s.snapshot_id}" for s in expired],
+    ))
     return result
 
 

@@ -40,17 +40,28 @@ content-equivalent (test_mor_merge_matches_cow_and_rewrites_nothing).
 
 from __future__ import annotations
 
-import time
+import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.table import Table
-from .checkpoint import SystemTables
-from .compact import _norm_path_py, _norm_path_sql
-from .rewrite import FILE_SPEC_SCHEMA, STATS_SCHEMA, StagedRewrite, file_spec, lineage_row, tasks_df
+from .checkpoint import Job, SystemTables
+from .rewrite import FILE_SPEC_SCHEMA, STATS_SCHEMA, StagedRewrite, file_spec, tasks_df
 
 BROADCAST_THRESHOLD_ROWS = 2_000_000  # source keys; ~16 MB of longs
+
+# 'file:///data/x' | '/data/x' | 's3://b/k' → scheme/leading-slash-free
+_PATH_PREFIX = r"^([a-zA-Z0-9]+:)?/+"
+
+
+def _norm_path_sql(col):
+    return F.regexp_replace(col, _PATH_PREFIX, "")
+
+
+def _norm_path_py(p: str) -> str:
+    return re.sub(_PATH_PREFIX, "", p)
 
 
 def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
@@ -94,6 +105,29 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
     return entries, sum(e.record_count for e in entries)
 
 
+def _write_upserts(spark, table: Table, upserts: DataFrame, planning: str) -> tuple[list, int]:
+    """Append the upsert rows as ≈target-size files, sized by the table's
+    average row (summed from manifests on the driver planning route, by a
+    Spark job over ``entries_df`` on the distributed one); returns
+    (entries, rows)."""
+    n = upserts.count()
+    if not n:
+        return [], 0
+    if planning == "driver":
+        snap = table.current_snapshot()
+        tot = table._manifest_totals(snap.manifests if snap else [], "live")
+        b, r = tot["live-bytes"], tot["live-records"]
+    else:
+        b, r = (
+            table.entries_df(spark)
+            .agg(F.sum("size_bytes").alias("b"), F.sum("record_count").alias("r"))
+            .first()
+        )
+    avg_row = (b / max(1, r)) if b else 8192
+    n_files = max(1, -(-int(n * avg_row) // table.target_file_size))
+    return table.write_data_files(upserts, num_files=int(n_files)), n
+
+
 def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
     """True iff some source key falls in the file's [lo, hi] key range.
 
@@ -133,8 +167,6 @@ def _probe_touched_arrow(spark, table, specs, key_list, key) -> tuple[set, dict]
     post-evolution key columns null-fill) and set-probes it against the
     broadcast source keys.
     """
-    import os
-
     from ..core import manifests as mf
 
     nonnull = sorted(k for k in key_list if k is not None)
@@ -199,7 +231,7 @@ def merge_into(
     extra_summary: dict | None = None,  # merged into the commit summary (e.g. stream epoch)
     set_properties: dict | None = None,  # atomic with the commit (e.g. stream max-epoch)
 ) -> dict:
-    t0 = time.time()
+    job = Job(sys_tables, "merge", table, table_name)
     strategy = (strategy or table.properties.get("write.merge.mode", "cow")).lower()
     strategy = {"copy-on-write": "cow", "merge-on-read": "mor"}.get(strategy, strategy)
     if strategy not in ("cow", "mor"):
@@ -207,164 +239,158 @@ def merge_into(
     data_cols = table.schema.fieldNames()
     src = source.select(*data_cols, op_col).cache()
     try:
-        n_src = src.count()
-        # an unknown op (e.g. Debezium's 'insert'/'update') would silently
-        # behave as a delete — every source key tombstones its target rows
-        # and only op=='upsert' rows are re-inserted. Fail loudly instead.
-        bad_ops = [
-            r[0]
-            for r in src.select(op_col).distinct().collect()
-            if r[0] not in ("upsert", "delete")
-        ]
-        if bad_ops:
-            raise ValueError(
-                f"unknown {op_col} value(s) {bad_ops!r}: MERGE understands "
-                "'upsert' and 'delete' only"
-            )
-
-        # --- 1+2: find touched files (bucket-pruned probe, broadcast keys)
-        # small/medium sources collect the distinct keys ONCE; the list
-        # feeds both the probe's broadcast join and the Arrow rewrite's
-        # executor set (previously two identical distinct jobs)
-        key_list: list | None = None
-        if n_src <= BROADCAST_THRESHOLD_ROWS:
-            key_schema = src.select(key).schema
-            key_list = [r[0] for r in src.select(key).distinct().collect()]
-            src_keys = F.broadcast(spark.createDataFrame([(k,) for k in key_list], key_schema))
-        else:
-            src_keys = src.select(key).distinct()
-
-        spec_buckets = {
-            f for f in table.partition_spec.fields if f.transform == "bucket" and f.source == key
-        }
-        buckets: set | None = None
-        if spec_buckets:
-            bf = next(iter(spec_buckets))
-            buckets = {
-                r["b"]
-                for r in src.select(
-                    F.pmod(F.xxhash64(F.col(key)), F.lit(bf.num_buckets)).cast("int").alias("b")
+        with job.phase("probe"):
+            n_src = src.count()
+            # an unknown op (e.g. Debezium's 'insert'/'update') would silently
+            # behave as a delete — every source key tombstones its target rows
+            # and only op=='upsert' rows are re-inserted. Fail loudly instead.
+            bad_ops = [
+                r[0]
+                for r in src.select(op_col).distinct().collect()
+                if r[0] not in ("upsert", "delete")
+            ]
+            if bad_ops:
+                raise ValueError(
+                    f"unknown {op_col} value(s) {bad_ops!r}: MERGE understands "
+                    "'upsert' and 'delete' only"
                 )
-                .distinct()
-                .collect()
-            }
 
-        import os
-
-        # planning: 'driver' materializes the manifest (fine to ~10^4 files);
-        # 'distributed' keeps entries in entries_df — probe specs flow to the
-        # Arrow probe as a DataFrame (nothing per-file on the driver in the
-        # common path), and only the touched files' entry rows (bounded by
-        # the source key count, metadata-sized) are ever collected; the
-        # huge-source fallback alone collects the pruned path list (same
-        # routing as plan_compaction_distributed / execute_cluster)
-        if planning == "auto":
-            planning = (
-                "distributed" if table.entries_df(spark).count() > 10_000 else "driver"
-            )
-        if planning == "driver":
-            entries = table.live_entries()
-            probe_entries = entries
-            if buckets is not None:
-                probe_entries = [
-                    e
-                    for e in entries
-                    if e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
-                    or not e.partition
-                ]
-            import json as _json
-
-            spec_df = spark.createDataFrame(
-                [
-                    (
-                        e.path,
-                        _json.dumps(e.lower_bounds, default=str),
-                        _json.dumps(e.upper_bounds, default=str),
-                        _json.dumps(e.blooms),
-                    )
-                    for e in probe_entries
-                ],
-                "path string, lo string, hi string, bloom string",
-            )
-
-            def _fallback_paths() -> list:
-                return [e.path for e in probe_entries]
-
-            by_path = {e.path: e for e in entries}
-
-            def _touched_from(rels: set) -> list:
-                return [by_path[p] for p in sorted(rels)]
-
-        else:
-            edf = table.entries_df(spark)
-            pedf = edf
-            if buckets is not None:
-                bval = F.coalesce(
-                    F.get_json_object("partition", f"$.{bf.name}"),
-                    F.get_json_object("partition", f"$.{bf.partition_column}"),
-                ).cast("int")
-                pedf = edf.filter(bval.isin(*buckets) | bval.isNull())
-            spec_df = pedf.select(
-                "path",
-                F.col("lower_bounds").alias("lo"),
-                F.col("upper_bounds").alias("hi"),
-                F.coalesce(F.col("blooms"), F.lit("{}")).alias("bloom"),
-            )
-
-            def _fallback_paths() -> list:
-                return [r["path"] for r in pedf.select("path").collect()]
-
-            def _touched_from(rels: set) -> list:
-                if not rels:
-                    return []
-                from ..core import manifests as mf
-
-                rel_df = spark.createDataFrame([(p,) for p in rels], "path string")
-                rows = edf.join(F.broadcast(rel_df), "path").collect()
-                got = {r["path"]: mf.ManifestEntry.from_row(r.asDict()) for r in rows}
-                return [got[p] for p in sorted(rels)]
-
-        probe_stats: dict = {}
-        if key_list is not None:
-            # Arrow key-column probe with manifest-bounds pre-pruning: tasks
-            # skip files whose key range excludes every source key, then read
-            # ONLY the key column of survivors with pyarrow and set-probe it
-            # against the broadcast source keys. The JVM scan this replaces
-            # paid per-file reader setup (~50 ms/file — minutes at 10^5 tiny
-            # files); the Arrow footer read + one-column decode is the same
-            # cost model as every other maintenance task here.
-            touched_rel, probe_stats = _probe_touched_arrow(
-                spark, table, spec_df, key_list, key
-            )
-        else:
-            # huge source: keys don't fit a broadcast set — JVM scan +
-            # distributed semi-join probe (the key column still prunes at
-            # the parquet reader; per-file setup amortizes over the big read)
-            fb_paths = _fallback_paths()
-            if not fb_paths:
-                touched_rel = set()
+            # --- 1+2: find touched files (bucket-pruned probe, broadcast keys)
+            # small/medium sources collect the distinct keys ONCE; the list
+            # feeds both the probe's broadcast join and the Arrow rewrite's
+            # executor set (previously two identical distinct jobs)
+            key_list: list | None = None
+            if n_src <= BROADCAST_THRESHOLD_ROWS:
+                key_schema = src.select(key).schema
+                key_list = [r[0] for r in src.select(key).distinct().collect()]
+                src_keys = F.broadcast(spark.createDataFrame([(k,) for k in key_list], key_schema))
             else:
-                norm_root = _norm_path_py(table.root).rstrip("/")
-                tgt = (
-                    spark.read.schema(table.schema)
-                    .parquet(*[os.path.join(table.root, p) for p in fb_paths])
-                    .withColumn("_file", _norm_path_sql(F.input_file_name()))
-                )
-                touched_rel = {
-                    r["_file"][len(norm_root) + 1 :]
-                    for r in tgt.join(src_keys, key, "inner")
-                    .select("_file")
+                src_keys = src.select(key).distinct()
+
+            spec_buckets = {
+                f for f in table.partition_spec.fields if f.transform == "bucket" and f.source == key
+            }
+            buckets: set | None = None
+            if spec_buckets:
+                bf = next(iter(spec_buckets))
+                buckets = {
+                    r["b"]
+                    for r in src.select(
+                        F.pmod(F.xxhash64(F.col(key)), F.lit(bf.num_buckets)).cast("int").alias("b")
+                    )
                     .distinct()
                     .collect()
                 }
 
-        touched_entries = _touched_from(touched_rel)
+            # planning: 'driver' materializes the manifest (fine to ~10^4 files);
+            # 'distributed' keeps entries in entries_df — probe specs flow to the
+            # Arrow probe as a DataFrame (nothing per-file on the driver in the
+            # common path), and only the touched files' entry rows (bounded by
+            # the source key count, metadata-sized) are ever collected; the
+            # huge-source fallback alone collects the pruned path list (same
+            # routing as plan_compaction_distributed / execute_cluster)
+            if planning == "auto":
+                planning = "distributed" if table.plans_distributed() else "driver"
+            if planning == "driver":
+                entries = table.live_entries()
+                probe_entries = entries
+                if buckets is not None:
+                    probe_entries = [
+                        e
+                        for e in entries
+                        if e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
+                        or not e.partition
+                    ]
+                import json as _json
+
+                spec_df = spark.createDataFrame(
+                    [
+                        (
+                            e.path,
+                            _json.dumps(e.lower_bounds, default=str),
+                            _json.dumps(e.upper_bounds, default=str),
+                            _json.dumps(e.blooms),
+                        )
+                        for e in probe_entries
+                    ],
+                    "path string, lo string, hi string, bloom string",
+                )
+
+                def _fallback_paths() -> list:
+                    return [e.path for e in probe_entries]
+
+                by_path = {e.path: e for e in entries}
+
+                def _touched_from(rels: set) -> list:
+                    return [by_path[p] for p in sorted(rels)]
+
+            else:
+                edf = table.entries_df(spark)
+                pedf = edf
+                if buckets is not None:
+                    bval = F.coalesce(
+                        F.get_json_object("partition", f"$.{bf.name}"),
+                        F.get_json_object("partition", f"$.{bf.partition_column}"),
+                    ).cast("int")
+                    pedf = edf.filter(bval.isin(*buckets) | bval.isNull())
+                spec_df = pedf.select(
+                    "path",
+                    F.col("lower_bounds").alias("lo"),
+                    F.col("upper_bounds").alias("hi"),
+                    F.coalesce(F.col("blooms"), F.lit("{}")).alias("bloom"),
+                )
+
+                def _fallback_paths() -> list:
+                    return [r["path"] for r in pedf.select("path").collect()]
+
+                def _touched_from(rels: set) -> list:
+                    if not rels:
+                        return []
+                    from ..core import manifests as mf
+
+                    rel_df = spark.createDataFrame([(p,) for p in rels], "path string")
+                    rows = edf.join(F.broadcast(rel_df), "path").collect()
+                    got = {r["path"]: mf.ManifestEntry.from_row(r.asDict()) for r in rows}
+                    return [got[p] for p in sorted(rels)]
+
+            probe_stats: dict = {}
+            if key_list is not None:
+                # Arrow key-column probe with manifest-bounds pre-pruning: tasks
+                # skip files whose key range excludes every source key, then read
+                # ONLY the key column of survivors with pyarrow and set-probe it
+                # against the broadcast source keys. The JVM scan this replaces
+                # paid per-file reader setup (~50 ms/file — minutes at 10^5 tiny
+                # files); the Arrow footer read + one-column decode is the same
+                # cost model as every other maintenance task here.
+                touched_rel, probe_stats = _probe_touched_arrow(
+                    spark, table, spec_df, key_list, key
+                )
+            else:
+                # huge source: keys don't fit a broadcast set — JVM scan +
+                # distributed semi-join probe (the key column still prunes at
+                # the parquet reader; per-file setup amortizes over the big read)
+                fb_paths = _fallback_paths()
+                if not fb_paths:
+                    touched_rel = set()
+                else:
+                    norm_root = _norm_path_py(table.root).rstrip("/")
+                    tgt = (
+                        spark.read.schema(table.schema)
+                        .parquet(*[os.path.join(table.root, p) for p in fb_paths])
+                        .withColumn("_file", _norm_path_sql(F.input_file_name()))
+                    )
+                    touched_rel = {
+                        r["_file"][len(norm_root) + 1 :]
+                        for r in tgt.join(src_keys, key, "inner")
+                        .select("_file")
+                        .distinct()
+                        .collect()
+                    }
+
+            touched_entries = _touched_from(touched_rel)
 
         # --- 3: rewrite touched files + write all upserts
         upserts = src.filter(F.col(op_col) == "upsert").select(*data_cols)
-        new_entries: list = []
-        n_new_rows = 0
-
         if strategy == "mor":
             # merge-on-read: matched target rows become positional
             # tombstones (Iceberg v2 write.merge.mode=merge-on-read) and
@@ -374,48 +400,48 @@ def merge_into(
             # handful of rows; routine compaction absorbs the tombstones.
             from .deletes import exclude_existing_tombstones, write_delete_vector
 
-            prefix = f"file:{table.root}{os.sep}"
-            rel_dv, counts = None, {}
-            if touched_entries:
-                tpaths = [os.path.join(table.root, e.path) for e in touched_entries]
-                tdf = (
-                    spark.read.schema(table.schema)
-                    .parquet(*tpaths)
-                    .select(
-                        F.col("_metadata.file_path").alias("_fp"),
-                        F.col("_metadata.row_index").alias("_pos"),
-                        F.col(key),
+            with job.phase("write"):
+                prefix = f"file:{table.root}{os.sep}"
+                rel_dv, counts = None, {}
+                if touched_entries:
+                    tpaths = [os.path.join(table.root, e.path) for e in touched_entries]
+                    tdf = (
+                        spark.read.schema(table.schema)
+                        .parquet(*tpaths)
+                        .select(
+                            F.col("_metadata.file_path").alias("_fp"),
+                            F.col("_metadata.row_index").alias("_pos"),
+                            F.col(key),
+                        )
                     )
-                )
-                hits = tdf.join(src_keys, key, "inner").select("_fp", "_pos")
-                hits = exclude_existing_tombstones(
-                    spark, table, touched_entries, hits, prefix
-                )
-                rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
-            n_upserts_mor = upserts.count()
-            if n_upserts_mor:
-                tot = (
-                    table.entries_df(spark)
-                    .agg(F.sum("size_bytes").alias("b"), F.sum("record_count").alias("r"))
-                    .first()
-                )
-                avg_row = (tot["b"] / max(1, tot["r"])) if tot["b"] else 8192
-                nf = max(1, -(-int(n_upserts_mor * avg_row) // table.target_file_size))
-                new_entries = table.write_data_files(upserts, num_files=int(nf))
+                    hits = tdf.join(src_keys, key, "inner").select("_fp", "_pos")
+                    hits = exclude_existing_tombstones(
+                        spark, table, touched_entries, hits, prefix
+                    )
+                    rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
+                new_entries, n_upserts = _write_upserts(spark, table, upserts, planning)
             if not counts and not new_entries:
                 return {"status": "no-op", "strategy": "mor", "source_rows": n_src}
-            snap = table.commit_delete_vectors(
-                rel_dv,
-                counts,
-                added_entries=new_entries,
-                operation="merge",
-                summary={
-                    "source-rows": n_src,
-                    "strategy": "merge-on-read",
-                    **(extra_summary or {}),
-                },
-                expected_dv_counts={e.path: len(e.deletes) for e in touched_entries},
-                set_properties=set_properties,
+            with job.phase("commit"):
+                snap = table.commit_delete_vectors(
+                    rel_dv,
+                    counts,
+                    added_entries=new_entries,
+                    operation="merge",
+                    summary={
+                        "source-rows": n_src,
+                        "strategy": "merge-on-read",
+                        **(extra_summary or {}),
+                    },
+                    expected_dv_counts={e.path: len(e.deletes) for e in touched_entries},
+                    set_properties=set_properties,
+                )
+            tombstoned = int(sum(counts.values()))
+            done = job.finish(
+                files_before=len(counts), files_after=len(counts) + len(new_entries),
+                bytes_after=sum(e.size_bytes for e in new_entries),
+                rows=tombstoned + n_upserts, snapshot_id=snap.snapshot_id,
+                input_files=sorted(counts), output_files=[e.path for e in new_entries],
             )
             return {
                 "status": "committed",
@@ -423,91 +449,80 @@ def merge_into(
                 "snapshot_id": snap.snapshot_id,
                 "source_rows": n_src,
                 "touched_files": len(counts),
-                "tombstoned_rows": int(sum(counts.values())),
+                "tombstoned_rows": tombstoned,
                 "files_added": len(new_entries),
                 "probe": probe_stats,
-                "duration_ms": int((time.time() - t0) * 1000),
+                **done,
             }
 
-        if touched_entries and n_src <= BROADCAST_THRESHOLD_ROWS:
-            # Arrow per-file CoW (the common case): broadcast the source key
-            # set, and each task reads ONE touched file with pyarrow, drops
-            # rows whose key is in the set (upsert & delete keys both leave
-            # the old file), writes the survivor file and returns stats.
-            # No shuffle, no JVM row pipeline — same shape as the compact
-            # rewrite, and the file-granularity CoW Iceberg uses. Survivor
-            # files stay near target size (they lose only matched rows);
-            # routine compaction handles any shrinkage.
-            new_entries, n_surv = _rewrite_touched_arrow(
-                spark, table, touched_entries, key_set=key_list, key=key
-            )
-            n_new_rows += n_surv
-        elif touched_entries:
-            # huge-source fallback: distributed anti-join (keys don't fit a
-            # broadcast) + re-bin to target-size files. Tombstoned touched
-            # files go through the MoR read path so deleted rows cannot
-            # resurrect into the rewrite.
-            t_clean = [e for e in touched_entries if not e.deletes]
-            t_dirty = [e for e in touched_entries if e.deletes]
-            if t_dirty:
-                touched_df = table._scan_with_deletes(
-                    spark, [e.path for e in t_clean], t_dirty, table.schema
+        with job.phase("write"):
+            new_entries: list = []
+            n_surv = 0
+            if touched_entries and n_src <= BROADCAST_THRESHOLD_ROWS:
+                # Arrow per-file CoW (the common case): broadcast the source
+                # key set, and each task reads ONE touched file with pyarrow,
+                # drops rows whose key is in the set (upsert & delete keys
+                # both leave the old file), writes the survivor file and
+                # returns stats. No shuffle, no JVM row pipeline — same shape
+                # as the compact rewrite, and the file-granularity CoW
+                # Iceberg uses. Survivor files stay near target size (they
+                # lose only matched rows); routine compaction handles any
+                # shrinkage.
+                new_entries, n_surv = _rewrite_touched_arrow(
+                    spark, table, touched_entries, key_set=key_list, key=key
                 )
-            else:
-                touched_paths = [os.path.join(table.root, e.path) for e in touched_entries]
-                touched_df = spark.read.schema(table.schema).parquet(*touched_paths)
-            survivors = touched_df.join(src_keys, key, "left_anti")
-            n_surv = survivors.count()
-            if n_surv:
-                n_files = max(
-                    1,
-                    -(-sum(e.size_bytes for e in touched_entries) // table.target_file_size),
-                )
-                new_entries = table.write_data_files(survivors, num_files=int(n_files))
-            n_new_rows += n_surv
+            elif touched_entries:
+                # huge-source fallback: distributed anti-join (keys don't fit
+                # a broadcast) + re-bin to target-size files. Tombstoned
+                # touched files go through the MoR read path so deleted rows
+                # cannot resurrect into the rewrite.
+                t_clean = [e for e in touched_entries if not e.deletes]
+                t_dirty = [e for e in touched_entries if e.deletes]
+                if t_dirty:
+                    touched_df = table._scan_with_deletes(
+                        spark, [e.path for e in t_clean], t_dirty, table.schema
+                    )
+                else:
+                    touched_paths = [os.path.join(table.root, e.path) for e in touched_entries]
+                    touched_df = spark.read.schema(table.schema).parquet(*touched_paths)
+                survivors = touched_df.join(src_keys, key, "left_anti")
+                n_surv = survivors.count()
+                if n_surv:
+                    n_files = max(
+                        1,
+                        -(-sum(e.size_bytes for e in touched_entries) // table.target_file_size),
+                    )
+                    new_entries = table.write_data_files(survivors, num_files=int(n_files))
+            added, n_upserts = _write_upserts(spark, table, upserts, planning)
+            new_entries += added
+        n_new_rows = n_surv + n_upserts
 
-        n_upserts = upserts.count()
-        if n_upserts:
-            tot = (
-                table.entries_df(spark)
-                .agg(F.sum("size_bytes").alias("b"), F.sum("record_count").alias("r"))
-                .first()
+        with job.phase("commit"):
+            snap = table.commit_replace(
+                {e.path for e in touched_entries},
+                new_entries,
+                operation="merge",
+                summary={
+                    "source-rows": n_src,
+                    "touched-files": len(touched_entries),
+                    **(extra_summary or {}),
+                },
+                # touched_entries are the plan-time snapshot of each file's
+                # DV set (the CoW rewrite absorbed exactly those tombstones);
+                # conflict if a concurrent delete grew any of them since
+                expected_dv_counts={e.path: len(e.deletes) for e in touched_entries},
+                set_properties=set_properties,
             )
-            avg_row = (tot["b"] / max(1, tot["r"])) if tot["b"] else 8192
-            n_files = max(1, -(-int(n_upserts * avg_row) // table.target_file_size))
-            new_entries = new_entries + table.write_data_files(upserts, num_files=int(n_files))
-            n_new_rows += n_upserts
-
-        snap = table.commit_replace(
-            {e.path for e in touched_entries},
-            new_entries,
-            operation="merge",
-            summary={
-                "source-rows": n_src,
-                "touched-files": len(touched_entries),
-                **(extra_summary or {}),
-            },
-            # touched_entries are the plan-time snapshot of each file's DV
-            # set (the CoW rewrite absorbed exactly those tombstones);
-            # conflict if a concurrent delete grew any of them since
-            expected_dv_counts={e.path: len(e.deletes) for e in touched_entries},
-            set_properties=set_properties,
+        done = job.finish(
+            files_before=len(touched_entries),
+            files_after=len(new_entries),
+            bytes_before=sum(e.size_bytes for e in touched_entries),
+            bytes_after=sum(e.size_bytes for e in new_entries),
+            rows=n_new_rows,
+            snapshot_id=snap.snapshot_id,
+            input_files=[e.path for e in touched_entries],
+            output_files=[e.path for e in new_entries],
         )
-        dur_ms = int((time.time() - t0) * 1000)
-        if sys_tables:
-            sys_tables.record_lineage(
-                lineage_row(
-                    f"merge-{table.md.table_uuid[:8]}-snap{snap.snapshot_id}",
-                    "merge", table_name, dur_ms,
-                    files_before=len(touched_entries),
-                    files_after=len(new_entries),
-                    bytes_before=sum(e.size_bytes for e in touched_entries),
-                    bytes_after=sum(e.size_bytes for e in new_entries),
-                    rows=n_new_rows,
-                    rate_rows=n_new_rows,
-                    rate_bytes=0.0,
-                )
-            )
         return {
             "status": "committed",
             "snapshot_id": snap.snapshot_id,
@@ -516,7 +531,7 @@ def merge_into(
             "probe": probe_stats,
             "files_added": len(new_entries),
             "rows_rewritten": n_new_rows,
-            "duration_ms": dur_ms,
+            **done,
         }
     finally:
         src.unpersist()

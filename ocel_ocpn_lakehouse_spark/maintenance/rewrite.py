@@ -29,8 +29,9 @@ and its commit); the pipeline around that logic lives here once:
            publishing leaves only ``<root>/_staging/<uuid>``, which the
            orphan sweep reclaims.
 
-The op then commits (``commit_replace`` with its own guards) and records
-one lineage row (:func:`lineage_row`).
+The op then commits (``commit_replace`` with its own guards) under its
+job ledger (maintenance/checkpoint.py), which records states, phases and
+lineage.
 """
 
 from __future__ import annotations
@@ -286,17 +287,3 @@ def read_fragments(shuffle_dir: str, bucket: int):
     frags = sorted(glob.glob(os.path.join(shuffle_dir, f"b{bucket}", "*.parquet")))
     return mf.read_tables_overlapped(frags) if frags else None
 
-
-def lineage_row(job_id: str, op: str, table_name: str, dur_ms: int,
-                rate_rows: float, rate_bytes: float, **fields) -> dict:
-    """A lineage row: ``fields`` (files/bytes before and after, rows,
-    optionally partition_id) plus throughputs of ``rate_rows`` and
-    ``rate_bytes`` over the job's duration."""
-    secs = dur_ms / 1000
-    return {
-        "job_id": job_id, "op": op, "table_name": table_name, "partition_id": "*",
-        **fields,
-        "duration_ms": dur_ms,
-        "throughput_rows_s": rate_rows / secs if dur_ms else 0.0,
-        "throughput_bytes_s": rate_bytes / secs if dur_ms else 0.0,
-    }

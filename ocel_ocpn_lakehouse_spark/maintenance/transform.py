@@ -43,7 +43,7 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.table import PrunePredicate, Table
-from .checkpoint import SystemTables
+from .checkpoint import Job, SystemTables
 from .deletes import exclude_existing_tombstones
 from .rewrite import STATS_SCHEMA, StagedRewrite
 
@@ -59,7 +59,7 @@ def transform_where(
 ) -> dict:
     """``UPDATE <table> SET <set_exprs> WHERE <condition>`` as a CoW
     maintenance rewrite of exactly the touched files."""
-    t0 = time.time()
+    job = Job(sys_tables, "update", table, table_name)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     snap = table.current_snapshot()
     if snap is None:
@@ -113,7 +113,8 @@ def transform_where(
         .filter(cond)
     )
     p1 = exclude_existing_tombstones(spark, table, entries, p1, prefix)
-    touched_fps = {r["_fp"] for r in p1.select("_fp").distinct().collect()}
+    with job.phase("probe"):
+        touched_fps = {r["_fp"] for r in p1.select("_fp").distinct().collect()}
     touched = [e for e in entries if prefix + e.path.replace(os.sep, "/") in touched_fps
                or f"{prefix}{e.path}" in touched_fps]
     if not touched:
@@ -121,7 +122,7 @@ def transform_where(
             "status": "no-matching-rows",
             "updated_rows": 0,
             "candidate_files": len(entries),
-            "seconds": round(time.time() - t0, 3),
+            "seconds": round(time.time() - job.t0, 3),
         }
     expected_dv_counts = {e.path: len(e.deletes) for e in touched}
 
@@ -179,41 +180,38 @@ def transform_where(
 
     out_schema = "fidx long, updated long, " + STATS_SCHEMA
     out_cols = [c.split()[0] for c in out_schema.split(",")]
-    out_rows = upd.groupBy("_fp").applyInArrow(_write_file, out_schema).collect()
-    new_entries = rw.publish(out_rows, lambda r: touched[r["fidx"]].partition)
+    with job.phase("write"):
+        out_rows = upd.groupBy("_fp").applyInArrow(_write_file, out_schema).collect()
+    with job.phase("publish"):
+        new_entries = rw.publish(out_rows, lambda r: touched[r["fidx"]].partition)
     updated_rows = sum(int(r["updated"]) for r in out_rows)
+    out_bytes = sum(e.size_bytes for e in new_entries)
 
-    snap2 = table.commit_replace(
-        {e.path for e in touched},
-        new_entries,
-        operation="update",
-        summary={
-            "updated-rows": updated_rows,
-            "rewritten-files": len(new_entries),
-            "rewritten-bytes": sum(e.size_bytes for e in new_entries),
-        },
-        expected_dv_counts=expected_dv_counts,
+    with job.phase("commit"):
+        snap2 = table.commit_replace(
+            {e.path for e in touched},
+            new_entries,
+            operation="update",
+            summary={
+                "updated-rows": updated_rows,
+                "rewritten-files": len(new_entries),
+                "rewritten-bytes": out_bytes,
+            },
+            expected_dv_counts=expected_dv_counts,
+        )
+    done = job.finish(
+        files_before=len(touched), files_after=len(new_entries),
+        bytes_before=sum(e.size_bytes for e in touched), bytes_after=out_bytes,
+        rows=updated_rows, snapshot_id=snap2.snapshot_id,
+        input_files=[e.path for e in touched], output_files=[e.path for e in new_entries],
     )
-    rep = {
+    return {
         "status": "ok",
         "updated_rows": updated_rows,
         "candidate_files": len(entries),
         "rewritten_files": len(new_entries),
         "untouched_files": len(entries) - len(touched),
         "snapshot_id": snap2.snapshot_id,
-        "seconds": round(time.time() - t0, 3),
+        "seconds": round(done["duration_ms"] / 1000, 3),
+        **done,
     }
-    if sys_tables is not None:
-        sys_tables.record_group(
-            f"update-{table.md.table_uuid[:8]}-snap{snap2.snapshot_id}",
-            "update",
-            table_name,
-            "*",
-            "update-all",
-            "committed",
-            [e.path for e in touched],
-            [e.path for e in new_entries],
-            rows=updated_rows,
-            nbytes=sum(e.size_bytes for e in new_entries),
-        )
-    return rep

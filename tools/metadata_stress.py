@@ -102,8 +102,8 @@ def main() -> int:
             )
             res = merge_into(spark, t, src, key="id")
             res.setdefault("groups", res.get("touched_files", 0))
-            res.setdefault(
-                "phases",
+            # merge results carry the ledger's phases; add the stress fields
+            res.setdefault("phases", {}).update(
                 {
                     "compact_first_s": round(compact_bloom_s, 1),
                     "files_after_compact": files_maintained,
@@ -135,8 +135,8 @@ def main() -> int:
                 strategy="mor" if op == "merge-mor" else None,
             )
             res.setdefault("groups", res.get("touched_files", 0))
-            res.setdefault(
-                "phases",
+            # merge results carry the ledger's phases; add the stress fields
+            res.setdefault("phases", {}).update(
                 {
                     "merge_s": res.get("duration_ms", 0) / 1000,
                     **(
