@@ -105,24 +105,16 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
     return entries, sum(e.record_count for e in entries)
 
 
-def _write_upserts(spark, table: Table, upserts: DataFrame, planning: str) -> tuple[list, int]:
+def _write_upserts(table: Table, upserts: DataFrame) -> tuple[list, int]:
     """Append the upsert rows as ≈target-size files, sized by the table's
-    average row (summed from manifests on the driver planning route, by a
-    Spark job over ``entries_df`` on the distributed one); returns
-    (entries, rows)."""
+    average row (summed from the live manifests' size/record columns);
+    returns (entries, rows)."""
     n = upserts.count()
     if not n:
         return [], 0
-    if planning == "driver":
-        snap = table.current_snapshot()
-        tot = table._manifest_totals(snap.manifests if snap else [], "live")
-        b, r = tot["live-bytes"], tot["live-records"]
-    else:
-        b, r = (
-            table.entries_df(spark)
-            .agg(F.sum("size_bytes").alias("b"), F.sum("record_count").alias("r"))
-            .first()
-        )
+    snap = table.current_snapshot()
+    tot = table._manifest_totals(snap.manifests if snap else [], "live")
+    b, r = tot["live-bytes"], tot["live-records"]
     avg_row = (b / max(1, r)) if b else 8192
     n_files = max(1, -(-int(n * avg_row) // table.target_file_size))
     return table.write_data_files(upserts, num_files=int(n_files)), n
@@ -419,7 +411,7 @@ def merge_into(
                         spark, table, touched_entries, hits, prefix
                     )
                     rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
-                new_entries, n_upserts = _write_upserts(spark, table, upserts, planning)
+                new_entries, n_upserts = _write_upserts(table, upserts)
             if not counts and not new_entries:
                 return {"status": "no-op", "strategy": "mor", "source_rows": n_src}
             with job.phase("commit"):
@@ -493,7 +485,7 @@ def merge_into(
                         -(-sum(e.size_bytes for e in touched_entries) // table.target_file_size),
                     )
                     new_entries = table.write_data_files(survivors, num_files=int(n_files))
-            added, n_upserts = _write_upserts(spark, table, upserts, planning)
+            added, n_upserts = _write_upserts(table, upserts)
             new_entries += added
         n_new_rows = n_surv + n_upserts
 
