@@ -13,7 +13,7 @@ has millions of files — the scan layer never assumes manifests fit on the
 driver beyond the final surviving path list.
 
 Per-file stats are extracted from Parquet footers **executor-side** via
-``mapInPandas`` over the path list (collect_stats), so stat collection
+one Arrow task job over the path list (collect_stats), so stat collection
 scales with the cluster, not the driver.
 """
 
@@ -23,7 +23,7 @@ import json
 import os
 import uuid
 from dataclasses import dataclass, field
-from typing import Iterable, Iterator
+from typing import Iterable
 
 import numpy as np
 import pyarrow as pa
@@ -146,10 +146,11 @@ def read_tables_overlapped(
     pre-evolution files and casts to the canonical types — the same T8
     contract as read_table_nullfill, minus its per-file footer probe.
     Fragment order is preserved (Scanner.to_table is ordered), so output
-    is bit-identical to the loop+concat form. Callers inside one-core
-    tasks must pa.set_io_thread_count(1) alongside set_cpu_count(1): the
-    single I/O thread is what overlaps; the default 8-thread pool times
-    16 workers would thrash the cpuset."""
+    is bit-identical to the loop+concat form. Every task of the kernel's
+    ``tasks_df`` (maintenance/rewrite.py) runs with one Arrow CPU thread
+    and one I/O thread: the single I/O thread is what overlaps (four add
+    nothing over one), while the default pool of one thread per machine
+    CPU times the worker count would thrash the cpuset."""
     import pyarrow.dataset as _ds
 
     schema = None
@@ -395,13 +396,14 @@ def collect_stats(
 ) -> dict[str, dict]:
     """Distributed footer-stat collection: path list → {abs_path: stats}.
 
-    Uses mapInPandas over a paths DataFrame so footer reads run on
-    executors (at 10^12-row scale a compaction pass touches 10^4-10^5
-    files; the driver only sees the aggregated JSON rows). When
-    ``bloom_columns`` is set, each file also pays one pruned column read
-    per bloom column so JVM-written files carry blooms from birth.
+    Runs the footer reads as one kernel task job (``tasks_df``) over the
+    path list, so they run on executors (at 10^12-row scale a compaction
+    pass touches 10^4-10^5 files; the driver only sees the aggregated JSON
+    rows). When ``bloom_columns`` is set, each file also pays one pruned
+    column read per bloom column so JVM-written files carry blooms from
+    birth.
     """
-    import pandas as pd
+    from ..maintenance.rewrite import tasks_df
 
     if not abs_paths:
         return {}
@@ -412,34 +414,29 @@ def collect_stats(
             out[p]["blooms"] = _file_blooms(p, bloom_columns)
         return out
 
-    stats_cols = sorted(stats_columns) if stats_columns is not None else None
+    stats_cols = set(stats_columns) if stats_columns is not None else None
     bl_cols = list(bloom_columns or [])
 
-    def scan_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = set(stats_cols) if stats_cols is not None else None
-        for pdf in batches:
-            out = []
-            for p in pdf["path"]:
-                s = footer_stats(p, cols)
-                out.append(
-                    {
-                        "path": p,
-                        "record_count": s["record_count"],
-                        "lower_bounds": json.dumps(s["lower_bounds"], default=str),
-                        "upper_bounds": json.dumps(s["upper_bounds"], default=str),
-                        "null_counts": json.dumps(s["null_counts"]),
-                        "blooms": json.dumps(_file_blooms(p, bl_cols)),
-                    }
-                )
-            yield pd.DataFrame(out)
+    def scan_footers(recs):
+        for rec in recs:
+            p = rec["path"]
+            s = footer_stats(p, stats_cols)
+            yield {
+                "path": p,
+                "record_count": s["record_count"],
+                "lower_bounds": json.dumps(s["lower_bounds"], default=str),
+                "upper_bounds": json.dumps(s["upper_bounds"], default=str),
+                "null_counts": json.dumps(s["null_counts"]),
+                "blooms": json.dumps(_file_blooms(p, bl_cols)),
+            }
 
-    paths_df = spark.createDataFrame([(p,) for p in abs_paths], "path string").repartition(
-        min(len(abs_paths), 64)
-    )
-    rows = paths_df.mapInPandas(
+    rows = tasks_df(
+        spark,
+        [(p,) for p in abs_paths],
         scan_footers,
         "path string, record_count long, lower_bounds string, upper_bounds string, "
         "null_counts string, blooms string",
+        spec_schema="path string",
     ).collect()
     return {
         r["path"]: {

@@ -29,9 +29,10 @@ never enter the JVM row pipeline):
      (maintenance/checkpoint.py) records its states, phases and lineage.
 
 Reads, staged writes, stats, fragments and publish run on the
-staged-rewrite kernel (maintenance/rewrite.py). Scale notes: both jobs
-iterate metadata rows; the map fans out by the kernel's map_slices rule
-and the reduce runs one task per output file — no hash collisions, no idle
+staged-rewrite kernel (maintenance/rewrite.py). Scale notes: every job
+iterates metadata rows in one wave of at most one task per core (the
+kernel's fan-out rule): the bounds and map jobs pack input files by bytes,
+the reduce packs output files by routed rows — no hash collisions, no idle
 reducers. Fragment fan-out per map task is bounded by the combos of its
 own table partition (a partition of B bytes has B/target buckets); very
 large single partitions should be clustered in partition-range waves, the
@@ -57,7 +58,6 @@ from .rewrite import (
     FragmentRouter,
     StagedRewrite,
     file_spec,
-    map_slices,
     read_fragments,
     tasks_df,
 )
@@ -198,13 +198,15 @@ def execute_cluster(
 
     rw = StagedRewrite.begin(spark, table, extra_stats={ZKEY_COL})
     shuffle_dir = os.path.join(rw.staging, "_shuffle")
-    n_map = map_slices(spark, n_files)
+    weights = None
     if planning == "driver":
         files: list | DataFrame = [file_spec(root, e) for e in entries]
+        weights = [e.size_bytes for e in entries]
     else:
-        # one metadata-row shuffle; payload bytes are untouched. The dv
-        # column carries {"rel", "dvs": [abs DV paths]} for tombstoned files
-        # ("" for clean ones) so rewrite tasks can absorb deletes.
+        # tasks_df repartitions these metadata rows (one shuffle; payload
+        # bytes are untouched). The dv column carries {"rel", "dvs": [abs
+        # DV paths]} for tombstoned files ("" for clean ones) so rewrite
+        # tasks can absorb deletes.
         dv_col = F.when(F.col("deletes") == "[]", F.lit("")).otherwise(
             F.to_json(
                 F.struct(
@@ -217,17 +219,15 @@ def execute_cluster(
                 )
             )
         )
-        files = (
-            edf.select(
-                F.concat(F.lit(root + os.sep), F.col("path")).alias("path"),
-                F.col("partition").alias("pkey"),
-                dv_col.alias("dv"),
-            ).repartition(n_map)
+        files = edf.select(
+            F.concat(F.lit(root + os.sep), F.col("path")).alias("path"),
+            F.col("partition").alias("pkey"),
+            dv_col.alias("dv"),
         )
 
     def _map_df(fn, out_schema: str) -> DataFrame:
         return tasks_df(
-            spark, files, fn, out_schema, spec_schema=FILE_SPEC_SCHEMA, n_slices=n_map
+            spark, files, fn, out_schema, spec_schema=FILE_SPEC_SCHEMA, weights=weights
         )
 
     # --- 1. quantile boundaries from Arrow key sampling --------------------
@@ -386,7 +386,10 @@ def execute_cluster(
     job.task_totals("map_task_totals", map_acks, ("t_read", "t_write"))
 
     # --- 3. REDUCE: concat + sort + one file per combo --------------------
-    live_combos = sorted({r["cidx"] for r in map_acks})
+    combo_rows: dict[int, int] = {}
+    for r in map_acks:
+        combo_rows[r["cidx"]] = combo_rows.get(r["cidx"], 0) + r["rows"]
+    live_combos = sorted(combo_rows)
 
     def _reduce_write(recs):
         for rec in recs:
@@ -404,7 +407,7 @@ def execute_cluster(
         stat_rows = tasks_df(
             spark, [(c,) for c in live_combos], _reduce_write,
             "cidx int, " + STATS_SCHEMA + ", t_read double, t_sort double, t_write double",
-            spec_schema="cidx int", io_threads=1,
+            spec_schema="cidx int", weights=[combo_rows[c] for c in live_combos],
         ).collect()
     job.task_totals("reduce_task_totals", stat_rows, ("t_read", "t_sort", "t_write"))
 

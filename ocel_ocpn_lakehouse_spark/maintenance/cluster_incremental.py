@@ -78,7 +78,6 @@ from .rewrite import (
     FragmentRouter,
     StagedRewrite,
     file_spec,
-    map_slices,
     read_fragments,
     tasks_df,
 )
@@ -180,12 +179,13 @@ def execute_cluster_incremental(
     span_meta = {pk: (v["los"], v["his"]) for pk, v in intervals.items()}
     key_cols_read = [c for c in cspec["inputs"] if c in table.schema.fieldNames()]
 
-    delta_specs = [file_spec(root, e) for es in delta_by_part.values() for e in es]
+    delta_files = [e for es in delta_by_part.values() for e in es]
+    delta_specs = [file_spec(root, e) for e in delta_files]
 
     def _delta_df(fn, out_schema: str):
         return tasks_df(
             spark, delta_specs, fn, out_schema, spec_schema=FILE_SPEC_SCHEMA,
-            n_slices=map_slices(spark, len(delta_specs)),
+            weights=[e.size_bytes for e in delta_files],
         )
 
     def _classify(np, keys, los, his):
@@ -350,7 +350,7 @@ def execute_cluster_incremental(
             spark, group_rows, _merge, "pkey string, " + STATS_SCHEMA,
             spec_schema="gidx int, pkey string, base array<string>, dvs array<string>, "
             "est_bytes long",
-            io_threads=1,
+            weights=[r[4] for r in group_rows],
         ).collect()
 
     # ---- 5. publish + commit ---------------------------------------------

@@ -9,13 +9,14 @@ total_size // 256 MB, "would require rewrite" (ops/maintenance_system.py:
            reference's metadata-only planner, §3.3).
   execute: ONE distributed job, ZERO shuffles, O(1) driver plan, run on
            the staged-rewrite kernel (maintenance/rewrite.py owns the read,
-           the staged write, the stats and the publish). One task per group
-           spec reads the group's files, sorts by the table sort order and
-           writes ONE ≈target-size file — Iceberg's binpack shape, N
-           independent group-tasks with perfect locality. The driver
-           publishes group-by-group with checkpoint rows (planned →
-           written) and commits ONE replace-snapshot at the end (written →
-           committed).
+           the staged write, the stats and the publish). Group specs are
+           packed by input bytes onto one wave of one-core tasks (the
+           kernel's fan-out rule); per group a task reads the group's
+           files, sorts by the table sort order and writes ONE
+           ≈target-size file — Iceberg's binpack shape, independent groups
+           with perfect locality. The driver publishes group-by-group with
+           checkpoint rows (planned → written) and commits ONE
+           replace-snapshot at the end (written → committed).
   resume : deterministic job_id = f(table uuid, snapshot); groups already
            'written' are excluded from the rewrite job, their outputs are
            reused from the checkpoint row; a fully-committed job is a
@@ -76,62 +77,80 @@ def _group_id(paths: list[str], dvs: dict | None = None) -> str:
     return hashlib.sha1(key.encode()).hexdigest()[:16]
 
 
+def pack_groups(
+    partition: dict,
+    files: list[tuple[str, int, int, list[str]]],
+    target: int,
+    min_group_files: int,
+) -> list[FileGroup]:
+    """First-fit-decreasing of one partition's candidate files — (rel path,
+    size bytes, live rows, rel DV paths) — into groups of ≤ ``target``
+    bytes. Deterministic: files sort by (size desc, path), and a group's id
+    hashes its members, which is what makes resume after a crash find its
+    groups. A bin below ``min_group_files`` is dropped unless it holds a
+    tombstoned file (a lone one still needs its rewrite to absorb them)."""
+    bins: list[list[tuple[str, int, int, list[str]]]] = []
+    bin_sizes: list[int] = []
+    for f in sorted(files, key=lambda f: (-f[1], f[0])):
+        for i, sz in enumerate(bin_sizes):
+            if sz + f[1] <= target:
+                bins[i].append(f)
+                bin_sizes[i] += f[1]
+                break
+        else:
+            bins.append([f])
+            bin_sizes.append(f[1])
+    groups = []
+    for b in bins:
+        dvs = {path: dv for path, _, _, dv in b if dv}
+        if len(b) < min_group_files and not dvs:
+            continue
+        paths = [path for path, _, _, _ in b]
+        groups.append(
+            FileGroup(
+                group_id=_group_id(paths, dvs),
+                partition=partition,
+                input_paths=paths,
+                input_bytes=sum(size for _, size, _, _ in b),
+                input_records=sum(live for _, _, live, _ in b),
+                input_dvs=dvs,
+            )
+        )
+    return groups
+
+
 def plan_compaction(
     table: Table,
     include_all: bool = False,
     min_group_files: int = 2,
 ) -> list[FileGroup]:
-    """First-fit-decreasing bin packing of small files, per partition.
+    """First-fit-decreasing bin packing of small files, per partition
+    (:func:`pack_groups`).
 
     Only files below the small-file cutoff are candidates (reference
     threshold ops/maintenance_system.py:58) unless include_all; bins cap
-    at the 256 MB target (:139). Deterministic: sorted inputs → stable
-    group ids, which is what makes resume after a crash find its groups.
+    at the 256 MB target (:139).
     """
-    target = table.target_file_size
-    small = table.small_file_bytes
     by_partition: dict[str, list[mf.ManifestEntry]] = {}
     for e in table.live_entries():
         # tombstoned files are rewrite candidates regardless of size: the
         # rewrite absorbs their delete vectors (Iceberg rewrite_data_files
         # delete-threshold behavior)
-        if include_all or e.size_bytes < small or e.deletes:
+        if include_all or e.size_bytes < table.small_file_bytes or e.deletes:
             by_partition.setdefault(json.dumps(e.partition, sort_keys=True), []).append(e)
-
-    groups: list[FileGroup] = []
-    for pkey in sorted(by_partition):
-        entries = sorted(by_partition[pkey], key=lambda e: (-e.size_bytes, e.path))
-        bins: list[list[mf.ManifestEntry]] = []
-        bin_sizes: list[int] = []
-        for e in entries:
-            placed = False
-            for i, sz in enumerate(bin_sizes):
-                if sz + e.size_bytes <= target:
-                    bins[i].append(e)
-                    bin_sizes[i] += e.size_bytes
-                    placed = True
-                    break
-            if not placed:
-                bins.append([e])
-                bin_sizes.append(e.size_bytes)
-        for b in bins:
-            dvs = {e.path: [d["path"] for d in e.deletes] for e in b if e.deletes}
-            # a lone tombstoned file still needs its rewrite (absorb), even
-            # though a lone clean small file would be left as-is
-            if len(b) < min_group_files and not dvs:
-                continue
-            paths = [e.path for e in b]
-            groups.append(
-                FileGroup(
-                    group_id=_group_id(paths, dvs),
-                    partition=b[0].partition,
-                    input_paths=paths,
-                    input_bytes=sum(e.size_bytes for e in b),
-                    input_records=sum(e.live_count for e in b),
-                    input_dvs=dvs,
-                )
-            )
-    return groups
+    return [
+        g
+        for pkey in sorted(by_partition)
+        for g in pack_groups(
+            by_partition[pkey][0].partition,
+            [
+                (e.path, e.size_bytes, e.live_count, [d["path"] for d in e.deletes])
+                for e in by_partition[pkey]
+            ],
+            table.target_file_size,
+            min_group_files,
+        )
+    ]
 
 
 def plan_compaction_distributed(
@@ -170,49 +189,21 @@ def plan_compaction_distributed(
         e = e.filter((F.col("size_bytes") < small) | (F.col("deletes") != "[]"))
 
     def ffd(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(
-            ["size_bytes", "path"], ascending=[False, True], kind="mergesort"
-        )
-        bins: list[list[int]] = []
-        bin_sizes: list[int] = []
-        idx = list(pdf.index)
-        for i in idx:
-            sz = int(pdf.at[i, "size_bytes"])
-            placed = False
-            for b, bsz in enumerate(bin_sizes):
-                if bsz + sz <= target:
-                    bins[b].append(i)
-                    bin_sizes[b] += sz
-                    placed = True
-                    break
-            if not placed:
-                bins.append([i])
-                bin_sizes.append(sz)
-        out = []
         part = pdf["partition"].iloc[0] if len(pdf) else "{}"
-        for b in bins:
-            dvs = {}
-            live = 0
-            for i in b:
-                dels = json.loads(pdf.at[i, "deletes"] or "[]")
-                live += int(pdf.at[i, "record_count"]) - sum(int(d["count"]) for d in dels)
-                if dels:
-                    dvs[pdf.at[i, "path"]] = [d["path"] for d in dels]
-            if len(b) < min_group_files and not dvs:
-                continue
-            paths = [pdf.at[i, "path"] for i in b]
-            out.append(
-                {
-                    "partition": part,
-                    "group_id": _group_id(paths, dvs),
-                    "input_paths": paths,
-                    "input_bytes": int(sum(int(pdf.at[i, "size_bytes"]) for i in b)),
-                    "input_records": live,
-                    "input_dvs": json.dumps(dvs, sort_keys=True),
-                }
-            )
+        files = []
+        for path, size, records, deletes in zip(
+            pdf["path"], pdf["size_bytes"], pdf["record_count"], pdf["deletes"]
+        ):
+            dels = json.loads(deletes or "[]")
+            live = int(records) - sum(int(d["count"]) for d in dels)
+            files.append((path, int(size), live, [d["path"] for d in dels]))
+        groups = pack_groups(json.loads(part), files, target, min_group_files)
         return pd.DataFrame(
-            out,
+            [
+                (part, g.group_id, g.input_paths, g.input_bytes, g.input_records,
+                 json.dumps(g.input_dvs, sort_keys=True))
+                for g in groups
+            ],
             columns=[
                 "partition", "group_id", "input_paths", "input_bytes",
                 "input_records", "input_dvs",
@@ -303,19 +294,17 @@ def execute_compaction(
         sort_cols = sort_columns or [
             f.column for f in table.sort_order.fields if f.column in table.schema.fieldNames()
         ]
-        # ONE Spark job, ZERO shuffles: one task per group spec (tiny
-        # metadata rows, never the data) reads the group's files, sorts by
-        # the table sort order and writes ONE output file. LPT order:
-        # largest groups first, so the last scheduling wave holds the
-        # smallest tasks.
-        by_size = sorted(pending, key=lambda g: (-g.input_bytes, g.group_id))
+        # ONE Spark job, ZERO shuffles: group specs (tiny metadata rows,
+        # never the data) packed by input bytes onto one wave of one-core
+        # tasks; per group a task reads the group's files, sorts by the
+        # table sort order and writes ONE output file.
         spec_rows = [
             (
                 g.group_id,
                 [os.path.join(rw.root, p) for p in g.input_paths],
                 [dv_spec(rw.root, p, g.input_dvs.get(p, [])) for p in g.input_paths],
             )
-            for g in by_size
+            for g in pending
         ]
 
         def _rewrite(recs):
@@ -346,7 +335,7 @@ def execute_compaction(
                     "group_id string, " + STATS_SCHEMA
                     + ", t_read double, t_sort double, t_write double, t_stats double",
                     spec_schema="group_id string, paths array<string>, dvs array<string>",
-                    io_threads=2,
+                    weights=[g.input_bytes for g in pending],
                 ).collect()
             }
             job.task_totals(

@@ -40,6 +40,7 @@ content-equivalent (test_mor_merge_matches_cow_and_rewrites_nothing).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -100,6 +101,7 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
         _survivors,
         "fidx int, " + STATS_SCHEMA,
         spec_schema="fidx int, " + FILE_SPEC_SCHEMA,
+        weights=[e.size_bytes for e in touched_entries],
     ).collect()
     entries = rw.publish(rows, lambda r: touched_entries[r["fidx"]].partition)
     return entries, sum(e.record_count for e in entries)
@@ -142,14 +144,19 @@ def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
         return True
 
 
-def _probe_touched_arrow(spark, table, specs, key_list, key) -> tuple[set, dict]:
+# (rel path, lower-bounds / upper-bounds / bloom JSON) — one probe spec
+PROBE_SPEC_SCHEMA = "path string, lo string, hi string, bloom string"
+
+
+def _probe_touched_arrow(spark, table, specs, key_list, key, weights=None) -> tuple[set, dict]:
     """Touched-file probe as an Arrow key-column job.
 
-    ``specs`` is a DataFrame of (path, lo, hi, bloom) metadata rows —
-    relative path plus lower/upper-bounds and bloom JSON; in distributed
-    planning it flows straight from ``entries_df``, so the driver never
-    holds a per-file object on the probe path. Returns the set of RELATIVE
-    paths of files holding ≥1 source key. Each one-core task prunes in
+    ``specs`` are :data:`PROBE_SPEC_SCHEMA` rows: a list weighted by file
+    bytes on the driver planning route, or a DataFrame flowing straight
+    from ``entries_df`` on the distributed one, so the driver never holds
+    a per-file object on that probe path. Either way they run through the
+    kernel's ``tasks_df`` in one wave of one-core tasks. Returns the set
+    of RELATIVE paths of files holding ≥1 source key. Each task prunes in
     cost order before any I/O: (1) manifest key bounds (bisect over the
     sorted broadcast keys — prunes when files are clustered on the key),
     (2) the file's manifest Bloom filter (vectorized gather against the
@@ -171,36 +178,27 @@ def _probe_touched_arrow(spark, table, specs, key_list, key) -> tuple[set, dict]
     acc_bounds = spark.sparkContext.accumulator(0)
     acc_bloom = spark.sparkContext.accumulator(0)
 
-    def _task(batches):
-        import json as _json
-
-        import pandas as pd
-        import pyarrow as pa
-
-        pa.set_cpu_count(1)  # one Arrow thread per one-core task
+    def _task(recs):
         kset, ksorted, khashes = keys_b.value
-        for pdf in batches:
-            hits = []
-            for rp, lo_j, hi_j, bl_j in zip(pdf["path"], pdf["lo"], pdf["hi"], pdf["bloom"]):
-                lo = (_json.loads(lo_j) or {}).get(key) if lo_j else None
-                hi = (_json.loads(hi_j) or {}).get(key) if hi_j else None
-                if not _any_key_in_bounds(ksorted, lo, hi):
-                    acc_bounds.add(1)
-                    continue
-                bloom = (_json.loads(bl_j) or {}).get(key) if bl_j else None
-                if not mf.bloom_any_contains(bloom, khashes):
-                    acc_bloom.add(1)
-                    continue
-                acc_read.add(1)
-                vals = mf.read_table_nullfill(
-                    os.path.join(root, rp), arrow_schema, columns=[key]
-                )[key].to_pylist()
-                if not kset.isdisjoint(vals):
-                    hits.append(rp)
-            yield pd.DataFrame({"path": pd.Series(hits, dtype="object")})
+        for rec in recs:
+            rp = rec["path"]
+            lo = (json.loads(rec["lo"]) or {}).get(key) if rec["lo"] else None
+            hi = (json.loads(rec["hi"]) or {}).get(key) if rec["hi"] else None
+            if not _any_key_in_bounds(ksorted, lo, hi):
+                acc_bounds.add(1)
+                continue
+            bloom = (json.loads(rec["bloom"]) or {}).get(key) if rec["bloom"] else None
+            if not mf.bloom_any_contains(bloom, khashes):
+                acc_bloom.add(1)
+                continue
+            acc_read.add(1)
+            vals = mf.read_table_nullfill(
+                os.path.join(root, rp), arrow_schema, columns=[key]
+            )[key].to_pylist()
+            if not kset.isdisjoint(vals):
+                yield {"path": rp}
 
-    n_parts = spark.sparkContext.defaultParallelism * 4
-    out = specs.repartition(n_parts).mapInPandas(_task, "path string")
+    out = tasks_df(spark, specs, _task, "path string", PROBE_SPEC_SCHEMA, weights)
     touched = {r["path"] for r in out.collect()}
     stats = {
         "files_read": acc_read.value,
@@ -293,20 +291,16 @@ def merge_into(
                         if e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
                         or not e.partition
                     ]
-                import json as _json
-
-                spec_df = spark.createDataFrame(
-                    [
-                        (
-                            e.path,
-                            _json.dumps(e.lower_bounds, default=str),
-                            _json.dumps(e.upper_bounds, default=str),
-                            _json.dumps(e.blooms),
-                        )
-                        for e in probe_entries
-                    ],
-                    "path string, lo string, hi string, bloom string",
-                )
+                specs: list | DataFrame = [
+                    (
+                        e.path,
+                        json.dumps(e.lower_bounds, default=str),
+                        json.dumps(e.upper_bounds, default=str),
+                        json.dumps(e.blooms),
+                    )
+                    for e in probe_entries
+                ]
+                spec_weights = [e.size_bytes for e in probe_entries]
 
                 def _fallback_paths() -> list:
                     return [e.path for e in probe_entries]
@@ -325,12 +319,13 @@ def merge_into(
                         F.get_json_object("partition", f"$.{bf.partition_column}"),
                     ).cast("int")
                     pedf = edf.filter(bval.isin(*buckets) | bval.isNull())
-                spec_df = pedf.select(
+                specs = pedf.select(
                     "path",
                     F.col("lower_bounds").alias("lo"),
                     F.col("upper_bounds").alias("hi"),
                     F.coalesce(F.col("blooms"), F.lit("{}")).alias("bloom"),
                 )
+                spec_weights = None
 
                 def _fallback_paths() -> list:
                     return [r["path"] for r in pedf.select("path").collect()]
@@ -355,7 +350,7 @@ def merge_into(
                 # files); the Arrow footer read + one-column decode is the same
                 # cost model as every other maintenance task here.
                 touched_rel, probe_stats = _probe_touched_arrow(
-                    spark, table, spec_df, key_list, key
+                    spark, table, specs, key_list, key, spec_weights
                 )
             else:
                 # huge source: keys don't fit a broadcast set — JVM scan +

@@ -7,15 +7,18 @@ routing, the survivor filter, the SET projection, its row-count guards
 and its commit); the pipeline around that logic lives here once:
 
   specs    driver-built metadata rows — one per input file
-           (:func:`file_spec`) or one per output group. Per-input map jobs
-           fan out over :func:`map_slices` tasks; per-output jobs run one
-           task per spec.
+           (:func:`file_spec`) or one per output group, each weighted by
+           the bytes (or rows) it will move.
   tasks    :func:`tasks_df` is the single crossing of the Python/Arrow
-           boundary: each task runs on one core and returns small metadata
-           rows, never payload.
-  read     :meth:`StagedRewrite.read_live` — one input file null-filled to
-           the table schema (additive evolution) with its delete vectors
-           applied, so every rewrite absorbs merge-on-read tombstones.
+           boundary and the one place the fan-out rule
+           (:func:`pack_tasks`) applies: a job runs one wave of at most
+           ``defaultParallelism`` one-core tasks, specs packed largest-first
+           onto the least-loaded task. Each task keeps one Arrow CPU thread
+           and one I/O thread and returns small metadata rows, never
+           payload.
+  read     :func:`read_live` — one input file null-filled to the table
+           schema (additive evolution) with its delete vectors applied, so
+           every rewrite absorbs merge-on-read tombstones.
   route    :class:`FragmentRouter` / :func:`read_fragments` — the file-level
            shuffle of two-phase rewrites: map tasks write per-bucket lz4
            fragments, reduce tasks read one bucket's committed fragments.
@@ -37,6 +40,7 @@ lineage.
 from __future__ import annotations
 
 import glob
+import heapq
 import json
 import os
 import shutil
@@ -66,13 +70,6 @@ def parquet_codec(spark) -> str:
     return {"uncompressed": "none", "lz4raw": "lz4"}.get(codec, codec)
 
 
-def map_slices(spark, n_inputs: int) -> int:
-    """Task count of a per-input map job: one task per input file, capped at
-    four waves of the cluster's cores so a 10^5-file map still batches files
-    per task."""
-    return max(1, min(n_inputs, 4 * int(spark.sparkContext.defaultParallelism)))
-
-
 def dv_spec(root: str, rel: str, dv_rels: list[str]) -> str:
     """Delete-vector spec of one data file: JSON ``{"rel", "dvs": [abs DV
     paths]}``, or "" for a file without tombstones."""
@@ -90,43 +87,70 @@ def file_spec(root: str, e: mf.ManifestEntry) -> tuple[str, str, str]:
     )
 
 
-def tasks_df(
-    spark,
-    specs,
-    fn,
-    out_schema: str,
-    spec_schema: str | None = None,
-    n_slices: int | None = None,
-    io_threads: int | None = None,
-):
-    """DataFrame of what ``fn`` returns, run once per task over metadata
-    spec rows.
+def pack_tasks(weights: list[int], parallelism: int) -> list[list[int]]:
+    """The fan-out rule: spec indices packed into min(N, ``parallelism``)
+    tasks. Specs go largest-first, each onto the least-loaded task (ties:
+    fewest specs, then lowest task), so no task's load exceeds another's
+    by more than the largest weight and every task gets at least one spec.
+    Pure and deterministic: a retried attempt sees the same specs."""
+    n_tasks = min(len(weights), max(1, parallelism))
+    tasks: list[list[int]] = [[] for _ in range(n_tasks)]
+    heap = [(0, 0, t) for t in range(n_tasks)]
+    for i in sorted(range(len(weights)), key=lambda i: (-weights[i], i)):
+        load, n, t = heapq.heappop(heap)
+        tasks[t].append(i)
+        heapq.heappush(heap, (load + max(0, weights[i]), n + 1, t))
+    return tasks
 
-    ``specs`` is a DataFrame, or a list of tuples with ``spec_schema`` that
-    is parallelized into ``n_slices`` tasks (default: one task per spec, no
-    sampling or shuffle sub-job). ``fn`` gets an iterator over the task's
-    spec rows as dicts and returns its output rows as dicts; keys outside
-    the flat ``out_schema`` are dropped."""
+
+def tasks_df(spark, specs, fn, out_schema: str, spec_schema: str | None = None,
+             weights: list[int] | None = None):
+    """DataFrame of what ``fn`` returns, run once per task over metadata
+    spec rows, in one wave of at most ``defaultParallelism`` tasks.
+
+    ``specs`` is a list of tuples with ``spec_schema``, packed onto tasks
+    by :func:`pack_tasks` over ``weights`` (default: uniform), or a
+    DataFrame (the distributed planning routes), repartitioned round-robin
+    to the same core count. ``fn`` gets an iterator over the task's spec
+    rows as dicts and returns its output rows as dicts; keys outside the
+    flat ``out_schema`` are dropped."""
     cols = [c.split()[0] for c in out_schema.split(",")]
 
     def task(batches):
         import pandas as pd
         import pyarrow as pa
 
-        # one Arrow thread per one-core task: the default per-process pool
-        # (= machine cpu count) times the worker count thrashes the cpuset
+        # one Arrow CPU and one I/O thread per one-core task: the default
+        # per-process pools (= machine cpu count) times the worker count
+        # thrash the cpuset, and the one I/O thread is what overlaps
+        # prefetch with decode (BENCH/TASK_CONTENTION.md)
         pa.set_cpu_count(1)
-        if io_threads:
-            pa.set_io_thread_count(io_threads)
+        pa.set_io_thread_count(1)
         recs = (r for pdf in batches for r in pdf.to_dict("records"))
         yield pd.DataFrame(list(fn(recs)), columns=cols)
 
+    cores = int(spark.sparkContext.defaultParallelism)
     if isinstance(specs, list):
-        sc = spark.sparkContext
-        specs = spark.createDataFrame(
-            sc.parallelize(specs, n_slices or max(len(specs), 1)), spec_schema
-        )
+        packed = pack_tasks(weights or [1] * len(specs), cores)
+        # one element per slice, so slice t holds exactly task t's specs
+        rdd = spark.sparkContext.parallelize(
+            [[specs[i] for i in t] for t in packed], max(len(packed), 1)
+        ).flatMap(lambda t: t)
+        specs = spark.createDataFrame(rdd, spec_schema)
+    else:
+        specs = specs.repartition(cores)
     return specs.mapInPandas(task, out_schema)
+
+
+def read_live(path: str, dv: str, arrow_schema, columns: list[str] | None = None):
+    """Live rows of one data file: null-filled to ``arrow_schema`` with the
+    delete vectors of ``dv`` (from :func:`dv_spec`) applied; ``columns``
+    prunes the read, e.g. to key columns."""
+    tbl = mf.read_table_nullfill(path, arrow_schema, columns=columns)
+    if dv:  # positions index the full file, so apply after the read
+        d = json.loads(dv)
+        tbl = mf.apply_delete_vectors(tbl, d["rel"], d["dvs"])
+    return tbl
 
 
 def _write_atomic(tbl, dest: str, codec: str) -> None:
@@ -169,13 +193,8 @@ class StagedRewrite:
 
     # ---- task side ---------------------------------------------------------
     def read_live(self, path: str, dv: str = "", columns: list[str] | None = None):
-        """Live rows of one data file (``dv`` from :func:`dv_spec`);
-        ``columns`` prunes the read, e.g. to key columns."""
-        tbl = mf.read_table_nullfill(path, self.arrow_schema, columns=columns)
-        if dv:  # positions index the full file, so apply after the read
-            d = json.loads(dv)
-            tbl = mf.apply_delete_vectors(tbl, d["rel"], d["dvs"])
-        return tbl
+        """:func:`read_live` against the table schema."""
+        return read_live(path, dv, self.arrow_schema, columns)
 
     def write(self, tbl, name: str) -> dict:
         """Write one output file into staging; returns its stats row plus

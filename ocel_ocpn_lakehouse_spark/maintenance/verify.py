@@ -16,8 +16,10 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..core.manifests import spark_to_arrow_schema
 from ..core.table import Table
 from ..images.udfs import pairwise_psnr
+from .rewrite import FILE_SPEC_SCHEMA, file_spec, read_live, tasks_df
 
 
 def verify_scan_equivalence(
@@ -96,67 +98,45 @@ def verify_scan_equivalence(
 def _snapshot_checksum(spark: SparkSession, table: Table, snap_id: int | None, key: str) -> dict:
     """Order-insensitive snapshot checksum via an Arrow file-spec job.
 
-    One mapInPandas over the snapshot's file list: each task reads its
-    files with pyarrow (key/caption/bytes only), digests every row with
-    blake2b-64 over key|caption|payload, and returns per-file (count,
-    sum-of-digests). No shuffle, no join, payload bytes never enter the
-    JVM row pipeline — and a fragmented pre-maintenance snapshot pays
+    One kernel task job (``tasks_df``) over the snapshot's live files,
+    packed by file bytes: each task reads its files' live rows
+    (key/caption/bytes only, the snapshot's delete vectors applied), digests
+    every row with blake2b-64 over key|caption|payload, and returns per-file
+    (count, sum-of-digests). No shuffle, no join, payload bytes never enter
+    the JVM row pipeline — and a fragmented pre-maintenance snapshot pays
     Arrow's per-file open cost, not a JVM reader setup per tiny file
     (the previous implementation spent more wall time verifying than the
     rewrite it verified)."""
-    import os
-
     entries = table.live_entries(snapshot_id=snap_id)
     if not entries:
         return {"n": 0, "sum_h": 0}
-    import pyarrow as _pa
+    cols = [c for c in (key, "caption", "bytes") if c in table.schema.fieldNames()]
+    arrow_schema = spark_to_arrow_schema(table.schema)
 
-    from ..core import manifests as _mf
-
-    paths = [os.path.join(table.root, e.path) for e in entries]
-    cols = [key, "caption", "bytes"]
-    schema_cols = [c for c in cols if c in table.schema.fieldNames()]
-    full = _mf.spark_to_arrow_schema(table.schema)
-    sub_schema = _pa.schema([full.field(c) for c in schema_cols])
-
-    def digest(batches):
+    def digest(recs):
         import hashlib
 
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        for rec in recs:
+            d = read_live(rec["path"], rec["dv"], arrow_schema, columns=cols).to_pydict()
+            keys = d[cols[0]]
+            n = len(keys)
+            caps = d.get("caption", [""] * n)
+            blobs = d.get("bytes", [b""] * n)
+            s = 0
+            for i in range(n):
+                h = hashlib.blake2b(digest_size=8)
+                h.update(str(keys[i]).encode())
+                h.update(b"\x1f")
+                h.update((caps[i] or "").encode())
+                h.update(b"\x1f")
+                h.update(blobs[i] or b"")
+                s += int.from_bytes(h.digest(), "big")
+            yield {"n": n, "sum_h": str(s)}  # unbounded int → string
 
-        pa.set_cpu_count(1)  # one Arrow thread per one-core task
-
-        for pdf in batches:
-            out = []
-            for p in pdf["path"]:
-                from ocel_ocpn_lakehouse_spark.core.manifests import read_table_nullfill
-
-                tbl = read_table_nullfill(p, sub_schema)
-                d = tbl.to_pydict()
-                n = tbl.num_rows
-                s = 0
-                keys = d[schema_cols[0]]
-                caps = d.get("caption", [""] * n)
-                blobs = d.get("bytes", [b""] * n)
-                for i in range(n):
-                    h = hashlib.blake2b(digest_size=8)
-                    h.update(str(keys[i]).encode())
-                    h.update(b"\x1f")
-                    h.update((caps[i] or "").encode())
-                    h.update(b"\x1f")
-                    h.update(blobs[i] or b"")
-                    s += int.from_bytes(h.digest(), "big")
-                out.append({"n": n, "sum_h": str(s)})  # unbounded int → string
-            yield pd.DataFrame(out, columns=["n", "sum_h"])
-
-    n_slices = min(len(paths), max(4 * int(spark.sparkContext.defaultParallelism), 64))
-    spec = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths], max(n_slices, 1)),
-        "path string",
-    )
-    rows = spec.mapInPandas(digest, "n long, sum_h string").collect()
+    rows = tasks_df(
+        spark, [file_spec(table.root, e) for e in entries], digest, "n long, sum_h string",
+        spec_schema=FILE_SPEC_SCHEMA, weights=[e.size_bytes for e in entries],
+    ).collect()
     return {"n": sum(r["n"] for r in rows), "sum_h": sum(int(r["sum_h"]) for r in rows)}
 
 

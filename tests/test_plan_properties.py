@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 
 from ocel_ocpn_lakehouse_spark.core import manifests as mf
 from ocel_ocpn_lakehouse_spark.maintenance.compact import FileGroup, plan_compaction
+from ocel_ocpn_lakehouse_spark.maintenance.rewrite import pack_tasks
 
 
 class _FakeTable:
@@ -90,3 +91,21 @@ def test_ffd_include_all_covers_everything(raw):
     planned = sorted(p for g in groups for p in g.input_paths)
     assert planned == sorted(e.path for e in entries)
     assert isinstance(groups, list) and all(isinstance(g, FileGroup) for g in groups)
+
+
+@given(
+    st.lists(st.integers(min_value=0, max_value=10**9), max_size=200),
+    st.integers(min_value=1, max_value=64),
+)
+@settings(max_examples=300, deadline=None)
+def test_task_packing_invariants(weights, parallelism):
+    """The fan-out rule: min(N, P) tasks, every spec in exactly one task,
+    loads within one max weight of each other, deterministic."""
+    tasks = pack_tasks(weights, parallelism)
+    assert len(tasks) == min(len(weights), parallelism)
+    assert sorted(i for t in tasks for i in t) == list(range(len(weights)))
+    if weights:
+        loads = [sum(weights[i] for i in t) for t in tasks]
+        assert max(loads) <= min(loads) + max(weights)
+        assert all(tasks)  # no idle task in the wave
+    assert pack_tasks(list(weights), parallelism) == tasks

@@ -1,7 +1,7 @@
-"""Staged-rewrite kernel (maintenance/rewrite.py): the committed-fragment
-reader, and the publish postconditions every op built on the kernel must
-leave behind — compaction, clustering, incremental clustering, MERGE and
-UPDATE."""
+"""Staged-rewrite kernel (maintenance/rewrite.py): the task fan-out rule,
+the committed-fragment reader, and the publish postconditions every op
+built on the kernel must leave behind — compaction, clustering,
+incremental clustering, MERGE and UPDATE."""
 
 import os
 
@@ -24,7 +24,11 @@ from ocel_ocpn_lakehouse_spark.maintenance.cluster_incremental import (
 from ocel_ocpn_lakehouse_spark.maintenance.compact import execute_compaction
 from ocel_ocpn_lakehouse_spark.maintenance.deletes import delete_where
 from ocel_ocpn_lakehouse_spark.maintenance.merge import merge_into
-from ocel_ocpn_lakehouse_spark.maintenance.rewrite import read_fragments
+from ocel_ocpn_lakehouse_spark.maintenance.rewrite import (
+    pack_tasks,
+    read_fragments,
+    tasks_df,
+)
 from ocel_ocpn_lakehouse_spark.maintenance.transform import transform_where
 
 from test_maintenance import BUCKETS, TEST_PROPS
@@ -41,6 +45,33 @@ def test_read_fragments_ignores_dead_attempt_tmp(tmp_path):
     got = read_fragments(str(tmp_path), 3)
     assert got.num_rows == 3 and got.column("k").to_pylist() == [3, 1, 2]
     assert read_fragments(str(tmp_path), 4) is None  # no fragments at all
+
+
+def test_tasks_df_runs_one_wave_of_at_most_one_task_per_core(spark):
+    """More specs than cores: at most ``defaultParallelism`` tasks, each
+    spec processed exactly once."""
+    from pyspark import TaskContext
+
+    cores = spark.sparkContext.defaultParallelism
+    n = 3 * cores + 1
+
+    def fn(recs):
+        tid = TaskContext.get().partitionId()
+        for r in recs:
+            yield {"i": r["i"], "task": tid}
+
+    weights = [(i * 37) % 11 for i in range(n)]
+    rows = tasks_df(
+        spark, [(i,) for i in range(n)], fn, "i int, task int",
+        spec_schema="i int", weights=weights,
+    ).collect()
+    assert sorted(r["i"] for r in rows) == list(range(n))
+    assert len({r["task"] for r in rows}) <= cores
+    # task t runs exactly the specs the rule packed onto it, in that order
+    by_task: dict[int, list[int]] = {}
+    for r in rows:
+        by_task.setdefault(r["task"], []).append(r["i"])
+    assert [by_task[t] for t in sorted(by_task)] == pack_tasks(weights, cores)
 
 
 def _table(spark, warehouse):

@@ -6,6 +6,7 @@ from ocel_ocpn_lakehouse_spark.core import Catalog, PartitionSpec, SortOrder, Ta
 from ocel_ocpn_lakehouse_spark.images.synth import IMAGE_SCHEMA, synth_images_df
 from ocel_ocpn_lakehouse_spark.maintenance.checkpoint import SystemTables
 from ocel_ocpn_lakehouse_spark.maintenance.compact import execute_compaction
+from ocel_ocpn_lakehouse_spark.maintenance.deletes import delete_where
 from ocel_ocpn_lakehouse_spark.maintenance.health import pruning_effectiveness
 from ocel_ocpn_lakehouse_spark.core.table import PrunePredicate
 from ocel_ocpn_lakehouse_spark.maintenance.verify import (
@@ -70,6 +71,27 @@ def test_verify_detects_row_loss(spark, warehouse):
     t.overwrite(t.scan(spark).filter(F.col("image_id") != "img_000000000005"), num_files=2)
     v = verify_scan_equivalence(spark, t, pre)
     assert not v["passed"] and v["row_mismatch"] == 1
+
+
+def test_checksum_verify_applies_delete_vectors(spark, warehouse):
+    """The checksum reads live rows: a merge-on-read delete changes the
+    snapshot's content, and compaction absorbing the tombstones does not."""
+    cat, t = make_table(spark, warehouse, rows=60, files=4)
+    pre = t.current_snapshot().snapshot_id
+    res = delete_where(spark, t, "image_id IN ('img_000000000003', 'img_000000000005')")
+    assert res["deleted_rows"] == 2
+    t.refresh()
+    tombstoned = t.current_snapshot().snapshot_id
+    v = verify_checksum_equivalence(spark, t, pre)
+    assert not v["passed"]
+    assert (v["pre"]["n"], v["post"]["n"]) == (60, 58)
+
+    execute_compaction(spark, t, SystemTables(cat.warehouse), "v.images")
+    t.refresh()
+    assert not any(e.deletes for e in t.live_entries())
+    v = verify_checksum_equivalence(spark, t, tombstoned)
+    assert v["passed"] and v["rows"] == 58
+    assert verify_scan_equivalence(spark, t, tombstoned)["passed"]
 
 
 def test_pruning_effectiveness_probe(spark, warehouse):
