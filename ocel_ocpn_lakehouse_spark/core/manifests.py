@@ -147,7 +147,7 @@ def read_tables_overlapped(
     contract as read_table_nullfill, minus its per-file footer probe.
     Fragment order is preserved (Scanner.to_table is ordered), so output
     is bit-identical to the loop+concat form. Every task of the kernel's
-    ``tasks_df`` (maintenance/rewrite.py) runs with one Arrow CPU thread
+    ``tasks_rdd`` (maintenance/rewrite.py) runs with one Arrow CPU thread
     and one I/O thread: the single I/O thread is what overlaps (four add
     nothing over one), while the default pool of one thread per machine
     CPU times the worker count would thrash the cpuset."""
@@ -396,14 +396,14 @@ def collect_stats(
 ) -> dict[str, dict]:
     """Distributed footer-stat collection: path list → {abs_path: stats}.
 
-    Runs the footer reads as one kernel task job (``tasks_df``) over the
+    Runs the footer reads as one kernel task job (``tasks_rdd``) over the
     path list, so they run on executors (at 10^12-row scale a compaction
-    pass touches 10^4-10^5 files; the driver only sees the aggregated JSON
-    rows). When ``bloom_columns`` is set, each file also pays one pruned
-    column read per bloom column so JVM-written files carry blooms from
-    birth.
+    pass touches 10^4-10^5 files; the driver only sees one small stats
+    dict per file). When ``bloom_columns`` is set, each file also pays one
+    pruned column read per bloom column so JVM-written files carry blooms
+    from birth.
     """
-    from ..maintenance.rewrite import tasks_df
+    from ..maintenance.rewrite import tasks_rdd
 
     if not abs_paths:
         return {}
@@ -420,31 +420,6 @@ def collect_stats(
     def scan_footers(recs):
         for rec in recs:
             p = rec["path"]
-            s = footer_stats(p, stats_cols)
-            yield {
-                "path": p,
-                "record_count": s["record_count"],
-                "lower_bounds": json.dumps(s["lower_bounds"], default=str),
-                "upper_bounds": json.dumps(s["upper_bounds"], default=str),
-                "null_counts": json.dumps(s["null_counts"]),
-                "blooms": json.dumps(_file_blooms(p, bl_cols)),
-            }
+            yield p, {**footer_stats(p, stats_cols), "blooms": _file_blooms(p, bl_cols)}
 
-    rows = tasks_df(
-        spark,
-        [(p,) for p in abs_paths],
-        scan_footers,
-        "path string, record_count long, lower_bounds string, upper_bounds string, "
-        "null_counts string, blooms string",
-        spec_schema="path string",
-    ).collect()
-    return {
-        r["path"]: {
-            "record_count": r["record_count"],
-            "lower_bounds": json.loads(r["lower_bounds"]),
-            "upper_bounds": json.loads(r["upper_bounds"]),
-            "null_counts": json.loads(r["null_counts"]),
-            "blooms": json.loads(r["blooms"]),
-        }
-        for r in rows
-    }
+    return dict(tasks_rdd(spark, [{"path": p} for p in abs_paths], scan_footers).collect())

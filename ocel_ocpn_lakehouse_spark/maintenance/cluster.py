@@ -9,8 +9,10 @@ never enter the JVM row pipeline):
      quantiles from key-column-only pyarrow reads — image bytes stay out
      of the sampling pass, and no JVM per-file reader setup is paid on
      fragmented inputs (uniform-rate order statistics pooled per
-     partition; bounds shape only file sizes, never row placement
-     correctness). One range bucket `_zb` per ≈target-size output file.
+     partition on the executors: each sampling task ships one numpy key
+     array per partition to a groupByKey pool, and the driver receives
+     only the nb−1 bounds; bounds shape only file sizes, never row
+     placement correctness). One range bucket `_zb` per ≈target-size output file.
      The curve key interleaves (phash, w, h) with a crc32(image_id)
      low-order salt suffix (north rule: "salting for phash hot-spots" —
      boundaries can fall inside a hot phash cell and spread it over
@@ -30,8 +32,8 @@ never enter the JVM row pipeline):
 
 Reads, staged writes, stats, fragments and publish run on the
 staged-rewrite kernel (maintenance/rewrite.py). Scale notes: every job
-iterates metadata rows in one wave of at most one task per core (the
-kernel's fan-out rule): the bounds and map jobs pack input files by bytes,
+iterates metadata specs in one wave of at most one task per core, one
+Python stage (the kernel's fan-out rule): the bounds and map jobs pack input files by bytes,
 the reduce packs output files by routed rows — no hash collisions, no idle
 reducers. Fragment fan-out per map task is bounded by the combos of its
 own table partition (a partition of B bytes has B/target buckets); very
@@ -52,15 +54,7 @@ from pyspark.sql import functions as F
 
 from ..core.table import Table
 from .checkpoint import Job, SystemTables
-from .rewrite import (
-    FILE_SPEC_SCHEMA,
-    STATS_SCHEMA,
-    FragmentRouter,
-    StagedRewrite,
-    file_spec,
-    read_fragments,
-    tasks_df,
-)
+from .rewrite import FragmentRouter, StagedRewrite, file_spec, read_fragments, tasks_rdd
 
 ZKEY_COL = "_zkey"
 _IMAGE_KEY_COLS = ("phash", "w", "h", "image_id")
@@ -203,7 +197,7 @@ def execute_cluster(
         files: list | DataFrame = [file_spec(root, e) for e in entries]
         weights = [e.size_bytes for e in entries]
     else:
-        # tasks_df repartitions these metadata rows (one shuffle; payload
+        # tasks_rdd repartitions these metadata rows (one shuffle; payload
         # bytes are untouched). The dv column carries {"rel", "dvs": [abs
         # DV paths]} for tombstoned files ("" for clean ones) so rewrite
         # tasks can absorb deletes.
@@ -225,10 +219,8 @@ def execute_cluster(
             dv_col.alias("dv"),
         )
 
-    def _map_df(fn, out_schema: str) -> DataFrame:
-        return tasks_df(
-            spark, files, fn, out_schema, spec_schema=FILE_SPEC_SCHEMA, weights=weights
-        )
+    def _map_rdd(fn):
+        return tasks_rdd(spark, files, fn, weights)
 
     # --- 1. quantile boundaries from Arrow key sampling --------------------
     # repartitionByRange would sample the full-width shuffle input — on an
@@ -252,12 +244,17 @@ def execute_cluster(
             # key is computed, so sampling cost shrinks with the rate instead
             # of paying the full-table key computation
             target = max(50_000, 1_000 * sum(n_sub.values()))
+            # only partitions cut into more than one output file need bounds
+            nb_map = {k: int(v) for k, v in n_sub.items() if int(v) > 1}
 
             def _sample_keys(recs):
                 import numpy as np
                 import pyarrow as pa
 
+                pool: dict[str, list] = {}
                 for rec in recs:
+                    if rec["pkey"] not in nb_map:
+                        continue
                     # sample live rows only (positions index the full file)
                     tbl = rw.read_live(rec["path"], rec["dv"], columns=key_cols_read)
                     n = tbl.num_rows
@@ -265,40 +262,33 @@ def execute_cluster(
                         continue
                     k = max(16, min(n, -(-n * target // max(total_records, 1))))
                     idx = np.linspace(0, n - 1, num=int(k)).astype(np.int64)
-                    for v in _curve_np(cspec, tbl.take(pa.array(idx))):
-                        yield {"pkey": rec["pkey"], "k": int(v)}
+                    keys = _curve_np(cspec, tbl.take(pa.array(idx)))
+                    pool.setdefault(rec["pkey"], []).append(np.asarray(keys, dtype=np.int64))
+                # one (pkey, key array) pair per task and partition: the
+                # keys cross to the pooling stage as whole numpy arrays
+                return [(pk, np.concatenate(ks)) for pk, ks in pool.items()]
 
-            # pool + order-statistics EXECUTOR-side (applyInPandas per table
+            # pool + order-statistics EXECUTOR-side (groupByKey per table
             # partition): the driver receives only the nb−1 bounds per
-            # partition — O(#output files) rows — never the raw sampled keys
-            # (at the 10^12-row design point those are 10^9+ longs). The
-            # statistic is the same ks[i·len/nb] as ever, so bounds are
-            # bit-identical to the driver-pooled implementation.
-            nb_map = {k: int(v) for k, v in n_sub.items() if int(v) > 1}
-
-            def _bounds_of_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            # partition — O(#output files) values — never the raw sampled
+            # keys (at the 10^12-row design point those are 10^9+ longs).
+            # The statistic is the same ks[i·len/nb] over the same pool, so
+            # bounds are bit-identical to the driver-pooled implementation.
+            def _bounds_of_pool(kv):
                 import numpy as np
-                import pandas as pd
 
-                pk = pdf["pkey"].iloc[0]
-                nb = nb_map.get(pk, 1)
-                if nb <= 1 or not len(pdf):
-                    return pd.DataFrame({"pkey": pd.Series(dtype=object),
-                                         "i": pd.Series(dtype="int64"),
-                                         "bound": pd.Series(dtype="int64")})
-                ks = np.sort(pdf["k"].to_numpy())
+                pk, arrays = kv
+                nb = nb_map[pk]
+                ks = np.sort(np.concatenate(list(arrays)))
                 idxs = [min(len(ks) - 1, (i * len(ks)) // nb) for i in range(1, nb)]
-                return pd.DataFrame(
-                    {"pkey": pk, "i": np.arange(1, nb, dtype="int64"),
-                     "bound": ks[idxs].astype("int64")}
-                )
+                return [(pk, [int(b) for b in ks[idxs]])]
 
-            sample_df = _map_df(_sample_keys, "pkey string, k long")
+            samples = _map_rdd(_sample_keys)
             # actual per-partition pool size, not the nominal rate: _sample_keys
             # floors at 16 keys PER FILE, so a heavily fragmented partition
             # pools 16×#files even when 1000×nb is small — both terms must
             # clear the cap or the exact path would concentrate the blowup in
-            # one applyInPandas task
+            # one pooling task
             est_pool = max(
                 (
                     max(1_000 * nb, 16 * part_files.get(pk, 0))
@@ -308,7 +298,7 @@ def execute_cluster(
             )
             if est_pool > BOUNDS_EXACT_MAX_SAMPLES:
                 # a single table partition's sample would concentrate in ONE
-                # applyInPandas task (pandas sort of 10^8+ longs) — switch to
+                # pooling task (a sort of 10^8+ longs) — switch to
                 # the JVM t-digest sketch: fixed quantile grid per partition,
                 # bounded memory at every stage, driver slices the grid to the
                 # nb−1 bounds. Sketch error shifts file-size balance only —
@@ -316,6 +306,10 @@ def execute_cluster(
                 # share, and the row-count guard still gates the commit.
                 grid_n = min(10_000, 2 * max(nb_map.values()))
                 grid = [i / grid_n for i in range(1, grid_n)]
+                sample_df = spark.createDataFrame(
+                    samples.flatMap(lambda kv: ((kv[0], int(k)) for k in kv[1])),
+                    "pkey string, k long",
+                )
                 rows = (
                     sample_df.groupBy("pkey")
                     .agg(F.percentile_approx("k", grid, 10_000).alias("qs"))
@@ -330,16 +324,7 @@ def execute_cluster(
                             for i in range(1, nb)
                         ]
             else:
-                bound_rows = (
-                    sample_df.groupBy("pkey")
-                    .applyInPandas(_bounds_of_group, "pkey string, i long, bound long")
-                    .collect()
-                )
-                by_pk: dict[str, list[tuple[int, int]]] = {}
-                for r in bound_rows:
-                    by_pk.setdefault(r["pkey"], []).append((int(r["i"]), int(r["bound"])))
-                for pk, pairs in by_pk.items():
-                    bounds_by_pkey[pk] = [b for _, b in sorted(pairs)]
+                bounds_by_pkey.update(samples.groupByKey().flatMap(_bounds_of_pool).collect())
 
     # combo = (partition, range bucket) → dense index; combos are metadata
     combos: list[tuple[str, int]] = [
@@ -377,9 +362,7 @@ def execute_cluster(
         return acks
 
     with job.phase("map"):
-        map_acks = _map_df(
-            _map_shuffle, "cidx int, rows long, t_read double, t_write double"
-        ).collect()
+        map_acks = _map_rdd(_map_shuffle).collect()
         mapped_rows = sum(r["rows"] for r in map_acks)
         if mapped_rows != total_records:
             raise RuntimeError(f"cluster map row mismatch: {mapped_rows} != {total_records}")
@@ -404,10 +387,9 @@ def execute_cluster(
                    "t_write": time.time() - tw}
 
     with job.phase("reduce"):
-        stat_rows = tasks_df(
-            spark, [(c,) for c in live_combos], _reduce_write,
-            "cidx int, " + STATS_SCHEMA + ", t_read double, t_sort double, t_write double",
-            spec_schema="cidx int", weights=[combo_rows[c] for c in live_combos],
+        stat_rows = tasks_rdd(
+            spark, [{"cidx": c} for c in live_combos], _reduce_write,
+            [combo_rows[c] for c in live_combos],
         ).collect()
     job.task_totals("reduce_task_totals", stat_rows, ("t_read", "t_sort", "t_write"))
 

@@ -72,15 +72,7 @@ from pyspark.sql import SparkSession
 from ..core.table import Table
 from .checkpoint import Job, SystemTables
 from .cluster import ZKEY_COL, _curve_np, _curve_spec, execute_cluster
-from .rewrite import (
-    FILE_SPEC_SCHEMA,
-    STATS_SCHEMA,
-    FragmentRouter,
-    StagedRewrite,
-    file_spec,
-    read_fragments,
-    tasks_df,
-)
+from .rewrite import FragmentRouter, StagedRewrite, file_spec, read_fragments, tasks_rdd
 
 # above this fraction of table bytes sitting in delta, a full rewrite is
 # cheaper (and restores perfect balance); below it, incremental wins
@@ -182,11 +174,8 @@ def execute_cluster_incremental(
     delta_files = [e for es in delta_by_part.values() for e in es]
     delta_specs = [file_spec(root, e) for e in delta_files]
 
-    def _delta_df(fn, out_schema: str):
-        return tasks_df(
-            spark, delta_specs, fn, out_schema, spec_schema=FILE_SPEC_SCHEMA,
-            weights=[e.size_bytes for e in delta_files],
-        )
+    def _delta_rdd(fn):
+        return tasks_rdd(spark, delta_specs, fn, [e.size_bytes for e in delta_files])
 
     def _classify(np, keys, los, his):
         """entity code per key: 2i+1 inside base file i, 2g for the open
@@ -217,7 +206,7 @@ def execute_cluster_incremental(
         return [{"pkey": pk, "entity": e_i, "rows": n} for (pk, e_i), n in agg.items()]
 
     with job.phase("probe"):
-        probe_rows = _delta_df(_probe, "pkey string, entity long, rows long").collect()
+        probe_rows = _delta_rdd(_probe).collect()
         probed_total = sum(r["rows"] for r in probe_rows)
         if probed_total != delta_live_total:
             raise RuntimeError(
@@ -290,7 +279,7 @@ def execute_cluster_incremental(
         return [{"rows": sum(router.rows.values())}]
 
     with job.phase("route"):
-        route_acks = _delta_df(_route, "rows long").collect()
+        route_acks = _delta_rdd(_route).collect()
         routed_total = sum(r["rows"] for r in route_acks)
         if routed_total != delta_live_total:
             raise RuntimeError(
@@ -299,13 +288,12 @@ def execute_cluster_incremental(
 
     # ---- 4. MERGE: per group read base + fragments, sort, split, stamp ---
     group_rows = [
-        (
-            gi,
-            g["pkey"],
-            [os.path.join(root, e.path) for e in g["base"]],
-            [file_spec(root, e)[2] for e in g["base"]],
-            int(g["est_bytes"]),
-        )
+        {
+            "gidx": gi,
+            "pkey": g["pkey"],
+            "base": [file_spec(root, e) for e in g["base"]],
+            "est_bytes": int(g["est_bytes"]),
+        }
         for gi, g in enumerate(groups)
     ]
 
@@ -316,8 +304,8 @@ def execute_cluster_incremental(
         for rec in recs:
             gidx = rec["gidx"]
             parts = []
-            for path, dv in zip(rec["base"], rec["dvs"]):
-                tbl = rw.read_live(path, dv)
+            for f in rec["base"]:
+                tbl = rw.read_live(f["path"], f["dv"])
                 keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
                 parts.append(tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64())))
             frags = read_fragments(shuffle_dir, gidx)
@@ -346,11 +334,8 @@ def execute_cluster_incremental(
                     yield {**rw.write(sl, f"i{gidx}_{j}.parquet"), "pkey": rec["pkey"]}
 
     with job.phase("merge"):
-        stat_rows = tasks_df(
-            spark, group_rows, _merge, "pkey string, " + STATS_SCHEMA,
-            spec_schema="gidx int, pkey string, base array<string>, dvs array<string>, "
-            "est_bytes long",
-            weights=[r[4] for r in group_rows],
+        stat_rows = tasks_rdd(
+            spark, group_rows, _merge, [r["est_bytes"] for r in group_rows]
         ).collect()
 
     # ---- 5. publish + commit ---------------------------------------------

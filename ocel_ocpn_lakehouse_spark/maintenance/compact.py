@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from ..core import manifests as mf
 from ..core.table import Table
 from .checkpoint import Job, SystemTables
-from .rewrite import STATS_SCHEMA, StagedRewrite, dv_spec, tasks_df
+from .rewrite import StagedRewrite, dv_spec, tasks_rdd
 
 
 class InjectedFailure(RuntimeError):
@@ -299,11 +299,11 @@ def execute_compaction(
         # tasks; per group a task reads the group's files, sorts by the
         # table sort order and writes ONE output file.
         spec_rows = [
-            (
-                g.group_id,
-                [os.path.join(rw.root, p) for p in g.input_paths],
-                [dv_spec(rw.root, p, g.input_dvs.get(p, [])) for p in g.input_paths],
-            )
+            {
+                "group_id": g.group_id,
+                "paths": [os.path.join(rw.root, p) for p in g.input_paths],
+                "dvs": [dv_spec(rw.root, p, g.input_dvs.get(p, [])) for p in g.input_paths],
+            }
             for g in pending
         ]
 
@@ -312,7 +312,7 @@ def execute_compaction(
 
             for rec in recs:
                 tr = time.time()
-                paths, dvs = list(rec["paths"]), list(rec["dvs"])
+                paths, dvs = rec["paths"], rec["dvs"]
                 # DV-free files stream through ONE overlapped dataset scan;
                 # DV-laden files keep the per-file read because positional
                 # tombstones index rows within ONE file
@@ -330,12 +330,8 @@ def execute_compaction(
         with job.phase("write"):
             job_stats = {
                 r["group_id"]: r
-                for r in tasks_df(
-                    spark, spec_rows, _rewrite,
-                    "group_id string, " + STATS_SCHEMA
-                    + ", t_read double, t_sort double, t_write double, t_stats double",
-                    spec_schema="group_id string, paths array<string>, dvs array<string>",
-                    weights=[g.input_bytes for g in pending],
+                for r in tasks_rdd(
+                    spark, spec_rows, _rewrite, [g.input_bytes for g in pending]
                 ).collect()
             }
             job.task_totals(

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..core.table import Table
 from .checkpoint import Job, SystemTables
-from .rewrite import FILE_SPEC_SCHEMA, STATS_SCHEMA, StagedRewrite, file_spec, tasks_df
+from .rewrite import StagedRewrite, file_spec, tasks_rdd
 
 BROADCAST_THRESHOLD_ROWS = 2_000_000  # source keys; ~16 MB of longs
 
@@ -74,7 +74,9 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
     rows in Arrow and writes the survivor file + footer stats. SQL MERGE
     semantics: a NULL target key never matches any source key (NULL is
     dropped from the set and null rows are always survivors — same as the
-    left_anti fallback)."""
+    left_anti fallback). The key broadcast is destroyed once the job has
+    collected: PySpark keeps every driver broadcast in a temp file that
+    only ``destroy()`` removes."""
     keys_b = spark.sparkContext.broadcast({k for k in key_set if k is not None})
     rw = StagedRewrite.begin(spark, table)
 
@@ -95,14 +97,15 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
             if surv.num_rows:  # else the whole file was consumed by the merge
                 yield {**rw.write(surv, f"m{rec['fidx']}.parquet"), "fidx": rec["fidx"]}
 
-    rows = tasks_df(
-        spark,
-        [(i, *file_spec(rw.root, e)) for i, e in enumerate(touched_entries)],
-        _survivors,
-        "fidx int, " + STATS_SCHEMA,
-        spec_schema="fidx int, " + FILE_SPEC_SCHEMA,
-        weights=[e.size_bytes for e in touched_entries],
-    ).collect()
+    try:
+        rows = tasks_rdd(
+            spark,
+            [{"fidx": i, **file_spec(rw.root, e)} for i, e in enumerate(touched_entries)],
+            _survivors,
+            [e.size_bytes for e in touched_entries],
+        ).collect()
+    finally:
+        keys_b.destroy()
     entries = rw.publish(rows, lambda r: touched_entries[r["fidx"]].partition)
     return entries, sum(e.record_count for e in entries)
 
@@ -144,18 +147,16 @@ def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
         return True
 
 
-# (rel path, lower-bounds / upper-bounds / bloom JSON) — one probe spec
-PROBE_SPEC_SCHEMA = "path string, lo string, hi string, bloom string"
-
-
 def _probe_touched_arrow(spark, table, specs, key_list, key, weights=None) -> tuple[set, dict]:
     """Touched-file probe as an Arrow key-column job.
 
-    ``specs`` are :data:`PROBE_SPEC_SCHEMA` rows: a list weighted by file
-    bytes on the driver planning route, or a DataFrame flowing straight
-    from ``entries_df`` on the distributed one, so the driver never holds
-    a per-file object on that probe path. Either way they run through the
-    kernel's ``tasks_df`` in one wave of one-core tasks. Returns the set
+    ``specs`` carry a file's rel ``path`` and its ``lo`` / ``hi`` / ``bloom``
+    manifest JSON: a list of dicts weighted by file bytes on the driver
+    planning route, or a DataFrame flowing straight from ``entries_df`` on
+    the distributed one, so the driver never holds a per-file object on
+    that probe path. Either way they run through the kernel's
+    ``tasks_rdd`` as one wave of one-core tasks in one Python stage, and
+    the key broadcast is destroyed once the job has collected. Returns the set
     of RELATIVE paths of files holding ≥1 source key. Each task prunes in
     cost order before any I/O: (1) manifest key bounds (bisect over the
     sorted broadcast keys — prunes when files are clustered on the key),
@@ -196,10 +197,12 @@ def _probe_touched_arrow(spark, table, specs, key_list, key, weights=None) -> tu
                 os.path.join(root, rp), arrow_schema, columns=[key]
             )[key].to_pylist()
             if not kset.isdisjoint(vals):
-                yield {"path": rp}
+                yield rp
 
-    out = tasks_df(spark, specs, _task, "path string", PROBE_SPEC_SCHEMA, weights)
-    touched = {r["path"] for r in out.collect()}
+    try:
+        touched = set(tasks_rdd(spark, specs, _task, weights).collect())
+    finally:
+        keys_b.destroy()
     stats = {
         "files_read": acc_read.value,
         "skipped_by_bounds": acc_bounds.value,
@@ -292,12 +295,12 @@ def merge_into(
                         or not e.partition
                     ]
                 specs: list | DataFrame = [
-                    (
-                        e.path,
-                        json.dumps(e.lower_bounds, default=str),
-                        json.dumps(e.upper_bounds, default=str),
-                        json.dumps(e.blooms),
-                    )
+                    {
+                        "path": e.path,
+                        "lo": json.dumps(e.lower_bounds, default=str),
+                        "hi": json.dumps(e.upper_bounds, default=str),
+                        "bloom": json.dumps(e.blooms),
+                    }
                     for e in probe_entries
                 ]
                 spec_weights = [e.size_bytes for e in probe_entries]

@@ -6,16 +6,16 @@ An op keeps only what is specific to it (planning, curve keys, bucket
 routing, the survivor filter, the SET projection, its row-count guards
 and its commit); the pipeline around that logic lives here once:
 
-  specs    driver-built metadata rows — one per input file
+  specs    driver-built metadata dicts — one per input file
            (:func:`file_spec`) or one per output group, each weighted by
            the bytes (or rows) it will move.
-  tasks    :func:`tasks_df` is the single crossing of the Python/Arrow
-           boundary and the one place the fan-out rule
-           (:func:`pack_tasks`) applies: a job runs one wave of at most
-           ``defaultParallelism`` one-core tasks, specs packed largest-first
-           onto the least-loaded task. Each task keeps one Arrow CPU thread
-           and one I/O thread and returns small metadata rows, never
-           payload.
+  tasks    :func:`tasks_rdd` is the one task runner and the one place the
+           fan-out rule (:func:`pack_tasks`) applies: a job runs one wave
+           of at most ``defaultParallelism`` one-core tasks, specs packed
+           largest-first onto the least-loaded task, each task one
+           partition of a single Python stage (no DataFrame, no pandas at
+           the boundary). Each task keeps one Arrow CPU thread and one I/O
+           thread and returns small metadata dicts, never payload.
   read     :func:`read_live` — one input file null-filled to the table
            schema (additive evolution) with its delete vectors applied, so
            every rewrite absorbs merge-on-read tombstones.
@@ -50,14 +50,12 @@ from dataclasses import dataclass
 
 from ..core import manifests as mf
 
-# columns of the row StagedRewrite.write returns; ops append their own key
-# and timing columns to the job's output schema
+# columns of the row StagedRewrite.write returns, for the one Catalyst
+# writer (UPDATE's applyInArrow) that needs them as a schema
 STATS_SCHEMA = (
     "file string, size_bytes long, record_count long, lower_bounds string, "
     "upper_bounds string, null_counts string, blooms string"
 )
-# (abs data path, partition json, delete-vector spec) — see file_spec
-FILE_SPEC_SCHEMA = "path string, pkey string, dv string"
 
 # a router flushes a bucket's accumulated rows once they exceed this, which
 # bounds map-task memory on huge partitions
@@ -78,13 +76,14 @@ def dv_spec(root: str, rel: str, dv_rels: list[str]) -> str:
     return json.dumps({"rel": rel, "dvs": [os.path.join(root, d) for d in dv_rels]})
 
 
-def file_spec(root: str, e: mf.ManifestEntry) -> tuple[str, str, str]:
-    """One input file as a :data:`FILE_SPEC_SCHEMA` row."""
-    return (
-        os.path.join(root, e.path),
-        json.dumps(e.partition, sort_keys=True),
-        dv_spec(root, e.path, [d["path"] for d in e.deletes]),
-    )
+def file_spec(root: str, e: mf.ManifestEntry) -> dict:
+    """One input file as a spec: abs data ``path``, partition json
+    ``pkey`` and delete-vector spec ``dv``."""
+    return {
+        "path": os.path.join(root, e.path),
+        "pkey": json.dumps(e.partition, sort_keys=True),
+        "dv": dv_spec(root, e.path, [d["path"] for d in e.deletes]),
+    }
 
 
 def pack_tasks(weights: list[int], parallelism: int) -> list[list[int]]:
@@ -103,21 +102,20 @@ def pack_tasks(weights: list[int], parallelism: int) -> list[list[int]]:
     return tasks
 
 
-def tasks_df(spark, specs, fn, out_schema: str, spec_schema: str | None = None,
-             weights: list[int] | None = None):
-    """DataFrame of what ``fn`` returns, run once per task over metadata
-    spec rows, in one wave of at most ``defaultParallelism`` tasks.
+def tasks_rdd(spark, specs, fn, weights: list[int] | None = None):
+    """RDD of what ``fn`` returns, run once per task over metadata specs,
+    in one wave of at most ``defaultParallelism`` tasks and one Python
+    stage.
 
-    ``specs`` is a list of tuples with ``spec_schema``, packed onto tasks
-    by :func:`pack_tasks` over ``weights`` (default: uniform), or a
-    DataFrame (the distributed planning routes), repartitioned round-robin
-    to the same core count. ``fn`` gets an iterator over the task's spec
-    rows as dicts and returns its output rows as dicts; keys outside the
-    flat ``out_schema`` are dropped."""
-    cols = [c.split()[0] for c in out_schema.split(",")]
+    ``specs`` is a list of dicts, packed onto tasks by :func:`pack_tasks`
+    over ``weights`` (default: uniform) so that Spark partition t runs
+    exactly task t's specs, or a DataFrame (the distributed planning
+    routes), repartitioned round-robin to the same core count. ``fn`` gets
+    an iterator over the task's specs as dicts and returns its output
+    records (small metadata, never payload), which come back as they
+    are."""
 
-    def task(batches):
-        import pandas as pd
+    def task(recs):
         import pyarrow as pa
 
         # one Arrow CPU and one I/O thread per one-core task: the default
@@ -126,20 +124,19 @@ def tasks_df(spark, specs, fn, out_schema: str, spec_schema: str | None = None,
         # prefetch with decode (BENCH/TASK_CONTENTION.md)
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
-        recs = (r for pdf in batches for r in pdf.to_dict("records"))
-        yield pd.DataFrame(list(fn(recs)), columns=cols)
+        return fn(recs)
 
-    cores = int(spark.sparkContext.defaultParallelism)
+    sc = spark.sparkContext
+    cores = int(sc.defaultParallelism)
     if isinstance(specs, list):
         packed = pack_tasks(weights or [1] * len(specs), cores)
-        # one element per slice, so slice t holds exactly task t's specs
-        rdd = spark.sparkContext.parallelize(
+        # one element per slice, so partition t holds exactly task t's specs
+        return sc.parallelize(
             [[specs[i] for i in t] for t in packed], max(len(packed), 1)
-        ).flatMap(lambda t: t)
-        specs = spark.createDataFrame(rdd, spec_schema)
-    else:
-        specs = specs.repartition(cores)
-    return specs.mapInPandas(task, out_schema)
+        ).mapPartitions(lambda ts: task(s for t in ts for s in t))
+    return specs.repartition(cores).rdd.mapPartitions(
+        lambda rows: task(r.asDict() for r in rows)
+    )
 
 
 def read_live(path: str, dv: str, arrow_schema, columns: list[str] | None = None):

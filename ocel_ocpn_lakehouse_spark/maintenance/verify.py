@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..core.manifests import spark_to_arrow_schema
 from ..core.table import Table
 from ..images.udfs import pairwise_psnr
-from .rewrite import FILE_SPEC_SCHEMA, file_spec, read_live, tasks_df
+from .rewrite import file_spec, read_live, tasks_rdd
 
 
 def verify_scan_equivalence(
@@ -98,11 +98,11 @@ def verify_scan_equivalence(
 def _snapshot_checksum(spark: SparkSession, table: Table, snap_id: int | None, key: str) -> dict:
     """Order-insensitive snapshot checksum via an Arrow file-spec job.
 
-    One kernel task job (``tasks_df``) over the snapshot's live files,
+    One kernel task job (``tasks_rdd``) over the snapshot's live files,
     packed by file bytes: each task reads its files' live rows
     (key/caption/bytes only, the snapshot's delete vectors applied), digests
     every row with blake2b-64 over key|caption|payload, and returns per-file
-    (count, sum-of-digests). No shuffle, no join, payload bytes never enter
+    (count, sum-of-digests) as Python ints, which the driver sums. No shuffle, no join, payload bytes never enter
     the JVM row pipeline — and a fragmented pre-maintenance snapshot pays
     Arrow's per-file open cost, not a JVM reader setup per tiny file
     (the previous implementation spent more wall time verifying than the
@@ -131,13 +131,13 @@ def _snapshot_checksum(spark: SparkSession, table: Table, snap_id: int | None, k
                 h.update(b"\x1f")
                 h.update(blobs[i] or b"")
                 s += int.from_bytes(h.digest(), "big")
-            yield {"n": n, "sum_h": str(s)}  # unbounded int → string
+            yield {"n": n, "sum_h": s}
 
-    rows = tasks_df(
-        spark, [file_spec(table.root, e) for e in entries], digest, "n long, sum_h string",
-        spec_schema=FILE_SPEC_SCHEMA, weights=[e.size_bytes for e in entries],
+    rows = tasks_rdd(
+        spark, [file_spec(table.root, e) for e in entries], digest,
+        [e.size_bytes for e in entries],
     ).collect()
-    return {"n": sum(r["n"] for r in rows), "sum_h": sum(int(r["sum_h"]) for r in rows)}
+    return {"n": sum(r["n"] for r in rows), "sum_h": sum(r["sum_h"] for r in rows)}
 
 
 def verify_checksum_equivalence(

@@ -511,10 +511,15 @@ class _TableStreamReader(DataSourceStreamReader):
         least one snapshot so the stream can't stall. Counts come from the
         snapshot log (added-files/added-bytes, which every commit type
         records), so admission is pure metadata: no manifest reads.
-        If the range can't be walked (expired ancestor, diverged history,
-        or a capped offset-0 bootstrap over non-append history outside
-        changelog mode — the incremental batches it would schedule raise
-        by design), fall back to the uncapped head."""
+        If the range can't be walked (expired ancestor, diverged history)
+        fall back to the uncapped head. A capped offset-0 bootstrap over
+        history with a row-removing commit reads head as well, in every
+        mode: paging it would start from an intermediate snapshot, whose
+        rows a later commit removed — the strict read raises on that
+        commit, skip-non-append would emit the removed rows, and changelog
+        mode would emit inserts plus deletes where the bootstrap is the
+        head's live rows as inserts. Caps change batch boundaries, never
+        what a bootstrap emits."""
         from ..core.table import ROW_PRESERVING_OPS, IncrementalScanError
 
         try:
@@ -528,14 +533,9 @@ class _TableStreamReader(DataSourceStreamReader):
                         else None
                     )
                 chain.reverse()
-                if (
-                    not self.changelog
-                    and not self.skip_non_append
-                    and any(
-                        c.operation != "append"
-                        and c.operation not in ROW_PRESERVING_OPS
-                        for c in chain
-                    )
+                if any(
+                    c.operation != "append" and c.operation not in ROW_PRESERVING_OPS
+                    for c in chain
                 ):
                     return head
             else:

@@ -27,7 +27,7 @@ from ocel_ocpn_lakehouse_spark.maintenance.merge import merge_into
 from ocel_ocpn_lakehouse_spark.maintenance.rewrite import (
     pack_tasks,
     read_fragments,
-    tasks_df,
+    tasks_rdd,
 )
 from ocel_ocpn_lakehouse_spark.maintenance.transform import transform_where
 
@@ -61,10 +61,7 @@ def test_tasks_df_runs_one_wave_of_at_most_one_task_per_core(spark):
             yield {"i": r["i"], "task": tid}
 
     weights = [(i * 37) % 11 for i in range(n)]
-    rows = tasks_df(
-        spark, [(i,) for i in range(n)], fn, "i int, task int",
-        spec_schema="i int", weights=weights,
-    ).collect()
+    rows = tasks_rdd(spark, [{"i": i} for i in range(n)], fn, weights).collect()
     assert sorted(r["i"] for r in rows) == list(range(n))
     assert len({r["task"] for r in rows}) <= cores
     # task t runs exactly the specs the rule packed onto it, in that order
@@ -72,6 +69,25 @@ def test_tasks_df_runs_one_wave_of_at_most_one_task_per_core(spark):
     for r in rows:
         by_task.setdefault(r["task"], []).append(r["i"])
     assert [by_task[t] for t in sorted(by_task)] == pack_tasks(weights, cores)
+
+
+def test_list_spec_task_job_is_one_spark_job_of_one_stage(spark):
+    """A list-spec task job crosses into Python once: one Spark job, one
+    stage, no DataFrame conversion in front of the task."""
+    sc = spark.sparkContext
+    group = "tasks-rdd-structure"
+    sc.setJobGroup(group, "one list-spec task job")
+    try:
+        got = tasks_rdd(
+            spark, [{"i": i} for i in range(9)], lambda recs: [r["i"] for r in recs]
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(got) == list(range(9))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
 
 
 def _table(spark, warehouse):
@@ -143,3 +159,17 @@ def test_rewrite_publish_postconditions(spark, warehouse, op):
         assert pq.ParquetFile(path).metadata.num_rows == e.record_count
         assert os.path.getsize(path) == e.size_bytes
         assert "image_id" in e.blooms
+
+
+def test_merge_destroys_its_key_broadcasts(spark, warehouse):
+    """PySpark keeps every driver broadcast in a temp file under the
+    context's temp dir until ``destroy()``: the key-set broadcasts of the
+    MERGE probe and the CoW rewrite must not pile up across merges."""
+    st, t = _table(spark, warehouse)
+    tmp = spark.sparkContext._temp_dir
+    before = len(os.listdir(tmp))
+    for strategy, seed in (("cow", 7), ("mor", 8)):
+        src = synth_merge_source_df(spark, n_target_rows=300, seed=seed)
+        res = merge_into(spark, t.refresh(), src, sys_tables=st, strategy=strategy)
+        assert res["status"] == "committed"
+    assert len(os.listdir(tmp)) <= before

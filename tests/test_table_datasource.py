@@ -741,6 +741,61 @@ def test_stream_read_caps_with_available_now(registered, tmp_path):
     assert spark.read.parquet(out).select("id").distinct().count() == 150
 
 
+def _mixed_history_table(spark, tmp_path, name):
+    """append (4 files) → MoR DV delete → append (2 files)."""
+    from ocel_ocpn_lakehouse_spark.maintenance.deletes import delete_where
+
+    t = _make_table(spark, tmp_path, name=name, rows=100, files=4)
+    delete_where(spark, t.refresh(), "id < 10")
+    t.refresh().append(
+        spark.range(200, 230).select(
+            F.col("id"), F.lit("tail").alias("v"),
+            F.timestamp_seconds(F.lit(0)).alias("ts"),
+        ),
+        num_files=2,
+    )
+    return t.refresh()
+
+
+def _bootstrap_rows(spark, t, tmp_path, tag, options, cols):
+    out, ckpt = str(tmp_path / f"out_{tag}"), str(tmp_path / f"ckpt_{tag}")
+    _drain_counted(spark, t, out, ckpt, options)
+    return sorted(tuple(r) for r in spark.read.parquet(out).select(*cols).collect())
+
+
+def test_capped_bootstrap_skip_non_append_matches_uncapped(registered, tmp_path):
+    """With streaming.skip-non-append, a capped offset-0 bootstrap over
+    append → DV delete → append history emits the same rows as an
+    uncapped one: the head's live rows, never an intermediate snapshot's
+    rows that the later delete removed."""
+    spark = registered
+    t = _mixed_history_table(spark, tmp_path, "ns.capskip")
+    opts = {"streaming.skip-non-append": "true"}
+    uncapped = _bootstrap_rows(spark, t, tmp_path, "u", opts, ["id"])
+    capped = _bootstrap_rows(
+        spark, t, tmp_path, "c", {**opts, "read.max-files-per-trigger": "1"}, ["id"]
+    )
+    assert uncapped == [(i,) for i in [*range(10, 100), *range(200, 230)]]
+    assert capped == uncapped
+
+
+def test_capped_changelog_bootstrap_matches_uncapped(registered, tmp_path):
+    """In changelog mode over the same mixed history, a capped offset-0
+    bootstrap emits the same change rows as an uncapped one: the head's
+    live rows as inserts."""
+    spark = registered
+    t = _mixed_history_table(spark, tmp_path, "ns.capcdc")
+    opts = {"streaming.mode": "changelog"}
+    cols = ["id", "_change_type", "_commit_snapshot_id"]
+    uncapped = _bootstrap_rows(spark, t, tmp_path, "u", opts, cols)
+    capped = _bootstrap_rows(
+        spark, t, tmp_path, "c", {**opts, "read.max-files-per-trigger": "1"}, cols
+    )
+    head = t.current_snapshot().snapshot_id
+    assert uncapped == [(i, "insert", head) for i in [*range(10, 100), *range(200, 230)]]
+    assert capped == uncapped
+
+
 def test_every_commit_kind_summarizes_bytes_and_bytes_cap_paces_overwrite(
     registered, tmp_path
 ):
