@@ -120,13 +120,22 @@ def _checksum(spark, t):
 
 
 def _warmup_python_workers(spark, cpus: int) -> None:
-    """One throwaway Arrow job so worker spawn + pandas/pyarrow imports
-    don't land inside the timed section (same as tools/scaling_bench.py)."""
-    import pandas as pd
+    """One throwaway task job through the engine's task runner, so worker
+    spawn and the task-side imports of the maintenance jobs (numpy,
+    pyarrow, the curve kernels, the rewrite kernel) don't land inside the
+    first timed job."""
+    from ocel_ocpn_lakehouse_spark.maintenance.rewrite import tasks_rdd
 
-    df = spark.range(cpus * 4).repartition(cpus)
-    df.mapInPandas(lambda it: (pdf for pdf in it), "id long").count()
-    _ = pd  # imported on workers via the lambda's module
+    def _warm(recs):
+        import numpy  # noqa: F401
+        import pyarrow  # noqa: F401
+
+        from ocel_ocpn_lakehouse_spark.functions import zorder  # noqa: F401
+        from ocel_ocpn_lakehouse_spark.maintenance import rewrite  # noqa: F401
+
+        return [r["i"] for r in recs]
+
+    tasks_rdd(spark, [{"i": i} for i in range(cpus * 4)], _warm).count()
 
 
 def image_maintenance_bench(spark, n_rows: int, n_files: int, cpus: int) -> dict:

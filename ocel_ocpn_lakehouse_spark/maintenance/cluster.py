@@ -8,11 +8,13 @@ never enter the JVM row pipeline):
   1. KEY SAMPLING (Arrow tasks over file specs): per-partition zkey
      quantiles from key-column-only pyarrow reads — image bytes stay out
      of the sampling pass, and no JVM per-file reader setup is paid on
-     fragmented inputs (uniform-rate order statistics pooled per
-     partition on the executors: each sampling task ships one numpy key
-     array per partition to a groupByKey pool, and the driver receives
-     only the nb−1 bounds; bounds shape only file sizes, never row
-     placement correctness). One range bucket `_zb` per ≈target-size output file.
+     fragmented inputs. Each sampling task returns one numpy key array
+     per partition at a uniform rate; the driver pools them per partition
+     and takes the nb−1 exact order statistics, so the sampling stage is
+     the phase's only Python stage. Above BOUNDS_EXACT_MAX_SAMPLES keys in
+     all (32 MB) the pool goes to the JVM percentile_approx sketch
+     instead. Bounds shape only file sizes, never row placement
+     correctness. One range bucket `_zb` per ≈target-size output file.
      The curve key interleaves (phash, w, h) with a crc32(image_id)
      low-order salt suffix (north rule: "salting for phash hot-spots" —
      boundaries can fall inside a hot phash cell and spread it over
@@ -31,7 +33,10 @@ never enter the JVM row pipeline):
      (maintenance/checkpoint.py) records its states, phases and lineage.
 
 Reads, staged writes, stats, fragments and publish run on the
-staged-rewrite kernel (maintenance/rewrite.py). Scale notes: every job
+staged-rewrite kernel (maintenance/rewrite.py). An op runs three Python
+stages (bounds, map, reduce); at bench scale each costs about 0.3 s on
+4 vCPU whatever it does, so the stage count is the op's fixed cost
+(BENCH/TASK_CONTENTION.md). Scale notes: every job
 iterates metadata specs in one wave of at most one task per core, one
 Python stage (the kernel's fan-out rule): the bounds and map jobs pack input files by bytes,
 the reduce packs output files by routed rows — no hash collisions, no idle
@@ -59,10 +64,10 @@ from .rewrite import FragmentRouter, StagedRewrite, file_spec, read_fragments, t
 ZKEY_COL = "_zkey"
 _IMAGE_KEY_COLS = ("phash", "w", "h", "image_id")
 
-# bounds path switch: exact executor-side order statistics pool one table
-# partition's sample (~1k keys per output bucket) in one Arrow task; above
-# this many sampled keys per partition, route to the JVM percentile_approx
-# sketch so no single task holds the pool
+# bounds path switch: exact order statistics pool the sample (~1k keys per
+# output bucket, 8 bytes each) on the driver; above this many sampled keys
+# over all partitions (32 MB), route to the JVM percentile_approx sketch so
+# the driver never holds the pool
 BOUNDS_EXACT_MAX_SAMPLES = 4_000_000
 
 
@@ -126,20 +131,6 @@ def execute_cluster(
     # aggregate row per table partition plus the plan scalars, so a
     # 10^7-file table plans without manifests ever becoming driver objects
     # (same routing as compaction's plan_compaction_distributed).
-    edf = table.entries_df(spark).select(
-        "path",
-        "partition",
-        "size_bytes",
-        "record_count",
-        F.coalesce(F.col("deletes"), F.lit("[]")).alias("deletes"),
-    )
-    # live rows per file = record_count − positional-delete counts; the
-    # rewrite absorbs DVs, so the map/reduce row guard must expect live rows
-    _live_expr = F.expr(
-        "record_count - coalesce(aggregate("
-        "from_json(deletes, 'array<struct<path:string,count:bigint>>'), "
-        "0L, (a, x) -> a + x.count), 0L)"
-    )
     if planning == "auto":
         planning = "distributed" if table.plans_distributed(snap.manifests) else "driver"
     removed: set[str] | None
@@ -162,6 +153,20 @@ def execute_cluster(
         # lands on an input file after this point
         expected_dvs: dict[str, int] | None = {e.path: len(e.deletes) for e in entries}
     else:
+        edf = table.entries_df(spark).select(
+            "path",
+            "partition",
+            "size_bytes",
+            "record_count",
+            F.coalesce(F.col("deletes"), F.lit("[]")).alias("deletes"),
+        )
+        # live rows per file = record_count − positional-delete counts; the
+        # rewrite absorbs DVs, so the map/reduce row guard must expect live rows
+        _live_expr = F.expr(
+            "record_count - coalesce(aggregate("
+            "from_json(deletes, 'array<struct<path:string,count:bigint>>'), "
+            "0L, (a, x) -> a + x.count), 0L)"
+        )
         agg_rows = (
             edf.groupBy("partition")
             .agg(
@@ -265,40 +270,21 @@ def execute_cluster(
                     keys = _curve_np(cspec, tbl.take(pa.array(idx)))
                     pool.setdefault(rec["pkey"], []).append(np.asarray(keys, dtype=np.int64))
                 # one (pkey, key array) pair per task and partition: the
-                # keys cross to the pooling stage as whole numpy arrays
+                # keys cross to the driver as whole numpy arrays
                 return [(pk, np.concatenate(ks)) for pk, ks in pool.items()]
 
-            # pool + order-statistics EXECUTOR-side (groupByKey per table
-            # partition): the driver receives only the nb−1 bounds per
-            # partition — O(#output files) values — never the raw sampled
-            # keys (at the 10^12-row design point those are 10^9+ longs).
-            # The statistic is the same ks[i·len/nb] over the same pool, so
-            # bounds are bit-identical to the driver-pooled implementation.
-            def _bounds_of_pool(kv):
-                import numpy as np
-
-                pk, arrays = kv
-                nb = nb_map[pk]
-                ks = np.sort(np.concatenate(list(arrays)))
-                idxs = [min(len(ks) - 1, (i * len(ks)) // nb) for i in range(1, nb)]
-                return [(pk, [int(b) for b in ks[idxs]])]
-
             samples = _map_rdd(_sample_keys)
-            # actual per-partition pool size, not the nominal rate: _sample_keys
-            # floors at 16 keys PER FILE, so a heavily fragmented partition
-            # pools 16×#files even when 1000×nb is small — both terms must
-            # clear the cap or the exact path would concentrate the blowup in
-            # one pooling task
-            est_pool = max(
-                (
-                    max(1_000 * nb, 16 * part_files.get(pk, 0))
-                    for pk, nb in nb_map.items()
-                ),
-                default=0,
+            # nominal pool size over ALL partitions, not the sampling rate
+            # alone: _sample_keys floors at 16 keys PER FILE, so a heavily
+            # fragmented partition pools 16×#files even when 1000×nb is
+            # small. The exact path brings every sampled key to the driver,
+            # so the total (not the largest partition) must clear the cap.
+            est_pool = sum(
+                max(1_000 * nb, 16 * part_files.get(pk, 0)) for pk, nb in nb_map.items()
             )
             if est_pool > BOUNDS_EXACT_MAX_SAMPLES:
-                # a single table partition's sample would concentrate in ONE
-                # pooling task (a sort of 10^8+ longs) — switch to
+                # the sample is too large to pool on the driver (at the
+                # 10^12-row design point it is 10^9+ longs) — switch to
                 # the JVM t-digest sketch: fixed quantile grid per partition,
                 # bounded memory at every stage, driver slices the grid to the
                 # nb−1 bounds. Sketch error shifts file-size balance only —
@@ -324,7 +310,18 @@ def execute_cluster(
                             for i in range(1, nb)
                         ]
             else:
-                bounds_by_pkey.update(samples.groupByKey().flatMap(_bounds_of_pool).collect())
+                # exact order statistics, pooled per table partition on the
+                # driver: the sampling stage is the job's only Python stage
+                import numpy as np
+
+                pools: dict[str, list] = {}
+                for pk, keys in samples.collect():
+                    pools.setdefault(pk, []).append(keys)
+                for pk, arrays in pools.items():
+                    nb = nb_map[pk]
+                    ks = np.sort(np.concatenate(arrays))
+                    idxs = [min(len(ks) - 1, (i * len(ks)) // nb) for i in range(1, nb)]
+                    bounds_by_pkey[pk] = [int(b) for b in ks[idxs]]
 
     # combo = (partition, range bucket) → dense index; combos are metadata
     combos: list[tuple[str, int]] = [
@@ -378,7 +375,7 @@ def execute_cluster(
         for rec in recs:
             cidx = rec["cidx"]
             tr = time.time()
-            tbl = read_fragments(shuffle_dir, cidx)
+            tbl = read_fragments(shuffle_dir, [cidx])
             ts_ = time.time()
             tbl = tbl.sort_by([(ZKEY_COL, "ascending")])
             tw = time.time()

@@ -21,27 +21,32 @@ demoting its outputs to delta (their sort is destroyed). Any live file
 without the stamp — fresh appends, compacted files, pre-clustering
 files — is DELTA.
 
-Shape (one key-only delta scan, one delta rewrite, one touched-base
-rewrite; zero Spark shuffles — fragments route via searchsorted against
-driver-built group spans exactly like the cluster map's bucket routing):
+Shape (one delta read, one touched-base rewrite: two Python stages;
+zero Spark shuffles — fragments route via searchsorted against the base
+intervals exactly like the cluster map's bucket routing):
 
-1. PROBE: an Arrow task per delta-file batch reads ONLY the key columns,
-   computes each live row's curve key, and classifies it against the
-   sorted non-overlapping base intervals: inside file i → file i is
-   touched; in the open gap before file g → gap g is touched. Untouched
-   base files are never opened.
+1. ROUTE: an Arrow task per delta-file batch reads its files once,
+   full-width, computes each live row's curve key, and classifies it
+   against the sorted non-overlapping base intervals: inside file i →
+   entity 2i+1; in the open gap before file g → entity 2g. The entities
+   depend only on the base intervals, which the driver knows before any
+   job runs, so each row goes straight to its entity's staged fragment
+   bucket (``b<offset[partition] + entity>``, offsets over the sorted
+   partition keys) through the kernel's FragmentRouter. The route acks
+   carry per-entity row counts, which both tell the driver which
+   entities are touched and guard the delta row count. Fragment fan-out
+   is #tasks × touched entities. Untouched base files are never opened.
 2. GROUPS: touched entities coalesce greedily (by target file size)
    into merge groups, but only within the segments bounded by untouched
    files — so every group's output key span lies strictly outside every
    untouched file's range, and the non-overlap invariant that makes the
    NEXT incremental pass cheap survives every pass by induction.
-3. ROUTE: delta files re-read full-width; rows land in per-group staged
-   fragments through the kernel's FragmentRouter.
-4. MERGE: one Arrow task per group reads its base file(s) (DVs
-   absorbed) + its fragments, sorts by the key, splits at target file
-   size, and stamps ``_zkey`` bounds + blooms — each output is itself a
-   valid base file for the next pass.
-5. COMMIT: commit_replace removes the touched base files + ALL delta
+3. MERGE: one Arrow task per group reads its base file(s) (DVs
+   absorbed) + the fragments of its entities in one overlapped scan,
+   sorts by the key, splits at target file size, and stamps ``_zkey``
+   bounds + blooms — each output is itself a valid base file for the
+   next pass.
+4. COMMIT: commit_replace removes the touched base files + ALL delta
    files, guarded by expected DV counts and row-count equality
    (delta live + touched-base live == rows written).
 
@@ -52,8 +57,8 @@ Planning is driver-side over ``live_entries`` — O(#files) interval
 metadata, the same envelope as the driver planning path in
 compact/cluster; beyond ``Table.plans_distributed`` entries the interval
 table and the searchsorted classification are expressible over
-``entries_df`` exactly like ``plan_compaction_distributed`` (the probe
-and route passes are already distributed Arrow tasks either way).
+``entries_df`` exactly like ``plan_compaction_distributed`` (the route
+and merge passes are already distributed Arrow tasks either way).
 
 Fallbacks keep the operator total: no base stamps → full
 ``execute_cluster`` (first layout); a different curve than the last
@@ -64,6 +69,7 @@ anyway); overlapping base intervals (foreign writer) → full.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 
@@ -169,13 +175,19 @@ def execute_cluster_incremental(
     rw = StagedRewrite.begin(spark, table, extra_stats={ZKEY_COL})
     shuffle_dir = os.path.join(rw.staging, "_incr_shuffle")
     span_meta = {pk: (v["los"], v["his"]) for pk, v in intervals.items()}
-    key_cols_read = [c for c in cspec["inputs"] if c in table.schema.fieldNames()]
+    # every merge entity of every partition gets its own fragment bucket:
+    # partition pk's entity codes 0..2n (n base files) map to buckets
+    # offset[pk] + code, so routing needs no group plan and one delta read
+    # serves both the touched-entity census and the fragment write
+    pkeys = sorted(intervals)
+    offsets: list[int] = []
+    n_buckets = 0
+    for pk in pkeys:
+        offsets.append(n_buckets)
+        n_buckets += 2 * len(intervals[pk]["los"]) + 1
+    offset = dict(zip(pkeys, offsets))
 
     delta_files = [e for es in delta_by_part.values() for e in es]
-    delta_specs = [file_spec(root, e) for e in delta_files]
-
-    def _delta_rdd(fn):
-        return tasks_rdd(spark, delta_specs, fn, [e.size_bytes for e in delta_files])
 
     def _classify(np, keys, los, his):
         """entity code per key: 2i+1 inside base file i, 2g for the open
@@ -189,34 +201,41 @@ def execute_cluster_incremental(
         infile = (pos >= 0) & (keys <= his_a[safe])
         return np.where(infile, 2 * safe + 1, 2 * (pos + 1))
 
-    # ---- 1. PROBE: key-only delta scan → touched entities ----------------
-    def _probe(recs):
+    # ---- 1. ROUTE: delta rows → per-entity staged fragments --------------
+    def _route(recs):
         import numpy as np
+        import pyarrow as pa
 
-        agg: dict[tuple[str, int], int] = {}
+        router = FragmentRouter(shuffle_dir)
         for rec in recs:
-            tbl = rw.read_live(rec["path"], rec["dv"], columns=key_cols_read)
+            tbl = rw.read_live(rec["path"], rec["dv"])
             if tbl.num_rows == 0:
                 continue
+            pkey = rec["pkey"]
             keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
-            ent = _classify(np, keys, *span_meta[rec["pkey"]])
-            for e_i, n in zip(*np.unique(ent, return_counts=True)):
-                k = (rec["pkey"], int(e_i))
-                agg[k] = agg.get(k, 0) + int(n)
-        return [{"pkey": pk, "entity": e_i, "rows": n} for (pk, e_i), n in agg.items()]
+            tbl = tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64()))
+            ent = _classify(np, keys, *span_meta[pkey])
+            router.route(tbl, ent, lambda e_i: offset[pkey] + e_i)
+        router.close()
+        return [{"bucket": b, "rows": n} for b, n in router.rows.items()]
 
-    with job.phase("probe"):
-        probe_rows = _delta_rdd(_probe).collect()
-        probed_total = sum(r["rows"] for r in probe_rows)
-        if probed_total != delta_live_total:
+    with job.phase("route"):
+        route_acks = tasks_rdd(
+            spark, [file_spec(root, e) for e in delta_files], _route,
+            [e.size_bytes for e in delta_files],
+        ).collect()
+        routed_total = sum(r["rows"] for r in route_acks)
+        if routed_total != delta_live_total:
             raise RuntimeError(
-                f"cluster-incr probe row mismatch: {probed_total} != {delta_live_total}"
+                f"cluster-incr route row mismatch: {routed_total} != {delta_live_total}"
             )
+        # touched entities and their delta rows, per partition
         touched: dict[str, dict[int, int]] = {}
-        for r in probe_rows:
-            touched.setdefault(r["pkey"], {})[int(r["entity"])] = (
-                touched.get(r["pkey"], {}).get(int(r["entity"]), 0) + int(r["rows"])
-            )
+        for r in route_acks:
+            pk = pkeys[bisect.bisect_right(offsets, r["bucket"]) - 1]
+            ents = touched.setdefault(pk, {})
+            code = r["bucket"] - offset[pk]
+            ents[code] = ents.get(code, 0) + r["rows"]
 
     # ---- 2. GROUPS: coalesce touched entities within segments ------------
     # entities sort by code; an UNtouched base file (odd code absent from
@@ -224,7 +243,6 @@ def execute_cluster_incremental(
     # so outputs cannot overlap untouched ranges
     avg_delta_row_bytes = delta_bytes / max(delta_live_total, 1)
     groups: list[dict] = []  # {pkey, entities:[codes], base:[entries], est_bytes, rows}
-    entity2group: dict[tuple[str, int], int] = {}
     for pk, ents in sorted(touched.items()):
         base_es = intervals[pk]["entries"]
         n_files = len(base_es)
@@ -254,44 +272,17 @@ def execute_cluster_incremental(
             cur["rows"] += ents[code] + brows
             if code % 2:
                 cur["base"].append(base_es[code // 2])
-            entity2group[(pk, code)] = len(groups) - 1
             prev_file_idx = file_idx
     touched_base = [e for g in groups for e in g["base"]]
     touched_base_live = sum(e.live_count for e in touched_base)
 
-    # ---- 3. ROUTE: delta rows → per-group staged fragments ---------------
-    def _route(recs):
-        import numpy as np
-        import pyarrow as pa
-
-        router = FragmentRouter(shuffle_dir)
-        for rec in recs:
-            tbl = rw.read_live(rec["path"], rec["dv"])
-            if tbl.num_rows == 0:
-                continue
-            pkey = rec["pkey"]
-            keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
-            tbl = tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64()))
-            ent = _classify(np, keys, *span_meta[pkey])
-            # KeyError = probe/route drift
-            router.route(tbl, ent, lambda e_i: entity2group[(pkey, e_i)])
-        router.close()
-        return [{"rows": sum(router.rows.values())}]
-
-    with job.phase("route"):
-        route_acks = _delta_rdd(_route).collect()
-        routed_total = sum(r["rows"] for r in route_acks)
-        if routed_total != delta_live_total:
-            raise RuntimeError(
-                f"cluster-incr route row mismatch: {routed_total} != {delta_live_total}"
-            )
-
-    # ---- 4. MERGE: per group read base + fragments, sort, split, stamp ---
+    # ---- 3. MERGE: per group read base + fragments, sort, split, stamp ---
     group_rows = [
         {
             "gidx": gi,
             "pkey": g["pkey"],
             "base": [file_spec(root, e) for e in g["base"]],
+            "buckets": [offset[g["pkey"]] + code for code in g["entities"]],
             "est_bytes": int(g["est_bytes"]),
         }
         for gi, g in enumerate(groups)
@@ -308,7 +299,7 @@ def execute_cluster_incremental(
                 tbl = rw.read_live(f["path"], f["dv"])
                 keys = np.asarray(_curve_np(cspec, tbl), dtype=np.int64)
                 parts.append(tbl.append_column(ZKEY_COL, pa.array(keys, type=pa.int64())))
-            frags = read_fragments(shuffle_dir, gidx)
+            frags = read_fragments(shuffle_dir, rec["buckets"])
             if frags is not None:
                 parts.append(frags)
             tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
@@ -338,7 +329,7 @@ def execute_cluster_incremental(
             spark, group_rows, _merge, [r["est_bytes"] for r in group_rows]
         ).collect()
 
-    # ---- 5. publish + commit ---------------------------------------------
+    # ---- 4. publish + commit ---------------------------------------------
     with job.phase("publish"):
         new_entries = rw.publish(stat_rows, lambda r: json.loads(r["pkey"]))
 

@@ -21,7 +21,8 @@ and its commit); the pipeline around that logic lives here once:
            every rewrite absorbs merge-on-read tombstones.
   route    :class:`FragmentRouter` / :func:`read_fragments` — the file-level
            shuffle of two-phase rewrites: map tasks write per-bucket lz4
-           fragments, reduce tasks read one bucket's committed fragments.
+           fragments, reduce tasks read the committed fragments of one
+           bucket, or of several in one scan.
   write    :meth:`StagedRewrite.write` — attempt-unique ``.inprogress`` tmp,
            atomic rename, footer stats and blooms, one stats row
            (:data:`STATS_SCHEMA`). A dead or speculative task attempt can
@@ -296,10 +297,15 @@ class FragmentRouter:
         self.t_write += time.time() - tw
 
 
-def read_fragments(shuffle_dir: str, bucket: int):
-    """One bucket's committed fragments as one table (None if it has none),
-    read through the overlapped scanner. Only final names are read: a dead
+def read_fragments(shuffle_dir: str, buckets: list[int]):
+    """The committed fragments of ``buckets`` as one table (None if they have
+    none), in bucket order, then fragment-name order within a bucket, read
+    through one overlapped scan. Only final names are read: a dead
     attempt's ``.inprogress`` tmp is never ingested."""
-    frags = sorted(glob.glob(os.path.join(shuffle_dir, f"b{bucket}", "*.parquet")))
+    frags = [
+        f
+        for b in buckets
+        for f in sorted(glob.glob(os.path.join(shuffle_dir, f"b{b}", "*.parquet")))
+    ]
     return mf.read_tables_overlapped(frags) if frags else None
 

@@ -117,7 +117,7 @@ def _expire(spark, t, st):
 OPS = {
     "compact": (_compact, ("plan", "write", "publish", "commit", "task_totals")),
     "cluster": (_cluster, ("bounds", "map", "reduce", "publish", "commit", "map_task_totals")),
-    "cluster-incr": (_cluster_incr, ("probe", "route", "merge", "commit")),
+    "cluster-incr": (_cluster_incr, ("route", "merge", "commit")),
     "merge": (_merge, ()),
     "update": (_update, ()),
     "delete": (_delete, ()),

@@ -905,6 +905,38 @@ def test_cluster_sketch_bounds_path_equivalence(spark, warehouse, monkeypatch):
     assert tuple(got) == tuple(want)
 
 
+def test_cluster_bounds_cap_counts_the_pool_of_every_partition(spark, warehouse, monkeypatch):
+    """The exact bounds pool on the driver, so the sample cap holds for the
+    total over all partitions: a cap above every partition's estimate but
+    below their sum takes the sketch path, and rows are unchanged."""
+    from ocel_ocpn_lakehouse_spark.maintenance import cluster as cluster_mod
+
+    cat, t = fragmented_table(spark, warehouse, n_rows=400, n_files=16)
+    target = t.target_file_size
+    part_bytes: dict[str, int] = {}
+    part_files: dict[str, int] = {}
+    for e in t.live_entries():
+        k = json.dumps(e.partition, sort_keys=True)
+        part_bytes[k] = part_bytes.get(k, 0) + e.size_bytes
+        part_files[k] = part_files.get(k, 0) + 1
+    ests = [
+        max(1_000 * -(-b // target), 16 * part_files[k])
+        for k, b in part_bytes.items()
+        if b > target
+    ]
+    assert len(ests) >= 2  # more than one partition needs bounds
+    want = column_checksums(t.scan(spark))
+
+    calls = []
+    real = F.percentile_approx
+    monkeypatch.setattr(F, "percentile_approx", lambda *a, **k: calls.append(1) or real(*a, **k))
+    monkeypatch.setattr(cluster_mod, "BOUNDS_EXACT_MAX_SAMPLES", max(ests))
+    r = execute_cluster(spark, t, SystemTables(cat.warehouse), "ocel.images", planning="driver")
+    assert r["status"] == "committed"
+    assert calls  # the sketch path ran
+    assert column_checksums(t.refresh().scan(spark)) == want
+
+
 def test_orphan_sweep_after_crashed_two_phase_write(spark, warehouse):
     """Fault injection on the two-phase write: publish_staged moves files
     into data/ BEFORE the snapshot commit — crash there strands them. The

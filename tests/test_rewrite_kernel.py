@@ -42,9 +42,21 @@ def test_read_fragments_ignores_dead_attempt_tmp(tmp_path):
     good = pa.table({"k": pa.array([3, 1, 2], pa.int64())})
     pq.write_table(good, bdir / "t0_0.parquet", compression="lz4")
     (bdir / "t1_0.parquet.4242.inprogress").write_bytes(b"PAR1 torn write")
-    got = read_fragments(str(tmp_path), 3)
+    got = read_fragments(str(tmp_path), [3])
     assert got.num_rows == 3 and got.column("k").to_pylist() == [3, 1, 2]
-    assert read_fragments(str(tmp_path), 4) is None  # no fragments at all
+    assert read_fragments(str(tmp_path), [4]) is None  # no fragments at all
+
+
+def test_read_fragments_reads_several_buckets_in_bucket_order(tmp_path):
+    """Several buckets come back as one table: bucket order as given, then
+    fragment-name order within a bucket; empty buckets contribute nothing."""
+    for b, frags in ((5, {"t0_0": [50], "t1_0": [51, 52]}), (2, {"t0_0": [20]})):
+        (tmp_path / f"b{b}").mkdir()
+        for name, ks in frags.items():
+            pq.write_table(pa.table({"k": pa.array(ks, pa.int64())}),
+                           tmp_path / f"b{b}" / f"{name}.parquet", compression="lz4")
+    got = read_fragments(str(tmp_path), [5, 9, 2])
+    assert got.column("k").to_pylist() == [50, 51, 52, 20]
 
 
 def test_tasks_df_runs_one_wave_of_at_most_one_task_per_core(spark):
@@ -90,9 +102,63 @@ def test_list_spec_task_job_is_one_spark_job_of_one_stage(spark):
     assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
 
 
-def _table(spark, warehouse):
+def _stages_of(spark, group, run):
+    """(result of ``run()``, number of Spark stages its jobs ran), counted
+    over the jobs tagged with ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return res, sum(len(tracker.getJobInfo(j).stageIds) for j in tracker.getJobIdsForGroup(group))
+
+
+def _multi_file_table(spark, warehouse):
+    """A fragmented, tombstoned table whose partitions each rewrite into
+    more than one output file."""
+    st, t = _table(spark, warehouse, target_bytes=64 * 1024)
+    per_part: dict[str, int] = {}
+    for e in t.live_entries():
+        k = str(sorted(e.partition.items()))
+        per_part[k] = per_part.get(k, 0) + e.size_bytes
+    assert all(b > t.target_file_size for b in per_part.values())
+    return st, t
+
+
+def test_cluster_runs_three_stages_and_incremental_two(spark, warehouse):
+    """Python stages are the fixed cost of an op: the full cluster runs
+    bounds, map and reduce (the bounds pool on the driver), the incremental
+    cluster route and merge (one delta read)."""
+    st, t = _multi_file_table(spark, warehouse)
+    res, n = _stages_of(spark, "stages-cluster", lambda: execute_cluster(
+        spark, t, st, "ocel.images", planning="driver"))
+    assert res["status"] == "committed" and n == 3
+    t.refresh()
+    assert len({str(e.partition) for e in t.live_entries()}) < len(t.live_entries())
+
+    e0 = max(t.live_entries(), key=lambda e: e.record_count)
+    delta = spark.read.parquet(os.path.join(t.root, e0.path)).select(*IMAGE_SCHEMA.fieldNames())
+    t.append(delta, num_files=2)
+    res, n = _stages_of(spark, "stages-cluster-incr", lambda: execute_cluster_incremental(
+        spark, t.refresh(), st, "ocel.images"))
+    assert res["status"] == "committed" and res["mode"] == "incremental" and n == 2
+
+
+def test_compaction_runs_one_stage(spark, warehouse):
+    """Compaction rewrites every group in one Python stage."""
+    st, t = _multi_file_table(spark, warehouse)
+    res, n = _stages_of(spark, "stages-compact", lambda: execute_compaction(
+        spark, t, st, "ocel.images"))
+    assert res["status"] == "committed" and n == 1
+
+
+def _table(spark, warehouse, target_bytes=None):
     props = dict(TEST_PROPS)
     props["write.bloom-columns"] = "image_id"
+    if target_bytes:
+        props["write.target-file-size-bytes"] = str(target_bytes)
     cat = Catalog(warehouse)
     t = cat.create_table(
         "ocel.images",
