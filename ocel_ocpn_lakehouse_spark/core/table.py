@@ -27,10 +27,14 @@ from pyspark.sql import types as T
 
 from . import manifests as mf
 from . import metadata as meta
+from .local import local_df
 from .spec import PartitionSpec, SortOrder, TableSpec
 
 DATA_DIR = "data"
 STAGING_DIR = "_staging"
+# every delete-vector parquet holds (data-file rel path, row position);
+# reads pass it explicitly so no footer-inference job runs per DV read
+DV_SCHEMA = "path string, pos long"
 
 # snapshot operations whose commits do not change the table's logical row
 # set (maintenance rewrites: compaction, clustering, spec evolution,
@@ -345,7 +349,7 @@ class Table:
         feeding health analysis / compaction planning / skew metrics."""
         snap = self._resolve_snapshot(snapshot_id)
         if snap is None or not snap.manifests:
-            return spark.createDataFrame([], schema=_entries_spark_schema())
+            return local_df(spark, [], _entries_spark_schema())
         paths = [os.path.join(self.metadata_dir, m) for m in snap.manifests]
         # explicit schema: manifests written before a manifest-schema
         # addition (blooms, deletes) null-fill instead of failing the read
@@ -467,7 +471,7 @@ class Table:
         entries = self.incremental_entries(from_snapshot_id, to_snapshot_id)
         schema = self.schema
         if not entries:
-            df = spark.createDataFrame([], schema=schema)
+            df = local_df(spark, [], schema)
         else:
             paths = [os.path.join(self.root, e.path) for e in entries]
             df = spark.read.schema(schema).parquet(*paths)
@@ -602,7 +606,7 @@ class Table:
             ordinal += 1
 
         if not parts:
-            return spark.createDataFrame([], schema=out_schema)
+            return local_df(spark, [], out_schema)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -718,7 +722,7 @@ class Table:
         snap = self._resolve_snapshot(snapshot_id, as_of_ms, ref)
         schema = self.schema
         if snap is None or not snap.manifests:
-            df = spark.createDataFrame([], schema=schema)
+            df = local_df(spark, [], schema)
             return df.select(*columns) if columns else df
         if prune:
             # probe state (sorted values + Bloom key hashes for 'in' sets)
@@ -741,7 +745,7 @@ class Table:
             if d
         ]
         if not pairs:
-            df = spark.createDataFrame([], schema=schema)
+            df = local_df(spark, [], schema)
         elif not dirty:
             df = self._read_paths(spark, schema, clean_paths)
         else:
@@ -883,7 +887,7 @@ class Table:
         An unknown file size forces the shuffle route outright (a cap-sized
         increment would still pass the <= check when it is the only DV file).
         """
-        dv = spark.read.parquet(*[os.path.join(self.root, p) for p in dv_rel])
+        dv = spark.read.schema(DV_SCHEMA).parquet(*[os.path.join(self.root, p) for p in dv_rel])
         dv = dv.select(
             F.concat(F.lit(f"file:{self.root}{os.sep}"), F.col("path")).alias("_fp"),
             F.col("pos").alias("_pos"),

@@ -22,6 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..core.local import local_df
 
 
 def assign_shards(
@@ -106,12 +109,14 @@ def assign_shards(
         for pid, tot in sorted(cells):
             offsets.append((pid, *gkey, run))
             run += tot
-    off_schema = ", ".join(
-        ["_pid int"]
-        + [f"{c} {t}" for c, t in narrow.select(*gcols).dtypes]
-        + ["_offset long"]
+    off_schema = T.StructType(
+        [T.StructField("_pid", T.IntegerType())]
+        + [T.StructField(c, narrow.schema[c].dataType) for c in gcols]
+        + [T.StructField("_offset", T.LongType())]
     )
-    off = F.broadcast(spark.createDataFrame(offsets, off_schema))
+    # an Arrow local relation: the offsets never pass through a Python
+    # worker, so the shard-map plan runs no Python stage for them
+    off = F.broadcast(local_df(spark, offsets, off_schema))
     w = Window.partitionBy("_pid", *gcols).orderBy(order_col)
     shard_map = (
         p.join(off, ["_pid", *gcols])

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.local import local_df
 from ..functions.pack import assign_shards
 
 # (w, h) ladder with pairwise-distinct aspect ratios — square, 3:2, 2:3,
@@ -424,7 +425,9 @@ def _sweep_retired(spark, out_dir: str, prefix: str, live_names: DataFrame) -> i
     """Delete this table's tars whose names left the manifest — fully
     distributed: a path-only ``binaryFile`` listing (content column never
     read) anti-joined against the live shard names, unlinked
-    executor-side. No O(#files-in-out_dir) names ever sit on the driver."""
+    executor-side. No O(#files-in-out_dir) names ever sit on the driver.
+    An ``isEmpty`` probe (a JVM job) comes first, so the common fresh
+    export with nothing retired runs no Python unlink stage."""
     listing = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", f"{prefix}shard-*.tar")
@@ -434,6 +437,8 @@ def _sweep_retired(spark, out_dir: str, prefix: str, live_names: DataFrame) -> i
     retired = listing.join(
         live_names.select("shard_name"), "shard_name", "left_anti"
     )
+    if retired.isEmpty():
+        return 0
 
     def unlink(batches):
         for pdf in batches:
@@ -553,7 +558,8 @@ def _incremental_export(
             caster(st["full_boundary_key"]) for st in with_old.values()
         )
         prune = [PrunePredicate(key_col, ">", min_boundary)]
-    binfo = spark.createDataFrame(
+    binfo = local_df(
+        spark,
         [
             (b, st["full_boundary_key"] if st else None, bool(st is None or st["full_boundary_key"] is None))
             for b, st in touched.items()
@@ -589,7 +595,8 @@ def _incremental_export(
             # bisect + vectorized Bloom); the ROW filter is a broadcast
             # semi-join, not isin() — 100k literals would bloat one
             # Catalyst In-expression to a multi-MB plan
-            keys_df = spark.createDataFrame(
+            keys_df = local_df(
+                spark,
                 [(k,) for k in tail_keys],
                 T.StructType([T.StructField(key_col, t.schema[key_col].dataType)]),
             )

@@ -41,10 +41,11 @@ import os
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.table import PrunePredicate, Table
+from ..core.table import DV_SCHEMA, PrunePredicate, Table
 from .checkpoint import Job, SystemTables
 
 DELETES_SUBDIR = os.path.join("data", "_deletes")
@@ -57,11 +58,23 @@ def exclude_existing_tombstones(spark, table: Table, entries, hits, prefix: str)
     dv_rel = sorted({d["path"] for e in entries for d in e.deletes})
     if not dv_rel:
         return hits
-    old = spark.read.parquet(*[os.path.join(table.root, p) for p in dv_rel]).select(
-        F.concat(F.lit(prefix), F.col("path")).alias("_fp"),
-        F.col("pos").alias("_pos"),
+    old = (
+        spark.read.schema(DV_SCHEMA)
+        .parquet(*[os.path.join(table.root, p) for p in dv_rel])
+        .select(F.concat(F.lit(prefix), F.col("path")).alias("_fp"), F.col("pos").alias("_pos"))
     )
     return hits.join(F.broadcast(old), ["_fp", "_pos"], "left_anti")
+
+
+def dv_path_counts(path: str) -> dict[str, int]:
+    """Tombstones per data file in one DV parquet: a driver-side read of
+    its ``path`` column batch by batch (memory bounded by one batch; the
+    result is metadata-sized, one entry per referenced data file)."""
+    counts: dict[str, int] = {}
+    for b in pq.ParquetFile(path).iter_batches(columns=["path"]):
+        for v in b.column(0).value_counts().to_pylist():
+            counts[v["values"]] = counts.get(v["values"], 0) + int(v["counts"])
+    return counts
 
 
 def write_delete_vector(
@@ -72,8 +85,6 @@ def write_delete_vector(
     gets row-group pushdown on ``path``). Returns (rel DV path, per-file
     counts) — (None, {}) when nothing matched."""
     import shutil
-
-    import pyarrow.parquet as pq
 
     hits = hits.select(
         F.expr(f"substring(_fp, {len(prefix) + 1})").alias("path"),
@@ -86,13 +97,10 @@ def write_delete_vector(
     if len(parts) != 1:
         raise RuntimeError(f"expected one DV part file, found {len(parts)}")
 
-    # per-file counts: driver-side single-file read, metadata-sized result
-    tbl = pq.read_table(parts[0], columns=["path"])
-    if tbl.num_rows == 0:
+    counts = dv_path_counts(parts[0])
+    if not counts:
         shutil.rmtree(stage, ignore_errors=True)
         return None, {}
-    vc = tbl["path"].value_counts().to_pylist()
-    counts = {v["values"]: int(v["counts"]) for v in vc}
 
     dest_dir = os.path.join(table.root, DELETES_SUBDIR)
     os.makedirs(dest_dir, exist_ok=True)

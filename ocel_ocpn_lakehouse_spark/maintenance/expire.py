@@ -9,9 +9,14 @@ The reference only *recommends* expiry tiers (>30 d if >10 snapshots,
          snapshots. After copy-on-write rewrites, old and new snapshots
          share unchanged files (SURVEY §7.3 hard part 1), so the sweep is
          an anti-join over manifest *entries* — expired-entry paths minus
-         live-entry paths — executed as a Spark DataFrame anti-join so it
-         scales to millions of manifest entries. Manifest files themselves
-         are refcounted the same way.
+         live-entry paths. It routes by the one planner rule
+         (``Table.plans_distributed`` over expired ∪ live manifests): a
+         metadata-sized history is refcounted on the driver from the
+         manifests themselves (no Spark job), a history above
+         ``scan.plan-distributed-threshold`` entries as a Spark DataFrame
+         anti-join, so it scales to millions of manifest entries. Both
+         routes delete the same files. Manifest files themselves are
+         refcounted the same way.
 
 The removal is a metadata commit (snapshot list shrinks, no new snapshot),
 then physical deletes. A crash after the commit leaves only unreferenced
@@ -27,9 +32,44 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..core import manifests as mf
 from ..core import metadata as meta
 from ..core.table import Table
 from .checkpoint import Job, SystemTables
+
+
+def _referenced(entries) -> set[str]:
+    """Data files ∪ delete-vector files the manifest ``entries`` list."""
+    out = {e.path for e in entries}
+    out.update(d["path"] for e in entries for d in e.deletes)
+    return out
+
+
+def _dead_files_distributed(spark, expired_paths: list[str], live_paths: list[str]) -> list[str]:
+    """The same refcount as a Spark anti-join over manifest parquet, for
+    histories whose entries exceed the planner threshold."""
+    from ..core.table import _entries_spark_schema
+
+    mschema = _entries_spark_schema()
+    dv_type = "array<struct<path:string,count:bigint>>"
+
+    def _referenced_df(paths):  # data files ∪ delete-vector files
+        df = spark.read.schema(mschema).parquet(*paths)
+        dvs = (
+            df.select(
+                F.explode_outer(
+                    F.from_json(F.coalesce(F.col("deletes"), F.lit("[]")), dv_type)
+                ).alias("d")
+            )
+            .select(F.col("d.path").alias("path"))
+            .where(F.col("path").isNotNull())
+        )
+        return df.select("path").unionByName(dvs).distinct()
+
+    dead_df = _referenced_df(expired_paths)
+    if live_paths:
+        dead_df = dead_df.join(_referenced_df(live_paths), "path", "left_anti")
+    return sorted(r["path"] for r in dead_df.collect())
 
 
 def expire_snapshots(
@@ -67,42 +107,26 @@ def expire_snapshots(
 
     # manifest refcount: a manifest file is dead iff no remaining snapshot lists it
     live_manifests = {m for s in remaining for m in s.manifests}
-    dead_manifests = {m for s in expired for m in s.manifests} - live_manifests
+    expired_manifests = {m for s in expired for m in s.manifests}
+    dead_manifests = expired_manifests - live_manifests
 
     with job.phase("plan"):
-        # file refcount via DataFrame anti-join over manifest entries
         mdir = table.metadata_dir
-        expired_manifest_paths = [
-            os.path.join(mdir, m) for m in {m for s in expired for m in s.manifests}
-        ]
-        live_manifest_paths = [os.path.join(mdir, m) for m in live_manifests]
-        dead_files: list[str] = []
-        if expired_manifest_paths:
-            from ..core.table import _entries_spark_schema
-
-            mschema = _entries_spark_schema()
-            dv_type = "array<struct<path:string,count:bigint>>"
-
-            def _referenced(paths):  # data files ∪ delete-vector files
-                df = spark.read.schema(mschema).parquet(*paths)
-                data = df.select("path")
-                dvs = (
-                    df.select(
-                        F.explode_outer(
-                            F.from_json(F.coalesce(F.col("deletes"), F.lit("[]")), dv_type)
-                        ).alias("d")
-                    )
-                    .select(F.col("d.path").alias("path"))
-                    .where(F.col("path").isNotNull())
-                )
-                return data.unionByName(dvs).distinct()
-
-            expired_df = _referenced(expired_manifest_paths)
-            if live_manifest_paths:
-                dead_df = expired_df.join(_referenced(live_manifest_paths), "path", "left_anti")
-            else:
-                dead_df = expired_df
-            dead_files = [r["path"] for r in dead_df.collect()]
+        if not expired_manifests:
+            dead_files: list[str] = []
+        elif not table.plans_distributed(list(expired_manifests | live_manifests)):
+            # metadata-sized: refcount on the driver straight from the
+            # manifests (the sweep_orphans read) — no Spark job at all
+            dead_files = sorted(
+                _referenced(mf.read_manifests(mdir, expired_manifests))
+                - _referenced(mf.read_manifests(mdir, live_manifests))
+            )
+        else:
+            dead_files = _dead_files_distributed(
+                spark,
+                [os.path.join(mdir, m) for m in expired_manifests],
+                [os.path.join(mdir, m) for m in live_manifests],
+            )
 
     result = {
         "status": "dry-run" if dry_run else "expired",

@@ -46,7 +46,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..core.local import local_df
 from ..core.table import Table
 from .checkpoint import Job, SystemTables
 from .rewrite import StagedRewrite, file_spec, tasks_rdd
@@ -110,19 +112,18 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
     return entries, sum(e.record_count for e in entries)
 
 
-def _write_upserts(table: Table, upserts: DataFrame) -> tuple[list, int]:
-    """Append the upsert rows as ≈target-size files, sized by the table's
-    average row (summed from the live manifests' size/record columns);
-    returns (entries, rows)."""
-    n = upserts.count()
+def _write_upserts(table: Table, upserts: DataFrame, n: int) -> list:
+    """Append the ``n`` upsert rows as ≈target-size files, sized by the
+    table's average row (summed from the live manifests' size/record
+    columns); returns their entries."""
     if not n:
-        return [], 0
+        return []
     snap = table.current_snapshot()
     tot = table._manifest_totals(snap.manifests if snap else [], "live")
     b, r = tot["live-bytes"], tot["live-records"]
     avg_row = (b / max(1, r)) if b else 8192
     n_files = max(1, -(-int(n * avg_row) // table.target_file_size))
-    return table.write_data_files(upserts, num_files=int(n_files)), n
+    return table.write_data_files(upserts, num_files=int(n_files))
 
 
 def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
@@ -233,47 +234,47 @@ def merge_into(
     src = source.select(*data_cols, op_col).cache()
     try:
         with job.phase("probe"):
-            n_src = src.count()
+            bf = next(
+                (f for f in table.partition_spec.fields
+                 if f.transform == "bucket" and f.source == key),
+                None,
+            )
+            # ONE summary job: rows per (op, key bucket) yields the source
+            # row count, the op values, the source-key buckets for pruning
+            # and the upsert-row count the write step needs
+            by = [F.col(op_col).alias("op")]
+            if bf is not None:
+                by.append(
+                    F.pmod(F.xxhash64(F.col(key)), F.lit(bf.num_buckets)).cast("int").alias("b")
+                )
+            summary = src.groupBy(*by).count().collect()
+            n_src = sum(r["count"] for r in summary)
+            n_upserts = sum(r["count"] for r in summary if r["op"] == "upsert")
             # an unknown op (e.g. Debezium's 'insert'/'update') would silently
             # behave as a delete — every source key tombstones its target rows
             # and only op=='upsert' rows are re-inserted. Fail loudly instead.
-            bad_ops = [
-                r[0]
-                for r in src.select(op_col).distinct().collect()
-                if r[0] not in ("upsert", "delete")
-            ]
+            bad_ops = sorted(
+                {r["op"] for r in summary if r["op"] not in ("upsert", "delete")}, key=str
+            )
             if bad_ops:
                 raise ValueError(
                     f"unknown {op_col} value(s) {bad_ops!r}: MERGE understands "
                     "'upsert' and 'delete' only"
                 )
+            buckets: set | None = {r["b"] for r in summary} if bf is not None else None
 
             # --- 1+2: find touched files (bucket-pruned probe, broadcast keys)
-            # small/medium sources collect the distinct keys ONCE; the list
-            # feeds both the probe's broadcast join and the Arrow rewrite's
-            # executor set (previously two identical distinct jobs)
+            # small/medium sources collect their keys ONCE (n_src rows, so
+            # bounded by the threshold: a plain collect of the cached source,
+            # deduplicated on the driver — no shuffle); the list feeds both
+            # the probe's broadcast join and the Arrow rewrite's executor set
             key_list: list | None = None
             if n_src <= BROADCAST_THRESHOLD_ROWS:
-                key_schema = src.select(key).schema
-                key_list = [r[0] for r in src.select(key).distinct().collect()]
-                src_keys = F.broadcast(spark.createDataFrame([(k,) for k in key_list], key_schema))
+                key_list = list(dict.fromkeys(r[0] for r in src.select(key).collect()))
+                key_schema = T.StructType([T.StructField(key, src.schema[key].dataType)])
+                src_keys = F.broadcast(local_df(spark, [(k,) for k in key_list], key_schema))
             else:
                 src_keys = src.select(key).distinct()
-
-            spec_buckets = {
-                f for f in table.partition_spec.fields if f.transform == "bucket" and f.source == key
-            }
-            buckets: set | None = None
-            if spec_buckets:
-                bf = next(iter(spec_buckets))
-                buckets = {
-                    r["b"]
-                    for r in src.select(
-                        F.pmod(F.xxhash64(F.col(key)), F.lit(bf.num_buckets)).cast("int").alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                }
 
             # planning: 'driver' materializes the manifest (fine to ~10^4 files);
             # 'distributed' keeps entries in entries_df — probe specs flow to the
@@ -338,7 +339,7 @@ def merge_into(
                         return []
                     from ..core import manifests as mf
 
-                    rel_df = spark.createDataFrame([(p,) for p in rels], "path string")
+                    rel_df = local_df(spark, [(p,) for p in rels], "path string")
                     rows = edf.join(F.broadcast(rel_df), "path").collect()
                     got = {r["path"]: mf.ManifestEntry.from_row(r.asDict()) for r in rows}
                     return [got[p] for p in sorted(rels)]
@@ -409,7 +410,7 @@ def merge_into(
                         spark, table, touched_entries, hits, prefix
                     )
                     rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
-                new_entries, n_upserts = _write_upserts(table, upserts)
+                new_entries = _write_upserts(table, upserts, n_upserts)
             if not counts and not new_entries:
                 return {"status": "no-op", "strategy": "mor", "source_rows": n_src}
             with job.phase("commit"):
@@ -483,8 +484,7 @@ def merge_into(
                         -(-sum(e.size_bytes for e in touched_entries) // table.target_file_size),
                     )
                     new_entries = table.write_data_files(survivors, num_files=int(n_files))
-            added, n_upserts = _write_upserts(table, upserts)
-            new_entries += added
+            new_entries += _write_upserts(table, upserts, n_upserts)
         n_new_rows = n_surv + n_upserts
 
         with job.phase("commit"):

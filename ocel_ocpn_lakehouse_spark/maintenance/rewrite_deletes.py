@@ -26,10 +26,14 @@ rewrites only the tombstone side:
   through the old DV files, which stay on disk until snapshot expiry
   refcounts them away (expire.py already treats listed DV paths as live).
 
-Scale shape: one Spark job reads only the affected DV files (never a data
-byte), one shuffle partitions tombstones by output group, and the driver
-holds O(targeted files) planning state — the same order it already holds
-for any manifest commit.
+Scale shape: the plan runs once. One Spark write reads only the affected
+DV files (never a data byte), against a broadcast (path → group) map that
+enters Spark as an Arrow local relation (no Python stage), and one shuffle
+partitions tombstones by output group. The per-file counts the commit
+needs are then read back on the driver from the group files just written
+(``dv_path_counts``, the readback ``write_delete_vector`` uses), never by
+re-executing read → join → dedup. The driver holds O(targeted files)
+planning state — the same order it already holds for any manifest commit.
 """
 
 from __future__ import annotations
@@ -44,8 +48,9 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..core.table import Table
-from .deletes import DELETES_SUBDIR
+from ..core.local import local_df
+from ..core.table import DV_SCHEMA, Table
+from .deletes import DELETES_SUBDIR, dv_path_counts
 
 # bound each consolidated DV file: ~8 bytes/pos + path overhead keeps one
 # file's tombstone relation well under a task's memory at 50M positions
@@ -95,9 +100,9 @@ def rewrite_deletes(
     # (data-file path → output group) map + the union of affected DV files
     pairs = [(p, gid) for gid, g in enumerate(groups) for p in g["paths"]]
     dv_rel = sorted(set().union(*(g["dv_paths"] for g in groups)))
-    map_df = F.broadcast(spark.createDataFrame(pairs, "path string, grp int"))
+    map_df = F.broadcast(local_df(spark, pairs, "path string, grp int"))
     dv = (
-        spark.read.parquet(*[os.path.join(table.root, p) for p in dv_rel])
+        spark.read.schema(DV_SCHEMA).parquet(*[os.path.join(table.root, p) for p in dv_rel])
         .select("path", "pos")
         .join(map_df, "path")  # drops positions for files outside the plan
         # defensive: the write path excludes already-tombstoned rows, so
@@ -114,15 +119,13 @@ def rewrite_deletes(
         .mode("overwrite")
         .parquet(out_dir)
     )
-    # per-(group, file) tombstone counts: O(targeted files) driver rows
-    counts: dict[str, int] = {
-        r["path"]: r["n"]
-        for r in dv.groupBy("path").agg(F.count("*").alias("n")).collect()
-    }
 
     dest_dir = os.path.join(table.root, DELETES_SUBDIR)
     os.makedirs(dest_dir, exist_ok=True)
     grp_dv: dict[int, str] = {}
+    # per-file tombstone counts, read back from the group files just
+    # written — the read → join → dedup plan never executes a second time
+    counts: dict[str, int] = {}
     try:
         for gid in range(len(groups)):
             parts = glob.glob(os.path.join(out_dir, f"grp={gid}", "*.parquet"))
@@ -132,6 +135,7 @@ def rewrite_deletes(
                 raise RuntimeError(
                     f"expected one consolidated DV file for group {gid}, got {len(parts)}"
                 )
+            counts.update(dv_path_counts(parts[0]))
             dest = os.path.join(dest_dir, f"dv-consolidated-{uuid.uuid4().hex[:12]}.parquet")
             os.rename(parts[0], dest)
             grp_dv[gid] = os.path.relpath(dest, table.root)

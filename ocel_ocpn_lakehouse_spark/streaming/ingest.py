@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..core.local import local_df
 from ..core.table import PrunePredicate, Table
 
 
@@ -220,7 +221,7 @@ def stream_dedup_ingest(
         batch_fp.persist()
         try:
             if table.current_snapshot() is None:
-                seen = spark.createDataFrame([], "fp string")
+                seen = local_df(spark, [], "fp string")
             else:
                 fps = [r[0] for r in batch_fp.select("fp").distinct().collect()]
                 seen = table.scan(
