@@ -265,8 +265,7 @@ def main() -> int:
 
     # the maintenance workload saturates the memory bus; gate the query
     # section on host idleness + one warm run per query, then best-of-3
-    # (the protocol tools/query_envelope_bench.py and scaling_bench.py
-    # already use — adopted here per the round-2 verdict)
+    # (warm-up then best-of-N, as tools/scaling_bench.py also times)
     settled_busy = _settle()
     # same-run host ceilings (round-4 verdict #1): this sandbox's
     # hypervisor throttles per-vCPU memory bandwidth by the hour, and

@@ -192,30 +192,6 @@ def read_table_nullfill(path: str, arrow_schema, columns: list[str] | None = Non
     return tbl.select(want).cast(_pa.schema([(f.name, f.type) for f in fields]))
 
 
-def apply_delete_vectors(tbl: "pa.Table", rel_path: str, dv_abs_paths: list[str]) -> "pa.Table":
-    """Drop the positions listed for ``rel_path`` in the given delete-vector
-    parquet files (Iceberg v2 positional deletes). ``tbl`` must be the
-    file's FULL row set in file order — positions index physical rows.
-    Row-group predicate pushdown on ``path`` keeps the read cheap when a
-    commit-level DV spans many data files. Duplicate positions (two delete
-    commits hitting the same row) mask idempotently."""
-    import pyarrow.parquet as _pq
-
-    if not dv_abs_paths:
-        return tbl
-    pos: list[np.ndarray] = []
-    for dv in dv_abs_paths:
-        t = _pq.read_table(dv, filters=[("path", "=", rel_path)], columns=["pos"])
-        if t.num_rows:
-            pos.append(t["pos"].to_numpy(zero_copy_only=False))
-    if not pos:
-        return tbl
-    mask = np.ones(tbl.num_rows, dtype=bool)
-    allpos = np.concatenate(pos)
-    mask[allpos] = False
-    return tbl.filter(pa.array(mask))
-
-
 def spark_to_arrow_schema(spark_schema):
     """Spark StructType → pyarrow schema (driver-side, for task closures)."""
     from pyspark.sql.pandas.types import to_arrow_schema

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import dv
 from . import manifests as mf
 from . import metadata as meta
 from .local import local_df
@@ -32,25 +33,12 @@ from .spec import PartitionSpec, SortOrder, TableSpec
 
 DATA_DIR = "data"
 STAGING_DIR = "_staging"
-# every delete-vector parquet holds (data-file rel path, row position);
-# reads pass it explicitly so no footer-inference job runs per DV read
-DV_SCHEMA = "path string, pos long"
 
 # snapshot operations whose commits do not change the table's logical row
 # set (maintenance rewrites: compaction, clustering, spec evolution,
 # manifest rewrite). Incremental consumers skip them — the same contract
 # Iceberg's incremental append scan applies to REPLACE snapshots.
 ROW_PRESERVING_OPS = frozenset({"replace"})
-
-
-# MoR scans broadcast the tombstone side only below this on-disk size; the
-# 10^12-row design point can accumulate GB-scale DV sets between compactions,
-# which must shuffle-join instead of landing on every executor.
-DV_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-
-# path-list reads build a driver-side file index; cap how many paths a single
-# reader sees so very large scans grow the index in bounded steps
-SCAN_READ_BATCH = 100_000
 
 
 class IncrementalScanError(RuntimeError):
@@ -510,7 +498,7 @@ class Table:
         that rewrote 3 of 10^6 files reads 3 files' worth of data plus the
         entry metadata of the differing manifests only. DV deltas semi-join
         ``(file, pos)`` against the new tombstones (broadcast under
-        ``DV_BROADCAST_MAX_BYTES``), cost ∝ touched files, never O(table).
+        ``dv.DV_BROADCAST_MAX_BYTES``), cost ∝ touched files, never O(table).
         """
         schema = self.schema
         cols = list(columns) if columns else schema.fieldNames()
@@ -526,40 +514,15 @@ class Table:
         def rows_of(entries: list[mf.ManifestEntry]) -> DataFrame | None:
             """Live rows of these entries (their DVs applied) — the insert
             image of added files / the delete pre-image of removed files."""
-            clean = [e.path for e in entries if not e.deletes]
-            dirty = [e for e in entries if e.deletes]
-            if dirty:
-                return self._scan_with_deletes(spark, clean, dirty, schema)
-            if clean:
-                return self._read_paths(spark, schema, clean)
-            return None
+            return self._scan_with_deletes(spark, entries, schema) if entries else None
 
         def rows_at(rel_paths: list[str], dv_rel: list[str]) -> DataFrame:
             """Rows of ``rel_paths`` at exactly the positions listed in
-            ``dv_rel`` (the tombstone delta) — one semi-join on the
-            ``_metadata`` columns, mirror image of the MoR anti-join.
-            Bounded-union reads beyond SCAN_READ_BATCH paths, like
-            ``_read_paths``."""
-            dv = self._dv_frame(spark, dv_rel)
-            out: DataFrame | None = None
-            for i in range(0, len(rel_paths), SCAN_READ_BATCH):
-                ddf = (
-                    spark.read.schema(schema)
-                    .parquet(
-                        *[
-                            os.path.join(self.root, p)
-                            for p in rel_paths[i : i + SCAN_READ_BATCH]
-                        ]
-                    )
-                    .select(
-                        F.col("_metadata.file_path").alias("_fp"),
-                        F.col("_metadata.row_index").alias("_pos"),
-                        *schema.fieldNames(),
-                    )
-                )
-                part = ddf.join(dv, ["_fp", "_pos"], "left_semi")
-                out = part if out is None else out.unionByName(part)
-            return out
+            ``dv_rel`` (the tombstone delta) — one semi-join, mirror image
+            of the MoR anti-join."""
+            return dv.scan(spark, self.root, schema, rel_paths, schema.fieldNames()).join(
+                dv.frame(spark, self.root, dv_rel), [dv.FP, dv.POS], "left_semi"
+            )
 
         parts: list[DataFrame] = []
         ordinal = 0
@@ -730,29 +693,20 @@ class Table:
             # executor task via the pickled predicate — reuse it per file
             prune = prepare_predicates(prune)
         if self.plans_distributed(snap.manifests):
-            pairs = self._plan_scan_distributed(spark, snap, prune)
+            # reads need only (path, deletes): lightweight entries keep the
+            # MoR path identical under both planners
+            entries = [
+                mf.ManifestEntry(path=p, partition={}, size_bytes=0, record_count=0, deletes=d)
+                for p, d in self._plan_scan_distributed(spark, snap, prune)
+            ]
         else:
             entries = mf.read_manifests(self.metadata_dir, snap.manifests)
             if prune:
                 entries = [e for e in entries if entry_matches(e, prune)]
-            pairs = [(e.path, e.deletes) for e in entries]
-        clean_paths = [p for p, d in pairs if not d]
-        # _scan_with_deletes needs only (path, deletes) — lightweight
-        # entries keep the MoR path identical under both planners
-        dirty = [
-            mf.ManifestEntry(path=p, partition={}, size_bytes=0, record_count=0, deletes=d)
-            for p, d in pairs
-            if d
-        ]
-        if not pairs:
-            df = local_df(spark, [], schema)
-        elif not dirty:
-            df = self._read_paths(spark, schema, clean_paths)
+        if entries:
+            df = self._scan_with_deletes(spark, entries, schema)
         else:
-            # merge-on-read: files with positional delete vectors anti-join
-            # their (file, pos) tombstones via Spark's _metadata columns;
-            # clean files union in untouched — they never pay the join.
-            df = self._scan_with_deletes(spark, clean_paths, dirty, schema)
+            df = local_df(spark, [], schema)
         if columns:
             df = df.select(*columns)
         return df
@@ -760,15 +714,14 @@ class Table:
     def _read_paths(
         self, spark: SparkSession, schema: T.StructType, rel_paths: list[str]
     ) -> DataFrame:
-        """One reader for ≤SCAN_READ_BATCH paths; bounded unions beyond —
+        """One reader for ≤dv.SCAN_READ_BATCH paths; bounded unions beyond —
         Spark's file index (listing, driver-side FileStatus array) then
         grows in steps instead of one 10^6-element spike."""
         paths = [os.path.join(self.root, p) for p in rel_paths]
-        if len(paths) <= SCAN_READ_BATCH:
-            return spark.read.schema(schema).parquet(*paths)
+        step = dv.SCAN_READ_BATCH
         df = None
-        for i in range(0, len(paths), SCAN_READ_BATCH):
-            part = spark.read.schema(schema).parquet(*paths[i : i + SCAN_READ_BATCH])
+        for i in range(0, len(paths), step):
+            part = spark.read.schema(schema).parquet(*paths[i : i + step])
             df = part if df is None else df.unionByName(part)
         return df
 
@@ -842,65 +795,23 @@ class Table:
         return [(r["path"], json.loads(r["deletes"])) for r in rows]
 
     def _scan_with_deletes(
-        self,
-        spark: SparkSession,
-        clean_paths: list[str],
-        dirty: list[mf.ManifestEntry],
-        schema: T.StructType,
+        self, spark: SparkSession, entries: Sequence[mf.ManifestEntry], schema: T.StructType
     ) -> DataFrame:
-        """MoR read path: tombstoned files drop deleted positions with one
-        anti-join on (_metadata.file_path, _metadata.row_index); the DV side
-        is broadcast when small (the common case — deletes are a sliver of
-        the table, and maintenance absorbs them), else a shuffle join. Scale
-        shape: cost ∝ tombstoned bytes + DV rows; untouched files stream
-        through the ordinary vectorized scan."""
+        """Live rows of ``entries``' files (merge-on-read): tombstoned files
+        drop deleted positions with one anti-join against their DVs
+        (``dv.live``: broadcast when small — the common case, deletes are a
+        sliver of the table and maintenance absorbs them — else a shuffle
+        join); clean files union in untouched, they never pay the join.
+        Scale shape: cost ∝ tombstoned bytes + DV rows; untouched files
+        stream through the ordinary vectorized scan."""
         cols = schema.fieldNames()
-        dirty_paths = [os.path.join(self.root, e.path) for e in dirty]
-        ddf = (
-            spark.read.schema(schema)
-            .parquet(*dirty_paths)
-            .select(
-                F.col("_metadata.file_path").alias("_fp"),
-                F.col("_metadata.row_index").alias("_pos"),
-                *cols,
-            )
-        )
-        dv_rel = sorted({d["path"] for e in dirty for d in e.deletes})
-        dv = self._dv_frame(spark, dv_rel)
-        survivors = ddf.join(dv, ["_fp", "_pos"], "left_anti").select(*cols)
-        if not clean_paths:
-            return survivors
-        return self._read_paths(spark, schema, clean_paths).unionByName(survivors)
-
-    def _dv_frame(self, spark: SparkSession, dv_rel: Sequence[str]) -> DataFrame:
-        """Positional-delete tombstones as a normalized ``(_fp, _pos)`` frame
-        ready to join against ``_metadata`` columns. DV rows carry
-        table-root-relative data-file paths; ``_metadata.file_path`` is a
-        file:/abs URI — normalize the DV side once (tiny) instead of
-        string-mangling every data row.
-
-        Broadcast by estimated BYTES, not row count: 5M rows of long paths
-        is a multi-hundred-MB payload shipped to every executor. The DV
-        parquet footprint on disk is a cheap, conservative proxy (in-memory
-        rows inflate ~2-4×, so 64 MB on disk stays well under executor
-        broadcast budgets); above it, AQE picks the shuffle-join strategy.
-        An unknown file size forces the shuffle route outright (a cap-sized
-        increment would still pass the <= check when it is the only DV file).
-        """
-        dv = spark.read.schema(DV_SCHEMA).parquet(*[os.path.join(self.root, p) for p in dv_rel])
-        dv = dv.select(
-            F.concat(F.lit(f"file:{self.root}{os.sep}"), F.col("path")).alias("_fp"),
-            F.col("pos").alias("_pos"),
-        )
-        dv_bytes = 0
-        for p in dv_rel:
-            try:
-                dv_bytes += os.path.getsize(os.path.join(self.root, p))
-            except OSError:
-                dv_bytes += DV_BROADCAST_MAX_BYTES + 1
-        if dv_bytes <= DV_BROADCAST_MAX_BYTES:
-            dv = F.broadcast(dv)
-        return dv
+        clean = [e.path for e in entries if not e.deletes]
+        dirty = [e for e in entries if e.deletes]
+        parts = [self._read_paths(spark, schema, clean)] if clean else []
+        if dirty:
+            ddf = dv.scan(spark, self.root, schema, [e.path for e in dirty], cols)
+            parts.append(dv.live(spark, self.root, ddf, dirty).select(*cols))
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def _entry_matches(self, e: mf.ManifestEntry, preds: Sequence[PrunePredicate]) -> bool:
         return entry_matches(e, preds)

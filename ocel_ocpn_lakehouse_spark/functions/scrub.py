@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from .text import tokens
 
-# Mirrors DV_BROADCAST_MAX_BYTES (core/table.py): above this estimated
+# Mirrors DV_BROADCAST_MAX_BYTES (core/dv.py): above this estimated
 # size the banned-segment relation joins via shuffle (AQE may still
 # convert it) instead of a forced broadcast.
 BANNED_BROADCAST_MAX_BYTES = 64 * 1024 * 1024

@@ -111,7 +111,6 @@ def execute_cluster(
     curve: str = "zorder",  # zorder | hilbert | hash
     key_cols: list[str] | None = None,
     job_id: str | None = None,
-    planning: str = "auto",  # auto | driver | distributed
 ) -> dict:
     snap = table.current_snapshot()
     if snap is None:
@@ -130,9 +129,8 @@ def execute_cluster(
     # 'distributed' keeps them in entries_df — the driver sees only one
     # aggregate row per table partition plus the plan scalars, so a
     # 10^7-file table plans without manifests ever becoming driver objects
-    # (same routing as compaction's plan_compaction_distributed).
-    if planning == "auto":
-        planning = "distributed" if table.plans_distributed(snap.manifests) else "driver"
+    # (same routing rule as compaction: Table.plans_distributed).
+    planning = "distributed" if table.plans_distributed(snap.manifests) else "driver"
     removed: set[str] | None
     if planning == "driver":
         entries = table.live_entries()

@@ -9,13 +9,13 @@ without rewriting a single data byte —
   plan   : manifest-level candidate pruning (optional PrunePredicates:
            only files whose bounds/partition/bloom can match the predicate
            are scanned), then ONE vectorized JVM scan of the candidates
-           projecting (``_metadata.file_path``, ``_metadata.row_index``)
-           for rows matching the predicate. Rows already tombstoned by an
-           earlier delete are anti-joined out, so re-running a delete is a
-           no-op and per-file live counts never double-count.
-  write  : the (file, pos) pairs — sorted by (path, pos) so readers get
-           row-group pushdown on ``path`` — land in ONE delete-vector
-           parquet under ``data/_deletes/``. O(deleted rows), not O(table).
+           (``dv.scan``: each row named by its file and position) for
+           rows matching the predicate.
+  write  : ``dv.write_hits`` leaves out rows an earlier delete already
+           tombstoned (so re-running a delete is a no-op and per-file live
+           counts never double-count) and writes the rest as ONE
+           (path, pos)-sorted delete vector. O(deleted rows), not
+           O(table). The DV format lives in core/dv.py alone.
   commit : metadata-only — every touched file's manifest entry gains a DV
            reference (``Table.commit_delete_vectors``); concurrent rewrite
            of a touched file fails the commit (positions would index the
@@ -23,8 +23,9 @@ without rewriting a single data byte —
 
 Readers apply tombstones at scan time (core/table.py _scan_with_deletes:
 clean files stream through the ordinary scan; tombstoned files pay one
-broadcast anti-join). Maintenance rewrites (compaction T2, clustering T6,
-MERGE T12) absorb DVs — rewritten files come out clean.
+anti-join, broadcast under ``dv.DV_BROADCAST_MAX_BYTES``). Maintenance
+rewrites (compaction T2, clustering T6, MERGE T12) absorb DVs — rewritten
+files come out clean.
 
 Scale notes: a predicate delete at 10^12 rows scans only the files its
 predicate can touch (manifest pruning), moves only (path, pos) pairs, and
@@ -36,78 +37,16 @@ this corpus' delete volumes.
 
 from __future__ import annotations
 
-import glob
 import os
 import time
-import uuid
 
-import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.table import DV_SCHEMA, PrunePredicate, Table
+from ..core import dv
+from ..core.table import PrunePredicate, Table
+from . import merge
 from .checkpoint import Job, SystemTables
-
-DELETES_SUBDIR = os.path.join("data", "_deletes")
-
-
-def exclude_existing_tombstones(spark, table: Table, entries, hits, prefix: str):
-    """Anti-join rows an earlier delete already tombstoned out of ``hits``
-    ((_fp, _pos) rows): repeated predicates become no-ops and per-file
-    live counts never double-count."""
-    dv_rel = sorted({d["path"] for e in entries for d in e.deletes})
-    if not dv_rel:
-        return hits
-    old = (
-        spark.read.schema(DV_SCHEMA)
-        .parquet(*[os.path.join(table.root, p) for p in dv_rel])
-        .select(F.concat(F.lit(prefix), F.col("path")).alias("_fp"), F.col("pos").alias("_pos"))
-    )
-    return hits.join(F.broadcast(old), ["_fp", "_pos"], "left_anti")
-
-
-def dv_path_counts(path: str) -> dict[str, int]:
-    """Tombstones per data file in one DV parquet: a driver-side read of
-    its ``path`` column batch by batch (memory bounded by one batch; the
-    result is metadata-sized, one entry per referenced data file)."""
-    counts: dict[str, int] = {}
-    for b in pq.ParquetFile(path).iter_batches(columns=["path"]):
-        for v in b.column(0).value_counts().to_pylist():
-            counts[v["values"]] = counts.get(v["values"], 0) + int(v["counts"])
-    return counts
-
-
-def write_delete_vector(
-    spark, table: Table, hits, prefix: str
-) -> tuple[str | None, dict[str, int]]:
-    """Materialize (_fp, _pos) hit rows as ONE (path, pos)-sorted delete-
-    vector parquet under ``data/_deletes/`` (sorted so every later reader
-    gets row-group pushdown on ``path``). Returns (rel DV path, per-file
-    counts) — (None, {}) when nothing matched."""
-    import shutil
-
-    hits = hits.select(
-        F.expr(f"substring(_fp, {len(prefix) + 1})").alias("path"),
-        F.col("_pos").alias("pos"),
-    )
-    stage = table._stage_dir()
-    out_dir = os.path.join(stage, "dv")
-    hits.coalesce(1).sortWithinPartitions("path", "pos").write.mode("overwrite").parquet(out_dir)
-    parts = glob.glob(os.path.join(out_dir, "part-*.parquet"))
-    if len(parts) != 1:
-        raise RuntimeError(f"expected one DV part file, found {len(parts)}")
-
-    counts = dv_path_counts(parts[0])
-    if not counts:
-        shutil.rmtree(stage, ignore_errors=True)
-        return None, {}
-
-    dest_dir = os.path.join(table.root, DELETES_SUBDIR)
-    os.makedirs(dest_dir, exist_ok=True)
-    dest = os.path.join(dest_dir, f"dv-{uuid.uuid4().hex[:12]}.parquet")
-    os.rename(parts[0], dest)
-    shutil.rmtree(stage, ignore_errors=True)
-    return os.path.relpath(dest, table.root), counts
 
 
 def delete_where(
@@ -136,22 +75,10 @@ def delete_where(
     if not entries:
         return {"status": "no-candidate-files", "deleted_rows": 0}
 
-    root = table.root
     schema = table.schema
-    cols = schema.fieldNames()
-    prefix = f"file:{root}{os.sep}"
-    cand_paths = [os.path.join(root, e.path) for e in entries]
-    df = (
-        spark.read.schema(schema)
-        .parquet(*cand_paths)
-        .select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *cols,
-        )
-    )
-    hits = df.filter(cond).select("_fp", "_pos")
-    return _finalize_delete(spark, table, entries, hits, prefix, job)
+    df = dv.scan(spark, table.root, schema, [e.path for e in entries], schema.fieldNames())
+    hits = df.filter(cond).select(dv.FP, dv.POS)
+    return _finalize_delete(spark, table, entries, hits, job)
 
 
 def delete_keys(
@@ -161,7 +88,6 @@ def delete_keys(
     key_col: str = "image_id",
     sys_tables: SystemTables | None = None,
     table_name: str = "",
-    broadcast_max_rows: int = 2_000_000,
 ) -> dict:
     """Merge-on-read delete of every row whose ``key_col`` appears in the
     ``keys`` DataFrame — the set-driven sibling of :func:`delete_where` for
@@ -172,12 +98,12 @@ def delete_keys(
     Scale shape: when the table is bucketed on ``key_col`` the candidate
     files shrink to the buckets the keys hash into (O(distinct buckets)
     driver rows, same pruning MERGE uses — maintenance/merge.py); the scan
-    projects only (file, pos, key), and the semi-join broadcasts the keys
-    under ``broadcast_max_rows`` else shuffles. Everything downstream
-    (tombstone exclusion → one sorted DV file → metadata-only commit with
-    DV-count conflict guards) is shared with delete_where, so re-running
-    the same key set is a no-op and concurrent file rewrites conflict
-    instead of corrupting positions."""
+    projects only (file, pos, key), and the semi-join broadcasts up to
+    ``merge.BROADCAST_THRESHOLD_ROWS`` keys, else shuffles. Everything
+    downstream (tombstone exclusion → one sorted DV file → metadata-only
+    commit with DV-count conflict guards) is shared with delete_where, so
+    re-running the same key set is a no-op and concurrent file rewrites
+    conflict instead of corrupting positions."""
     job = Job(sys_tables, "delete", table, table_name)
     if table.current_snapshot() is None:
         return {"status": "empty-table"}
@@ -212,29 +138,18 @@ def delete_keys(
     if not entries:
         return {"status": "no-candidate-files", "deleted_rows": 0}
 
-    root = table.root
-    prefix = f"file:{root}{os.sep}"
-    cand_paths = [os.path.join(root, e.path) for e in entries]
-    df = (
-        spark.read.schema(table.schema)
-        .parquet(*cand_paths)
-        .select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            key_col,
-        )
-    )
-    rhs = F.broadcast(keys) if n_keys <= broadcast_max_rows else keys
-    hits = df.join(rhs, key_col, "semi").select("_fp", "_pos")
-    return _finalize_delete(spark, table, entries, hits, prefix, job)
+    df = dv.scan(spark, table.root, table.schema, [e.path for e in entries], [key_col])
+    rhs = F.broadcast(keys) if n_keys <= merge.BROADCAST_THRESHOLD_ROWS else keys
+    hits = df.join(rhs, key_col, "semi").select(dv.FP, dv.POS)
+    return _finalize_delete(spark, table, entries, hits, job)
 
 
-def _finalize_delete(spark, table: Table, entries, hits, prefix: str, job: Job) -> dict:
-    """Shared delete tail: tombstone exclusion → DV write → metadata-only
-    commit guarded by the candidate entries' observed DV counts."""
+def _finalize_delete(spark, table: Table, entries, hits, job: Job) -> dict:
+    """Shared delete tail: DV write (tombstones already listed by the
+    candidates' DVs left out) → metadata-only commit guarded by the
+    candidate entries' observed DV counts."""
     with job.phase("write"):
-        hits = exclude_existing_tombstones(spark, table, entries, hits, prefix)
-        rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
+        rel_dv, counts = dv.write_hits(spark, table.root, table._stage_dir(), hits, entries)
     if rel_dv is None:
         return {"status": "no-matches", "deleted_rows": 0, "sec": round(time.time() - job.t0, 3)}
 

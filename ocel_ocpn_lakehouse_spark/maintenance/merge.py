@@ -10,12 +10,14 @@ SQL MERGE with a source carrying ``_op ∈ {'upsert','delete'}``:
 
 Copy-on-write at FILE granularity:
   1. touched files = the distinct data files holding any source key —
-     found by an inner join of (target rows + input_file_name) with the
-     source key set; the source side is broadcast when small (the
+     found by an Arrow probe task per file set (manifest bounds, then the
+     file's Bloom filter, then a read of the key column alone) against
+     the broadcast source key set; a source too large to broadcast probes
+     with a distributed semi-join of a JVM key-column scan instead (the
      reference's bucketed-join guidance, ops/performance_optimization.py:
      254-259, maps to Spark broadcast/bucket pruning);
   2. bucket pruning first: with a BUCKET(N, key) partition spec, only
-     files in source-key buckets are even scanned for the probe;
+     files in source-key buckets are even probed;
   3. rewrite = survivors of touched files (anti-join on key) ∪ all upsert
      rows (unionByName — SURVEY §2.6 O4); untouched files are carried
      forward unchanged in the replace-snapshot commit;
@@ -36,35 +38,39 @@ rewrite. Wins when merges are point-ish relative to file size (CoW
 rewrites gigabytes to drop a handful of rows); scans pay the tombstone
 anti-join until routine compaction absorbs the DVs. Both strategies are
 content-equivalent (test_mor_merge_matches_cow_and_rewrites_nothing).
+
+Each key may appear in at most one source row: a duplicate non-NULL key
+raises before anything is written (Iceberg's "multiple source rows
+matched one target row"), rather than leaving duplicate rows behind.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core import dv
 from ..core.local import local_df
 from ..core.table import Table
 from .checkpoint import Job, SystemTables
 from .rewrite import StagedRewrite, file_spec, tasks_rdd
 
-BROADCAST_THRESHOLD_ROWS = 2_000_000  # source keys; ~16 MB of longs
-
-# 'file:///data/x' | '/data/x' | 's3://b/k' → scheme/leading-slash-free
-_PATH_PREFIX = r"^([a-zA-Z0-9]+:)?/+"
-
-
-def _norm_path_sql(col):
-    return F.regexp_replace(col, _PATH_PREFIX, "")
+# key sets up to this many rows are broadcast (MERGE source keys and
+# delete_keys' key set); ~16 MB of longs
+BROADCAST_THRESHOLD_ROWS = 2_000_000
 
 
-def _norm_path_py(p: str) -> str:
-    return re.sub(_PATH_PREFIX, "", p)
+def _reject_duplicate_keys(key: str, dups: list) -> None:
+    if dups:
+        raise ValueError(
+            f"MERGE source holds duplicate {key} values {sorted(dups, key=str)[:5]!r}: "
+            "several source rows would match one target row"
+        )
 
 
 def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
@@ -220,7 +226,6 @@ def merge_into(
     op_col: str = "_op",
     sys_tables: SystemTables | None = None,
     table_name: str = "",
-    planning: str = "auto",  # auto | driver | distributed
     strategy: str | None = None,  # cow | mor (default: table write.merge.mode, else cow)
     extra_summary: dict | None = None,  # merged into the commit summary (e.g. stream epoch)
     set_properties: dict | None = None,  # atomic with the commit (e.g. stream max-epoch)
@@ -268,24 +273,34 @@ def merge_into(
             # bounded by the threshold: a plain collect of the cached source,
             # deduplicated on the driver — no shuffle); the list feeds both
             # the probe's broadcast join and the Arrow rewrite's executor set
+            # (the collected list also rejects duplicate keys with no job;
+            # a huge source spends one key-count job on it)
             key_list: list | None = None
             if n_src <= BROADCAST_THRESHOLD_ROWS:
-                key_list = list(dict.fromkeys(r[0] for r in src.select(key).collect()))
+                key_counts = Counter(r[0] for r in src.select(key).collect())
+                _reject_duplicate_keys(
+                    key, [k for k, n in key_counts.items() if n > 1 and k is not None]
+                )
+                key_list = list(key_counts)
                 key_schema = T.StructType([T.StructField(key, src.schema[key].dataType)])
                 src_keys = F.broadcast(local_df(spark, [(k,) for k in key_list], key_schema))
             else:
+                dups = (
+                    src.filter(F.col(key).isNotNull()).groupBy(key).count()
+                    .filter(F.col("count") > 1).limit(5).collect()
+                )
+                _reject_duplicate_keys(key, [r[0] for r in dups])
                 src_keys = src.select(key).distinct()
 
-            # planning: 'driver' materializes the manifest (fine to ~10^4 files);
-            # 'distributed' keeps entries in entries_df — probe specs flow to the
-            # Arrow probe as a DataFrame (nothing per-file on the driver in the
-            # common path), and only the touched files' entry rows (bounded by
-            # the source key count, metadata-sized) are ever collected; the
-            # huge-source fallback alone collects the pruned path list (same
-            # routing as plan_compaction_distributed / execute_cluster)
-            if planning == "auto":
-                planning = "distributed" if table.plans_distributed() else "driver"
-            if planning == "driver":
+            # planning (Table.plans_distributed): below the threshold the
+            # manifest materializes on the driver; above it entries stay in
+            # entries_df — probe specs flow to the Arrow probe as a DataFrame
+            # (nothing per-file on the driver in the common path), and only
+            # the touched files' entry rows (bounded by the source key count,
+            # metadata-sized) are ever collected; the huge-source fallback
+            # alone collects the pruned path list (same routing as
+            # plan_compaction_distributed / execute_cluster)
+            if not table.plans_distributed():
                 entries = table.live_entries()
                 probe_entries = entries
                 if buckets is not None:
@@ -361,19 +376,13 @@ def merge_into(
                 # distributed semi-join probe (the key column still prunes at
                 # the parquet reader; per-file setup amortizes over the big read)
                 fb_paths = _fallback_paths()
-                if not fb_paths:
-                    touched_rel = set()
-                else:
-                    norm_root = _norm_path_py(table.root).rstrip("/")
-                    tgt = (
-                        spark.read.schema(table.schema)
-                        .parquet(*[os.path.join(table.root, p) for p in fb_paths])
-                        .withColumn("_file", _norm_path_sql(F.input_file_name()))
-                    )
+                touched_rel = set()
+                if fb_paths:
+                    tgt = dv.scan(spark, table.root, table.schema, fb_paths, [key])
                     touched_rel = {
-                        r["_file"][len(norm_root) + 1 :]
+                        r[0]
                         for r in tgt.join(src_keys, key, "inner")
-                        .select("_file")
+                        .select(dv.rel(table.root))
                         .distinct()
                         .collect()
                     }
@@ -389,27 +398,16 @@ def merge_into(
             # atomic commit. The scale case this wins: point-ish merges
             # into large files, where CoW rewrites gigabytes to drop a
             # handful of rows; routine compaction absorbs the tombstones.
-            from .deletes import exclude_existing_tombstones, write_delete_vector
-
             with job.phase("write"):
-                prefix = f"file:{table.root}{os.sep}"
                 rel_dv, counts = None, {}
                 if touched_entries:
-                    tpaths = [os.path.join(table.root, e.path) for e in touched_entries]
-                    tdf = (
-                        spark.read.schema(table.schema)
-                        .parquet(*tpaths)
-                        .select(
-                            F.col("_metadata.file_path").alias("_fp"),
-                            F.col("_metadata.row_index").alias("_pos"),
-                            F.col(key),
-                        )
+                    tdf = dv.scan(
+                        spark, table.root, table.schema, [e.path for e in touched_entries], [key]
                     )
-                    hits = tdf.join(src_keys, key, "inner").select("_fp", "_pos")
-                    hits = exclude_existing_tombstones(
-                        spark, table, touched_entries, hits, prefix
+                    hits = tdf.join(src_keys, key, "inner").select(dv.FP, dv.POS)
+                    rel_dv, counts = dv.write_hits(
+                        spark, table.root, table._stage_dir(), hits, touched_entries
                     )
-                    rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
                 new_entries = _write_upserts(table, upserts, n_upserts)
             if not counts and not new_entries:
                 return {"status": "no-op", "strategy": "mor", "source_rows": n_src}
@@ -467,15 +465,7 @@ def merge_into(
                 # a broadcast) + re-bin to target-size files. Tombstoned
                 # touched files go through the MoR read path so deleted rows
                 # cannot resurrect into the rewrite.
-                t_clean = [e for e in touched_entries if not e.deletes]
-                t_dirty = [e for e in touched_entries if e.deletes]
-                if t_dirty:
-                    touched_df = table._scan_with_deletes(
-                        spark, [e.path for e in t_clean], t_dirty, table.schema
-                    )
-                else:
-                    touched_paths = [os.path.join(table.root, e.path) for e in touched_entries]
-                    touched_df = spark.read.schema(table.schema).parquet(*touched_paths)
+                touched_df = table._scan_with_deletes(spark, touched_entries, table.schema)
                 survivors = touched_df.join(src_keys, key, "left_anti")
                 n_surv = survivors.count()
                 if n_surv:

@@ -50,6 +50,7 @@ import uuid
 from dataclasses import dataclass
 
 from ..core import manifests as mf
+from ..core.dv import apply_delete_vectors
 
 # columns of the row StagedRewrite.write returns, for the one Catalyst
 # writer (UPDATE's applyInArrow) that needs them as a schema
@@ -147,7 +148,7 @@ def read_live(path: str, dv: str, arrow_schema, columns: list[str] | None = None
     tbl = mf.read_table_nullfill(path, arrow_schema, columns=columns)
     if dv:  # positions index the full file, so apply after the read
         d = json.loads(dv)
-        tbl = mf.apply_delete_vectors(tbl, d["rel"], d["dvs"])
+        tbl = apply_delete_vectors(tbl, d["rel"], d["dvs"])
     return tbl
 
 

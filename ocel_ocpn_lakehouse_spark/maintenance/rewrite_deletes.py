@@ -29,9 +29,10 @@ rewrites only the tombstone side:
 Scale shape: the plan runs once. One Spark write reads only the affected
 DV files (never a data byte), against a broadcast (path → group) map that
 enters Spark as an Arrow local relation (no Python stage), and one shuffle
-partitions tombstones by output group. The per-file counts the commit
-needs are then read back on the driver from the group files just written
-(``dv_path_counts``, the readback ``write_delete_vector`` uses), never by
+partitions tombstones by output group into ``dv.write_groups``, the
+staged write every Spark-side DV writer shares (``dv.write_hits``, the
+DELETE / MoR MERGE writer, is its single-group case). It reads each
+group's per-file counts back from the file just written, never by
 re-executing read → join → dedup. The driver holds O(targeted files)
 planning state — the same order it already holds for any manifest commit.
 """
@@ -39,18 +40,14 @@ planning state — the same order it already holds for any manifest commit.
 from __future__ import annotations
 
 import dataclasses
-import glob
-import os
-import shutil
 import time
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..core import dv
 from ..core.local import local_df
-from ..core.table import DV_SCHEMA, Table
-from .deletes import DELETES_SUBDIR, dv_path_counts
+from ..core.table import Table
 
 # bound each consolidated DV file: ~8 bytes/pos + path overhead keeps one
 # file's tombstone relation well under a task's memory at 50M positions
@@ -101,46 +98,22 @@ def rewrite_deletes(
     pairs = [(p, gid) for gid, g in enumerate(groups) for p in g["paths"]]
     dv_rel = sorted(set().union(*(g["dv_paths"] for g in groups)))
     map_df = F.broadcast(local_df(spark, pairs, "path string, grp int"))
-    dv = (
-        spark.read.schema(DV_SCHEMA).parquet(*[os.path.join(table.root, p) for p in dv_rel])
-        .select("path", "pos")
+    tombstones = (
+        dv.rows(spark, table.root, dv_rel)
         .join(map_df, "path")  # drops positions for files outside the plan
         # defensive: the write path excludes already-tombstoned rows, so
         # duplicates across DVs shouldn't exist; consolidation is the one
         # place a duplicate would get baked in forever, so dedup here
         .dropDuplicates(["path", "pos"])
     )
-    stage = table._stage_dir()
-    out_dir = os.path.join(stage, "dv")
-    (
-        dv.repartition(len(groups), "grp")
-        .sortWithinPartitions("grp", "path", "pos")
-        .write.partitionBy("grp")
-        .mode("overwrite")
-        .parquet(out_dir)
+    # a group whose positions all deduped away writes no file
+    written = dv.write_groups(
+        table.root, table._stage_dir(), tombstones.repartition(len(groups), "grp"), len(groups)
     )
-
-    dest_dir = os.path.join(table.root, DELETES_SUBDIR)
-    os.makedirs(dest_dir, exist_ok=True)
-    grp_dv: dict[int, str] = {}
-    # per-file tombstone counts, read back from the group files just
-    # written — the read → join → dedup plan never executes a second time
+    grp_dv = {gid: rel for gid, (rel, _) in written.items()}
     counts: dict[str, int] = {}
-    try:
-        for gid in range(len(groups)):
-            parts = glob.glob(os.path.join(out_dir, f"grp={gid}", "*.parquet"))
-            if not parts:
-                continue  # a group whose positions all deduped away
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"expected one consolidated DV file for group {gid}, got {len(parts)}"
-                )
-            counts.update(dv_path_counts(parts[0]))
-            dest = os.path.join(dest_dir, f"dv-consolidated-{uuid.uuid4().hex[:12]}.parquet")
-            os.rename(parts[0], dest)
-            grp_dv[gid] = os.path.relpath(dest, table.root)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    for _, c in written.values():
+        counts.update(c)
 
     removed_paths: set[str] = set()
     added: list = []

@@ -10,10 +10,11 @@ reload); this op completes the row-level mutation family next to MERGE
 
 Shape (the 100x question):
 
-  phase 1  ONE narrow scan of the candidate files — Catalyst prunes the
-           read to the predicate's columns plus ``_metadata.file_path``
-           (the payload column never rides through the filter) — yields
-           the touched-file set, O(#touched) driver strings.
+  phase 1  ONE narrow scan of the candidate files (``dv.scan``) —
+           Catalyst prunes the read to the predicate's columns plus each
+           row's file and position (the payload column never rides
+           through the filter) — yields the touched-file set, O(#touched)
+           driver strings.
   phase 2  only the touched files re-read full-width; existing delete
            vectors are ANTI-JOINED out (the rewrite absorbs them, like
            compaction), the SET expressions evaluate inside whole-stage
@@ -36,15 +37,14 @@ tombstoned by delete vectors do not resurrect.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import dv
 from ..core.table import PrunePredicate, Table
 from .checkpoint import Job, SystemTables
-from .deletes import exclude_existing_tombstones
 from .rewrite import STATS_SCHEMA, StagedRewrite
 
 
@@ -94,29 +94,16 @@ def transform_where(
             "rewrite cannot move rows across partitions; use MERGE "
             "(delete + insert) instead"
         )
-    prefix = f"file:{root}{os.sep}"
-    cand_paths = [os.path.join(root, e.path) for e in entries]
-
     # phase 1: touched-file discovery — Catalyst column-prunes this scan
     # to the predicate's columns + metadata. Tombstoned rows are excluded
     # HERE too: a file whose only matches are already-deleted rows must
     # not be rewritten (zero real updates, phantom CDC delete+insert
     # pairs for every live row it holds)
-    p1 = (
-        spark.read.schema(schema)
-        .parquet(*cand_paths)
-        .select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *cols,
-        )
-        .filter(cond)
-    )
-    p1 = exclude_existing_tombstones(spark, table, entries, p1, prefix)
+    p1 = dv.scan(spark, root, schema, [e.path for e in entries], cols).filter(cond)
+    p1 = dv.live(spark, root, p1, entries)
     with job.phase("probe"):
-        touched_fps = {r["_fp"] for r in p1.select("_fp").distinct().collect()}
-    touched = [e for e in entries if prefix + e.path.replace(os.sep, "/") in touched_fps
-               or f"{prefix}{e.path}" in touched_fps]
+        touched_rel = {r[0] for r in p1.select(dv.rel(root)).distinct().collect()}
+    touched = [e for e in entries if e.path in touched_rel]
     if not touched:
         return {
             "status": "no-matching-rows",
@@ -128,16 +115,8 @@ def transform_where(
 
     # phase 2: full-width read of touched files only; tombstoned rows out;
     # SET expressions evaluate simultaneously against the original row
-    rows = (
-        spark.read.schema(schema)
-        .parquet(*[os.path.join(root, e.path) for e in touched])
-        .select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *cols,
-        )
-    )
-    rows = exclude_existing_tombstones(spark, table, touched, rows, prefix)
+    rows = dv.scan(spark, root, schema, [e.path for e in touched], cols)
+    rows = dv.live(spark, root, rows, touched)
     proj = [
         (
             F.when(
@@ -151,14 +130,10 @@ def transform_where(
         )
         for c in cols
     ]
-    upd = rows.select("_fp", "_pos", cond.alias("_hit"), *proj)
+    upd = rows.select(dv.rel(root).alias("_path"), dv.POS, cond.alias("_hit"), *proj)
 
     rw = StagedRewrite.begin(spark, table)
-    fp_to_idx = {}
-    for i, e in enumerate(touched):
-        fp_to_idx[f"{prefix}{e.path}"] = i
-        fp_to_idx[prefix + e.path.replace(os.sep, "/")] = i
-    idx_b = spark.sparkContext.broadcast(fp_to_idx)
+    idx_b = spark.sparkContext.broadcast({e.path: i for i, e in enumerate(touched)})
 
     def _write_file(tbl):
         # applyInArrow, NOT applyInPandas: pandas turns an int64 column
@@ -169,8 +144,8 @@ def transform_where(
         import pyarrow.compute as pc
 
         pa.set_cpu_count(1)
-        tbl = tbl.sort_by([("_pos", "ascending")])
-        fidx = idx_b.value[tbl["_fp"][0].as_py()]
+        tbl = tbl.sort_by([(dv.POS, "ascending")])
+        fidx = idx_b.value[tbl["_path"][0].as_py()]
         n_hit = int(
             pc.sum(pc.fill_null(tbl["_hit"], False).cast(pa.int64())).as_py() or 0
         )
@@ -181,7 +156,7 @@ def transform_where(
     out_schema = "fidx long, updated long, " + STATS_SCHEMA
     out_cols = [c.split()[0] for c in out_schema.split(",")]
     with job.phase("write"):
-        out_rows = upd.groupBy("_fp").applyInArrow(_write_file, out_schema).collect()
+        out_rows = upd.groupBy("_path").applyInArrow(_write_file, out_schema).collect()
     with job.phase("publish"):
         new_entries = rw.publish(out_rows, lambda r: touched[r["fidx"]].partition)
     updated_rows = sum(int(r["updated"]) for r in out_rows)

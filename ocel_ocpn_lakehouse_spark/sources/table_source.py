@@ -74,6 +74,7 @@ try:  # present in PySpark >= 4.0.0; alias keeps a clear error if renamed
 except ImportError:  # pragma: no cover
     DataSourceStreamWriter = object  # type: ignore[assignment]
 
+from ..core import dv
 from ..core import manifests as mf
 from ..core import metadata as meta
 from ..core.table import (
@@ -105,8 +106,8 @@ def _pack_splits(
     cur: list[tuple[str, str, tuple[str, ...]]] = []
     cur_bytes = 0
     for e in sorted(entries, key=lambda x: x.path):
-        dv = tuple(os.path.join(root, d["path"]) for d in e.deletes)
-        cur.append((os.path.join(root, e.path), e.path, dv))
+        dvs = tuple(os.path.join(root, d["path"]) for d in e.deletes)
+        cur.append((os.path.join(root, e.path), e.path, dvs))
         cur_bytes += max(int(e.size_bytes), 1)
         if cur_bytes >= split_bytes:
             splits.append(InputPartition(tuple(cur)))
@@ -137,42 +138,38 @@ def _align_batch(batch, target_schema):
 
 
 def _read_split(files, target_schema, batch_rows: int):
-    """Yield aligned Arrow batches for one split. MoR files mask tombstoned
-    positions with a numpy boolean filter per batch (positions are
-    file-global row indices; ``iter_batches`` is sequential, so an offset
-    counter recovers them) — the executor-local mirror of the JVM scan's
+    """Yield aligned Arrow batches for one split; MoR files drop their
+    tombstoned positions — the executor-local mirror of the JVM scan's
     ``(_fp, _pos)`` anti-join."""
+    for abs_path, rel_path, dv_paths in files:
+        yield from _masked_batches(
+            abs_path, dv.positions(rel_path, dv_paths), False, target_schema, batch_rows
+        )
+
+
+def _masked_batches(abs_path: str, pos, keep: bool, target_schema, batch_rows: int):
+    """Aligned Arrow batches of one data file without the rows at ``pos``
+    (sorted, unique file-global row indices), or with only those rows when
+    ``keep``. ``iter_batches`` is sequential, so an offset counter recovers
+    each batch's positions; the mask is one numpy boolean filter per batch."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    for abs_path, rel_path, dv_paths in files:
-        drop = None
-        if dv_paths:
-            parts = []
-            for dp in dv_paths:
-                t = pq.read_table(dp, columns=["path", "pos"])
-                t = t.filter(pc.equal(t["path"], rel_path))
-                parts.append(t["pos"].to_numpy(zero_copy_only=False))
-            pos = np.unique(np.concatenate(parts)) if parts else np.array([], dtype=np.int64)
-            drop = pos if len(pos) else None
-        pf = pq.ParquetFile(abs_path)
-        have = set(pf.schema_arrow.names)
-        cols = [n for n in target_schema.names if n in have]
-        offset = 0
-        for b in pf.iter_batches(columns=cols, batch_size=batch_rows):
-            n = b.num_rows
-            if drop is not None:
-                lo = int(np.searchsorted(drop, offset))
-                hi = int(np.searchsorted(drop, offset + n))
-                if hi > lo:
-                    mask = np.ones(n, dtype=bool)
-                    mask[drop[lo:hi] - offset] = False
-                    b = b.filter(pa.array(mask))
-            offset += n
-            if b.num_rows:
-                yield _align_batch(b, target_schema)
+    pf = pq.ParquetFile(abs_path)
+    have = set(pf.schema_arrow.names)
+    cols = [n for n in target_schema.names if n in have]
+    offset = 0
+    for b in pf.iter_batches(columns=cols, batch_size=batch_rows):
+        n = b.num_rows
+        lo, hi = np.searchsorted(pos, [offset, offset + n])
+        if keep or hi > lo:
+            mask = np.full(n, not keep)
+            mask[pos[lo:hi] - offset] = keep
+            b = b.filter(pa.array(mask))
+        offset += n
+        if b.num_rows:
+            yield _align_batch(b, target_schema)
 
 
 def _to_arrow_schema(schema: T.StructType):
@@ -371,34 +368,10 @@ def _read_positions_split(files, dv_paths, target_schema, batch_rows: int):
     """Rows of ``files`` at EXACTLY the positions the delta DV files list
     for them (the MoR-delete / rollback-resurrect image) — the executor-
     local mirror of changelog_scan's ``rows_at`` semi-join."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    dv_tables = [pq.read_table(dp, columns=["path", "pos"]) for dp in dv_paths]
     for abs_path, rel_path in files:
-        parts = [
-            t.filter(pc.equal(t["path"], rel_path))["pos"].to_numpy(zero_copy_only=False)
-            for t in dv_tables
-        ]
-        keep = np.unique(np.concatenate(parts)) if parts else np.array([], dtype=np.int64)
-        if not len(keep):
-            continue
-        pf = pq.ParquetFile(abs_path)
-        have = set(pf.schema_arrow.names)
-        cols = [n for n in target_schema.names if n in have]
-        offset = 0
-        for b in pf.iter_batches(columns=cols, batch_size=batch_rows):
-            n = b.num_rows
-            lo = int(np.searchsorted(keep, offset))
-            hi = int(np.searchsorted(keep, offset + n))
-            if hi > lo:
-                mask = np.zeros(n, dtype=bool)
-                mask[keep[lo:hi] - offset] = True
-                sub = b.filter(pa.array(mask))
-                yield _align_batch(sub, target_schema)
-            offset += n
+        keep = dv.positions(rel_path, dv_paths)
+        if len(keep):
+            yield from _masked_batches(abs_path, keep, True, target_schema, batch_rows)
 
 
 class _TableStreamReader(DataSourceStreamReader):
@@ -658,7 +631,7 @@ class _FilesWritten(WriterCommitMessage):
     # each element: ManifestEntry fields as a plain dict (jsonable/picklable)
     entries: tuple
     # merge-keys upsert only: (task DV rel path | None,
-    #   ((data path, tombstoned rows), ...), ((data path, #DVs at probe), ...))
+    #   ((data path, #DVs at probe), ...))
     dv: tuple = ()
 
 
@@ -732,7 +705,7 @@ class _TableArrowWriter(DataSourceArrowWriter):
         if not batches:
             return _FilesWritten(())
         tbl = pa.Table.from_batches(batches)
-        keys = set(tbl[self.merge_key].to_pylist()) if self.merge_key else None
+        keys = tbl[self.merge_key].to_pylist() if self.merge_key else None
         groups: list[tuple[dict, pa.Table]]
         if not self.spec_fields:
             groups = [({}, tbl)]
@@ -772,7 +745,7 @@ class _TableArrowWriter(DataSourceArrowWriter):
         name = f"{uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(destdir, name)
         writer = None
-        keys: set | None = set() if self.merge_key else None
+        keys: list | None = [] if self.merge_key else None
         try:
             for b in iterator:
                 if not b.num_rows:
@@ -780,7 +753,7 @@ class _TableArrowWriter(DataSourceArrowWriter):
                 if writer is None:
                     writer = pq.ParquetWriter(abs_path, b.schema)
                 if keys is not None:
-                    keys.update(b.column(self.merge_key).to_pylist())
+                    keys.extend(b.column(self.merge_key).to_pylist())
                 writer.write_batch(b)
         finally:
             if writer is not None:
@@ -789,10 +762,18 @@ class _TableArrowWriter(DataSourceArrowWriter):
             return _FilesWritten(())
         return self._finish([self._entry_for(abs_path, {})], keys)
 
-    def _finish(self, entries: list, keys: set | None) -> WriterCommitMessage:
+    def _finish(self, entries: list, keys: list | None) -> WriterCommitMessage:
         if not self.merge_key:
             return _FilesWritten(tuple(entries))
-        return _FilesWritten(tuple(entries), self._probe_merge_tombstones(keys or set()))
+        nonnull = [k for k in keys or () if k is not None]
+        uniq = set(nonnull)
+        if len(uniq) != len(nonnull):
+            self._unlink([_FilesWritten(tuple(entries))])
+            raise ValueError(
+                f"merge-keys: duplicate {self.merge_key} values in one write "
+                "task; each key may appear in at most one source row"
+            )
+        return _FilesWritten(tuple(entries), self._probe_merge_tombstones(uniq))
 
     def _probe_merge_tombstones(self, keys: set) -> tuple:
         """Executor-side half of the merge-keys upsert (MoR MERGE through
@@ -800,19 +781,20 @@ class _TableArrowWriter(DataSourceArrowWriter):
         files whose partition/bounds/Bloom can hold any of THIS task's
         keys, then read just the key column of each candidate to collect
         (path, pos) tombstones — excluding positions earlier DVs already
-        killed. Work per task ∝ its keys' candidate files, never O(table);
-        the driver only ever sees per-file counts. Tasks probe
+        killed — into one task DV fragment. Work per task ∝ its keys'
+        candidate files, never O(table); the driver reads back only the
+        fragments' tombstones. Tasks probe
         independently (no coordination), so a file hot across many tasks
         pays one pruned key-column read per task — the price of reusing
         Spark's writer exchange; pipelines that pre-partition by key
         should call maintenance.merge.merge_into directly."""
         import numpy as np
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        keys = {k for k in keys if k is not None}
         if not keys or self.merge_snapshot is None:
-            return (None, (), ())
+            return (None, ())
         table = Table(self.root, meta.load_metadata(self.root))
         entries = table.live_entries(snapshot_id=self.merge_snapshot)
         preds = prepare_predicates(
@@ -820,61 +802,30 @@ class _TableArrowWriter(DataSourceArrowWriter):
         )
         cand = [e for e in entries if entry_matches(e, preds)]
         if not cand:
-            return (None, (), ())
-        import pyarrow as pa
+            return (None, ())
 
         value_set = pa.array(sorted(keys))
-        paths_out, pos_out, counts, expected = [], [], {}, {}
+        paths_out, pos_out, expected = [], [], {}
         for e in cand:
             expected[e.path] = len(e.deletes)
-            dead = set()
-            for d in e.deletes:
-                dv = pq.read_table(
-                    os.path.join(self.root, d["path"]), columns=["path", "pos"]
-                )
-                dv = dv.filter(pc.equal(dv["path"], e.path))
-                dead.update(dv["pos"].to_pylist())
             pf = pq.ParquetFile(os.path.join(self.root, e.path))
             if self.merge_key not in pf.schema_arrow.names:
                 continue
             offset = 0
-            hit_pos = []
+            hits = []
             for b in pf.iter_batches(columns=[self.merge_key], batch_size=DEFAULT_BATCH_ROWS):
-                mask = (
-                    pc.is_in(b.column(0), value_set=value_set)
-                    .fill_null(False)
-                    .to_numpy(zero_copy_only=False)
-                )
-                for i in np.nonzero(mask)[0]:
-                    p = offset + int(i)
-                    if p not in dead:
-                        hit_pos.append(p)
+                mask = pc.is_in(b.column(0), value_set=value_set).fill_null(False)
+                hits.append(np.flatnonzero(mask.to_numpy(zero_copy_only=False)) + offset)
                 offset += b.num_rows
-            if hit_pos:
-                counts[e.path] = len(hit_pos)
+            dead = dv.positions(e.path, [os.path.join(self.root, d["path"]) for d in e.deletes])
+            hit_pos = np.setdiff1d(np.concatenate(hits or [np.empty(0, np.int64)]), dead)
+            if len(hit_pos):
                 paths_out.extend([e.path] * len(hit_pos))
-                pos_out.extend(hit_pos)
-        if not pos_out:
-            return (None, (), tuple(sorted(expected.items())))
-        destdir = os.path.join(self.root, DATA_DIR, "_deletes")
-        os.makedirs(destdir, exist_ok=True)
-        name = f"dv-task-{uuid.uuid4().hex[:12]}.parquet"
-        abs_path = os.path.join(destdir, name)
-        order = np.lexsort((np.array(pos_out), np.array(paths_out)))
-        pq.write_table(
-            pa.table(
-                {
-                    "path": pa.array(np.array(paths_out)[order]),
-                    "pos": pa.array(np.array(pos_out)[order], type=pa.int64()),
-                }
-            ),
-            abs_path,
-        )
-        return (
-            os.path.relpath(abs_path, self.root),
-            tuple(sorted(counts.items())),
-            tuple(sorted(expected.items())),
-        )
+                pos_out.append(hit_pos)
+        if not paths_out:
+            return (None, tuple(sorted(expected.items())))
+        rel, _ = dv.write(self.root, paths_out, np.concatenate(pos_out))
+        return (rel, tuple(sorted(expected.items())))
 
     def _write_one(self, partition: dict, tbl) -> dict:
         import pyarrow.parquet as pq
@@ -942,49 +893,33 @@ class _TableArrowWriter(DataSourceArrowWriter):
 
     def _commit_merge(self, table: Table, entries, messages) -> None:
         """Driver half of the merge-keys upsert: consolidate the task DV
-        fragments into ONE (path, pos)-sorted delete vector (dropping
-        duplicate positions — two source rows carrying the same key may
-        have probed the same target row from different tasks), then land
+        fragments into ONE (path, pos)-sorted delete vector, then land
         tombstones + upsert files in a single MERGE snapshot via
         commit_delete_vectors — the same atomicity contract as
-        maintenance.merge.merge_into(strategy='mor'). Driver work is
-        O(this batch's matched rows), the delete_where DV shape."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+        maintenance.merge.merge_into(strategy='mor'). Two task hits on one
+        (path, pos) mean two source rows matched one target row: that
+        raises, and Spark's abort removes every file the tasks wrote.
+        Driver work is O(this batch's matched rows), the delete_where DV
+        shape."""
         task_dvs, expected = [], {}
         for m in messages or []:
             if m is None or not m.dv:
                 continue
-            dv_path, _counts, exp = m.dv
+            dv_path, exp = m.dv
             if dv_path:
                 task_dvs.append(os.path.join(self.root, dv_path))
             for p, n in exp:
                 expected[p] = n
         dv_rel, counts = None, {}
         if task_dvs:
-            frags = pa.concat_tables(
-                [pq.read_table(p, columns=["path", "pos"]) for p in task_dvs]
-            )
-            paths = np.asarray(frags["path"].to_pylist())
-            pos = frags["pos"].to_numpy(zero_copy_only=False)
-            pairs = np.unique(np.rec.fromarrays([paths, pos]))
-            dest = os.path.join(
-                self.root, DATA_DIR, "_deletes", f"dv-{uuid.uuid4().hex[:12]}.parquet"
-            )
-            pq.write_table(
-                pa.table(
-                    {
-                        "path": pa.array(pairs["f0"]),
-                        "pos": pa.array(pairs["f1"], type=pa.int64()),
-                    }
-                ),
-                dest,
-            )
-            uniq_paths, uniq_counts = np.unique(pairs["f0"], return_counts=True)
-            counts = {str(p): int(n) for p, n in zip(uniq_paths, uniq_counts)}
-            dv_rel = os.path.relpath(dest, self.root)
+            hits = dv.read(task_dvs)
+            dv_rel, counts = dv.write(self.root, hits["path"], hits["pos"])
+            if sum(counts.values()) != hits.num_rows:
+                os.unlink(os.path.join(self.root, dv_rel))
+                raise ValueError(
+                    f"merge-keys: several source rows matched one target row "
+                    f"(duplicate {self.merge_key} values across write tasks)"
+                )
             for p in task_dvs:
                 try:
                     os.unlink(p)
@@ -1007,7 +942,7 @@ class _TableArrowWriter(DataSourceArrowWriter):
 
     def abort(self, messages) -> None:
         self._unlink(messages)
-        # also drop any task DV fragments staged under data/_deletes
+        # also drop the task DV fragments
         for m in messages or []:
             if m is None or not getattr(m, "dv", None):
                 continue
@@ -1147,7 +1082,16 @@ class LakehouseDataSource(DataSource):
         plain append into a MERGE upsert: rows whose key already exists
         replace the old rows (MoR tombstones + inserts in one snapshot) —
         the Spark-native spelling of maintenance.merge.merge_into for a
-        user who only knows the DataFrame writer."""
+        user who only knows the DataFrame writer.
+
+        Each key may appear in at most one source row. A key repeated
+        inside one write task fails that task, and two tasks whose rows
+        match the same target row fail the commit (Iceberg's "multiple
+        source rows matched one target row"); nothing commits either way.
+        One case is not caught: a key repeated across tasks that matches
+        no target row is inserted once per task, because tasks never see
+        each other's keys. Use merge_into (which checks the whole source)
+        when the source may repeat keys."""
         mk = self.options.get("merge-keys")
         if not mk:
             return None

@@ -149,11 +149,14 @@ def test_delete_keys_bucket_pruning_idempotence(spark, warehouse):
     assert res2["status"] == "no-matches" and res2["deleted_rows"] == 0
 
 
-def test_delete_keys_shuffle_path_matches_broadcast(spark, warehouse):
+def test_delete_keys_shuffle_path_matches_broadcast(spark, warehouse, monkeypatch):
+    from ocel_ocpn_lakehouse_spark.maintenance import merge
+
     _, t = _table(spark, warehouse, n_rows=120, n_files=6)
     ids = sorted(_ids(t.scan(spark)))[:7]
     keys = spark.createDataFrame([(i,) for i in ids], "image_id string")
-    res = delete_keys(spark, t, keys, key_col="image_id", broadcast_max_rows=1)
+    monkeypatch.setattr(merge, "BROADCAST_THRESHOLD_ROWS", 1)
+    res = delete_keys(spark, t, keys, key_col="image_id")
     assert res["status"] == "deleted" and res["deleted_rows"] == len(ids)
     assert not _ids(t.scan(spark)) & set(ids)
 

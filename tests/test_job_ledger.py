@@ -68,7 +68,7 @@ def test_merge_auto_planning_schedules_no_entries_df_job(spark, warehouse, monke
         raise AssertionError("merge_into read entries_df")
 
     monkeypatch.setattr(Table, "entries_df", _boom)
-    res = merge_into(spark, t, src, planning="auto", strategy=strategy,
+    res = merge_into(spark, t, src, strategy=strategy,
                      sys_tables=SystemTables(cat.warehouse), table_name=NAME)
     assert res["status"] == "committed"
 

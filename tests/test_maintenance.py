@@ -250,7 +250,7 @@ def test_merge_upsert_delete_against_oracle(spark, warehouse):
     assert t.scan(spark, snapshot_id=pre_snap).count() == 200
 
 
-def test_merge_distributed_planning_parity(spark, warehouse):
+def test_merge_distributed_planning_parity(spark, warehouse, monkeypatch):
     """Forced-distributed merge planning (entries_df, no driver manifest
     materialization) commits the identical post-merge table state as the
     default driver planner on a second identical table."""
@@ -260,7 +260,9 @@ def test_merge_distributed_planning_parity(spark, warehouse):
         cat, t = fragmented_table(
             spark, warehouse, name=f"ocel.m_{planning}", n_rows=200, n_files=10
         )
-        res = merge_into(spark, t, source, key="image_id", planning=planning)
+        if planning == "distributed":
+            monkeypatch.setitem(t.md.properties, "scan.plan-distributed-threshold", "0")
+        res = merge_into(spark, t, source, key="image_id")
         assert res["status"] == "committed"
         t.refresh()
         states[planning] = (
@@ -335,7 +337,7 @@ def test_cluster_auto_routing_schedules_no_count_job(spark, warehouse, monkeypat
     assert column_checksums(t.scan(spark)) == before
 
 
-def test_cluster_distributed_planning_parity(spark, warehouse):
+def test_cluster_distributed_planning_parity(spark, warehouse, monkeypatch):
     """planning='distributed' (entries stay in entries_df; the driver sees
     one aggregate row per partition and commits replace_all against the
     planned snapshot) must produce the same data AND the same file layout
@@ -344,20 +346,15 @@ def test_cluster_distributed_planning_parity(spark, warehouse):
     placement."""
     cat, t = fragmented_table(spark, warehouse)
     before = column_checksums(t.scan(spark))
-    execute_cluster(
-        spark, t, SystemTables(cat.warehouse), "ocel.images",
-        curve="zorder", planning="driver",
-    )
+    execute_cluster(spark, t, SystemTables(cat.warehouse), "ocel.images", curve="zorder")
     t.refresh()
     drv_entries = t.live_entries()
     assert column_checksums(t.scan(spark)) == before
 
     cat2, t2 = fragmented_table(spark, warehouse + "_dist")
-    res = execute_cluster(
-        spark, t2, SystemTables(cat2.warehouse), "ocel.images",
-        curve="zorder", planning="distributed",
-    )
-    assert res["status"] == "committed"
+    monkeypatch.setitem(t2.md.properties, "scan.plan-distributed-threshold", "0")
+    res = execute_cluster(spark, t2, SystemTables(cat2.warehouse), "ocel.images", curve="zorder")
+    assert res["status"] == "committed" and res["planning"] == "distributed"
     t2.refresh()
     dist_entries = t2.live_entries()
     assert column_checksums(t2.scan(spark)) == before
@@ -931,7 +928,7 @@ def test_cluster_bounds_cap_counts_the_pool_of_every_partition(spark, warehouse,
     real = F.percentile_approx
     monkeypatch.setattr(F, "percentile_approx", lambda *a, **k: calls.append(1) or real(*a, **k))
     monkeypatch.setattr(cluster_mod, "BOUNDS_EXACT_MAX_SAMPLES", max(ests))
-    r = execute_cluster(spark, t, SystemTables(cat.warehouse), "ocel.images", planning="driver")
+    r = execute_cluster(spark, t, SystemTables(cat.warehouse), "ocel.images")
     assert r["status"] == "committed"
     assert calls  # the sketch path ran
     assert column_checksums(t.refresh().scan(spark)) == want

@@ -131,7 +131,7 @@ def test_cluster_absorbs_delete_vectors(spark, warehouse):
     assert sum(e.record_count for e in live) == want["_n"]
 
 
-def test_cluster_distributed_planning_absorbs_dvs(spark, warehouse):
+def test_cluster_distributed_planning_absorbs_dvs(spark, warehouse, monkeypatch):
     """The distributed cluster planner builds each file's DV reference with
     SQL JSON expressions over entries_df (no driver manifests); forced
     distributed planning on a tombstoned table must produce the same rows
@@ -141,11 +141,9 @@ def test_cluster_distributed_planning_absorbs_dvs(spark, warehouse):
     t = t.refresh()
     want = checksum(t.scan(spark))
 
-    r = execute_cluster(
-        spark, t, SystemTables(cat.warehouse), "ocel.images",
-        curve="zorder", planning="distributed",
-    )
-    assert r["status"] == "committed"
+    monkeypatch.setitem(t.md.properties, "scan.plan-distributed-threshold", "0")
+    r = execute_cluster(spark, t, SystemTables(cat.warehouse), "ocel.images", curve="zorder")
+    assert r["status"] == "committed" and r["planning"] == "distributed"
     t = t.refresh()
     assert all(not e.deletes for e in t.live_entries())
     assert checksum(t.scan(spark)) == want
@@ -415,7 +413,9 @@ def test_dv_commit_conflicts_with_concurrent_rewrite(spark, warehouse):
 
 def test_apply_delete_vectors_property():
     """Arrow-side mask == set difference for arbitrary position sets,
-    including duplicates across stacked DVs (idempotent)."""
+    including duplicates across stacked DVs (idempotent) — for the
+    whole-table mask, the position reader it builds on, and the data
+    source's batch-wise split reader (batches smaller than the file)."""
     import os
     import tempfile
 
@@ -425,7 +425,8 @@ def test_apply_delete_vectors_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from ocel_ocpn_lakehouse_spark.core import manifests as mf
+    from ocel_ocpn_lakehouse_spark.core import dv
+    from ocel_ocpn_lakehouse_spark.sources.table_source import _read_split
 
     @settings(max_examples=25, deadline=None)
     @given(
@@ -453,9 +454,19 @@ def test_apply_delete_vectors_property():
                 ),
                 dvb,
             )
-            out = mf.apply_delete_vectors(tbl, "f.parquet", [dva, dvb])
+            out = dv.apply_delete_vectors(tbl, "f.parquet", [dva, dvb])
+            dead = dv.positions("f.parquet", [dva, dvb])
+            data = os.path.join(d, "f.parquet")
+            pq.write_table(tbl, data)
+            split = pa.Table.from_batches(
+                list(_read_split([(data, "f.parquet", (dva, dvb))], tbl.schema, 7)),
+                schema=tbl.schema,
+            )
         expect = sorted(set(range(n)) - set(pos_a) - set(pos_b))
         assert out["v"].to_pylist() == expect
+        assert dead.dtype == np.int64
+        assert dead.tolist() == sorted(set(pos_a) | set(pos_b))
+        assert split["v"].to_pylist() == expect
 
     check()
 
@@ -521,7 +532,7 @@ def test_dv_broadcast_threshold_is_size_based(spark, warehouse, monkeypatch):
     set 'wider' than DV_BROADCAST_MAX_BYTES must route to a shuffle join
     (a row-count cutoff would happily broadcast hundreds of MB of long
     paths to every executor)."""
-    from ocel_ocpn_lakehouse_spark.core import table as table_mod
+    from ocel_ocpn_lakehouse_spark.core import dv
 
     _, t = _table(spark, warehouse)
     delete_where(spark, t, "w = 32")
@@ -540,7 +551,7 @@ def test_dv_broadcast_threshold_is_size_based(spark, warehouse, monkeypatch):
         # under the threshold: DV side is broadcast via the engine hint
         assert "BroadcastHashJoin" in _plan(t.scan(spark))
         # shrink the threshold below the real DV file size: shuffle join
-        monkeypatch.setattr(table_mod, "DV_BROADCAST_MAX_BYTES", 1)
+        monkeypatch.setattr(dv, "DV_BROADCAST_MAX_BYTES", 1)
         no_bcast = t.scan(spark)
         assert "BroadcastHashJoin" not in _plan(no_bcast)
         # identical results either way
@@ -588,3 +599,79 @@ def test_conflict_retry_replans_and_commits(spark, warehouse):
 
     with _pytest.raises(meta.ConflictError, match="permanent feud"):
         run_with_conflict_retry(always_stale, t, retries=1)
+
+
+def _explain(df):
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def test_tombstone_exclusion_respects_dv_broadcast_cap(spark, warehouse, monkeypatch):
+    """A delete on an already-tombstoned table leaves out the positions
+    earlier DVs list through the same size rule MoR scans follow: with the
+    DV side above DV_BROADCAST_MAX_BYTES the plan broadcasts no DV, and
+    exactly the not-yet-deleted matches die."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ocel_ocpn_lakehouse_spark.core import dv
+
+    _, t = _table(spark, warehouse, n_files=6)
+    assert delete_where(spark, t, "w = 32")["deleted_rows"] > 0
+    t = t.refresh()
+    before = _ids(t.scan(spark))
+    w16 = _ids(t.scan(spark).filter("w = 16"))
+    assert w16
+
+    plans = []
+    real = DataFrameWriter.parquet
+
+    def _spy(self, path, *a, **k):
+        plans.append(_explain(self._df))
+        return real(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", _spy)
+    monkeypatch.setattr(dv, "DV_BROADCAST_MAX_BYTES", 0)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        res = delete_where(spark, t, "w IN (16, 32)")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert len(plans) == 1 and "BroadcastHashJoin" not in plans[0]
+    assert "SortMergeJoin" in plans[0]
+    assert res["deleted_rows"] == len(w16)
+    assert _ids(t.refresh().scan(spark)) == before - w16
+
+
+def test_op_position_scans_read_in_bounded_unions(spark, warehouse, monkeypatch):
+    """delete_where, MoR merge_into and transform_where over more files
+    than SCAN_READ_BATCH read them in bounded unions and land the same
+    rows, tombstones and rewrites as the default single-reader run."""
+    from ocel_ocpn_lakehouse_spark.core import dv
+    from ocel_ocpn_lakehouse_spark.maintenance.transform import transform_where
+
+    def run(wh):
+        _, t = _table(spark, wh, n_files=6)
+        out = [delete_where(spark, t, "w = 32")["deleted_rows"]]
+        t = t.refresh()
+        keys = sorted(_ids(t.scan(spark)))[:8]
+        src = (
+            t.scan(spark).filter(F.col("image_id").isin(keys))
+            .withColumn("caption", F.lit("merged")).withColumn("_op", F.lit("upsert"))
+        )
+        out.append(merge_into(spark, t, src, strategy="mor")["tombstoned_rows"])
+        t = t.refresh()
+        r = transform_where(spark, t, "w = 16", {"caption": "concat(caption, '!')"})
+        out.append((r["updated_rows"], r["rewritten_files"], r["untouched_files"]))
+        t = t.refresh()
+        live = t.live_entries()
+        return out, checksum(t.scan(spark)), len(live), sum(e.live_count for e in live)
+
+    want = run(warehouse + "_one")
+    monkeypatch.setattr(dv, "SCAN_READ_BATCH", 2)
+    _, t = _table(spark, warehouse + "_probe", n_files=6)
+    paths = [e.path for e in t.live_entries()]
+    assert len(paths) > 2
+    plan = _explain(dv.scan(spark, t.root, t.schema, paths, ["w"]))
+    assert plan.count("Union") >= 1
+    got = run(warehouse + "_batched")
+    assert got == want

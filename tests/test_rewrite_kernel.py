@@ -133,7 +133,7 @@ def test_cluster_runs_three_stages_and_incremental_two(spark, warehouse):
     cluster route and merge (one delta read)."""
     st, t = _multi_file_table(spark, warehouse)
     res, n = _stages_of(spark, "stages-cluster", lambda: execute_cluster(
-        spark, t, st, "ocel.images", planning="driver"))
+        spark, t, st, "ocel.images"))
     assert res["status"] == "committed" and n == 3
     t.refresh()
     assert len({str(e.partition) for e in t.live_entries()}) < len(t.live_entries())

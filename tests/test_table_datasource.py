@@ -855,3 +855,51 @@ def test_every_commit_kind_summarizes_bytes_and_bytes_cap_paces_overwrite(
         batches.append((start, end))
         start = end
     assert (ow.snapshot_id - 1, ow.snapshot_id) in batches
+
+
+def test_duplicate_source_keys_raise(registered, tmp_path, monkeypatch):
+    """A MERGE source that repeats a key raises instead of leaving
+    duplicate rows: merge_into (cow and mor, broadcast and huge-source
+    routes) checks the whole source; the merge-keys writer fails a task
+    that holds a key twice, and a commit where two tasks matched one
+    target row. Nothing commits and no written file is left behind."""
+    import datetime
+
+    from ocel_ocpn_lakehouse_spark.maintenance import merge
+
+    spark = registered
+    t = _make_table(spark, tmp_path, name="ns.dupk", rows=20, files=2)
+    snap = t.current_snapshot().snapshot_id
+    files = {e.path for e in t.live_entries()}
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [(5, "a", ts), (5, "b", ts), (40, "c", ts)]
+    src = spark.createDataFrame(rows, SCHEMA)
+
+    for strategy in ("cow", "mor"):
+        with pytest.raises(ValueError, match="duplicate id values \\[5\\]"):
+            merge.merge_into(
+                spark, t, src.withColumn("_op", F.lit("upsert")), key="id", strategy=strategy
+            )
+    monkeypatch.setattr(merge, "BROADCAST_THRESHOLD_ROWS", 0)  # huge-source route
+    with pytest.raises(ValueError, match="duplicate id values \\[5\\]"):
+        merge.merge_into(spark, t, src.withColumn("_op", F.lit("upsert")), key="id")
+
+    writer = src.coalesce(1).write.format("lakehouse").option("merge-keys", "id")
+    with pytest.raises(Exception, match="duplicate id values in one write task"):
+        writer.mode("append").save(t.root)
+    # key 5 once in each of two tasks: both tasks tombstone the same row
+    two = spark.createDataFrame(spark.sparkContext.parallelize(rows[:2], 2), SCHEMA)
+    writer = two.write.format("lakehouse").option("merge-keys", "id")
+    with pytest.raises(Exception, match="several source rows matched one target row"):
+        writer.mode("append").save(t.root)
+
+    t = t.refresh()
+    assert t.current_snapshot().snapshot_id == snap
+    assert sorted(r["id"] for r in t.scan(spark).collect()) == list(range(20))
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), t.root)
+        for d, _, fs in os.walk(os.path.join(t.root, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == files  # data files and DV fragments alike
