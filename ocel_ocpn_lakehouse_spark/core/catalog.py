@@ -29,9 +29,6 @@ class Catalog:
         parts = ([ns] if ns else []) + [name]
         return os.path.join(self.warehouse, *parts)
 
-    def create_namespace(self, ns: str) -> None:
-        os.makedirs(os.path.join(self.warehouse, ns), exist_ok=True)
-
     def table_exists(self, identifier: str) -> bool:
         return meta.current_version(self._root(identifier)) is not None
 

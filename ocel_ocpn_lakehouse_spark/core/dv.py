@@ -12,14 +12,19 @@ read for one of them.
 Arrow side (driver and task code):
   :func:`positions`             one file's tombstones, path pushdown
   :func:`apply_delete_vectors`  a file's full row set minus its tombstones
+  :func:`probe`                 the one key probe: each file's live rows
+                                whose key is in a key set (MERGE, delete_keys
+                                and the merge-keys writer)
   :func:`read` / :func:`write`  whole DVs in, one sorted DV out
+  :func:`write_fragment`        one probe task's hits as one DV fragment
+  :func:`consolidate`           task fragments into the one DV a commit lands
 
-Spark side: a scan names a row by ``(_fp, _pos)``, Spark's
-``_metadata.file_path`` URI and ``_metadata.row_index``.
+Spark side: a scan names a row by ``(_fp, _pos)``: its data file's path
+relative to the table root, decoded from Spark's percent-encoded
+``_metadata.file_path`` URI, and ``_metadata.row_index``.
   :func:`scan`          the one ``_metadata`` projection of data files
   :func:`frame`         DV rows as ``(_fp, _pos)``, broadcast when small
   :func:`live`          rows of a scan that no DV of theirs tombstones
-  :func:`rel`           ``_fp`` back to a table-relative path
   :func:`write_groups`  the staged, sorted write of one DV per group
   :func:`write_hits`    its single-group case for new tombstones
 """
@@ -30,20 +35,25 @@ import glob
 import os
 import shutil
 import uuid
-from typing import Iterable, Sequence
+from typing import Iterable, Iterator, Sequence
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import manifests as mf
 
 SUBDIR = os.path.join("data", "_deletes")
 ARROW_SCHEMA = pa.schema([("path", pa.string()), ("pos", pa.int64())])
 # reads pass the schema explicitly so no footer-inference job runs per read
 SCHEMA = "path string, pos long"
 FP, POS = "_fp", "_pos"
+# what :func:`probe` counts: files it read, and files it skipped on bounds
+# or Bloom evidence alone
+PROBE_STATS = ("files_read", "skipped_by_bounds", "skipped_by_bloom")
 
 # DV sides of a join are broadcast only below this on-disk size; the
 # 10^12-row design point can accumulate GB-scale DV sets between
@@ -120,12 +130,85 @@ def write(root: str, paths, pos) -> tuple[str, dict[str, int]]:
     return rel, _path_counts(t["path"].chunks)
 
 
+def probe(
+    root: str, entries: Iterable[mf.ManifestEntry], keys, arrow_schema, stats: dict
+) -> Iterator[tuple[mf.ManifestEntry, np.ndarray]]:
+    """The one key probe: ``(entry, positions)`` for every entry whose file
+    holds a live row with its key in ``keys`` (a prepared ``in``
+    :class:`~.table.PrunePredicate` on the key column), the positions
+    sorted. Prunes in cost order, counting into ``stats``: (1) the manifest
+    key bounds (``skipped_by_bounds``), (2) the manifest Bloom filter
+    (``skipped_by_bloom``; absence = might-contain), then (3) reads the key
+    column alone (``files_read``; null-filled when the file predates the
+    column) and (4) leaves out the positions the entry's DVs already
+    tombstone."""
+    import pyarrow.compute as pc
+
+    from .table import _bounds_overlap
+
+    key = keys.column
+    value_set = pa.array(
+        [k for k in keys.value if k is not None], type=arrow_schema.field(key).type
+    )
+    for e in entries:
+        if not _bounds_overlap(keys, e.lower_bounds.get(key), e.upper_bounds.get(key)):
+            stats["skipped_by_bounds"] += 1
+            continue
+        if not mf.bloom_any_contains(e.blooms.get(key), keys.key_hashes):
+            stats["skipped_by_bloom"] += 1
+            continue
+        stats["files_read"] += 1
+        col = mf.read_table_nullfill(os.path.join(root, e.path), arrow_schema, columns=[key])[key]
+        hit = np.flatnonzero(
+            pc.is_in(col, value_set=value_set).fill_null(False).to_numpy(zero_copy_only=False)
+        )
+        if e.deletes and len(hit):
+            dead = positions(e.path, [os.path.join(root, d["path"]) for d in e.deletes])
+            hit = np.setdiff1d(hit, dead, assume_unique=True)
+        if len(hit):
+            yield e, hit
+
+
+def write_fragment(root: str, hits: Sequence[tuple[mf.ManifestEntry, np.ndarray]]) -> str | None:
+    """Write :func:`probe` hits as one DV fragment; its root-relative path,
+    or None when there are no hits."""
+    if not hits:
+        return None
+    paths = [e.path for e, pos in hits for _ in range(len(pos))]
+    return write(root, paths, np.concatenate([pos for _, pos in hits]))[0]
+
+
+def consolidate(root: str, fragments: Sequence[str]) -> tuple[str | None, dict[str, int]]:
+    """Merge the DV fragments ``fragments`` (root-relative) into one DV, so
+    a commit lands one DV however many tasks probed. Returns its
+    root-relative path and per-file counts, or (None, {}) when there are
+    no fragments. The fragments are removed either way. Raises ValueError
+    when two fragments tombstone the same row: two source rows matched one
+    target row."""
+    if not fragments:
+        return None, {}
+    abs_paths = [os.path.join(root, f) for f in fragments]
+    try:
+        hits = read(abs_paths)
+        rel, counts = write(root, hits["path"], hits["pos"])
+    finally:
+        for p in abs_paths:
+            try:
+                os.unlink(p)
+            except OSError:
+                pass
+    if sum(counts.values()) != hits.num_rows:
+        os.unlink(os.path.join(root, rel))
+        raise ValueError("several source rows matched one target row")
+    return rel, counts
+
+
 # ---- Spark side -------------------------------------------------------------
 
 
-def _fp_prefix(root: str) -> str:
-    # _metadata.file_path is a file: URI of the absolute path
-    return f"file:{root}{os.sep}"
+def _prefix_len(root: str) -> int:
+    """Length of the decoded ``file:`` URI prefix of a data file under ``root``."""
+    return len(f"file:{root}{os.sep}")
 
 
 def scan(
@@ -138,14 +221,25 @@ def scan(
     """``(_fp, _pos, *cols)`` rows of the data files ``rel_paths``. One
     reader per ``SCAN_READ_BATCH`` paths, unioned, so Spark's file index
     grows in bounded steps (``_metadata`` must be projected per reader: a
-    union does not carry it)."""
+    union does not carry it).
+
+    ``_fp`` is the row's root-relative data-file path, as manifests and DVs
+    spell it. Spark's ``_metadata.file_path`` is the file's URI, with a
+    space, ``%`` and ``#`` percent-encoded but ``+`` kept; ``url_decode``
+    alone would turn that ``+`` into a space, so ``+`` is escaped first.
+    Decoding here is what lets a root or partition value hold any of those
+    characters."""
+    fp = F.expr(
+        f"substring(url_decode(replace(_metadata.file_path, '+', '%2B')), "
+        f"{_prefix_len(root) + 1})"
+    )
     out: DataFrame | None = None
     for i in range(0, len(rel_paths), SCAN_READ_BATCH):
         part = (
             spark.read.schema(schema)
             .parquet(*[os.path.join(root, p) for p in rel_paths[i : i + SCAN_READ_BATCH]])
             .select(
-                F.col("_metadata.file_path").alias(FP),
+                fp.alias(FP),
                 F.col("_metadata.row_index").alias(POS),
                 *cols,
             )
@@ -161,8 +255,7 @@ def rows(spark: SparkSession, root: str, dv_rel: Sequence[str]) -> DataFrame:
 
 def frame(spark: SparkSession, root: str, dv_rel: Sequence[str]) -> DataFrame:
     """Tombstones of the DV files ``dv_rel`` as ``(_fp, _pos)``, ready to
-    join a :func:`scan`. The tiny DV side is normalised to ``_fp`` URIs
-    rather than rewriting every data row's path string.
+    join a :func:`scan`.
 
     Broadcast by estimated BYTES, not row count: 5M rows of long paths
     is a multi-hundred-MB payload shipped to every executor. The DV
@@ -172,10 +265,7 @@ def frame(spark: SparkSession, root: str, dv_rel: Sequence[str]) -> DataFrame:
     An unknown file size forces the shuffle route outright (a cap-sized
     increment would still pass the <= check when it is the only DV file).
     """
-    dv = rows(spark, root, dv_rel).select(
-        F.concat(F.lit(_fp_prefix(root)), F.col("path")).alias(FP),
-        F.col("pos").alias(POS),
-    )
+    dv = rows(spark, root, dv_rel).select(F.col("path").alias(FP), F.col("pos").alias(POS))
     dv_bytes = 0
     for p in dv_rel:
         try:
@@ -194,11 +284,6 @@ def live(spark: SparkSession, root: str, df: DataFrame, entries) -> DataFrame:
     if not dv_rel:
         return df
     return df.join(frame(spark, root, dv_rel), [FP, POS], "left_anti")
-
-
-def rel(root: str) -> Column:
-    """The table-relative data-file path of a scan row's ``_fp``."""
-    return F.expr(f"substring({FP}, {len(_fp_prefix(root)) + 1})")
 
 
 def write_groups(
@@ -247,6 +332,6 @@ def write_hits(
     Returns (rel DV path, per-file counts), or (None, {}) when nothing is
     left."""
     hits = live(spark, root, hits, entries).select(
-        F.lit(0).alias("grp"), rel(root).alias("path"), F.col(POS).alias("pos")
+        F.lit(0).alias("grp"), F.col(FP).alias("path"), F.col(POS).alias("pos")
     )
     return write_groups(root, stage, hits.coalesce(1), 1).get(0, (None, {}))

@@ -165,11 +165,19 @@ def entry_matches(e: mf.ManifestEntry, preds: Sequence[PrunePredicate]) -> bool:
 
 
 def _bounds_overlap(pred: PrunePredicate, lower, upper) -> bool:
-    """Conservative: True (keep file) unless bounds prove no row matches."""
+    """Conservative: True (keep file) unless bounds prove no row matches.
+    Manifest bounds are JSON-decoded, so a bound JSON could not hold
+    arrives as a string (``default=str``): it is coerced to the type of the
+    values it is compared with. Any doubt (missing bounds, a failed
+    coercion, a cross-type comparison) keeps the file."""
     if lower is None or upper is None:
         return True
     v = pred.value
+    sv = pred.sorted_values
+    like = (sv[0] if sv else None) if pred.op == "in" else v
     try:
+        if like is not None and not isinstance(like, str):
+            lower, upper = (type(like)(b) if isinstance(b, str) else b for b in (lower, upper))
         if pred.op == "=":
             return lower <= v <= upper
         if pred.op == "<":
@@ -181,14 +189,13 @@ def _bounds_overlap(pred: PrunePredicate, lower, upper) -> bool:
         if pred.op == ">=":
             return upper >= v
         if pred.op == "in":
-            sv = pred.sorted_values
             if sv is not None:
                 # bisect the prepared sorted probe set: any value in
                 # [lower, upper] iff the first value >= lower is <= upper
                 i = bisect.bisect_left(sv, lower)
                 return i < len(sv) and sv[i] <= upper
             return any(lower <= x <= upper for x in v)
-    except TypeError:
+    except (TypeError, ValueError):
         return True
     return True
 

@@ -155,12 +155,6 @@ def _props(index_table: Table) -> dict:
     }
 
 
-def hamming_source_snapshot(index_table: Table) -> int | None:
-    from ..core.refresh import recorded_source_snapshot
-
-    return recorded_source_snapshot(index_table, STAMP)
-
-
 def hamming_index_is_stale(index_table: Table, source_table: Table) -> bool:
     from ..core.refresh import derived_is_stale
 

@@ -425,13 +425,6 @@ def ivf_index_table(
     return t
 
 
-def ivf_source_snapshot(index_table) -> int | None:
-    """Source snapshot id the index currently reflects (None = untracked)."""
-    from ..core.refresh import recorded_source_snapshot
-
-    return recorded_source_snapshot(index_table, "ivf-source-snapshot-id")
-
-
 def ivf_index_is_stale(index_table, source_table) -> bool:
     from ..core.refresh import derived_is_stale
 

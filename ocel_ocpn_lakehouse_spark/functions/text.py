@@ -62,12 +62,6 @@ def stopword_ratio(text: Column) -> Column:
     return F.when(n > 0, _stop_filter(text) / n).otherwise(F.lit(0.0))
 
 
-def avg_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def punct_ratio(text: Column) -> Column:
     stripped = F.regexp_replace(text, r"[^\p{L}\p{N}\s]", "")
     return F.when(

@@ -20,16 +20,6 @@ def phash_of_bytes(data: pd.Series) -> pd.Series:
     return data.map(lambda b: phash64(decode_image(bytes(b))))
 
 
-@F.pandas_udf(T.IntegerType())
-def decoded_width(data: pd.Series) -> pd.Series:
-    return data.map(lambda b: int(decode_image(bytes(b)).shape[1]))
-
-
-@F.pandas_udf(T.IntegerType())
-def decoded_height(data: pd.Series) -> pd.Series:
-    return data.map(lambda b: int(decode_image(bytes(b)).shape[0]))
-
-
 @F.pandas_udf(T.DoubleType())
 def pairwise_psnr(a: pd.Series, b: pd.Series) -> pd.Series:
     """PSNR between two encoded payloads' decoded pixels (scan-equivalence

@@ -16,6 +16,10 @@ without rewriting a single data byte —
            counts never double-count) and writes the rest as ONE
            (path, pos)-sorted delete vector. O(deleted rows), not
            O(table). The DV format lives in core/dv.py alone.
+           ``delete_keys`` with a broadcastable key set skips the JVM scan:
+           MERGE's Arrow key probe finds the live hits and its tasks write
+           them as DV fragments, which ``dv.consolidate`` merges into the
+           one DV.
   commit : metadata-only — every touched file's manifest entry gains a DV
            reference (``Table.commit_delete_vectors``); concurrent rewrite
            of a touched file fails the commit (positions would index the
@@ -78,7 +82,9 @@ def delete_where(
     schema = table.schema
     df = dv.scan(spark, table.root, schema, [e.path for e in entries], schema.fieldNames())
     hits = df.filter(cond).select(dv.FP, dv.POS)
-    return _finalize_delete(spark, table, entries, hits, job)
+    with job.phase("write"):
+        rel_dv, counts = dv.write_hits(spark, table.root, table._stage_dir(), hits, entries)
+    return _commit_delete(table, entries, rel_dv, counts, job)
 
 
 def delete_keys(
@@ -96,14 +102,16 @@ def delete_keys(
     drag the whole set through the driver.
 
     Scale shape: when the table is bucketed on ``key_col`` the candidate
-    files shrink to the buckets the keys hash into (O(distinct buckets)
-    driver rows, same pruning MERGE uses — maintenance/merge.py); the scan
-    projects only (file, pos, key), and the semi-join broadcasts up to
-    ``merge.BROADCAST_THRESHOLD_ROWS`` keys, else shuffles. Everything
-    downstream (tombstone exclusion → one sorted DV file → metadata-only
-    commit with DV-count conflict guards) is shared with delete_where, so
-    re-running the same key set is a no-op and concurrent file rewrites
-    conflict instead of corrupting positions."""
+    files shrink to the buckets the keys hash into (the same pruning MERGE
+    uses — maintenance/merge.py). Up to ``merge.BROADCAST_THRESHOLD_ROWS``
+    keys are collected with their buckets in one job and go to MERGE's one
+    Arrow key probe (``merge.probe_keys``: bounds, Bloom, key-column read,
+    minus existing tombstones), whose tasks write their hits as DV
+    fragments that ``dv.consolidate`` merges into ONE DV. A larger key set
+    shuffle-joins a JVM key-column scan instead (``dv.write_hits``, as
+    :func:`delete_where`). Either way the commit is metadata-only with
+    DV-count conflict guards, so re-running the same key set is a no-op
+    and concurrent file rewrites conflict instead of corrupting positions."""
     job = Job(sys_tables, "delete", table, table_name)
     if table.current_snapshot() is None:
         return {"status": "empty-table"}
@@ -111,45 +119,41 @@ def delete_keys(
     n_keys = keys.count()  # caller caches `keys` when it is an expensive plan
     if n_keys == 0:
         return {"status": "no-matches", "deleted_rows": 0, "sec": round(time.time() - job.t0, 3)}
-    entries = table.live_entries()
-    bf = next(
-        (
-            f
-            for f in table.partition_spec.fields
-            if f.transform == "bucket" and f.source == key_col
-        ),
-        None,
-    )
-    if bf is not None:
-        buckets = {
-            r["b"]
-            for r in keys.select(
-                F.pmod(F.xxhash64(F.col(key_col)), F.lit(bf.num_buckets)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        }
-        entries = [
-            e
-            for e in entries
-            if not e.partition
-            or e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
-        ]
+    bf = merge._bucket_field(table, key_col)
+    bcol = [bf.to_column().alias("b")] if bf is not None else []
+    key_list = None
+    if n_keys <= merge.BROADCAST_THRESHOLD_ROWS:
+        rows = keys.select(key_col, *bcol).collect()
+        key_list = [r[0] for r in rows]
+        buckets = {r[1] for r in rows} if bf is not None else None
+    elif bf is not None:
+        buckets = {r[0] for r in keys.select(*bcol).distinct().collect()}
+    else:
+        buckets = None
+    entries = [
+        e for e in table.live_entries() if buckets is None or merge._in_buckets(e, bf, buckets)
+    ]
     if not entries:
         return {"status": "no-candidate-files", "deleted_rows": 0}
 
-    df = dv.scan(spark, table.root, table.schema, [e.path for e in entries], [key_col])
-    rhs = F.broadcast(keys) if n_keys <= merge.BROADCAST_THRESHOLD_ROWS else keys
-    hits = df.join(rhs, key_col, "semi").select(dv.FP, dv.POS)
-    return _finalize_delete(spark, table, entries, hits, job)
-
-
-def _finalize_delete(spark, table: Table, entries, hits, job: Job) -> dict:
-    """Shared delete tail: DV write (tombstones already listed by the
-    candidates' DVs left out) → metadata-only commit guarded by the
-    candidate entries' observed DV counts."""
     with job.phase("write"):
-        rel_dv, counts = dv.write_hits(spark, table.root, table._stage_dir(), hits, entries)
+        if key_list is not None:
+            _, fragments, _ = merge.probe_keys(
+                spark, table, [e.to_row() for e in entries], key_list, key_col,
+                [e.size_bytes for e in entries], write_dv=True,
+            )
+            rel_dv, counts = dv.consolidate(table.root, fragments)
+        else:
+            df = dv.scan(spark, table.root, table.schema, [e.path for e in entries], [key_col])
+            hits = df.join(keys, key_col, "semi").select(dv.FP, dv.POS)
+            rel_dv, counts = dv.write_hits(spark, table.root, table._stage_dir(), hits, entries)
+    return _commit_delete(table, entries, rel_dv, counts, job)
+
+
+def _commit_delete(table: Table, entries, rel_dv: str | None, counts: dict, job: Job) -> dict:
+    """Shared delete tail: the metadata-only commit of the new DV
+    ``rel_dv`` (tombstones already listed by the candidates' DVs left out),
+    guarded by the candidate ``entries``' observed DV counts."""
     if rel_dv is None:
         return {"status": "no-matches", "deleted_rows": 0, "sec": round(time.time() - job.t0, 3)}
 

@@ -9,13 +9,15 @@ SQL MERGE with a source carrying ``_op ∈ {'upsert','delete'}``:
   delete, key not in     → no-op
 
 Copy-on-write at FILE granularity:
-  1. touched files = the distinct data files holding any source key —
-     found by an Arrow probe task per file set (manifest bounds, then the
-     file's Bloom filter, then a read of the key column alone) against
-     the broadcast source key set; a source too large to broadcast probes
-     with a distributed semi-join of a JVM key-column scan instead (the
-     reference's bucketed-join guidance, ops/performance_optimization.py:
-     254-259, maps to Spark broadcast/bucket pruning);
+  1. touched files = the data files holding a LIVE row with a source key —
+     found by the one Arrow key probe (``core/dv.py`` ``probe``, run by
+     :func:`probe_keys`: manifest bounds, then the file's Bloom filter,
+     then a read of the key column alone, minus the file's existing
+     tombstones) against the broadcast source key set; a source too large
+     to broadcast probes with a distributed semi-join of a JVM key-column
+     scan instead (the reference's bucketed-join guidance,
+     ops/performance_optimization.py: 254-259, maps to Spark
+     broadcast/bucket pruning);
   2. bucket pruning first: with a BUCKET(N, key) partition spec, only
      files in source-key buckets are even probed;
   3. rewrite = survivors of touched files (anti-join on key) ∪ all upsert
@@ -32,12 +34,15 @@ whole manifest.
 
 ``strategy='mor'`` (or table property ``write.merge.mode=merge-on-read``)
 switches step 3 to Iceberg-v2 merge-on-read: matched target rows become
-positional tombstones in ONE delete-vector parquet and upserts append as
-new files, committed atomically in a single snapshot — zero data-file
-rewrite. Wins when merges are point-ish relative to file size (CoW
-rewrites gigabytes to drop a handful of rows); scans pay the tombstone
-anti-join until routine compaction absorbs the DVs. Both strategies are
-content-equivalent (test_mor_merge_matches_cow_and_rewrites_nothing).
+positional tombstones and upserts append as new files, committed
+atomically in a single snapshot — zero data-file rewrite. The probe tasks
+of step 1 write their hits as DV fragments and ``dv.consolidate`` merges
+them into ONE delete vector, so no pass re-scans the touched files (the
+huge-source route alone re-scans them in the JVM). Wins when merges are
+point-ish relative to file size (CoW rewrites gigabytes to drop a handful
+of rows); scans pay the tombstone anti-join until routine compaction
+absorbs the DVs. Both strategies are content-equivalent
+(test_mor_merge_matches_cow_and_rewrites_nothing).
 
 Each key may appear in at most one source row: a duplicate non-NULL key
 raises before anything is written (Iceberg's "multiple source rows
@@ -46,17 +51,15 @@ matched one target row"), rather than leaving duplicate rows behind.
 
 from __future__ import annotations
 
-import json
-import os
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..core import dv
+from ..core import manifests as mf
 from ..core.local import local_df
-from ..core.table import Table
+from ..core.table import PrunePredicate, Table, prepare_predicates
 from .checkpoint import Job, SystemTables
 from .rewrite import StagedRewrite, file_spec, tasks_rdd
 
@@ -132,90 +135,74 @@ def _write_upserts(table: Table, upserts: DataFrame, n: int) -> list:
     return table.write_data_files(upserts, num_files=int(n_files))
 
 
-def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
-    """True iff some source key falls in the file's [lo, hi] key range.
-
-    ``sorted_keys`` is the sorted non-null source key list; bounds arrive as
-    JSON-decoded manifest footer stats (possibly stringified). Coerce the
-    bounds to the key type; on ANY doubt (missing bounds, coercion failure,
-    cross-type comparison) return True — pruning must never skip a file it
-    cannot prove untouched.
-    """
-    import bisect
-
-    if not sorted_keys or lo is None or hi is None:
-        return True
-    kt = type(sorted_keys[0])
-    try:
-        lo, hi = kt(lo), kt(hi)
-        i = bisect.bisect_left(sorted_keys, lo)
-        return i < len(sorted_keys) and sorted_keys[i] <= hi
-    except (TypeError, ValueError):
-        return True
-
-
-def _probe_touched_arrow(spark, table, specs, key_list, key, weights=None) -> tuple[set, dict]:
-    """Touched-file probe as an Arrow key-column job.
-
-    ``specs`` carry a file's rel ``path`` and its ``lo`` / ``hi`` / ``bloom``
-    manifest JSON: a list of dicts weighted by file bytes on the driver
-    planning route, or a DataFrame flowing straight from ``entries_df`` on
-    the distributed one, so the driver never holds a per-file object on
-    that probe path. Either way they run through the kernel's
-    ``tasks_rdd`` as one wave of one-core tasks in one Python stage, and
-    the key broadcast is destroyed once the job has collected. Returns the set
-    of RELATIVE paths of files holding ≥1 source key. Each task prunes in
-    cost order before any I/O: (1) manifest key bounds (bisect over the
-    sorted broadcast keys — prunes when files are clustered on the key),
-    (2) the file's manifest Bloom filter (vectorized gather against the
-    pre-hashed key matrix — prunes on ANY layout, the case bounds cannot
-    help; absence = might-contain), then (3) reads only the key column of
-    surviving files (pyarrow, through ``read_table_nullfill`` so
-    post-evolution key columns null-fill) and set-probes it against the
-    broadcast source keys.
-    """
-    from ..core import manifests as mf
-
-    nonnull = sorted(k for k in key_list if k is not None)
-    keys_b = spark.sparkContext.broadcast(
-        (set(nonnull), nonnull, mf.bloom_key_hashes(nonnull))
+def _bucket_field(table: Table, key: str):
+    """The table's BUCKET(N, ``key``) partition field, or None. With one,
+    only files in the buckets of a key set can hold one of its keys."""
+    return next(
+        (f for f in table.partition_spec.fields if f.transform == "bucket" and f.source == key),
+        None,
     )
+
+
+def _in_buckets(e: mf.ManifestEntry, bf, buckets: set) -> bool:
+    return not e.partition or e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
+
+
+def probe_keys(spark, table, specs, key_list, key, weights=None, write_dv=False):
+    """The files of ``specs`` holding a live row whose ``key`` is in the
+    broadcastable ``key_list``: the one key probe (:func:`dv.probe`) run
+    through the kernel's ``tasks_rdd`` as one wave of one-core tasks in one
+    Python stage. ``specs`` are manifest entries as rows: a list weighted
+    by ``weights`` (file bytes) on the driver planning route, or an
+    ``entries_df`` DataFrame on the distributed one, so the driver never
+    holds a per-file object there. With ``write_dv`` each task writes its
+    hits as one DV fragment (:func:`dv.write_fragment`), to be merged by
+    :func:`dv.consolidate`. Returns (the touched entries sorted by path,
+    the fragments' root-relative paths, the probe stats). The key
+    broadcast is destroyed once the job has collected."""
+    keys = prepare_predicates([PrunePredicate(key, "in", [k for k in key_list if k is not None])])
+    keys_b = spark.sparkContext.broadcast(keys[0])
     root = table.root
     arrow_schema = mf.spark_to_arrow_schema(table.schema)
-    acc_read = spark.sparkContext.accumulator(0)
-    acc_bounds = spark.sparkContext.accumulator(0)
-    acc_bloom = spark.sparkContext.accumulator(0)
+    accs = {s: spark.sparkContext.accumulator(0) for s in dv.PROBE_STATS}
 
     def _task(recs):
-        kset, ksorted, khashes = keys_b.value
-        for rec in recs:
-            rp = rec["path"]
-            lo = (json.loads(rec["lo"]) or {}).get(key) if rec["lo"] else None
-            hi = (json.loads(rec["hi"]) or {}).get(key) if rec["hi"] else None
-            if not _any_key_in_bounds(ksorted, lo, hi):
-                acc_bounds.add(1)
-                continue
-            bloom = (json.loads(rec["bloom"]) or {}).get(key) if rec["bloom"] else None
-            if not mf.bloom_any_contains(bloom, khashes):
-                acc_bloom.add(1)
-                continue
-            acc_read.add(1)
-            vals = mf.read_table_nullfill(
-                os.path.join(root, rp), arrow_schema, columns=[key]
-            )[key].to_pylist()
-            if not kset.isdisjoint(vals):
-                yield rp
+        stats = dict.fromkeys(accs, 0)
+        entries = (mf.ManifestEntry.from_row(r) for r in recs)
+        hits = list(dv.probe(root, entries, keys_b.value, arrow_schema, stats))
+        for s, n in stats.items():
+            accs[s].add(n)
+        yield [e for e, _ in hits], dv.write_fragment(root, hits) if write_dv else None
 
     try:
-        touched = set(tasks_rdd(spark, specs, _task, weights).collect())
+        out = tasks_rdd(spark, specs, _task, weights).collect()
     finally:
         keys_b.destroy()
-    stats = {
-        "files_read": acc_read.value,
-        "skipped_by_bounds": acc_bounds.value,
-        "skipped_by_bloom": acc_bloom.value,
-    }
-    return touched, stats
+    touched = sorted((e for es, _ in out for e in es), key=lambda e: e.path)
+    return touched, [f for _, f in out if f], {s: a.value for s, a in accs.items()}
+
+
+def _touched_by_join(spark, table: Table, specs, src_keys: DataFrame, key: str) -> list:
+    """The files of ``specs`` (as :func:`probe_keys` takes them) holding
+    any key of a source too large to broadcast: a JVM key-column scan
+    semi-joined with the distributed key set (the key column still prunes
+    at the parquet reader; per-file setup amortizes over the big read).
+    Only the pruned path list and the touched files' entry rows reach the
+    driver."""
+    local = isinstance(specs, list)
+    paths = [r["path"] for r in specs] if local else [r[0] for r in specs.select("path").collect()]
+    if not paths:
+        return []
+    tgt = dv.scan(spark, table.root, table.schema, paths, [key])
+    rels = {r[0] for r in tgt.join(src_keys, key, "left_semi").select(dv.FP).distinct().collect()}
+    if local:
+        rows = [r for r in specs if r["path"] in rels]
+    elif rels:
+        rel_df = local_df(spark, [(p,) for p in rels], "path string")
+        rows = [r.asDict() for r in specs.join(F.broadcast(rel_df), "path").collect()]
+    else:
+        rows = []
+    return sorted((mf.ManifestEntry.from_row(r) for r in rows), key=lambda e: e.path)
 
 
 def merge_into(
@@ -239,19 +226,13 @@ def merge_into(
     src = source.select(*data_cols, op_col).cache()
     try:
         with job.phase("probe"):
-            bf = next(
-                (f for f in table.partition_spec.fields
-                 if f.transform == "bucket" and f.source == key),
-                None,
-            )
+            bf = _bucket_field(table, key)
             # ONE summary job: rows per (op, key bucket) yields the source
             # row count, the op values, the source-key buckets for pruning
             # and the upsert-row count the write step needs
             by = [F.col(op_col).alias("op")]
             if bf is not None:
-                by.append(
-                    F.pmod(F.xxhash64(F.col(key)), F.lit(bf.num_buckets)).cast("int").alias("b")
-                )
+                by.append(bf.to_column().alias("b"))
             summary = src.groupBy(*by).count().collect()
             n_src = sum(r["count"] for r in summary)
             n_upserts = sum(r["count"] for r in summary if r["op"] == "upsert")
@@ -272,7 +253,7 @@ def merge_into(
             # small/medium sources collect their keys ONCE (n_src rows, so
             # bounded by the threshold: a plain collect of the cached source,
             # deduplicated on the driver — no shuffle); the list feeds both
-            # the probe's broadcast join and the Arrow rewrite's executor set
+            # the probe's key broadcast and the Arrow rewrite's executor set
             # (the collected list also rejects duplicate keys with no job;
             # a huge source spends one key-count job on it)
             key_list: list | None = None
@@ -282,8 +263,6 @@ def merge_into(
                     key, [k for k, n in key_counts.items() if n > 1 and k is not None]
                 )
                 key_list = list(key_counts)
-                key_schema = T.StructType([T.StructField(key, src.schema[key].dataType)])
-                src_keys = F.broadcast(local_df(spark, [(k,) for k in key_list], key_schema))
             else:
                 dups = (
                     src.filter(F.col(key).isNotNull()).groupBy(key).count()
@@ -294,100 +273,38 @@ def merge_into(
 
             # planning (Table.plans_distributed): below the threshold the
             # manifest materializes on the driver; above it entries stay in
-            # entries_df — probe specs flow to the Arrow probe as a DataFrame
-            # (nothing per-file on the driver in the common path), and only
-            # the touched files' entry rows (bounded by the source key count,
-            # metadata-sized) are ever collected; the huge-source fallback
-            # alone collects the pruned path list (same routing as
-            # plan_compaction_distributed / execute_cluster)
+            # entries_df and flow to the probe as a DataFrame (nothing
+            # per-file on the driver), and only the touched files' entry
+            # rows (bounded by the source key count, metadata-sized) come
+            # back (same routing as plan_compaction_distributed /
+            # execute_cluster)
+            specs: list | DataFrame
+            spec_weights: list | None = None
             if not table.plans_distributed():
-                entries = table.live_entries()
-                probe_entries = entries
-                if buckets is not None:
-                    probe_entries = [
-                        e
-                        for e in entries
-                        if e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
-                        or not e.partition
-                    ]
-                specs: list | DataFrame = [
-                    {
-                        "path": e.path,
-                        "lo": json.dumps(e.lower_bounds, default=str),
-                        "hi": json.dumps(e.upper_bounds, default=str),
-                        "bloom": json.dumps(e.blooms),
-                    }
-                    for e in probe_entries
+                specs = [
+                    e.to_row() for e in table.live_entries()
+                    if buckets is None or _in_buckets(e, bf, buckets)
                 ]
-                spec_weights = [e.size_bytes for e in probe_entries]
-
-                def _fallback_paths() -> list:
-                    return [e.path for e in probe_entries]
-
-                by_path = {e.path: e for e in entries}
-
-                def _touched_from(rels: set) -> list:
-                    return [by_path[p] for p in sorted(rels)]
-
+                spec_weights = [r["size_bytes"] for r in specs]
             else:
-                edf = table.entries_df(spark)
-                pedf = edf
+                specs = table.entries_df(spark)
                 if buckets is not None:
                     bval = F.coalesce(
                         F.get_json_object("partition", f"$.{bf.name}"),
                         F.get_json_object("partition", f"$.{bf.partition_column}"),
                     ).cast("int")
-                    pedf = edf.filter(bval.isin(*buckets) | bval.isNull())
-                specs = pedf.select(
-                    "path",
-                    F.col("lower_bounds").alias("lo"),
-                    F.col("upper_bounds").alias("hi"),
-                    F.coalesce(F.col("blooms"), F.lit("{}")).alias("bloom"),
-                )
-                spec_weights = None
-
-                def _fallback_paths() -> list:
-                    return [r["path"] for r in pedf.select("path").collect()]
-
-                def _touched_from(rels: set) -> list:
-                    if not rels:
-                        return []
-                    from ..core import manifests as mf
-
-                    rel_df = local_df(spark, [(p,) for p in rels], "path string")
-                    rows = edf.join(F.broadcast(rel_df), "path").collect()
-                    got = {r["path"]: mf.ManifestEntry.from_row(r.asDict()) for r in rows}
-                    return [got[p] for p in sorted(rels)]
+                    specs = specs.filter(bval.isin(*buckets) | bval.isNull())
 
             probe_stats: dict = {}
+            fragments: list = []
             if key_list is not None:
-                # Arrow key-column probe with manifest-bounds pre-pruning: tasks
-                # skip files whose key range excludes every source key, then read
-                # ONLY the key column of survivors with pyarrow and set-probe it
-                # against the broadcast source keys. The JVM scan this replaces
-                # paid per-file reader setup (~50 ms/file — minutes at 10^5 tiny
-                # files); the Arrow footer read + one-column decode is the same
-                # cost model as every other maintenance task here.
-                touched_rel, probe_stats = _probe_touched_arrow(
-                    spark, table, specs, key_list, key, spec_weights
+                # the one Arrow key probe; MoR's tasks also write their hits
+                # as DV fragments, so no JVM pass re-scans the touched files
+                touched_entries, fragments, probe_stats = probe_keys(
+                    spark, table, specs, key_list, key, spec_weights, write_dv=strategy == "mor"
                 )
             else:
-                # huge source: keys don't fit a broadcast set — JVM scan +
-                # distributed semi-join probe (the key column still prunes at
-                # the parquet reader; per-file setup amortizes over the big read)
-                fb_paths = _fallback_paths()
-                touched_rel = set()
-                if fb_paths:
-                    tgt = dv.scan(spark, table.root, table.schema, fb_paths, [key])
-                    touched_rel = {
-                        r[0]
-                        for r in tgt.join(src_keys, key, "inner")
-                        .select(dv.rel(table.root))
-                        .distinct()
-                        .collect()
-                    }
-
-            touched_entries = _touched_from(touched_rel)
+                touched_entries = _touched_by_join(spark, table, specs, src_keys, key)
 
         # --- 3: rewrite touched files + write all upserts
         upserts = src.filter(F.col(op_col) == "upsert").select(*data_cols)
@@ -399,12 +316,12 @@ def merge_into(
             # into large files, where CoW rewrites gigabytes to drop a
             # handful of rows; routine compaction absorbs the tombstones.
             with job.phase("write"):
-                rel_dv, counts = None, {}
-                if touched_entries:
-                    tdf = dv.scan(
+                rel_dv, counts = dv.consolidate(table.root, fragments)
+                if key_list is None and touched_entries:
+                    # huge source: the probe found files, not positions
+                    hits = dv.scan(
                         spark, table.root, table.schema, [e.path for e in touched_entries], [key]
-                    )
-                    hits = tdf.join(src_keys, key, "inner").select(dv.FP, dv.POS)
+                    ).join(src_keys, key, "left_semi").select(dv.FP, dv.POS)
                     rel_dv, counts = dv.write_hits(
                         spark, table.root, table._stage_dir(), hits, touched_entries
                     )

@@ -102,7 +102,7 @@ def transform_where(
     p1 = dv.scan(spark, root, schema, [e.path for e in entries], cols).filter(cond)
     p1 = dv.live(spark, root, p1, entries)
     with job.phase("probe"):
-        touched_rel = {r[0] for r in p1.select(dv.rel(root)).distinct().collect()}
+        touched_rel = {r[0] for r in p1.select(dv.FP).distinct().collect()}
     touched = [e for e in entries if e.path in touched_rel]
     if not touched:
         return {
@@ -130,7 +130,7 @@ def transform_where(
         )
         for c in cols
     ]
-    upd = rows.select(dv.rel(root).alias("_path"), dv.POS, cond.alias("_hit"), *proj)
+    upd = rows.select(F.col(dv.FP).alias("_path"), dv.POS, cond.alias("_hit"), *proj)
 
     rw = StagedRewrite.begin(spark, table)
     idx_b = spark.sparkContext.broadcast({e.path: i for i, e in enumerate(touched)})

@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections import Counter
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -633,6 +634,8 @@ class _FilesWritten(WriterCommitMessage):
     # merge-keys upsert only: (task DV rel path | None,
     #   ((data path, #DVs at probe), ...))
     dv: tuple = ()
+    # merge-keys upsert only: the task's non-NULL key values
+    keys: tuple = ()
 
 
 def _partition_values(pdf, spec_fields):
@@ -773,59 +776,31 @@ class _TableArrowWriter(DataSourceArrowWriter):
                 f"merge-keys: duplicate {self.merge_key} values in one write "
                 "task; each key may appear in at most one source row"
             )
-        return _FilesWritten(tuple(entries), self._probe_merge_tombstones(uniq))
+        return _FilesWritten(tuple(entries), self._probe_merge_tombstones(uniq), tuple(uniq))
 
     def _probe_merge_tombstones(self, keys: set) -> tuple:
         """Executor-side half of the merge-keys upsert (MoR MERGE through
-        the vanilla Spark writer): prune the probed snapshot's manifest to
-        files whose partition/bounds/Bloom can hold any of THIS task's
-        keys, then read just the key column of each candidate to collect
-        (path, pos) tombstones — excluding positions earlier DVs already
-        killed — into one task DV fragment. Work per task ∝ its keys'
-        candidate files, never O(table); the driver reads back only the
-        fragments' tombstones. Tasks probe
-        independently (no coordination), so a file hot across many tasks
-        pays one pruned key-column read per task — the price of reusing
-        Spark's writer exchange; pipelines that pre-partition by key
-        should call maintenance.merge.merge_into directly."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
+        the vanilla Spark writer): the one key probe (``dv.probe``: bounds,
+        Bloom, key-column read, minus earlier tombstones) of the probed
+        snapshot's files for THIS task's keys, its hits written as one task
+        DV fragment. Work per task ∝ its keys' candidate files, never
+        O(table); the driver reads back only the fragments' tombstones.
+        Tasks probe independently (no coordination), so a file hot across
+        many tasks pays one pruned key-column read per task — the price of
+        reusing Spark's writer exchange; pipelines that pre-partition by
+        key should call maintenance.merge.merge_into directly."""
         if not keys or self.merge_snapshot is None:
             return (None, ())
         table = Table(self.root, meta.load_metadata(self.root))
-        entries = table.live_entries(snapshot_id=self.merge_snapshot)
-        preds = prepare_predicates(
-            [PrunePredicate(self.merge_key, "in", sorted(keys))]
-        )
-        cand = [e for e in entries if entry_matches(e, preds)]
-        if not cand:
-            return (None, ())
-
-        value_set = pa.array(sorted(keys))
-        paths_out, pos_out, expected = [], [], {}
-        for e in cand:
-            expected[e.path] = len(e.deletes)
-            pf = pq.ParquetFile(os.path.join(self.root, e.path))
-            if self.merge_key not in pf.schema_arrow.names:
-                continue
-            offset = 0
-            hits = []
-            for b in pf.iter_batches(columns=[self.merge_key], batch_size=DEFAULT_BATCH_ROWS):
-                mask = pc.is_in(b.column(0), value_set=value_set).fill_null(False)
-                hits.append(np.flatnonzero(mask.to_numpy(zero_copy_only=False)) + offset)
-                offset += b.num_rows
-            dead = dv.positions(e.path, [os.path.join(self.root, d["path"]) for d in e.deletes])
-            hit_pos = np.setdiff1d(np.concatenate(hits or [np.empty(0, np.int64)]), dead)
-            if len(hit_pos):
-                paths_out.extend([e.path] * len(hit_pos))
-                pos_out.append(hit_pos)
-        if not paths_out:
-            return (None, tuple(sorted(expected.items())))
-        rel, _ = dv.write(self.root, paths_out, np.concatenate(pos_out))
-        return (rel, tuple(sorted(expected.items())))
+        pred = prepare_predicates([PrunePredicate(self.merge_key, "in", list(keys))])[0]
+        hits = list(dv.probe(
+            self.root,
+            table.live_entries(snapshot_id=self.merge_snapshot),
+            pred,
+            mf.spark_to_arrow_schema(table.schema),
+            dict.fromkeys(dv.PROBE_STATS, 0),
+        ))
+        return (dv.write_fragment(self.root, hits), tuple((e.path, len(e.deletes)) for e, _ in hits))
 
     def _write_one(self, partition: dict, tbl) -> dict:
         import pyarrow.parquet as pq
@@ -893,38 +868,26 @@ class _TableArrowWriter(DataSourceArrowWriter):
 
     def _commit_merge(self, table: Table, entries, messages) -> None:
         """Driver half of the merge-keys upsert: consolidate the task DV
-        fragments into ONE (path, pos)-sorted delete vector, then land
-        tombstones + upsert files in a single MERGE snapshot via
-        commit_delete_vectors — the same atomicity contract as
-        maintenance.merge.merge_into(strategy='mor'). Two task hits on one
-        (path, pos) mean two source rows matched one target row: that
-        raises, and Spark's abort removes every file the tasks wrote.
-        Driver work is O(this batch's matched rows), the delete_where DV
-        shape."""
-        task_dvs, expected = [], {}
-        for m in messages or []:
-            if m is None or not m.dv:
-                continue
-            dv_path, exp = m.dv
-            if dv_path:
-                task_dvs.append(os.path.join(self.root, dv_path))
-            for p, n in exp:
-                expected[p] = n
-        dv_rel, counts = None, {}
-        if task_dvs:
-            hits = dv.read(task_dvs)
-            dv_rel, counts = dv.write(self.root, hits["path"], hits["pos"])
-            if sum(counts.values()) != hits.num_rows:
+        fragments into ONE (path, pos)-sorted delete vector
+        (``dv.consolidate``), then land tombstones + upsert files in a
+        single MERGE snapshot via commit_delete_vectors — the same
+        atomicity contract as maintenance.merge.merge_into(strategy='mor').
+        Two task hits on one (path, pos), or one key reported by two tasks,
+        mean two source rows for one key: that raises, and Spark's abort
+        removes every file the tasks wrote. Driver work is O(this batch's
+        keys and matched rows), the delete_where DV shape."""
+        msgs = [m for m in messages or [] if m is not None]
+        expected = {p: n for m in msgs if m.dv for p, n in m.dv[1]}
+        dv_rel, counts = dv.consolidate(self.root, [m.dv[0] for m in msgs if m.dv and m.dv[0]])
+        dups = [k for k, n in Counter(k for m in msgs for k in m.keys).items() if n > 1]
+        if dups:
+            if dv_rel:
                 os.unlink(os.path.join(self.root, dv_rel))
-                raise ValueError(
-                    f"merge-keys: several source rows matched one target row "
-                    f"(duplicate {self.merge_key} values across write tasks)"
-                )
-            for p in task_dvs:
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
+            raise ValueError(
+                f"merge-keys: duplicate {self.merge_key} values "
+                f"{sorted(dups, key=str)[:5]!r} across write tasks; each key may "
+                "appear in at most one source row"
+            )
         if dv_rel is None and not entries:
             return
         table.commit_delete_vectors(
@@ -1085,13 +1048,10 @@ class LakehouseDataSource(DataSource):
         user who only knows the DataFrame writer.
 
         Each key may appear in at most one source row. A key repeated
-        inside one write task fails that task, and two tasks whose rows
-        match the same target row fail the commit (Iceberg's "multiple
-        source rows matched one target row"); nothing commits either way.
-        One case is not caught: a key repeated across tasks that matches
-        no target row is inserted once per task, because tasks never see
-        each other's keys. Use merge_into (which checks the whole source)
-        when the source may repeat keys."""
+        inside one write task fails that task; a key repeated across
+        tasks fails the commit, whether or not it matches a target row
+        (each task reports its keys, Iceberg's "multiple source rows
+        matched one target row"); nothing commits either way."""
         mk = self.options.get("merge-keys")
         if not mk:
             return None

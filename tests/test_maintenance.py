@@ -583,29 +583,38 @@ def test_merge_null_key_rows_survive(spark, warehouse):
     assert ("A", "a") not in got
 
 
-def test_merge_bounds_pruning_unit():
-    """_any_key_in_bounds: bisect overlap between the sorted source keys and
-    a file's [lo, hi] manifest key range, with conservative fallbacks."""
-    from ocel_ocpn_lakehouse_spark.maintenance.merge import _any_key_in_bounds
+def _keys_in_bounds(keys: list, lo, hi) -> bool:
+    """The shared bounds rule (core/table.py ``_bounds_overlap``) for an
+    ``in`` key set, as the key probe and scan pruning both apply it."""
+    from ocel_ocpn_lakehouse_spark.core.table import _bounds_overlap, prepare_predicates
 
+    return _bounds_overlap(prepare_predicates([PrunePredicate("k", "in", keys)])[0], lo, hi)
+
+
+def test_merge_bounds_pruning_unit():
+    """The key probe's bounds rule: bisect overlap between the sorted
+    source keys and a file's [lo, hi] manifest key range, with
+    conservative fallbacks."""
     keys = [10, 20, 30]
-    assert _any_key_in_bounds(keys, 15, 25)  # 20 inside
-    assert _any_key_in_bounds(keys, 30, 99)  # boundary hit
-    assert _any_key_in_bounds(keys, 0, 10)  # boundary hit low
-    assert not _any_key_in_bounds(keys, 21, 29)  # gap between keys
-    assert not _any_key_in_bounds(keys, 31, 99)  # above all
-    assert not _any_key_in_bounds(keys, 0, 9)  # below all
+    assert _keys_in_bounds(keys, 15, 25)  # 20 inside
+    assert _keys_in_bounds(keys, 30, 99)  # boundary hit
+    assert _keys_in_bounds(keys, 0, 10)  # boundary hit low
+    assert not _keys_in_bounds(keys, 21, 29)  # gap between keys
+    assert not _keys_in_bounds(keys, 31, 99)  # above all
+    assert not _keys_in_bounds(keys, 0, 9)  # below all
     # stringified bounds (JSON default=str) coerce to the key type
-    assert _any_key_in_bounds(keys, "15", "25")
-    assert not _any_key_in_bounds(keys, "21", "29")
+    assert _keys_in_bounds(keys, "15", "25")
+    assert not _keys_in_bounds(keys, "21", "29")
     # string keys compare lexicographically
-    assert _any_key_in_bounds(["img_05", "img_99"], "img_90", "img_zz")
-    assert not _any_key_in_bounds(["img_05", "img_99"], "img_10", "img_20")
-    # conservative: missing/uncoercible bounds or empty keys never prune
-    assert _any_key_in_bounds(keys, None, 25)
-    assert _any_key_in_bounds(keys, 15, None)
-    assert _any_key_in_bounds(keys, "not-a-number", "25")
-    assert _any_key_in_bounds([], 15, 25)
+    assert _keys_in_bounds(["img_05", "img_99"], "img_90", "img_zz")
+    assert not _keys_in_bounds(["img_05", "img_99"], "img_10", "img_20")
+    # conservative: missing/uncoercible bounds never prune
+    assert _keys_in_bounds(keys, None, 25)
+    assert _keys_in_bounds(keys, 15, None)
+    assert _keys_in_bounds(keys, "not-a-number", "25")
+    # an empty key set can hold no key of any file (``in ()`` prunes
+    # every file with bounds, as scan pruning always did)
+    assert not _keys_in_bounds([], 15, 25)
 
 
 def test_merge_probe_bounds_prune_skips_untouched_files(spark, warehouse):
@@ -720,7 +729,6 @@ def test_merge_bloom_pruning_end_to_end(spark, warehouse):
     import json
 
     from ocel_ocpn_lakehouse_spark.core import manifests as mf
-    from ocel_ocpn_lakehouse_spark.maintenance.merge import _any_key_in_bounds
 
     cat = Catalog(warehouse)
     props = dict(TEST_PROPS)
@@ -752,7 +760,7 @@ def test_merge_bloom_pruning_end_to_end(spark, warehouse):
     ks = sorted(victims)
     skipped_by_bloom = 0
     for e in with_bloom:
-        in_bounds = _any_key_in_bounds(
+        in_bounds = _keys_in_bounds(
             ks, e.lower_bounds.get("image_id"), e.upper_bounds.get("image_id")
         )
         might = mf.bloom_any_contains(e.blooms.get("image_id"), kh)
