@@ -19,9 +19,9 @@ Arrow side (driver and task code):
   :func:`write_fragment`        one probe task's hits as one DV fragment
   :func:`consolidate`           task fragments into the one DV a commit lands
 
-Spark side: a scan names a row by ``(_fp, _pos)``: its data file's path
-relative to the table root, decoded from Spark's percent-encoded
-``_metadata.file_path`` URI, and ``_metadata.row_index``.
+Spark side: a scan names a row by ``(_fp, _pos)``, Spark's
+``_metadata.file_path`` URI and ``_metadata.row_index``.
+  :func:`uri`           a data file's ``_fp``: the one path encoder
   :func:`scan`          the one ``_metadata`` projection of data files
   :func:`frame`         DV rows as ``(_fp, _pos)``, broadcast when small
   :func:`live`          rows of a scan that no DV of theirs tombstones
@@ -33,14 +33,16 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 import uuid
 from typing import Iterable, Iterator, Sequence
+from urllib.parse import quote
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -206,9 +208,35 @@ def consolidate(root: str, fragments: Sequence[str]) -> tuple[str | None, dict[s
 # ---- Spark side -------------------------------------------------------------
 
 
-def _prefix_len(root: str) -> int:
-    """Length of the decoded ``file:`` URI prefix of a data file under ``root``."""
-    return len(f"file:{root}{os.sep}")
+# Spark's _metadata.file_path is Hadoop's Path.toUri, built by java.net.URI:
+# a path keeps ASCII letters, digits, "-_.!~*'(),;:$&+=/@" and non-ASCII
+# characters other than controls and space separators; every other
+# character is percent-encoded as its UTF-8 bytes ("%" itself included)
+_URI_ESCAPED = re.compile(
+    r"[^A-Za-z0-9\-_.!~*'(),;:$&+=/@\u00a0-\U0010ffff]"
+    r"|[\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
+
+
+def _quote(path: str) -> str:
+    return _URI_ESCAPED.sub(lambda m: quote(m.group(), safe=""), path)
+
+
+def uri(root: str, rel: str) -> str:
+    """The ``_fp`` of data file ``rel`` under ``root``: its ``file:`` URI,
+    spelled exactly as Spark's ``_metadata.file_path``."""
+    return "file:" + _quote(os.path.join(root, rel))
+
+
+def _uri_col(root: str, rel: Column, data_paths: Iterable[str]) -> Column:
+    """:func:`uri` as a Spark column over root-relative paths ``rel``, all
+    among ``data_paths``: only the characters those paths hold that the
+    encoder escapes are replaced (``%`` first), so a plain table pays a
+    prefix concat alone."""
+    chars = sorted(set(_URI_ESCAPED.findall("".join(data_paths))), key=lambda c: c != "%")
+    for c in chars:
+        rel = F.replace(rel, F.lit(c), F.lit(_quote(c)))
+    return F.concat(F.lit(uri(root, "")), rel)
 
 
 def scan(
@@ -221,25 +249,14 @@ def scan(
     """``(_fp, _pos, *cols)`` rows of the data files ``rel_paths``. One
     reader per ``SCAN_READ_BATCH`` paths, unioned, so Spark's file index
     grows in bounded steps (``_metadata`` must be projected per reader: a
-    union does not carry it).
-
-    ``_fp`` is the row's root-relative data-file path, as manifests and DVs
-    spell it. Spark's ``_metadata.file_path`` is the file's URI, with a
-    space, ``%`` and ``#`` percent-encoded but ``+`` kept; ``url_decode``
-    alone would turn that ``+`` into a space, so ``+`` is escaped first.
-    Decoding here is what lets a root or partition value hold any of those
-    characters."""
-    fp = F.expr(
-        f"substring(url_decode(replace(_metadata.file_path, '+', '%2B')), "
-        f"{_prefix_len(root) + 1})"
-    )
+    union does not carry it)."""
     out: DataFrame | None = None
     for i in range(0, len(rel_paths), SCAN_READ_BATCH):
         part = (
             spark.read.schema(schema)
             .parquet(*[os.path.join(root, p) for p in rel_paths[i : i + SCAN_READ_BATCH]])
             .select(
-                fp.alias(FP),
+                F.col("_metadata.file_path").alias(FP),
                 F.col("_metadata.row_index").alias(POS),
                 *cols,
             )
@@ -253,9 +270,12 @@ def rows(spark: SparkSession, root: str, dv_rel: Sequence[str]) -> DataFrame:
     return spark.read.schema(SCHEMA).parquet(*[os.path.join(root, p) for p in dv_rel])
 
 
-def frame(spark: SparkSession, root: str, dv_rel: Sequence[str]) -> DataFrame:
-    """Tombstones of the DV files ``dv_rel`` as ``(_fp, _pos)``, ready to
-    join a :func:`scan`.
+def frame(
+    spark: SparkSession, root: str, dv_rel: Sequence[str], data_paths: Iterable[str]
+) -> DataFrame:
+    """Tombstones of the DV files ``dv_rel`` for the data files
+    ``data_paths`` as ``(_fp, _pos)``, ready to join a :func:`scan`: the
+    small DV side is encoded, no data row's ``_fp`` is decoded.
 
     Broadcast by estimated BYTES, not row count: 5M rows of long paths
     is a multi-hundred-MB payload shipped to every executor. The DV
@@ -265,7 +285,9 @@ def frame(spark: SparkSession, root: str, dv_rel: Sequence[str]) -> DataFrame:
     An unknown file size forces the shuffle route outright (a cap-sized
     increment would still pass the <= check when it is the only DV file).
     """
-    dv = rows(spark, root, dv_rel).select(F.col("path").alias(FP), F.col("pos").alias(POS))
+    dv = rows(spark, root, dv_rel).select(
+        _uri_col(root, F.col("path"), data_paths).alias(FP), F.col("pos").alias(POS)
+    )
     dv_bytes = 0
     for p in dv_rel:
         try:
@@ -283,7 +305,7 @@ def live(spark: SparkSession, root: str, df: DataFrame, entries) -> DataFrame:
     dv_rel = sorted({d["path"] for e in entries for d in e.deletes})
     if not dv_rel:
         return df
-    return df.join(frame(spark, root, dv_rel), [FP, POS], "left_anti")
+    return df.join(frame(spark, root, dv_rel, (e.path for e in entries)), [FP, POS], "left_anti")
 
 
 def write_groups(
@@ -331,7 +353,11 @@ def write_hits(
     delete is a no-op and per-file live counts never double-count.
     Returns (rel DV path, per-file counts), or (None, {}) when nothing is
     left."""
+    # uri's inverse, on hit rows alone: Java's URL decoder reads a kept "+"
+    # as a space, so "+" is escaped first
+    n = len("file:" + os.path.join(root, ""))
+    rel = F.expr(f"substring(url_decode(replace({FP}, '+', '%2B')), {n + 1})")
     hits = live(spark, root, hits, entries).select(
-        F.lit(0).alias("grp"), F.col(FP).alias("path"), F.col(POS).alias("pos")
+        F.lit(0).alias("grp"), rel.alias("path"), F.col(POS).alias("pos")
     )
     return write_groups(root, stage, hits.coalesce(1), 1).get(0, (None, {}))

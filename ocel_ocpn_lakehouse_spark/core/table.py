@@ -528,7 +528,7 @@ class Table:
             ``dv_rel`` (the tombstone delta) — one semi-join, mirror image
             of the MoR anti-join."""
             return dv.scan(spark, self.root, schema, rel_paths, schema.fieldNames()).join(
-                dv.frame(spark, self.root, dv_rel), [dv.FP, dv.POS], "left_semi"
+                dv.frame(spark, self.root, dv_rel, rel_paths), [dv.FP, dv.POS], "left_semi"
             )
 
         parts: list[DataFrame] = []

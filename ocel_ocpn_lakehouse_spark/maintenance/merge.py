@@ -194,7 +194,9 @@ def _touched_by_join(spark, table: Table, specs, src_keys: DataFrame, key: str) 
     if not paths:
         return []
     tgt = dv.scan(spark, table.root, table.schema, paths, [key])
-    rels = {r[0] for r in tgt.join(src_keys, key, "left_semi").select(dv.FP).distinct().collect()}
+    rel_of = {dv.uri(table.root, p): p for p in paths}
+    hit = tgt.join(src_keys, key, "left_semi").select(dv.FP).distinct().collect()
+    rels = {rel_of[r[0]] for r in hit}
     if local:
         rows = [r for r in specs if r["path"] in rels]
     elif rels:

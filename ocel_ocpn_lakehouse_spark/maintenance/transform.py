@@ -102,8 +102,8 @@ def transform_where(
     p1 = dv.scan(spark, root, schema, [e.path for e in entries], cols).filter(cond)
     p1 = dv.live(spark, root, p1, entries)
     with job.phase("probe"):
-        touched_rel = {r[0] for r in p1.select(dv.FP).distinct().collect()}
-    touched = [e for e in entries if e.path in touched_rel]
+        touched_fp = {r[0] for r in p1.select(dv.FP).distinct().collect()}
+    touched = [e for e in entries if dv.uri(root, e.path) in touched_fp]
     if not touched:
         return {
             "status": "no-matching-rows",
@@ -133,7 +133,7 @@ def transform_where(
     upd = rows.select(F.col(dv.FP).alias("_path"), dv.POS, cond.alias("_hit"), *proj)
 
     rw = StagedRewrite.begin(spark, table)
-    idx_b = spark.sparkContext.broadcast({e.path: i for i, e in enumerate(touched)})
+    idx_b = spark.sparkContext.broadcast({dv.uri(root, e.path): i for i, e in enumerate(touched)})
 
     def _write_file(tbl):
         # applyInArrow, NOT applyInPandas: pandas turns an int64 column

@@ -49,10 +49,10 @@ from __future__ import annotations
 
 import os
 import uuid
-from collections import Counter
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
+import numpy as np
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -634,8 +634,9 @@ class _FilesWritten(WriterCommitMessage):
     # merge-keys upsert only: (task DV rel path | None,
     #   ((data path, #DVs at probe), ...))
     dv: tuple = ()
-    # merge-keys upsert only: the task's non-NULL key values
-    keys: tuple = ()
+    # merge-keys upsert only: sorted uint64 hashes of the task's non-NULL
+    # keys (8 bytes a key), for the commit's cross-task duplicate check
+    key_hashes: object = None
 
 
 def _partition_values(pdf, spec_fields):
@@ -776,23 +777,24 @@ class _TableArrowWriter(DataSourceArrowWriter):
                 f"merge-keys: duplicate {self.merge_key} values in one write "
                 "task; each key may appear in at most one source row"
             )
-        return _FilesWritten(tuple(entries), self._probe_merge_tombstones(uniq), tuple(uniq))
+        pred = prepare_predicates([PrunePredicate(self.merge_key, "in", list(uniq))])[0]
+        hashes = np.sort(pred.key_hashes[:, 0])
+        return _FilesWritten(tuple(entries), self._probe_merge_tombstones(pred), hashes)
 
-    def _probe_merge_tombstones(self, keys: set) -> tuple:
+    def _probe_merge_tombstones(self, pred) -> tuple:
         """Executor-side half of the merge-keys upsert (MoR MERGE through
         the vanilla Spark writer): the one key probe (``dv.probe``: bounds,
         Bloom, key-column read, minus earlier tombstones) of the probed
-        snapshot's files for THIS task's keys, its hits written as one task
-        DV fragment. Work per task ∝ its keys' candidate files, never
+        snapshot's files for THIS task's keys (``pred``, a prepared ``in``
+        predicate), its hits written as one task DV fragment. Work per task ∝ its keys' candidate files, never
         O(table); the driver reads back only the fragments' tombstones.
         Tasks probe independently (no coordination), so a file hot across
         many tasks pays one pruned key-column read per task — the price of
         reusing Spark's writer exchange; pipelines that pre-partition by
         key should call maintenance.merge.merge_into directly."""
-        if not keys or self.merge_snapshot is None:
+        if not pred.value or self.merge_snapshot is None:
             return (None, ())
         table = Table(self.root, meta.load_metadata(self.root))
-        pred = prepare_predicates([PrunePredicate(self.merge_key, "in", list(keys))])[0]
         hits = list(dv.probe(
             self.root,
             table.live_entries(snapshot_id=self.merge_snapshot),
@@ -875,11 +877,12 @@ class _TableArrowWriter(DataSourceArrowWriter):
         Two task hits on one (path, pos), or one key reported by two tasks,
         mean two source rows for one key: that raises, and Spark's abort
         removes every file the tasks wrote. Driver work is O(this batch's
-        keys and matched rows), the delete_where DV shape."""
+        matched rows) plus 8 bytes per upserted key for the duplicate
+        check (:meth:`_cross_task_duplicates`)."""
         msgs = [m for m in messages or [] if m is not None]
         expected = {p: n for m in msgs if m.dv for p, n in m.dv[1]}
         dv_rel, counts = dv.consolidate(self.root, [m.dv[0] for m in msgs if m.dv and m.dv[0]])
-        dups = [k for k, n in Counter(k for m in msgs for k in m.keys).items() if n > 1]
+        dups = self._cross_task_duplicates(msgs)
         if dups:
             if dv_rel:
                 os.unlink(os.path.join(self.root, dv_rel))
@@ -902,6 +905,25 @@ class _TableArrowWriter(DataSourceArrowWriter):
             operation="merge",
             expected_dv_counts=expected or None,
         )
+
+    def _cross_task_duplicates(self, msgs) -> list:
+        """Key values written by more than one task: the tasks' sorted key
+        hashes find candidates in one sort, each confirmed from the key
+        column of the files its tasks wrote, so a 64-bit collision of two
+        distinct keys never fails an upsert."""
+        import pyarrow.parquet as pq
+
+        arrays = [m.key_hashes for m in msgs if m.key_hashes is not None]
+        h = np.sort(np.concatenate(arrays)) if arrays else np.empty(0, np.uint64)
+        clash = h[1:][h[1:] == h[:-1]]
+        seen: dict = {}
+        for i, m in enumerate(msgs):
+            if len(clash) and m.key_hashes is not None and np.isin(clash, m.key_hashes).any():
+                for e in m.entries:
+                    col = pq.read_table(os.path.join(self.root, e["path"]), columns=[self.merge_key])
+                    for k in col[self.merge_key].to_pylist():
+                        seen.setdefault(k, set()).add(i)
+        return [k for k, tasks in seen.items() if k is not None and len(tasks) > 1]
 
     def abort(self, messages) -> None:
         self._unlink(messages)

@@ -4,9 +4,9 @@ MERGE (both strategies), ``delete_keys`` and the merge-keys writer find
 the rows a key set hits with the same Arrow probe; the merge-on-read
 callers write the hits from the probe tasks as DV fragments, so no JVM
 pass re-scans the touched files. Row positions from Spark scans are named
-by the data file's table-relative path, decoded from Spark's
-percent-encoded ``_metadata.file_path`` URI, so a table root or
-partition value may hold a space, ``%``, ``#`` or ``+``.
+by Spark's percent-encoded ``_metadata.file_path`` URI, which ``dv.uri``
+spells exactly, so a table root or partition value may hold a space,
+``%``, ``#``, ``+`` or non-ASCII characters.
 """
 
 from __future__ import annotations
@@ -116,7 +116,8 @@ SCHEMA = T.StructType([
 
 def _ops_under(spark, root: str) -> list:
     """Every op that names rows by their Spark scan position, run on a
-    table under ``root`` whose identity partition values hold a space;
+    table under ``root`` whose identity partition values hold characters
+    a URI escapes;
     returns the live rows after each op."""
     register_lakehouse_source(spark)
     cat = Catalog(root)
@@ -126,7 +127,7 @@ def _ops_under(spark, root: str) -> list:
     t.append(
         spark.range(0, 100).select(
             "id", F.concat(F.lit("v"), F.col("id")).alias("v"),
-            F.when(F.col("id") % 2 == 0, "q r").otherwise("s t").alias("g"),
+            F.when(F.col("id") % 2 == 0, "q r%s").otherwise("s\u00a0t").alias("g"),
         ),
         num_files=4,
     )
@@ -156,8 +157,31 @@ def _ops_under(spark, root: str) -> list:
     return out
 
 
+ODD_ROOT = "a b%c+d#e é\"<>|^`;=&$,@!~'()\u00a0x"
+
+
+def test_uri_spells_spark_file_path(spark, tmp_path):
+    """``dv.uri`` and the DV side of ``dv.frame`` spell a data file exactly
+    as Spark's ``_metadata.file_path`` does: a space, ``%``, ``#``, ``"``,
+    ``<``, ``>``, ``|``, ``^``, a backquote and a no-break space escaped,
+    ``+``, punctuation and other non-ASCII letters kept."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / ODD_ROOT)
+    rels = [os.path.join("data", "g=q r%25s\u00a0t", "f.parquet"), os.path.join("data", "h.parquet")]
+    for i, rel in enumerate(rels):
+        os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
+        pq.write_table(pa.table({"id": [i]}), os.path.join(root, rel))
+    pq.write_table(pa.table({"path": rels, "pos": [0, 0]}), os.path.join(root, "dv.parquet"))
+    got = dv.scan(spark, root, T.StructType([T.StructField("id", T.LongType())]), rels, ["id"])
+    want = sorted((dv.uri(root, rel), 0) for rel in rels)
+    assert sorted((r[dv.FP], r[dv.POS]) for r in got.collect()) == want
+    assert sorted(tuple(r) for r in dv.frame(spark, root, ["dv.parquet"], rels).collect()) == want
+
+
 def test_ops_under_a_percent_encoded_root_match_a_plain_root(spark, tmp_path):
-    """Spark percent-encodes a space, ``%`` and ``#`` in
+    """Spark percent-encodes a space, ``%`` and ``#`` (among others) in
     ``_metadata.file_path`` but keeps ``+`` and non-ASCII letters. Every
     op gives the same rows under a root holding them as under a plain
     root (a root-prefix mismatch used to raise a spurious ConflictError in
@@ -165,7 +189,7 @@ def test_ops_under_a_percent_encoded_root_match_a_plain_root(spark, tmp_path):
     upsert)."""
     want = _ops_under(spark, str(tmp_path / "plain"))
     assert len(want[-1]) == 100 - 14
-    assert _ops_under(spark, str(tmp_path / "a b%c+d#e é")) == want
+    assert _ops_under(spark, str(tmp_path / ODD_ROOT)) == want
 
 
 def test_only_the_dv_module_knows_the_dv_format():

@@ -861,8 +861,9 @@ def test_duplicate_source_keys_raise(registered, tmp_path, monkeypatch):
     """A MERGE source that repeats a key raises instead of leaving
     duplicate rows: merge_into (cow and mor, broadcast and huge-source
     routes) checks the whole source; the merge-keys writer fails a task
-    that holds a key twice, and a commit where two tasks matched one
-    target row. Nothing commits and no written file is left behind."""
+    that holds a key twice, a commit where two tasks matched one target
+    row, and a commit where two tasks hold one key that matches no target
+    row. Nothing commits and no written file is left behind."""
     import datetime
 
     from ocel_ocpn_lakehouse_spark.maintenance import merge
@@ -892,6 +893,12 @@ def test_duplicate_source_keys_raise(registered, tmp_path, monkeypatch):
     writer = two.write.format("lakehouse").option("merge-keys", "id")
     with pytest.raises(Exception, match="several source rows matched one target row"):
         writer.mode("append").save(t.root)
+    # key 40 once in each of two tasks, matching no target row: the tasks'
+    # key hashes collide at commit
+    new = spark.createDataFrame(spark.sparkContext.parallelize(rows[2:] * 2, 2), SCHEMA)
+    writer = new.write.format("lakehouse").option("merge-keys", "id")
+    with pytest.raises(Exception, match="duplicate id values \\[40\\] across write tasks"):
+        writer.mode("append").save(t.root)
 
     t = t.refresh()
     assert t.current_snapshot().snapshot_id == snap
@@ -903,3 +910,26 @@ def test_duplicate_source_keys_raise(registered, tmp_path, monkeypatch):
         if f.endswith(".parquet")
     }
     assert on_disk == files  # data files and DV fragments alike
+
+
+def test_cross_task_key_check_confirms_hash_collisions(spark, tmp_path):
+    """The merge-keys commit finds cross-task duplicates by the tasks' key
+    hashes, then confirms them from the written files: two distinct keys
+    whose hashes collide do not fail the upsert, one key in two tasks does."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocel_ocpn_lakehouse_spark.sources.table_source import _FilesWritten, _TableArrowWriter
+
+    t = _make_table(spark, tmp_path, name="ns.hashk", rows=4, files=1)
+    w = _TableArrowWriter(t.root, t, False, merge_key="id")
+
+    def task(name, ids, hashes):
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), os.path.join(t.root, name))
+        return _FilesWritten(({"path": name},), (), np.array(hashes, dtype=np.uint64))
+
+    a, b, c = task("a.parquet", [1, 2], [7, 9]), task("b.parquet", [3], [9]), task("c.parquet", [2], [5])
+    assert w._cross_task_duplicates([a, c]) == []  # no hash shared
+    assert w._cross_task_duplicates([a, b]) == []  # 2 and 3 collide on hash 9
+    assert w._cross_task_duplicates([a, b, task("d.parquet", [2], [9])]) == [2]
