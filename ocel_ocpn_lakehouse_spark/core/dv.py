@@ -233,7 +233,7 @@ def _uri_col(root: str, rel: Column, data_paths: Iterable[str]) -> Column:
     among ``data_paths``: only the characters those paths hold that the
     encoder escapes are replaced (``%`` first), so a plain table pays a
     prefix concat alone."""
-    chars = sorted(set(_URI_ESCAPED.findall("".join(data_paths))), key=lambda c: c != "%")
+    chars = sorted(set(_URI_ESCAPED.findall("".join(data_paths))), key=lambda c: (c != "%", c))
     for c in chars:
         rel = F.replace(rel, F.lit(c), F.lit(_quote(c)))
     return F.concat(F.lit(uri(root, "")), rel)
